@@ -196,13 +196,13 @@ def q_functionals_sql(spark, sf_dir):
 
 
 def q_functionals_derive(spark, sf_dir):
-    """Fused derived-lane functionals (bank.py derive= + engine='arrow'):
+    """Fused derived-lane functionals (bank.py derive= on the Arrow runner):
     cVectorOperation contours (x^2, safe-log — vectorOperation.cpp op
     table) are computed INSIDE the kernel worker and the functional
     families run over base + derived lanes in one pass — the
     reference-preset pattern of functionals over derived LLDs (e.g.
     log-energy, /root/reference/src/lldcore/energy.cpp). The gate pins
-    the fused in-worker derivation and the Arrow-native engine against a
+    the fused in-worker derivation and the Arrow-native runner against a
     DuckDB twin that derives the same lanes in SQL."""
     from opensmile_spark.functionals import functionals_kernel
     from opensmile_spark.util import round_sig
@@ -210,7 +210,7 @@ def q_functionals_derive(spark, sf_dir):
     out = functionals_kernel(
         _lld(spark, sf_dir), ["char_len"], ("conv_id",),
         families=["means", "moments", "extremes"],
-        derive=["sq", "log"], engine="arrow")
+        derive=["sq", "log"])
     cols = ["amean", "absmean", "qmean", "variance", "stddev",
             "max", "min", "range"]
     sel = [F.col("conv_id"), F.col("n_turns")]

@@ -143,8 +143,8 @@ def run_scaling() -> dict:
     # are bounded by the HOST's fixed grant, not by the engine, and stay
     # measured in the suite stages instead. derive= doubles kernel lanes
     # in-worker (functionals over derived contours, the reference-preset
-    # pattern) without adding a byte of socket traffic, and
-    # engine='arrow' feeds the kernel zero-copy numpy views. Measured
+    # pattern) without adding a byte of socket traffic, and the
+    # mapInArrow runner feeds the kernel zero-copy numpy views. Measured
     # as a job in the same dirty window: 0.884 (t4=92.0, t16=26.0).
     fams = ["means", "moments", "extremes", "regression", "times",
             "crossings", "segments", "onset", "samples",
@@ -262,7 +262,6 @@ def run_scaling() -> dict:
                                      ("conv_key", "session_id"),
                                      families=fams, options=fam_opts,
                                      pre_partitioned=True,
-                                     engine="arrow",
                                      derive=["sq", "log"])
             # untimed warm-up: spawn the Python workers + JIT the scan
             # path once per session (a long-lived cluster's executors

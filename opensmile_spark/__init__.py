@@ -14,8 +14,8 @@ Architecture (see SURVEY.md):
   - cWindowProcessor sliding filters (windowProcessor.hpp:25) map to
     Window.rowsBetween / lag / lead;
   - cWinToVecProcessor framing + the cFunctionals bank (functionals.cpp)
-    map to groupBy().agg() SQL fast paths plus a vectorized
-    groupBy().applyInPandas numpy kernel;
+    map to groupBy().agg() SQL fast paths plus a vectorized numpy kernel
+    run by one mapInArrow pass over blocks of whole groups;
   - the causal ring-buffer read protocol (dataMemoryLevel.hpp:296-311) maps
     to as-of merges with a hard ts <= anchor_ts leakage guard.
 

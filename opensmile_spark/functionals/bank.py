@@ -7,10 +7,12 @@ output naming `<input>_<functional>` :229-266). Two physical strategies here,
 mirroring how cFunctionals shares one min/max/mean/sort pre-pass across all
 sub-components (:349-365):
 
-1. `functionals_kernel` — groupBy(keys).applyInPandas with ONE vectorized
-   numpy kernel computing every enabled family for every value column per
-   group (Arrow-batched; the shared pre-pass lives inside kernels.compute_all,
-   since Catalyst cannot CSE across a UDF boundary — SURVEY.md §4).
+1. `functionals_kernel` — one mapInArrow pass over key-sorted input that
+   runs ONE vectorized numpy kernel computing every enabled family for every
+   value column per group, over blocks of whole groups
+   (groupbatch.group_blocks; the shared pre-pass lives inside
+   kernels.compute_all, since Catalyst cannot CSE across a UDF boundary —
+   SURVEY.md §4).
 2. `functionals_sql` — pure built-in aggregate expressions for the families
    that are single-pass aggregates (means/moments/extremes/percentiles/
    regression closed forms). Zero Python, map-side partial aggregation,
@@ -23,12 +25,13 @@ cross-checkable.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opensmile_spark.exprcache import expr_memo
 from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.groupbatch import group_blocks
 
 DEFAULT_FAMILIES = [
     "means", "moments", "extremes", "percentiles", "regression",
@@ -101,7 +104,6 @@ def functionals_kernel(
     options: dict | None = None,
     pre_partitioned: bool = False,
     repartition_cols: list | None = None,
-    engine: str = "arrow",
     derive: list[str] | None = None,
 ) -> DataFrame:
     """One output row per group; columns <value>_<functional>.
@@ -118,14 +120,15 @@ def functionals_kernel(
     use the full key or salting for coarse parents.
 
     Physical strategy: repartition by the group key, sort within partitions
-    by (key, order), then ONE mapInPandas pass that processes every group in
-    each Arrow batch (carrying the possibly-split trailing group over to the
-    next batch). This amortizes the Python/Arrow round trip over thousands of
-    groups per call — per-group applyInPandas costs ~5-20 ms of pandas
-    overhead for millisecond kernels, which at 10^9 sessions is the
-    difference between hours and weeks. The blockwise execution mirrors the
-    reference's blocksizeWriter/Reader batching discipline
-    (dataMemoryLevel.hpp:239-241).
+    by (key, order), then ONE mapInArrow pass. groupbatch.group_blocks turns
+    the Arrow batches into blocks of whole groups (holding back a group that
+    straddles a batch edge) and the kernel reads zero-copy numpy views of
+    each block — no pandas materialization. This amortizes the Python/Arrow
+    round trip over thousands of groups per call — per-group applyInPandas
+    costs ~5-20 ms of pandas overhead for millisecond kernels, which at 10^9
+    sessions is the difference between hours and weeks. The blockwise
+    execution mirrors the reference's blocksizeWriter/Reader batching
+    discipline (dataMemoryLevel.hpp:239-241).
 
     pre_partitioned=True skips the repartition+sort — the zero-shuffle path
     for input that is already laid out group-contiguously, e.g. a table
@@ -172,24 +175,16 @@ def functionals_kernel(
     out_cols = group_cols + ["n_turns"] + feats
     opt = options or {}
 
-    def _process_np(arrs: dict) -> dict:
-        """Shared numpy core for both engines: column dict in, column dict
-        out. All groups in arrs are complete; rows already sorted."""
-        # group boundary detection on the (pre-sorted) key columns
-        n = len(arrs[group_cols[0]])
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for c in group_cols:
-            v = arrs[c]
-            change[1:] |= v[1:] != v[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        cols: dict = {c: arrs[c][starts] for c in group_cols}
-        cols["n_turns"] = (ends - starts).astype(np.int64)
+    def _emit(rb, starts, ends):
+        """One block of whole groups (groupbatch.group_blocks) -> one
+        output RecordBatch: keys taken from each group's first row, then
+        n_turns and every feature column."""
+        cols: dict = {}
         base: dict = {}
         for c, spec in lanes:
             if spec is None:
-                xs = arrs[c].astype(np.float64, copy=False)
+                xs = rb.column(c).to_numpy(zero_copy_only=False) \
+                    .astype(np.float64, copy=False)
                 base[c] = xs
             else:
                 src, op = spec
@@ -211,91 +206,19 @@ def functionals_kernel(
                     cols[f"{c}_{k}"] = bat[k]
                 else:
                     cols[f"{c}_{k}"] = loop_rows[k]
-        return cols
-
-    def process_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        arrs = {c: pdf[c].to_numpy() for c in group_cols}
-        for c in value_cols:
-            arrs[c] = pdf[c].to_numpy(dtype=np.float64)
-        return pd.DataFrame(_process_np(arrs))
+        arrays = [rb.column(c).take(starts) for c in group_cols]
+        arrays.append(pa.array(ends - starts, type=pa.int64()))
+        # from_pandas=True: NaN -> null, the nullness the engine has always
+        # emitted for undefined functionals
+        arrays += [pa.array(cols[f], type=pa.float64(), from_pandas=True)
+                   for f in feats]
+        return pa.RecordBatch.from_arrays(arrays, names=out_cols)
 
     def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            # hold back the trailing group — it may continue in the next batch
-            last_key = tuple(pdf[c].iloc[-1] for c in group_cols)
-            mask = np.ones(len(pdf), dtype=bool)
-            for c, kv in zip(group_cols, last_key):
-                mask &= (pdf[c] == kv).to_numpy()
-            # rows of the trailing group are contiguous (sorted input)
-            tail_start = int(np.argmax(mask))
-            carry = pdf.iloc[tail_start:]
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                yield process_block(head)
-        if carry is not None and len(carry):
-            yield process_block(carry)
+        for rb, starts, ends in group_blocks(batches, group_cols):
+            yield _emit(rb, starts, ends)
 
     in_cols = group_cols + value_cols
-
-    def run_arrow(batches):
-        """Arrow-native runner (engine='arrow'): pyarrow RecordBatch ->
-        zero-copy numpy views -> the same _process_np core -> RecordBatch.
-        Skips the pandas materialization entirely — on a transfer-bound
-        job (wide scans feeding a fast kernel) the Arrow->pandas copy is
-        the single largest non-compute cost, and it is pure overhead: the
-        kernel reads numpy arrays either way. Numerics are bit-identical
-        (same float64 upcast, same core; pinned by
-        tests/test_functionals.py::test_arrow_engine_matches_pandas)."""
-        import pyarrow as pa
-
-        key_types: dict = {}
-        carry: dict | None = None
-
-        def _np(col):
-            try:
-                return col.to_numpy(zero_copy_only=True)
-            except pa.lib.ArrowInvalid:
-                return col.to_numpy(zero_copy_only=False)
-
-        def _emit(arrs):
-            cols = _process_np(arrs)
-            arrays = [pa.array(cols[c], type=key_types[c])
-                      for c in group_cols]
-            arrays.append(pa.array(cols["n_turns"], type=pa.int64()))
-            # from_pandas=True: NaN -> null, matching what the pandas
-            # engine's DataFrame->Arrow conversion does — the two engines
-            # must agree on nullness, not just on values
-            arrays += [pa.array(cols[f], type=pa.float64(),
-                                from_pandas=True) for f in feats]
-            return pa.RecordBatch.from_arrays(arrays, names=out_cols)
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if not key_types:
-                sch = rb.schema
-                for c in group_cols:
-                    key_types[c] = sch.field(c).type
-            arrs = {c: _np(rb.column(i)) for i, c in enumerate(in_cols)}
-            if carry is not None:
-                arrs = {c: np.concatenate([carry[c], arrs[c]])
-                        for c in in_cols}
-            n = len(arrs[group_cols[0]])
-            mask = np.ones(n, dtype=bool)
-            for c in group_cols:
-                mask &= arrs[c] == arrs[c][-1]
-            tail_start = int(np.argmax(mask))
-            carry = {c: arrs[c][tail_start:] for c in in_cols}
-            if tail_start:
-                yield _emit({c: arrs[c][:tail_start] for c in in_cols})
-        if carry is not None and len(carry[group_cols[0]]):
-            yield _emit(carry)
-
     if pre_partitioned:
         # order_col is never read by the kernel (order comes from the
         # layout guarantee); excluding it from the projection keeps it out
@@ -310,9 +233,7 @@ def functionals_kernel(
             .repartition(*rcols) \
             .sortWithinPartitions(*group_cols, order_col) \
             .select(*in_cols)
-    if engine == "arrow":
-        return proj.mapInArrow(run_arrow, schema=schema)
-    return proj.mapInPandas(run, schema=schema)
+    return proj.mapInArrow(run, schema=schema)
 
 
 def functionals_sql(

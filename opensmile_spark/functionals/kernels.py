@@ -2,7 +2,7 @@
 cFunctional* sub-components (/root/reference/src/functionals/*.cpp).
 
 These are the single source of truth for functional semantics: the Spark
-applyInPandas bank (bank.py) and the pytest oracle both call these functions,
+mapInArrow bank (bank.py) and the pytest oracle both call these functions,
 and unit tests validate selected closed forms independently (tests/).
 
 Contract mirrors cFunctionalComponent::process

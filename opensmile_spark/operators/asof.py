@@ -18,11 +18,12 @@ readable at t").
 `backfill_functionals` materializes whole functional vectors at every
 (conv_id, anchor_ts) grid point using a per-conversation vectorized kernel:
 for A anchors over N turns it does one sort plus prefix scans — not A
-separate window jobs. Physically it is ONE union-tag shuffle + mapInPandas
-with a group-carry loop (the functionals_kernel batching discipline), not a
-per-conversation cogroup: cogrouped applyInPandas pays ~0.5-1 ms of pandas
-dispatch PER GROUP, which at high conversation cardinality dominates the
-numpy kernel by an order of magnitude.
+separate window jobs. Physically it is ONE union-tag shuffle + mapInArrow
+over blocks of whole conversations (groupbatch.group_blocks, shared with
+functionals_kernel), not a per-conversation cogroup: cogrouped
+applyInPandas pays ~0.5-1 ms of pandas dispatch PER GROUP, which at high
+conversation cardinality dominates the numpy kernel by an order of
+magnitude.
 """
 
 from __future__ import annotations
@@ -161,19 +162,20 @@ def backfill_functionals(
     place), optionally bounded to a trailing window of `window_seconds`.
 
     Physical strategy: union-tag the turn and anchor tables (side 0 / 1),
-    ONE repartition by conv + in-partition sort, then a single mapInPandas
-    pass whose batches carry the trailing conversation over to the next
-    batch (the functionals_kernel discipline). Each conversation's numpy
-    math is unchanged from the cogroup formulation — same sort order, same
-    per-conv arrays, bit-identical outputs — but the Python/pandas dispatch
-    is amortized over every conversation in an Arrow batch instead of paid
-    per conversation. Per-anchor windows are gathered into ONE concatenated
+    ONE repartition by conv + in-partition sort, then a single mapInArrow
+    pass over blocks of whole conversations (groupbatch.group_blocks holds
+    back a conversation that straddles an Arrow batch edge). Each
+    conversation's numpy math is unchanged from the cogroup formulation —
+    same sort order, same per-conv arrays, bit-identical outputs — but the
+    Python dispatch is amortized over every conversation in a block instead
+    of paid per conversation. The key and anchor_ts columns keep their
+    input types. Per-anchor windows are gathered into ONE concatenated
     array and every reduceat-expressible family is computed for ALL anchors
     at once (functionals/batched.py) — no per-anchor Python dispatch; only
     families outside BATCHED_FAMILIES fall back to a per-anchor loop.
     Anchor blocks are chunked so the gathered array stays bounded
     (`max_gather_elems`) regardless of anchor density. Empty windows
-    emit NaN features (anchor row is kept so the grid is complete — the
+    emit null features (anchor row is kept so the grid is complete — the
     PAD_ZERO/PAD_NONE choice is the caller's fillna/dropna).
 
     Cost model per family on an UNBOUNDED (expanding) grid with N turns and
@@ -188,11 +190,12 @@ def backfill_functionals(
     window bound caps the work.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from opensmile_spark.functionals.batched import (
         compute_batched, compute_expanding,
     )
+    from opensmile_spark.groupbatch import group_blocks
 
     families = families or ["means", "moments", "extremes", "percentiles",
                             "regression"]
@@ -204,10 +207,6 @@ def backfill_functionals(
     probe, feat_names, exp_fams, gather_fams, loop_fams, key_src = \
         _backfill_probe(tuple(value_cols), tuple(families), options,
                         window_seconds is None)
-    schema = (
-        f"{on} string, {anchor_ts} timestamp, n_visible long, "
-        + ", ".join(f"`{n}` double" for n in feat_names)
-    )
 
     def _one_conv(ts_vals, col_arrays, anchor_vals):
         """Per-conversation math — unchanged from the r5 cogroup
@@ -273,68 +272,43 @@ def backfill_functionals(
             blk_start = blk_end
         return sizes, out_cols
 
-    def _process(pdf: pd.DataFrame):
-        """All conversations in pdf are complete; rows sorted by
-        (__k, __side, __t, __ord): per conv, side-0 turn rows sorted by
-        (ts, order) — the cogroup kernel's mergesort order — then side-1
-        anchor rows sorted by anchor_ts."""
-        k_np = pdf["__k"].to_numpy()
-        side_np = pdf["__side"].to_numpy()
-        t_np = pdf["__t"].to_numpy()
-        vals = {c: pdf[c].to_numpy(dtype=np.float64) for c in value_cols}
-        n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        change[1:] = k_np[1:] != k_np[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        convs, counts, anchor_chunks, size_chunks = [], [], [], []
+    def _emit(rb, starts, ends):
+        """One block of whole conversations (groupbatch.group_blocks) ->
+        one output RecordBatch. Rows are sorted by (__k, __side, __t,
+        __ord): per conv, side-0 turn rows sorted by (ts, order) — the
+        cogroup kernel's mergesort order — then side-1 anchor rows sorted
+        by anchor_ts. Output rows are the anchor rows, in input order."""
+        side_np = rb.column("__side").to_numpy(zero_copy_only=False)
+        t_np = rb.column("__t").to_numpy(zero_copy_only=False)
+        vals = {c: rb.column(c).to_numpy(zero_copy_only=False)
+                .astype(np.float64, copy=False) for c in value_cols}
+        size_chunks = []
         feat_chunks: dict[str, list] = {f: [] for f in feat_names}
         for s, e in zip(starts, ends):
             a0 = s + int(np.searchsorted(side_np[s:e], 1, side="left"))
-            anchor_vals = t_np[a0:e]
-            if anchor_vals.size == 0:
+            if a0 == e:
                 continue   # conv has turns but no anchors: no output rows
-            ts_vals = t_np[s:a0]
             col_arrays = {c: vals[c][s:a0] for c in value_cols}
-            sizes, out_cols = _one_conv(ts_vals, col_arrays, anchor_vals)
-            convs.append(k_np[s])
-            counts.append(anchor_vals.size)
-            anchor_chunks.append(anchor_vals)
+            sizes, out_cols = _one_conv(t_np[s:a0], col_arrays, t_np[a0:e])
             size_chunks.append(sizes)
             for f in feat_names:
                 feat_chunks[f].append(out_cols[f])
-        if not convs:
+        if not size_chunks:
             return None
-        data = {on: np.repeat(np.array(convs, dtype=object),
-                              np.array(counts, dtype=np.int64)),
-                anchor_ts: np.concatenate(anchor_chunks),
-                "n_visible": np.concatenate(size_chunks)}
-        for f in feat_names:
-            data[f] = np.concatenate(feat_chunks[f])
-        return pd.DataFrame(data, columns=[on, anchor_ts, "n_visible"]
-                            + feat_names)
+        anchor_rows = np.flatnonzero(side_np == 1)
+        arrays = [rb.column("__k").take(anchor_rows),
+                  rb.column("__t").take(anchor_rows),
+                  pa.array(np.concatenate(size_chunks), type=pa.int64())]
+        # from_pandas=True: NaN (empty window) -> null
+        arrays += [pa.array(np.concatenate(feat_chunks[f]),
+                            type=pa.float64(), from_pandas=True)
+                   for f in feat_names]
+        return pa.RecordBatch.from_arrays(
+            arrays, names=[on, anchor_ts, "n_visible"] + feat_names)
 
     def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            # hold back the trailing conversation — it may continue in the
-            # next batch (a conv's rows are contiguous: sorted input)
-            kcol = pdf["__k"]
-            mask = (kcol == kcol.iloc[-1]).to_numpy()
-            tail_start = int(np.argmax(mask))
-            carry = pdf.iloc[tail_start:]
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                out = _process(head)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _process(carry)
+        for rb, starts, ends in group_blocks(batches, ["__k"]):
+            out = _emit(rb, starts, ends)
             if out is not None:
                 yield out
 
@@ -357,7 +331,14 @@ def backfill_functionals(
         .repartition(F.col("__k"))
         .sortWithinPartitions("__k", "__side", "__t", "__ord")
     )
-    return merged.mapInPandas(run, schema=schema)
+    # key and anchor_ts keep their input types: the output arrays are
+    # taken from the __k/__t input columns
+    schema = (
+        f"`{on}` {merged.schema['__k'].dataType.simpleString()}, "
+        f"`{anchor_ts}` {merged.schema['__t'].dataType.simpleString()}, "
+        "n_visible long, " + ", ".join(f"`{n}` double" for n in feat_names)
+    )
+    return merged.mapInArrow(run, schema=schema)
 
 
 def incremental_backfill(

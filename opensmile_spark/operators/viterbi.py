@@ -6,19 +6,21 @@ sequential dependence across frames, which can never be a window expression
 (SURVEY.md §2.7). The transcript analogue smooths any noisy per-turn contour
 (e.g. reply cadence) by a DP over quantized levels with a jump cost.
 
-Execution: batched mapInPandas over conv-partitioned, turn-sorted input
-(same blockwise layout as the functional bank) — per conversation the DP is
-O(N * levels^2) numpy; conversations are independent, so this parallelizes
-across the cluster exactly like the kernel bank.
+Execution: mapInArrow over conv-partitioned, turn-sorted input, in blocks of
+whole conversations (groupbatch.group_blocks — the same blockwise layout as
+the functional bank) — per conversation the DP is O(N * levels^2) numpy;
+conversations are independent, so this parallelizes across the cluster
+exactly like the kernel bank.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from opensmile_spark.functionals.kernels import viterbi_smooth
+from opensmile_spark.groupbatch import group_blocks
 
 
 def viterbi_smooth_df(
@@ -47,44 +49,18 @@ def viterbi_smooth_df(
     schema = ", ".join(schema_parts) + f", `{col}{suffix}` double"
 
     def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_key = tuple(pdf[c].iloc[-1] for c in group_cols)
-            mask = np.ones(len(pdf), dtype=bool)
-            for c, kv in zip(group_cols, last_key):
-                mask &= (pdf[c] == kv).to_numpy()
-            tail_start = int(np.argmax(mask))
-            carry = pdf.iloc[tail_start:]
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                yield _process(head)
-        if carry is not None and len(carry):
-            yield _process(carry)
-
-    def _process(pdf):
-        n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for c in group_cols:
-            v = pdf[c].to_numpy()
-            change[1:] |= v[1:] != v[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        x = pdf[col].to_numpy(dtype=np.float64)
-        out = np.empty(n)
-        for s, e in zip(starts, ends):
-            out[s:e] = viterbi_smooth(x[s:e], n_levels, jump_cost)
-        res = pdf[in_cols].copy()
-        res[f"{col}{suffix}"] = out
-        return res
+        for rb, starts, ends in group_blocks(batches, group_cols):
+            x = rb.column(col).to_numpy(zero_copy_only=False) \
+                .astype(np.float64, copy=False)
+            out = np.empty(rb.num_rows)
+            for s, e in zip(starts, ends):
+                out[s:e] = viterbi_smooth(x[s:e], n_levels, jump_cost)
+            yield rb.append_column(f"{col}{suffix}",
+                                   pa.array(out, from_pandas=True))
 
     proj = (
         df.select(*in_cols)
         .repartition(*group_cols)
         .sortWithinPartitions(*group_cols, order_col)
     )
-    return proj.mapInPandas(run, schema=schema)
+    return proj.mapInArrow(run, schema=schema)

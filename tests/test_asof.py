@@ -72,7 +72,8 @@ def test_backfill_empty_window_and_grid_completeness(spark):
     rows = {r["anchor_ts"].timestamp() - t0: r for r in out.collect()}
     assert len(rows) == 3                      # grid complete
     assert rows[-100.0]["n_visible"] == 0
-    assert rows[-100.0]["x_amean"] is None or np.isnan(rows[-100.0]["x_amean"])
+    # empty window: the features are null (not NaN), the row is kept
+    assert rows[-100.0]["x_amean"] is None
     assert rows[5.0]["n_visible"] == 1
     assert rows[1000.0]["n_visible"] == 2
 
@@ -106,6 +107,98 @@ def test_backfill_regression_split_routing(spark):
         for k, v in want.items():
             assert np.isclose(r[f"x_{k}"], v, rtol=1e-9, atol=1e-12), \
                 (j, k, r[f"x_{k}"], v)
+
+
+def test_backfill_long_key(spark):
+    """A non-string key keeps its type through the backfill (asof_join
+    accepts any key type; the backfill output schema follows the input)."""
+    from pyspark.sql.types import LongType, TimestampType
+
+    t0 = 1_704_067_200.0
+    rows = [(k, i, float(v), t0 + 10.0 * i)
+            for k, vals in ((7, [3.0, 1.0, 4.0]), (2**40, [2.0, 8.0]))
+            for i, v in enumerate(vals)]
+    lld = spark.createDataFrame(
+        rows, "conv_id long, turn_idx int, x double, epoch double") \
+        .withColumn("ts", F.timestamp_seconds("epoch")).drop("epoch")
+    anchors = spark.createDataFrame(
+        [(7, t0 + 15.0), (2**40, t0 + 100.0), (2**40, t0 - 1.0)],
+        "conv_id long, epoch double") \
+        .withColumn("anchor_ts", F.timestamp_seconds("epoch")).drop("epoch")
+    out = backfill_functionals(lld, anchors, ["x"], families=["means"])
+    assert out.schema["conv_id"].dataType == LongType()
+    assert out.schema["anchor_ts"].dataType == TimestampType()
+    got = {(r["conv_id"], r["anchor_ts"].timestamp() - t0): r
+           for r in out.collect()}
+    assert set(got) == {(7, 15.0), (2**40, 100.0), (2**40, -1.0)}
+    assert got[(7, 15.0)]["n_visible"] == 2
+    assert got[(7, 15.0)]["x_amean"] == 2.0
+    assert got[(2**40, 100.0)]["x_amean"] == 5.0
+    assert got[(2**40, -1.0)]["n_visible"] == 0
+    assert got[(2**40, -1.0)]["x_amean"] is None
+
+
+def _split_corpus(spark):
+    """Six conversations, one of 420 turns (with its anchors it spans more
+    than 5 Arrow batches of 64 rows), anchors on every 3rd turn plus one
+    before the first turn and one after the last, and one conversation
+    with turns but no anchors."""
+    rng = np.random.default_rng(11)
+    t0 = 1_704_067_200.0
+    turns, anchors = [], []
+    for k, n in (("a", 420), ("b", 37), ("c", 1), ("d", 90), ("e", 12),
+                 ("f", 25)):
+        ts = t0 + np.cumsum(rng.integers(5, 400, n)).astype(float)
+        for i in range(n):
+            turns.append((k, i, float(rng.normal(100.0, 30.0)),
+                          float(ts[i])))
+        if k == "e":
+            continue
+        anchors += [(k, float(ts[0]) - 50.0), (k, float(ts[-1]) + 900.0)]
+        anchors += [(k, float(x)) for x in ts[::3]]
+    lld = spark.createDataFrame(
+        turns, "conv_id string, turn_idx int, x double, epoch double") \
+        .withColumn("ts", F.timestamp_seconds("epoch")).drop("epoch")
+    anc = spark.createDataFrame(anchors, "conv_id string, epoch double") \
+        .withColumn("anchor_ts", F.timestamp_seconds("epoch")).drop("epoch")
+    return lld, anc
+
+
+def test_backfill_batch_split_invariance(spark):
+    """64-row Arrow batches (the 420-turn conversation is held across more
+    than 5 batches) give bit-identical output, null masks included, to
+    10000-row batches — on the expanding grid and on a trailing window.
+    Undefined features are null, never NaN."""
+    import pyarrow.compute as pc
+
+    lld, anchors = _split_corpus(spark)
+    fams = ["means", "moments", "extremes", "percentiles", "regression"]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def run(batch_rows, window):
+        spark.conf.set(conf, str(batch_rows))
+        try:
+            return backfill_functionals(
+                lld, anchors, ["x"], families=fams,
+                window_seconds=window).toArrow() \
+                .sort_by([("conv_id", "ascending"),
+                          ("anchor_ts", "ascending")])
+        finally:
+            spark.conf.set(conf, "10000")
+
+    n_anchors = anchors.count()
+    for window in (None, 600.0):
+        a, b = run(64, window), run(10000, window)
+        assert a.num_rows == n_anchors
+        assert set(a.column("conv_id").to_pylist()) == {"a", "b", "c", "d",
+                                                        "f"}
+        assert pc.any(pc.equal(a.column("n_visible"), 0)).as_py()
+        feats = a.column_names[3:]
+        assert all(a.column(c).null_count > 0 for c in feats)
+        for c in feats:
+            assert not pc.any(pc.is_nan(a.column(c))).as_py(), (window, c)
+        # no NaN anywhere, so Arrow equality is bit-identity incl. nulls
+        assert a.equals(b), window
 
 
 def test_asof_multi_conv_no_crosstalk(spark):

@@ -35,12 +35,15 @@ def test_pre_partitioned_matches_shuffled(spark, tmp_path):
                            equal_nan=True), c
 
 
-def test_arrow_engine_matches_pandas(spark, tmp_path):
-    """engine='arrow' (mapInArrow, zero-copy numpy) is bit-identical to the
-    pandas engine on both layouts, including string group keys and groups
-    spanning Arrow batch boundaries."""
+def test_kernel_batch_split_invariance(spark, tmp_path):
+    """The kernel's output does not depend on where Arrow batch edges fall:
+    64-row batches (most groups straddle an edge and go through the
+    group_blocks carry) are bit-identical to 10000-row batches on both
+    layouts, with string group keys and every listed family, and each
+    group's features match the driver-side compute_all."""
     from opensmile_spark.datagen import generate_transcripts
     from opensmile_spark.functionals import functionals_kernel
+    from opensmile_spark.functionals.kernels import compute_all
     from opensmile_spark.lld import compute_lld
     from opensmile_spark.operators import sessionize, sma
 
@@ -53,35 +56,51 @@ def test_arrow_engine_matches_pandas(spark, tmp_path):
      .sortWithinPartitions("conv_id", "session_id", "turn_idx")
      .write.mode("overwrite").parquet(d))
     laid_out = spark.read.parquet(d)
+    assert dict(laid_out.dtypes)["conv_id"] == "string"
 
+    vcols = ["char_len_sma3", "token_cnt_sma3"]
+    keys = ["conv_id", "session_id"]
     fams = ["means", "moments", "extremes", "percentiles", "regression",
             "peaks2", "dct", "acf", "amdf", "lpc"]
-    # tiny Arrow batches force groups to straddle batch boundaries, so the
-    # carry path is exercised in both engines
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-    try:
-        for pre in (True, False):
-            a = functionals_kernel(
-                laid_out, ["char_len_sma3", "token_cnt_sma3"],
-                ("conv_id", "session_id"), families=fams,
-                pre_partitioned=pre, engine="arrow").toPandas() \
-                .set_index(["conv_id", "session_id"]).sort_index()
-            b = functionals_kernel(
-                laid_out, ["char_len_sma3", "token_cnt_sma3"],
-                ("conv_id", "session_id"), families=fams,
-                pre_partitioned=pre, engine="pandas").toPandas() \
-                .set_index(["conv_id", "session_id"]).sort_index()
-            assert a.index.equals(b.index)
-            assert list(a.columns) == list(b.columns)
-            for c in a.columns:
-                av, bv = a[c].to_numpy(), b[c].to_numpy()
-                if av.dtype.kind == "f":
-                    assert np.array_equal(av, bv, equal_nan=True), c
-                else:
-                    assert (av == bv).all(), c
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       "10000")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def run(pre, batch_rows):
+        spark.conf.set(conf, str(batch_rows))
+        try:
+            return functionals_kernel(
+                laid_out, vcols, keys, families=fams,
+                pre_partitioned=pre).toPandas() \
+                .set_index(keys).sort_index()
+        finally:
+            spark.conf.set(conf, "10000")
+
+    outs = {}
+    for pre in (True, False):
+        a, b = run(pre, 64), run(pre, 10000)
+        assert a.index.equals(b.index)
+        assert len(a) == len(a.index.unique())   # one row per group
+        assert list(a.columns) == list(b.columns)
+        for c in a.columns:
+            av, bv = a[c].to_numpy(), b[c].to_numpy()
+            if av.dtype.kind == "f":
+                assert np.array_equal(av, bv, equal_nan=True), (pre, c)
+            else:
+                assert (av == bv).all(), (pre, c)
+        outs[pre] = a
+    assert outs[True].index.equals(outs[False].index)
+
+    rows = laid_out.select(*keys, "turn_idx", *vcols).toPandas() \
+        .sort_values([*keys, "turn_idx"])
+    got = outs[False]
+    assert len(got) == rows.groupby(keys).ngroups
+    for key, g in rows.groupby(keys):
+        r = got.loc[key]
+        assert r["n_turns"] == len(g)
+        for c in vcols:
+            want = compute_all(g[c].to_numpy(dtype=np.float64), fams)
+            for k, v in want.items():
+                assert np.allclose(r[f"{c}_{k}"], v, equal_nan=True), \
+                    (key, c, k, r[f"{c}_{k}"], v)
 
 
 def test_derive_matches_vector_op(spark):
@@ -100,7 +119,7 @@ def test_derive_matches_vector_op(spark):
     fams = ["means", "moments", "percentiles", "regression"]
 
     fused = functionals_kernel(lld, vcols, ("conv_id",), families=fams,
-                               derive=ops, engine="arrow").toPandas() \
+                               derive=ops).toPandas() \
         .set_index("conv_id").sort_index()
 
     explicit = lld

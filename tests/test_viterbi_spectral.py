@@ -90,3 +90,45 @@ def test_spectral_stats_spark(spark):
     assert out["spec_energy"] == pytest.approx(9 + 4 + 1)
     assert 0 <= out["spec_rolloff"] <= 7
     assert out["spec_flatness"] > 0
+
+
+def test_viterbi_smooth_df_small_batches(spark):
+    """viterbi_smooth_df at 64-row Arrow batches (conversations straddle
+    batch edges): carried string and timestamp columns pass through
+    unchanged and every conversation equals the driver-side smoother."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from opensmile_spark.operators import viterbi_smooth_df
+
+    rng = np.random.RandomState(3)
+    rows = []
+    for k, n in (("a", 150), ("b", 7), ("c", 1), ("d", 90), ("e", 40)):
+        for i in range(n):
+            rows.append((k, i, float(rng.rand() * 10 + (i // 20) * 5),
+                         f"{k}-{i}", 1_704_067_200.0 + 37.5 * i))
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, x double, role string, "
+              "epoch double") \
+        .withColumn("ts", F.timestamp_seconds("epoch"))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(conf, "64")
+    try:
+        out = viterbi_smooth_df(df, "x", n_levels=8, jump_cost=2.0,
+                                carry_cols="all")
+        got = out.toPandas()
+    finally:
+        spark.conf.set(conf, "10000")
+    assert out.schema["role"].dataType.simpleString() == "string"
+    assert out.schema["ts"].dataType.simpleString() == "timestamp"
+    want = df.toPandas()
+    key = ["conv_id", "turn_idx"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert len(got) == len(want)
+    for c in ("conv_id", "turn_idx", "x", "role", "epoch", "ts"):
+        assert (got[c] == want[c]).all(), c
+    for k, g in want.groupby("conv_id"):
+        exp = viterbi_smooth(g["x"].to_numpy(), 8, 2.0)
+        assert np.array_equal(got.loc[g.index, "x_vit"].to_numpy(), exp), k
+    assert isinstance(got["ts"].iloc[0], pd.Timestamp)

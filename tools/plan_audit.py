@@ -10,6 +10,8 @@ Checks (SURVEY.md §4 / BENCH.md plan-level claims):
   4. asof_join is one exchange + one sort + window — no join node at all.
   5. MVN full-mode stats join is a broadcast join (no shuffled join).
   6. pre_partitioned kernel has NO exchange.
+  7. backfill_functionals and viterbi_smooth_df are one MapInArrow each
+     (backfill: over one exchange), with no pandas boundary.
 
 Usage: python tools/plan_audit.py
 """
@@ -128,6 +130,28 @@ def main():
     p = plan_str(fk2)
     check("standard kernel exactly one exchange",
           n_op("Exchange", p) == 1)
+
+    # per-group kernels: one shuffle, then ONE Arrow pass over blocks of
+    # whole groups (groupbatch.group_blocks) — no pandas boundary
+    from opensmile_spark.operators import (backfill_functionals,
+                                           viterbi_smooth_df)
+
+    bf = backfill_functionals(
+        laid, laid.select("conv_id", F.col("ts").alias("anchor_ts")),
+        ["char_len"], families=["means"])
+    p = plan_str(bf)
+    check("backfill_functionals one exchange, one MapInArrow, no pandas",
+          n_op("Exchange", p) == 1 and n_op("MapInArrow", p) == 1
+          and n_op("MapInPandas", p) == 0,
+          f"(exchanges={n_op('Exchange', p)}, "
+          f"arrow={n_op('MapInArrow', p)}, "
+          f"pandas={n_op('MapInPandas', p)})")
+
+    p = plan_str(viterbi_smooth_df(laid, "char_len"))
+    check("viterbi_smooth_df one MapInArrow",
+          n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
+          f"(arrow={n_op('MapInArrow', p)}, "
+          f"pandas={n_op('MapInPandas', p)})")
 
     # round-2 additions -----------------------------------------------------
     from opensmile_spark.dedup import embedding_near_dups
