@@ -8,11 +8,10 @@ mirroring how cFunctionals shares one min/max/mean/sort pre-pass across all
 sub-components (:349-365):
 
 1. `functionals_kernel` — one mapInArrow pass over key-sorted input that
-   runs ONE vectorized numpy kernel computing every enabled family for every
-   value column per group, over blocks of whole groups
-   (groupbatch.group_blocks; the shared pre-pass lives inside
-   kernels.compute_all, since Catalyst cannot CSE across a UDF boundary —
-   SURVEY.md §4).
+   evaluates every enabled family for every value column over blocks of
+   whole groups (groupbatch.group_blocks feeding batched.compute_groups;
+   the shared pre-pass lives inside the numpy kernels, since Catalyst
+   cannot CSE across a UDF boundary — SURVEY.md §4).
 2. `functionals_sql` — pure built-in aggregate expressions for the families
    that are single-pass aggregates (means/moments/extremes/percentiles/
    regression closed forms). Zero Python, map-side partial aggregation,
@@ -30,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opensmile_spark.exprcache import expr_memo
-from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.functionals.batched import compute_groups, output_keys
 from opensmile_spark.groupbatch import group_blocks
 
 DEFAULT_FAMILIES = [
@@ -57,42 +56,8 @@ DERIVE_OPS = {
 
 def feature_names(value_cols, families=None, options=None) -> list[str]:
     """Static output names (<input>_<functional>, functionals.cpp:236-241)."""
-    probe = compute_all(np.arange(1.0, 9.0), families or DEFAULT_FAMILIES,
-                        options)
-    return [f"{c}_{k}" for c in value_cols for k in probe]
-
-
-@expr_memo
-def _kernel_probe(lane_names: tuple, families: tuple, options):
-    """(feats, probe_keys, batched_fams, loop_fams, key_src) for
-    functionals_kernel — all derived from fixed 8-element compute_all
-    probes, pure in (lane_names, families, options)."""
-    feats = feature_names(list(lane_names), list(families), options)
-    probe_keys = list(compute_all(np.arange(1.0, 9.0), list(families),
-                                  options))
-
-    # families vectorizable ACROSS groups (batched.py); a family stays on
-    # the fast path when all its options are implemented there (equality
-    # pinned by tests/test_batched_kernels.py), else falls back per-group
-    from opensmile_spark.functionals.batched import (
-        BATCHED_FAMILIES, BATCHED_SUPPORTED_OPTIONS,
-    )
-
-    opt = options or {}
-    batched_fams = [
-        f for f in families
-        if f in BATCHED_FAMILIES
-        and set(opt.get(f, {})) <= BATCHED_SUPPORTED_OPTIONS[f]
-    ]
-    loop_fams = [f for f in families if f not in batched_fams]
-    # which probe keys come from which path (first-writer wins like
-    # compute_all's dict: iterate families in order, keep first producer)
-    key_src: dict[str, str] = {}
-    for fam in families:
-        sample = compute_all(np.arange(1.0, 9.0), [fam], options)
-        for k in sample:
-            key_src.setdefault(k, "batched" if fam in batched_fams else "loop")
-    return feats, probe_keys, batched_fams, loop_fams, key_src
+    keys = output_keys(families or DEFAULT_FAMILIES, options)
+    return [f"{c}_{k}" for c in value_cols for k in keys]
 
 
 def functionals_kernel(
@@ -157,14 +122,7 @@ def functionals_kernel(
                              f"have {sorted(DERIVE_OPS)}")
     lanes = [(c, None) for c in value_cols] + [
         (f"{c}__{op}", (c, op)) for c in value_cols for op in derive]
-    lane_names = [ln for ln, _ in lanes]
-    # probe metadata is a pure function of (lanes, families, options) and
-    # costs several compute_all numpy probes per construction — memoized
-    # (exprcache) so repeated query builds skip it
-    feats, probe_keys, batched_fams, loop_fams, key_src = _kernel_probe(
-        tuple(lane_names), tuple(families), options)
-
-    from opensmile_spark.functionals.batched import compute_batched
+    feats = feature_names([ln for ln, _ in lanes], families, options)
 
     key_schema = ", ".join(
         f"`{c}` {df.schema[c].dataType.simpleString()}" for c in group_cols
@@ -173,7 +131,6 @@ def functionals_kernel(
         f"`{n}` double" for n in feats
     )
     out_cols = group_cols + ["n_turns"] + feats
-    opt = options or {}
 
     def _emit(rb, starts, ends):
         """One block of whole groups (groupbatch.group_blocks) -> one
@@ -189,23 +146,9 @@ def functionals_kernel(
             else:
                 src, op = spec
                 xs = DERIVE_OPS[op](base[src])
-            if batched_fams:
-                bat = compute_batched(xs, starts, ends, batched_fams, opt)
-            else:
-                bat = {}
-            loop_rows = None
-            if loop_fams:
-                loop_rows = {k: np.empty(starts.size) for k in probe_keys
-                             if key_src[k] == "loop"}
-                for gi, (s, e) in enumerate(zip(starts, ends)):
-                    got = compute_all(xs[s:e], loop_fams, options)
-                    for k in loop_rows:
-                        loop_rows[k][gi] = got[k]
-            for k in probe_keys:
-                if key_src[k] == "batched":
-                    cols[f"{c}_{k}"] = bat[k]
-                else:
-                    cols[f"{c}_{k}"] = loop_rows[k]
+            for k, v in compute_groups(xs, starts, ends, families,
+                                       options).items():
+                cols[f"{c}_{k}"] = v
         arrays = [rb.column(c).take(starts) for c in group_cols]
         arrays.append(pa.array(ends - starts, type=pa.int64()))
         # from_pandas=True: NaN -> null, the nullness the engine has always
@@ -276,9 +219,11 @@ def functionals_sql(
     declarative aggregate compiles (HashAggregateExec) and the small
     percentile-only ObjectHashAggregate runs beside it; both sides hang
     off the SAME window subtree, so the shuffle is shared (ReusedExchange)
-    and the group key join of two already-partitioned aggregates adds no
-    exchange. Aggregation semantics per group are untouched — the same
-    aggregate functions see the same rows — so the doubles are identical.
+    and the join is null-safe (<=>), so a NULL group key survives it. The
+    null-safe join keys on (coalesce(key), isnull(key)), which costs one
+    exchange of the aggregated rows (one row per group) on each side.
+    Aggregation semantics per group are untouched — the same aggregate
+    functions see the same rows — so the doubles are identical.
 
     Expression construction is memoized (exprcache.expr_memo): the bank's
     ~160 aggregate/projection Columns cost ~0.7 s of py4j round trips to
@@ -291,8 +236,12 @@ def functionals_sql(
         tuple(float(p) for p in percentiles))
     proj = df.select(*proj_cols)
     decl = proj.groupBy(*group_cols).agg(*aggs)
-    pct = proj.groupBy(*group_cols).agg(*pct_aggs)
-    out = decl.join(pct, group_cols)
+    pct_keys = [F.col(c).alias(f"__pk{i}") for i, c in enumerate(group_cols)]
+    pct = proj.groupBy(*pct_keys).agg(*pct_aggs)
+    # null-safe: a NULL group key is a group of its own and must not be
+    # dropped by the join
+    out = decl.join(pct, [F.col(c).eqNullSafe(F.col(f"__pk{i}"))
+                          for i, c in enumerate(group_cols)])
     return out.select(*group_cols, *final)
 
 

@@ -1,25 +1,34 @@
-"""Cross-group vectorized functional computation.
+"""Cross-group vectorized functional computation, and the one router that
+decides how a family list is evaluated over groups.
 
 The per-group kernels (kernels.py) are the semantic source of truth; this
-module computes the SAME formulas for the array-expressible families across
-ALL groups of a batch at once with numpy reduceat — removing the per-group
-Python dispatch that dominates when groups are small (the common case:
-tens of turns per session). Families with sequential automatons (peaks2,
-segments, onset) and genuinely per-group transforms (lpc, modulation)
-stay on the per-group path; samples (a gather) and dct (per-element basis
-+ reduceat) joined the batched set in round 4 — the wide-preset
-measurement showed the per-group dispatch of those two dominating at
-ComParE-width output.
+module computes the SAME formulas across ALL groups of a batch at once with
+numpy reduceat — removing the per-group Python dispatch that dominates when
+groups are small (the common case: tens of turns per session). All 19
+families are batched, the sequential automatons (peaks, peaks2, segments,
+onset) and the per-group transforms (lpc, lsp, formants, modulation)
+included. Some family OPTIONS are not implemented here
+(BATCHED_SUPPORTED_OPTIONS); a family that sets one runs the per-group
+reference kernel instead.
+
+`compute_groups` is the single place that makes that choice — the analogue
+of cFunctionals' one shared pre-pass plus dispatch of each enabled
+sub-component (openSMILE src/functionals/functionals.cpp:320-390).
+functionals_kernel, backfill_functionals and closed_session_functionals
+all evaluate their groups through it, and `output_keys` names its outputs.
 
 Numerical discipline: central moments are computed exactly as kernels.py
 does (sum((x-mean)^k)), NOT via raw-moment expansion (which catastrophically
 cancels for large means like reply-latency epochs). Equality with the
-per-group path is pinned by tests/test_batched_kernels.py at rtol 1e-12.
+per-group path is pinned by tests/test_batched_kernels.py at rtol 1e-8
+(summation order differs: reduceat is sequential, ndarray.sum pairwise).
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from opensmile_spark.exprcache import expr_memo
 
 BATCHED_FAMILIES = {
     "means", "moments", "extremes", "percentiles", "regression", "crossings",
@@ -29,8 +38,8 @@ BATCHED_FAMILIES = {
 
 # per-family options the batched path implements with kernel-equal results;
 # a family with any OTHER option falls back to the per-group reference path
-# (bank.py consults this so e.g. eGeMAPS-style custom percentiles keep the
-# reduceat fast path instead of evicting the family)
+# (compute_groups consults this so e.g. eGeMAPS-style custom percentiles
+# keep the reduceat fast path instead of evicting the family)
 BATCHED_SUPPORTED_OPTIONS = {
     "means": {"timeNorm", "T"},
     "moments": set(),
@@ -250,6 +259,9 @@ def _expanding_select(x, his, targets, B=_CHAN_B, W=256, chunk=8192):
     paths order ties by original index (stable argsort), so the returned
     bits are identical by construction (pinned by
     tests/test_batched_kernels.py::test_expanding_select_dense_matches)."""
+    # float64 out of both paths; the conversion is exact, so ranks and the
+    # selected elements are those of the input
+    x = np.asarray(x, dtype=np.float64)
     n = x.size
     his_arr = np.asarray(his, dtype=np.int64)
     if n * his_arr.size <= _SELECT_DENSE_CUTOFF:
@@ -1836,3 +1848,65 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                 out[k] = v
 
     return out
+
+
+def runs_batched(family: str, options=None) -> bool:
+    """True when `family` with its options runs on compute_batched."""
+    return (family in BATCHED_FAMILIES
+            and set((options or {}).get(family, {}))
+            <= BATCHED_SUPPORTED_OPTIONS[family])
+
+
+@expr_memo
+def output_keys(families, options=None) -> tuple:
+    """Bare output names of `families`, in compute_all order — read off one
+    compute_all call on a fixed 8-element probe (names depend on families
+    and options only, never on the data)."""
+    from opensmile_spark.functionals.kernels import compute_all
+
+    return tuple(compute_all(np.arange(1.0, 9.0), list(families), options))
+
+
+@expr_memo
+def key_owners(families, options=None) -> tuple:
+    """((key, family), ...) in output_keys order: a key belongs to the
+    first requested family that emits it (compute_all's first-writer-wins)."""
+    owner: dict = {}
+    for fam in families:
+        for k in output_keys((fam,), options):
+            owner.setdefault(k, fam)
+    return tuple(owner.items())
+
+
+@expr_memo
+def _route(families, options):
+    """(output keys, batched families, loop families, keys owned by a loop
+    family)."""
+    batched = tuple(f for f in families if runs_batched(f, options))
+    loop = tuple(f for f in families if f not in batched)
+    loop_keys = tuple(k for k, f in key_owners(families, options)
+                      if f in loop)
+    return output_keys(families, options), batched, loop, loop_keys
+
+
+def compute_groups(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
+                   families, options=None) -> dict[str, np.ndarray]:
+    """{key: float64 array, one value per group} for every output key of
+    `families` (output_keys order); group i is x[starts[i]:ends[i]],
+    non-empty. Families whose options fit BATCHED_SUPPORTED_OPTIONS run in
+    one compute_batched call; the others run the per-group compute_all
+    reference loop, so their keys are bit-equal to compute_all."""
+    from opensmile_spark.functionals.kernels import compute_all
+
+    keys, batched, loop, loop_keys = _route(families, options)
+    out = {}
+    if batched:
+        out = compute_batched(x, starts, ends, batched, options)
+    if loop:
+        rows = {k: np.empty(starts.size) for k in loop_keys}
+        for gi, (s, e) in enumerate(zip(starts, ends)):
+            got = compute_all(x[s:e], loop, options)
+            for k in loop_keys:
+                rows[k][gi] = got[k]
+        out.update(rows)
+    return {k: out[k] for k in keys}

@@ -32,7 +32,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opensmile_spark.exprcache import expr_memo
-from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.functionals.batched import (
+    EXPANDING_FAMILIES, EXPANDING_UNSUPPORTED_KEYS, compute_expanding,
+    compute_groups, key_owners, output_keys, runs_batched,
+)
 
 
 def asof_join(
@@ -97,52 +100,24 @@ def asof_join(
 
 
 @expr_memo
-def _backfill_probe(value_cols: tuple, families: tuple, options,
-                    expanding: bool):
-    """(probe keys, feature names, exp/gather/loop family routing,
-    key->source map) for backfill_functionals — derived from fixed
-    8-element compute_all probes, pure in its arguments."""
-    import numpy as np
+def _expanding_route(families, options):
+    """(families for compute_expanding, the keys it fills, families left
+    for the per-window gather) on an expanding grid.
 
-    from opensmile_spark.functionals.batched import (
-        BATCHED_FAMILIES, BATCHED_SUPPORTED_OPTIONS, EXPANDING_FAMILIES,
-        EXPANDING_UNSUPPORTED_KEYS,
-    )
-
-    options = options or {}
-    probe = list(compute_all(np.arange(1.0, 9.0), list(families), options))
-    feat_names = [f"{c}_{k}" for c in value_cols for k in probe]
-
-    batched_fams = [
-        f for f in families
-        if f in BATCHED_FAMILIES
-        and set(options.get(f, {})) <= BATCHED_SUPPORTED_OPTIONS[f]
-    ]
-    # sum/central-stat families on EXPANDING windows (no trailing bound)
-    # take the O(N + A) prefix/blocked-Chan path — linear, not O(sum of
-    # window sizes). Routing is per OUTPUT KEY: the two mean-|residual|
-    # regression outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly
-    # per-window, so their family additionally joins the bounded gather,
-    # which then fills ONLY those keys.
-    exp_fams = [f for f in batched_fams if f in EXPANDING_FAMILIES] \
-        if expanding else []
-    gather_fams = [f for f in batched_fams if f not in exp_fams]
-    loop_fams = [f for f in families if f not in batched_fams]
-    key_src: dict[str, str] = {}
-    for fam in families:
-        sample = compute_all(np.arange(1.0, 9.0), [fam], options)
-        src = ("exp" if fam in exp_fams else
-               "batched" if fam in batched_fams else "loop")
-        residual = False
-        for k in sample:
-            if src == "exp" and k in EXPANDING_UNSUPPORTED_KEYS:
-                key_src.setdefault(k, "batched")
-                residual = True
-            else:
-                key_src.setdefault(k, src)
-        if residual and fam not in gather_fams:
-            gather_fams.append(fam)
-    return probe, feat_names, exp_fams, gather_fams, loop_fams, key_src
+    Sum/central-stat families on EXPANDING windows (no trailing bound) take
+    the O(N + A) prefix/blocked-Chan path — linear, not O(sum of window
+    sizes). Routing is per OUTPUT KEY: the two mean-|residual| regression
+    outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly per-window, so
+    their family also joins the gather, which then fills ONLY those keys.
+    """
+    exp = tuple(f for f in families
+                if f in EXPANDING_FAMILIES and runs_batched(f, options))
+    exp_keys = frozenset(k for k, fam in key_owners(families, options)
+                         if fam in exp and k not in EXPANDING_UNSUPPORTED_KEYS)
+    rest = tuple(f for f in families if f not in exp
+                 or EXPANDING_UNSUPPORTED_KEYS.intersection(
+                     output_keys((f,), options)))
+    return exp, exp_keys, rest
 
 
 def backfill_functionals(
@@ -170,9 +145,10 @@ def backfill_functionals(
     Python dispatch is amortized over every conversation in a block instead
     of paid per conversation. The key and anchor_ts columns keep their
     input types. Per-anchor windows are gathered into ONE concatenated
-    array and every reduceat-expressible family is computed for ALL anchors
-    at once (functionals/batched.py) — no per-anchor Python dispatch; only
-    families outside BATCHED_FAMILIES fall back to a per-anchor loop.
+    array and evaluated for ALL anchors at once by batched.compute_groups —
+    no per-anchor Python dispatch, except for a family whose options lie
+    outside BATCHED_SUPPORTED_OPTIONS, which compute_groups runs through
+    the per-window reference kernel.
     Anchor blocks are chunked so the gathered array stays bounded
     (`max_gather_elems`) regardless of anchor density. Empty windows
     emit null features (anchor row is kept so the grid is complete — the
@@ -192,9 +168,6 @@ def backfill_functionals(
     import numpy as np
     import pyarrow as pa
 
-    from opensmile_spark.functionals.batched import (
-        compute_batched, compute_expanding,
-    )
     from opensmile_spark.groupbatch import group_blocks
 
     families = families or ["means", "moments", "extremes", "percentiles",
@@ -202,11 +175,13 @@ def backfill_functionals(
     options = options or {}
     max_gather_elems = 16_000_000  # ~128 MB of float64 gather per block
 
-    # probe metadata is pure in (value_cols, families, options, bounded?)
-    # and costs several numpy compute_all probes — memoized (exprcache)
-    probe, feat_names, exp_fams, gather_fams, loop_fams, key_src = \
-        _backfill_probe(tuple(value_cols), tuple(families), options,
-                        window_seconds is None)
+    feat_names = [f"{c}_{k}" for c in value_cols
+                  for k in output_keys(families, options)]
+    if window_seconds is None:
+        exp_fams, exp_keys, gather_fams = _expanding_route(families,
+                                                           options)
+    else:
+        exp_fams, exp_keys, gather_fams = (), frozenset(), tuple(families)
 
     def _one_conv(ts_vals, col_arrays, anchor_vals):
         """Per-conversation math — unchanged from the r5 cogroup
@@ -224,8 +199,7 @@ def backfill_functionals(
             lo = np.zeros_like(hi)
 
         A = len(anchor_vals)
-        out_cols = {f"{c}_{k}": np.full(A, np.nan) for c in value_cols
-                    for k in probe}
+        out_cols = {f: np.full(A, np.nan) for f in feat_names}
         sizes = (hi - lo).astype(np.int64)
         nonempty = np.flatnonzero(sizes > 0)
 
@@ -235,13 +209,13 @@ def backfill_functionals(
                 ex = compute_expanding(col_arrays[c], hi[nonempty],
                                        exp_fams, options)
                 for k, v in ex.items():
-                    if key_src.get(k) == "exp":
+                    if k in exp_keys:
                         out_cols[f"{c}_{k}"][nonempty] = v
 
         # block anchors so the gathered windows stay within the memory cap
         blk_start = 0
         csum = np.cumsum(sizes[nonempty])
-        while (gather_fams or loop_fams) and blk_start < nonempty.size:
+        while gather_fams and blk_start < nonempty.size:
             base = csum[blk_start - 1] if blk_start > 0 else 0
             blk_end = int(np.searchsorted(
                 csum, base + max_gather_elems, side="right"))
@@ -255,20 +229,11 @@ def backfill_functionals(
             gather = (np.arange(int(bsizes.sum()), dtype=np.int64)
                       + np.repeat(lo[sel] - bstarts, bsizes))
             for c in value_cols:
-                big = col_arrays[c][gather]
-                if gather_fams:
-                    bat = compute_batched(big, bstarts, bends,
-                                          gather_fams, options)
-                    for k, v in bat.items():
-                        if key_src.get(k) == "batched":
-                            out_cols[f"{c}_{k}"][sel] = v
-                if loop_fams:
-                    for gi, ai in enumerate(sel):
-                        got = compute_all(big[bstarts[gi]:bends[gi]],
-                                          loop_fams, options)
-                        for k, v in got.items():
-                            if key_src.get(k) == "loop":
-                                out_cols[f"{c}_{k}"][ai] = v
+                got = compute_groups(col_arrays[c][gather], bstarts, bends,
+                                     gather_fams, options)
+                for k, v in got.items():
+                    if k not in exp_keys:
+                        out_cols[f"{c}_{k}"][sel] = v
             blk_start = blk_end
         return sizes, out_cols
 

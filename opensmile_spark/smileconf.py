@@ -491,9 +491,7 @@ def _output_selection(sec, fams, options, report):
     rule); enabled flags naming outputs this engine does not produce are
     reported under `unavailable_outputs`. Returns the kept output-name
     list, or None when the section declares no output flags."""
-    import numpy as np
-
-    from opensmile_spark.functionals.kernels import compute_all
+    from opensmile_spark.functionals.batched import output_keys
 
     flags: dict = {}
     for k, v in sec.options.items():
@@ -508,7 +506,7 @@ def _output_selection(sec, fams, options, report):
         return None
     keep, unavailable = [], []
     for fam in fams:
-        outs = list(compute_all(np.arange(1.0, 9.0), [fam], options).keys())
+        outs = output_keys((fam,), options)
         fflags = flags.get(fam)
         if not fflags:
             keep.extend(outs)
@@ -730,17 +728,12 @@ def conf_to_config(parse: ConfParse, value_cols: list[str],
                     out_names = [c for c in sel["cols"]
                                  if c not in group_cols and c != "n_turns"]
                 else:
-                    import numpy as np
-
-                    from opensmile_spark.functionals.kernels import (
-                        compute_all,
+                    from opensmile_spark.functionals.bank import (
+                        feature_names,
                     )
-                    probe = compute_all(np.arange(1.0, 9.0),
-                                        fstage["families"],
-                                        fstage.get("options"))
-                    out_names = [f"{c}_{k}"
-                                 for c in fstage["value_cols"]
-                                 for k in probe]
+                    out_names = feature_names(fstage["value_cols"],
+                                              fstage["families"],
+                                              fstage.get("options"))
                 set_out(sec, out_names)
             else:
                 set_out(sec, cur)

@@ -176,8 +176,10 @@ def closed_session_functionals(
     session's (ts-ordered) values; append + watermark means a session row
     is emitted exactly once, when the watermark passes its close — at that
     point the whole segment is known, so the batch kernel runs on it inside
-    foreachBatch. State is bounded by session length (the reference's ring
-    buffer bound); the kernel never sees an open session.
+    foreachBatch: one mapInArrow pass hands every session of an Arrow batch
+    to batched.compute_groups at once. State is bounded by session length
+    (the reference's ring buffer bound); the kernel never sees an open
+    session.
 
     Returns (sessions_stream, process_batch): start with
       sessions_stream.writeStream.outputMode("append")
@@ -185,14 +187,15 @@ def closed_session_functionals(
     where process_batch(df) -> DataFrame applies the kernel batch-side.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from opensmile_spark.functionals.kernels import compute_all
+    from opensmile_spark.functionals.batched import (
+        compute_groups, output_keys,
+    )
 
     families = families or ["means", "moments", "percentiles", "segments",
                             "peaks2"]
-    probe = list(compute_all(np.arange(1.0, 9.0), families))
-    feat_names = [f"{value_col}_{k}" for k in probe]
+    feat_names = [f"{value_col}_{k}" for k in output_keys(families)]
 
     sessions = (
         lld_stream.withWatermark("ts", watermark)
@@ -211,27 +214,33 @@ def closed_session_functionals(
             F.transform("__rows", lambda r: r[value_col]).alias("__xs"),
         )
     )
+    key_cols = ["conv_id", "session_start", "session_end", "n_turns"]
 
-    out_schema = ("conv_id string, session_start timestamp, "
-                  "session_end timestamp, n_turns long, "
-                  + ", ".join(f"`{n}` double" for n in feat_names))
+    def kernel(batches):
+        """Each row is one closed session: the __xs list offsets are the
+        group bounds of the flattened values."""
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            xs = rb.column("__xs")
+            offsets = xs.offsets.to_numpy().astype(np.int64)
+            x = xs.flatten().to_numpy(zero_copy_only=False) \
+                .astype(np.float64, copy=False)
+            feats = compute_groups(x, offsets[:-1] - offsets[0],
+                                   offsets[1:] - offsets[0], families)
+            # from_pandas=True: NaN -> null, as the other kernels emit it
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c) for c in key_cols]
+                + [pa.array(v, type=pa.float64(), from_pandas=True)
+                   for v in feats.values()],
+                names=key_cols + feat_names)
+
+    schema = ", ".join(
+        [f"`{c}` {sessions.schema[c].dataType.simpleString()}"
+         for c in key_cols] + [f"`{n}` double" for n in feat_names])
 
     def process_batch(batch_df: DataFrame) -> DataFrame:
-        def kernel(pdfs):
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                cols = {c: pdf[c] for c in
-                        ("conv_id", "session_start", "session_end",
-                         "n_turns")}
-                feats = [compute_all(np.asarray(xs, dtype=np.float64),
-                                     families) for xs in pdf["__xs"]]
-                for k in probe:
-                    cols[f"{value_col}_{k}"] = [f.get(k, float("nan"))
-                                                for f in feats]
-                yield pd.DataFrame(cols)
-
-        return batch_df.mapInPandas(kernel, schema=out_schema)
+        return batch_df.mapInArrow(kernel, schema=schema)
 
     return sessions, process_batch
 

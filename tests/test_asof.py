@@ -138,6 +138,63 @@ def test_backfill_long_key(spark):
     assert got[(2**40, -1.0)]["x_amean"] is None
 
 
+def test_backfill_reference_loop_path(spark):
+    """A family whose options lie outside BATCHED_SUPPORTED_OPTIONS
+    (segments nonX) runs the per-window reference loop next to the
+    expanding (means, regression) and gathered (crossings, regression
+    |residual|) paths; `amean` is emitted by both means and crossings.
+    Every anchor equals compute_all on its visible slice, expanding and
+    on a trailing window; loop-routed keys are bit-equal."""
+    from opensmile_spark.functionals.batched import _route
+
+    t0 = 1_704_067_200.0
+    fams = ["means", "crossings", "regression", "segments"]
+    opts = {"segments": {"algorithm": "nonX", "X": 0.0}}
+    rng = np.random.default_rng(3)
+    convs = {}
+    for k, n in (("a", 40), ("b", 9)):
+        v = np.round(rng.normal(2.0, 3.0, n), 1)
+        v[rng.random(n) < 0.3] = 0.0
+        convs[k] = v
+    lld = None
+    for k, v in convs.items():
+        d = make_conv(spark, k, v, gap_s=10.0)
+        lld = d if lld is None else lld.unionByName(d)
+    # anchors 5 s after every 3rd turn (never on a window edge), plus one
+    # before the first turn
+    anchors = None
+    for k, v in convs.items():
+        a = _anchors(spark, k, [t0 - 5.0] + [t0 + 10.0 * j + 5.0
+                                             for j in range(0, len(v), 3)])
+        anchors = a if anchors is None else anchors.unionByName(a)
+    loop_keys = _route(fams, opts)[3]
+    assert loop_keys
+    for window in (None, 60.0):
+        out = backfill_functionals(lld, anchors, ["x"], families=fams,
+                                   options=opts, window_seconds=window)
+        rows = out.collect()
+        assert len(rows) == anchors.count()
+        for r in rows:
+            v = convs[r["conv_id"]]
+            t = r["anchor_ts"].timestamp() - t0
+            ts = 10.0 * np.arange(len(v))
+            vis = (ts <= t) & ((ts >= t - window) if window else True)
+            assert r["n_visible"] == vis.sum()
+            if not vis.any():
+                assert r["x_amean"] is None
+                continue
+            want = compute_all(v[vis], fams, opts)
+            assert {f"x_{k}" for k in want} == \
+                set(r.asDict()) - {"conv_id", "anchor_ts", "n_visible"}
+            for key, w in want.items():
+                got = r[f"x_{key}"]
+                if key in loop_keys:
+                    assert got == w, (window, t, key, got, w)
+                else:
+                    assert np.isclose(got, w, rtol=1e-9, atol=1e-12), \
+                        (window, t, key, got, w)
+
+
 def _split_corpus(spark):
     """Six conversations, one of 420 turns (with its anchors it spans more
     than 5 Arrow batches of 64 rows), anchors on every 3rd turn plus one

@@ -537,7 +537,8 @@ def test_expanding_select_dense_matches(monkeypatch):
     SAME BITS as the coarse-matrix machinery (both select elements via
     stable ranks; selection performs no float op) — adversarial ties,
     -0.0/0.0 mixes, and NaN included, since the driver's byte hash
-    distinguishes -0.0 from 0.0."""
+    distinguishes -0.0 from 0.0. Both paths return float64, float32
+    input included."""
     from opensmile_spark.functionals import batched
 
     rng = np.random.RandomState(23)
@@ -552,6 +553,7 @@ def test_expanding_select_dense_matches(monkeypatch):
         nanx = rng.rand(n).copy()
         nanx[::5] = np.nan
         cases.append(nanx)
+        cases.append(rng.rand(n).astype(np.float32))
         for x in cases:
             his = np.arange(1, x.size + 1, dtype=np.int64)
             targets = []
@@ -566,4 +568,63 @@ def test_expanding_select_dense_matches(monkeypatch):
             monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", -1)
             machinery = batched._expanding_select(x, his, targets)
             for d, m in zip(dense, machinery):
+                assert d.dtype == m.dtype == np.float64, (n, x.dtype)
                 assert d.tobytes() == m.tobytes(), (n, x[:8])
+
+
+# --- the family router (batched.output_keys / batched.compute_groups) ------
+
+ROUTER_CASES = [
+    (["peaks", "peaks2"], None),
+    (["peaks2", "peaks"], None),
+    # onset with a threshold and eqX segments run the per-group loop,
+    # mixed with batched families that share keys (amean)
+    (["means", "onset", "crossings", "percentiles"],
+     {"onset": {"thresholdOnset": 1.0, "thresholdOffset": 0.5}}),
+    (["segments", "means", "peaks2", "regression"],
+     {"segments": {"algorithm": "eqX", "X": 0.0}}),
+    # a loop-routed family requested first owns the shared key (amean)
+    (["moments", "means", "extremes"], {"moments": {"doRatioLimit": True}}),
+]
+
+
+@pytest.mark.parametrize("fams,opts", ROUTER_CASES)
+def test_output_keys_is_compute_all_order(fams, opts):
+    """Names in compute_all order; each key owned by the first requested
+    family that emits it."""
+    from opensmile_spark.functionals.batched import key_owners, output_keys
+
+    x = np.random.RandomState(5).randn(17)
+    keys = output_keys(fams, opts)
+    assert isinstance(keys, tuple)
+    assert list(keys) == list(compute_all(x, fams, opts))
+    owners = key_owners(fams, opts)
+    assert [k for k, _ in owners] == list(keys)
+    for k, fam in owners:
+        assert fam == next(f for f in fams if k in compute_all(x, [f], opts))
+
+
+@pytest.mark.parametrize("fams,opts", ROUTER_CASES)
+def test_compute_groups_matches_pergroup(fams, opts):
+    """Every key equals per-group compute_all; keys the router sends to
+    the per-group loop are bit-equal to it."""
+    from opensmile_spark.functionals.batched import (
+        _route, compute_groups, output_keys,
+    )
+
+    rng = np.random.RandomState(9)
+    x, starts, ends = make_groups(rng)
+    got = compute_groups(x, starts, ends, fams, opts)
+    assert tuple(got) == output_keys(fams, opts)
+    _, _, loop, loop_keys = _route(fams, opts)
+    assert bool(loop) == (opts is not None)
+    assert bool(loop_keys) == (opts is not None)
+    for gi, (s, e) in enumerate(zip(starts, ends)):
+        want = compute_all(x[s:e], fams, opts)
+        for k, v in want.items():
+            g = got[k][gi]
+            assert got[k].dtype == np.float64
+            if k in loop_keys:
+                assert np.float64(v).tobytes() == g.tobytes(), (gi, k, g, v)
+            else:
+                assert np.isclose(g, v, rtol=1e-8, atol=1e-10), (gi, k, g, v)

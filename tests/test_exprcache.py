@@ -105,15 +105,19 @@ def test_split_percentiles_bit_exact_vs_direct(spark):
 
 
 def test_split_join_loses_no_groups(spark):
-    """Every group (incl. all-null value groups) must survive the
-    decl-pct inner join with the full aggregate row set."""
+    """Every group (incl. all-null value groups and the NULL-key group)
+    must survive the decl-pct join with the full aggregate row set."""
     from opensmile_spark.functionals import functionals_sql
 
-    rows = [(g, i, v) for g, vals in ADVERSARIAL.items()
+    groups = {**ADVERSARIAL, None: [4.0, 1.0, 2.0]}
+    rows = [(g, i, v) for g, vals in groups.items()
             for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, v double")
     out = functionals_sql(df, ["v"]).collect()
-    assert {r["conv_id"] for r in out} == set(ADVERSARIAL)
+    assert len(out) == len(groups)
+    assert {r["conv_id"] for r in out} == set(groups)
     by_g = {r["conv_id"]: r for r in out}
     assert by_g["g_allnull"]["n_turns"] == 3
     assert by_g["g_one"]["v_quartile2"] == 42.5
+    assert by_g[None]["n_turns"] == 3
+    assert by_g[None]["v_quartile2"] == 2.0

@@ -12,6 +12,8 @@ Checks (SURVEY.md §4 / BENCH.md plan-level claims):
   6. pre_partitioned kernel has NO exchange.
   7. backfill_functionals and viterbi_smooth_df are one MapInArrow each
      (backfill: over one exchange), with no pandas boundary.
+  8. closed_session_functionals' process_batch is exactly one MapInArrow,
+     with no pandas boundary.
 
 Usage: python tools/plan_audit.py
 """
@@ -149,6 +151,18 @@ def main():
 
     p = plan_str(viterbi_smooth_df(laid, "char_len"))
     check("viterbi_smooth_df one MapInArrow",
+          n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
+          f"(arrow={n_op('MapInArrow', p)}, "
+          f"pandas={n_op('MapInPandas', p)})")
+
+    # closed-session functionals: every session of an Arrow batch goes
+    # through one compute_groups call — no per-session pandas kernel
+    from opensmile_spark.streaming import closed_session_functionals
+
+    sessions, process_batch = closed_session_functionals(
+        laid.select("conv_id", "turn_idx", "ts", "char_len"))
+    p = plan_str(process_batch(sessions))
+    check("closed_session_functionals one MapInArrow, no pandas",
           n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
           f"(arrow={n_op('MapInArrow', p)}, "
           f"pandas={n_op('MapInPandas', p)})")
