@@ -33,6 +33,10 @@ sessionize -> per-session functional vectors, kernel path) is run on the
 SAME deterministic synthetic corpus at local[N] and local[4N]
 (N = SPARK_GRAFT_CPUS/4); efficiency = (t_N / t_4N) / 4.
 
+The session, the inputs, the flagship job and the headline stage table
+come from the stage registry, tools/stages.py; this file holds only the
+measurement protocol, the evidence stages and the JSON record.
+
 Set SPARK_GRAFT_SKIP_SCALING=1 to skip the scaling runs (fast iteration).
 """
 
@@ -46,56 +50,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.stages import (  # noqa: E402
+    N_HEADLINE, bench_spark, bpe_ids, flagship, load_inputs, pack,
+    stage_table,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SF = SF_DIR.rstrip("/").split("sf")[-1]
 SCRATCH = "/dev/shm/opensmile_spark_bench_scratch"
-
-
-def _spark(n_threads: int):
-    from opensmile_spark import get_spark
-
-    return get_spark(
-        f"bench_{n_threads}", master=f"local[{n_threads}]",
-        shuffle_partitions=max(8, 2 * n_threads),
-        extra_conf={
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
-            # tmpfs shuffle scratch: the sandbox disk serializes shuffle IO;
-            # a real cluster has per-executor local SSDs
-            "spark.local.dir": SCRATCH,
-            # the bench opens ~2 sessions per scaling pair in ONE JVM; the
-            # default 240 MB code cache fills by pair ~6, JIT compilation
-            # shuts off ("CodeHeap full ... compilation disabled"), and
-            # every later pair runs partially interpreted — observed as a
-            # +37% monotonic drift on BOTH levels. Flushing + headroom
-            # keeps late pairs measuring the engine, not the JIT state.
-            "spark.driver.extraJavaOptions":
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
-        },
-    )
-
-
-def _noop(df):
-    """Force full evaluation without collecting to the driver."""
-    df.write.format("noop").mode("overwrite").save()
-
-
-def flagship(spark, transcripts):
-    """The headline job: LLD -> sma3 -> sessionize -> per-session functional
-    vectors (kernel path, 5 families) — one feature vector per session."""
-    from opensmile_spark.functionals import functionals_kernel
-    from opensmile_spark.lld import compute_lld
-    from opensmile_spark.operators import sessionize, sma
-
-    lld = compute_lld(transcripts)
-    lld = sma(lld, ["char_len", "token_cnt"], 3)
-    lld = sessionize(lld, gap_seconds=43200.0)
-    return functionals_kernel(
-        lld, ["char_len_sma3", "token_cnt_sma3"],
-        ("conv_id", "session_id"),
-        families=["means", "moments", "percentiles", "regression", "peaks2"],
-        repartition_cols=("conv_id",),   # reuses the window chain's exchange
-    )
 
 
 def run_scaling() -> dict:
@@ -113,6 +76,7 @@ def run_scaling() -> dict:
 
     from opensmile_spark.datagen import generate_transcripts
     from opensmile_spark.functionals import functionals_kernel
+    from opensmile_spark.io import null_sink
     from opensmile_spark.lld import compute_lld
     from opensmile_spark.operators import sessionize, sma
 
@@ -165,7 +129,7 @@ def run_scaling() -> dict:
     # 100 TB that layout choice is the difference between a bandwidth-
     # bound and a compute-bound fleet, and on this shared box it shrinks
     # the non-parallelizable transfer residue the same way.
-    s = _spark(CPUS)
+    s = bench_spark("bench", CPUS, SCRATCH)
     t = generate_transcripts(s, n_convs=n_convs, turns_per_conv=60,
                              mega_conv_factor=50, partitions=2 * CPUS)
     sess = sessionize(sma(compute_lld(t), lld_cols, 3),
@@ -241,7 +205,7 @@ def run_scaling() -> dict:
         order = ((n_small, n_large) if rep % 2 == 0
                  else (n_large, n_small))
         for n in order:
-            s = _spark(n)
+            s = bench_spark("bench", n, SCRATCH)
             s.conf.set(
                 "spark.sql.adaptive.coalescePartitions.enabled", "false")
             # 20k-row Arrow batches: the per-batch working set (lanes +
@@ -273,10 +237,10 @@ def run_scaling() -> dict:
                 for b in batches:
                     yield b.iloc[:1]
 
-            _noop(lld2.select(vcols[0]).mapInPandas(
+            null_sink(lld2.select(vcols[0]).mapInPandas(
                 _warm, schema=f"`{vcols[0]}` double"))
             t0 = time.time()
-            _noop(fk2)
+            null_sink(fk2)
             if not warmup:
                 times[n].append(time.time() - t0)
             s.stop()
@@ -444,50 +408,18 @@ def _host_scale_probe(n_small: int, n_large: int):
         str(p): round(t, 2) for p, t in ts.items()}
 
 
-def _headline_stages(spark, transcripts, lld_plan, lld, anchors, docs, emb):
-    """The same 10 headline stages as r1-r4 (`value` sums them),
-    parameterized by input tables so the sf0.1 driver tables and the
-    10x synthetic sf1 replica run the IDENTICAL plan set."""
-    from pyspark.sql import functions as F
+def _interleaved(stages, reps: int) -> dict[str, list[float]]:
+    """Seconds per round of build + null_sink for each (name, build)
+    stage, run round-robin (A,B,C,A,B,C) for `reps` rounds."""
+    from opensmile_spark.io import null_sink
 
-    from opensmile_spark.dedup import minhash_lsh_pairs, ngram_jaccard
-    from opensmile_spark.functionals import functionals_sql
-    from opensmile_spark.operators import (
-        asof_join, backfill_functionals, delta_regression, sessionize, sma,
-    )
-    from opensmile_spark.similarity import cosine_topk
-
-    return [
-        ("lld", lambda: _noop(lld_plan)),
-        ("windows_sma_delta", lambda: _noop(delta_regression(
-            sma(lld, ["char_len", "token_cnt", "reply_latency"], 3),
-            ["char_len"], 2))),
-        ("sessionize", lambda: _noop(
-            sessionize(lld, gap_seconds=43200.0))),
-        ("functionals_sql", lambda: _noop(
-            functionals_sql(lld,
-                            ["char_len", "token_cnt", "reply_latency"]))),
-        ("functionals_kernel", lambda: _noop(
-            flagship(spark, transcripts))),
-        ("asof_join", lambda: _noop(
-            asof_join(anchors, lld.select("conv_id", "ts", "char_len"),
-                      value_cols=["char_len"]))),
-        ("backfill_means", lambda: _noop(
-            backfill_functionals(lld, anchors, ["char_len"],
-                                 families=["means", "moments"]))),
-        # the COMPLETE per-anchor functional vector (all five default
-        # families) — every family linear in conversation length on this
-        # unbounded grid (prefix / blocked-Chan / offline order stats)
-        ("backfill_full", lambda: _noop(
-            backfill_functionals(lld, anchors, ["char_len"],
-                                 families=["means", "moments", "extremes",
-                                           "percentiles", "regression"]))),
-        ("dedup_minhash_lsh", lambda: _noop(
-            ngram_jaccard(docs,
-                          minhash_lsh_pairs(docs, n_hashes=8, bands=4)))),
-        ("ann_cosine_topk", lambda: _noop(
-            cosine_topk(emb, emb.filter(F.col("vec_id") < 20), k=10))),
-    ]
+    samples: dict[str, list[float]] = {n: [] for n, _ in stages}
+    for _ in range(reps):
+        for name, build in stages:
+            t0 = time.time()
+            null_sink(build())
+            samples[name].append(time.time() - t0)
+    return samples
 
 
 def run_sf1(spark, docs01, emb01) -> dict:
@@ -531,14 +463,9 @@ def run_sf1(spark, docs01, emb01) -> dict:
     n_rows = lld.count()
     anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
 
-    stages = _headline_stages(spark, t, lld_plan, lld, anchors, docs, emb)
+    stages = stage_table(t, lld_plan, lld, anchors, docs, emb)[:N_HEADLINE]
     reps = int(os.environ.get("SPARK_GRAFT_SF1_REPS", "2"))
-    samples: dict[str, list[float]] = {n: [] for n, _ in stages}
-    for _ in range(reps):
-        for name, fn in stages:
-            t0 = time.time()
-            fn()
-            samples[name].append(time.time() - t0)
+    samples = _interleaved(stages, reps)
     timings = {n: round(min(v), 3) for n, v in samples.items()}
     for df in (docs, emb, lld):
         df.unpersist()
@@ -558,12 +485,12 @@ def main():
     from opensmile_spark.datagen import generate_transcripts
     from opensmile_spark.dedup import minhash_lsh_pairs, ngram_jaccard
     from opensmile_spark.functionals import functionals_kernel
+    from opensmile_spark.io import null_sink
     from opensmile_spark.lld import compute_lld
     from opensmile_spark.operators import (
         delta_regression, overlap_salt, sma,
     )
     from opensmile_spark.similarity import cosine_topk
-    from opensmile_spark.transcripts import transcripts_from_events
 
     # ---- scaling evidence FIRST: the north-rule number runs while the
     # host is coldest (r3's record ran it last, in the noisiest window)
@@ -574,23 +501,12 @@ def main():
     if not os.environ.get("SPARK_GRAFT_SKIP_SCALING"):
         scaling = run_scaling()
 
-    spark = _spark(CPUS)
-    transcripts = transcripts_from_events(spark, SF_DIR)
+    spark = bench_spark("bench", CPUS, SCRATCH)
+    inputs = load_inputs(spark, SF_DIR)
+    transcripts, _, lld, _, docs, emb = inputs
     n_rows = transcripts.count()
 
-    # shared upstream: the LLD table is computed ONCE and cached so each
-    # downstream stage measures its own operator, not a recomputation of
-    # the shared lineage (a production pipeline materializes LLD once).
-    # The `lld` stage itself measures the UNCACHED plan.
-    lld_plan = compute_lld(transcripts)
-    lld = lld_plan.cache()
-    lld.count()
-
-    anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-    fk = flagship(spark, transcripts)
+    fk = flagship(transcripts)
     n_vectors = fk.count()
 
     # untimed warm-ups: first execution of the md5/explode/shuffle and
@@ -598,13 +514,13 @@ def main():
     # (observed 4-9 s vs ~2 s warm for identical plans) that a
     # long-lived cluster's executors don't pay per query
     sample = docs.limit(500)
-    _noop(ngram_jaccard(sample,
-                        minhash_lsh_pairs(sample, n_hashes=8, bands=4)))
-    _noop(cosine_topk(emb.limit(500), emb.filter(F.col("vec_id") < 2), k=5))
+    null_sink(ngram_jaccard(sample,
+                            minhash_lsh_pairs(sample, n_hashes=8, bands=4)))
+    null_sink(cosine_topk(emb.limit(500), emb.filter(F.col("vec_id") < 2),
+                          k=5))
 
     # ---- headline stages (same 10 as r1-r3; `value` sums these) ----
-    stages = _headline_stages(spark, transcripts, lld_plan, lld,
-                              anchors, docs, emb)
+    stages = stage_table(*inputs)[:N_HEADLINE]
 
     # ---- round-4 evidence stages (reported separately from `value`) ----
     #
@@ -632,14 +548,11 @@ def main():
             sma(df, ["char_len"], 3, partition_cols=parts),
             ["char_len_sma3"], 2, partition_cols=parts)
 
-    def skew_unsalted():
-        _noop(_skew_chain(skew_lld, ("conv_id",)))
-
     def skew_salted():
         salted = overlap_salt(skew_lld, max_rows=100_000, pre=2, post=2,
                               dense_index=True)
         out = _skew_chain(salted, ("conv_id", "salt_bucket"))
-        _noop(out.filter(F.col("is_owner")).drop("salt_bucket", "is_owner"))
+        return out.filter(F.col("is_owner")).drop("salt_bucket", "is_owner")
 
     # wide vectors: the reference's big preset is 6,373 columns
     # (ComParE_2016). Prove the Arrow kernel path holds at reference
@@ -658,27 +571,15 @@ def main():
                                  families=wide_fams)
     n_wide_cols = len(wide_df.columns)
 
-    def wide_vector():
-        _noop(wide_df)
-
     # tokenize -> pack (round-4 last mile): BPE-id encode the corpus and
     # assemble budget-exact packed sequences. Training is untimed — the
     # merge table is an offline artifact a production run loads — and its
     # first encode pass doubles as the Arrow warm-up; the timed stage is
     # the map-only encode + one-exchange pack_sequences chain.
-    from opensmile_spark.bpe import bpe_encode_ids, bpe_train
-    from opensmile_spark.packing import pack_sequences
-
-    bpe_model = bpe_train(docs, n_merges=200, min_count=2)
-    enc_plan = bpe_encode_ids(docs, bpe_model) \
-        .select("source", "doc_id", "bpe_token_ids")
+    enc_plan = bpe_ids(docs)
     n_bpe_tokens = enc_plan.agg(
         F.sum(F.size("bpe_token_ids"))).collect()[0][0]
-    packed_plan = pack_sequences(enc_plan, budget=2048,
-                                 group_cols=["source"])
-
-    def tokenize_pack():
-        _noop(packed_plan)
+    packed_plan = pack(enc_plan)
 
     # ---- media decode stage: the corpus-decode layer (JPEG + PNG +
     # GIF + FLAC from-spec codecs) running distributed through the
@@ -696,7 +597,7 @@ def main():
     media_plan = extract_media_features(media_df, n_features=6,
                                         fake=False, on_error="column")
     t0 = time.time()
-    _noop(media_plan)                    # timed ONCE (pure-python codecs
+    null_sink(media_plan)                # timed ONCE (pure-python codecs
     media_sec = time.time() - t0         # dominate; one shot suffices)
     media_df.unpersist()
 
@@ -725,24 +626,17 @@ def main():
         warc_to_documents(read_warc(spark, warc_dir + "/*.warc.gz")),
         html_col="html", out_col="text"))
 
-    def crawl_ingest():
-        _noop(crawl_plan)
-
-    extra_stages = [("skew_unsalted", skew_unsalted),
-                    ("skew_salted", skew_salted),
-                    ("wide_vector", wide_vector),
-                    ("tokenize_pack", tokenize_pack),
-                    ("crawl_ingest", crawl_ingest)]
+    extra_stages = [
+        ("skew_unsalted", lambda: _skew_chain(skew_lld, ("conv_id",))),
+        ("skew_salted", skew_salted),
+        ("wide_vector", lambda: wide_df),
+        ("tokenize_pack", lambda: packed_plan),
+        ("crawl_ingest", lambda: crawl_plan),
+    ]
 
     # ---- interleaved min-of-N measurement ----
     reps = int(os.environ.get("SPARK_GRAFT_SUITE_REPS", "3"))
-    samples: dict[str, list[float]] = {n: [] for n, _ in
-                                       stages + extra_stages}
-    for _ in range(reps):
-        for name, fn in stages + extra_stages:
-            t0 = time.time()
-            fn()
-            samples[name].append(time.time() - t0)
+    samples = _interleaved(stages + extra_stages, reps)
 
     timings = {n: round(min(v), 3) for n, v in samples.items()
                if n in dict(stages)}

@@ -1,9 +1,10 @@
 """Extra benchmarks for optimization work (guide §1.4 noop isolation).
 
 NOT the driver's bench — bench.py is frozen for measurement. This harness
-times the same stage constructions with the same session config, but lets
-you pick stages/reps and adds sub-phase isolation (e.g. dedup signatures vs
-pairs vs verify) for profiling.
+times the stages of the stage registry (tools/stages.py, which bench.py
+imports too) in the same session config, but lets you pick stages/reps,
+including the registry's extras after the headline ten (e.g. dedup
+signatures vs pairs) for profiling.
 
 Usage:
   python bench_extra.py [--reps N] [stage ...]
@@ -19,43 +20,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.stages import (  # noqa: E402
+    N_HEADLINE, bench_spark, flagship, load_inputs, stage_table,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SCRATCH = "/dev/shm/opensmile_spark_bench_extra_scratch"
 
 
-def _spark(n_threads: int):
-    from opensmile_spark import get_spark
-
-    return get_spark(
-        f"bench_extra_{n_threads}", master=f"local[{n_threads}]",
-        shuffle_partitions=max(8, 2 * n_threads),
-        extra_conf={
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
-            "spark.local.dir": SCRATCH,
-            "spark.driver.extraJavaOptions":
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
-        },
-    )
-
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main():
     from pyspark.sql import functions as F
 
-    from opensmile_spark.dedup import (
-        minhash_lsh_pairs, minhash_signatures, ngram_jaccard,
-    )
-    from opensmile_spark.functionals import functionals_kernel, functionals_sql
-    from opensmile_spark.lld import compute_lld
-    from opensmile_spark.operators import (
-        asof_join, backfill_functionals, delta_regression, sessionize, sma,
-    )
+    from opensmile_spark.dedup import minhash_lsh_pairs, ngram_jaccard
+    from opensmile_spark.io import null_sink
     from opensmile_spark.similarity import cosine_topk
-    from opensmile_spark.transcripts import transcripts_from_events
 
     args = [a for a in sys.argv[1:]]
     reps = 3
@@ -64,75 +43,32 @@ def main():
         reps = int(args[i + 1])
         del args[i:i + 2]
 
-    spark = _spark(CPUS)
-    transcripts = transcripts_from_events(spark, SF_DIR)
-    lld_plan = compute_lld(transcripts)
-    lld = lld_plan.cache()
-    lld.count()
-    anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-    def flagship():
-        l2 = compute_lld(transcripts)
-        l2 = sma(l2, ["char_len", "token_cnt"], 3)
-        l2 = sessionize(l2, gap_seconds=43200.0)
-        return functionals_kernel(
-            l2, ["char_len_sma3", "token_cnt_sma3"],
-            ("conv_id", "session_id"),
-            families=["means", "moments", "percentiles", "regression",
-                      "peaks2"],
-            repartition_cols=("conv_id",),
-        )
-
-    stages = {
-        "lld": lambda: _noop(lld_plan),
-        "windows_sma_delta": lambda: _noop(delta_regression(
-            sma(lld, ["char_len", "token_cnt", "reply_latency"], 3),
-            ["char_len"], 2)),
-        "sessionize": lambda: _noop(sessionize(lld, gap_seconds=43200.0)),
-        "functionals_sql": lambda: _noop(functionals_sql(
-            lld, ["char_len", "token_cnt", "reply_latency"])),
-        "functionals_kernel": lambda: _noop(flagship()),
-        "asof_join": lambda: _noop(asof_join(
-            anchors, lld.select("conv_id", "ts", "char_len"),
-            value_cols=["char_len"])),
-        "backfill_means": lambda: _noop(backfill_functionals(
-            lld, anchors, ["char_len"], families=["means", "moments"])),
-        "backfill_full": lambda: _noop(backfill_functionals(
-            lld, anchors, ["char_len"],
-            families=["means", "moments", "extremes", "percentiles",
-                      "regression"])),
-        "dedup_minhash_lsh": lambda: _noop(ngram_jaccard(
-            docs, minhash_lsh_pairs(docs, n_hashes=8, bands=4))),
-        "ann_cosine_topk": lambda: _noop(cosine_topk(
-            emb, emb.filter(F.col("vec_id") < 20), k=10)),
-        # --- sub-phase isolation (not in the driver suite) ---
-        "dedup_signatures": lambda: _noop(minhash_signatures(
-            docs, n_hashes=8)),
-        "dedup_pairs": lambda: _noop(minhash_lsh_pairs(
-            docs, n_hashes=8, bands=4)),
-    }
+    spark = bench_spark("bench_extra", CPUS, SCRATCH)
+    inputs = load_inputs(spark, SF_DIR)
+    transcripts, _, _, _, docs, emb = inputs
+    stages = stage_table(*inputs)
 
     if "--list" in args:
-        print("\n".join(stages))
+        print("\n".join(n for n, _ in stages))
+        spark.stop()
         return
-    names = args or [n for n in stages
-                     if n not in ("dedup_signatures", "dedup_pairs")]
+    names = args or [n for n, _ in stages[:N_HEADLINE]]
+    builds = dict(stages)
 
     # warm-ups (mirror bench.py)
     sample = docs.limit(500)
-    _noop(ngram_jaccard(sample, minhash_lsh_pairs(sample, n_hashes=8,
-                                                  bands=4)))
-    _noop(cosine_topk(emb.limit(500), emb.filter(F.col("vec_id") < 2), k=5))
-    _noop(flagship())
+    null_sink(ngram_jaccard(sample, minhash_lsh_pairs(sample, n_hashes=8,
+                                                      bands=4)))
+    null_sink(cosine_topk(emb.limit(500), emb.filter(F.col("vec_id") < 2),
+                          k=5))
+    null_sink(flagship(transcripts))
 
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(reps):
         for n in names:
             spark.sparkContext.setJobDescription(f"bench_extra: {n}")
             t0 = time.time()
-            stages[n]()
+            null_sink(builds[n]())
             samples[n].append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
     out = {n: {"min": min(v), "all": v} for n, v in samples.items()}

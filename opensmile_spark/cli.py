@@ -72,10 +72,11 @@ def cmd_pipeline(spark, args):
 
 
 def cmd_backfill(spark, args):
-    from pyspark.sql import functions as F
-
     from opensmile_spark.lld import compute_lld
     from opensmile_spark.operators import backfill_functionals, sma
+    from opensmile_spark.operators.asof import (
+        conv_watermark, incremental_backfill,
+    )
     from opensmile_spark.tables import read_table
 
     t = read_table(spark, args.input)
@@ -85,8 +86,6 @@ def cmd_backfill(spark, args):
     lld = sma(lld, base_cols, 3)
     if args.prev_features:
         # incremental refresh: only conversations with new turns recompute
-        from opensmile_spark.operators.asof import incremental_backfill
-
         if not args.prev_max_ts:
             raise SystemExit(
                 "backfill: --prev-features requires --prev-max-ts "
@@ -121,11 +120,8 @@ def cmd_backfill(spark, args):
     )
     out.write.mode("overwrite").parquet(args.output)
     # the per-conv watermark table makes the NEXT run incremental
-    # ((max_ts, n_rows) pair: the count catches late/corrected rows
-    # whose ts does not advance the max — see incremental_backfill)
-    lld.groupBy("conv_id").agg(F.max("ts").alias("max_ts"),
-                               F.count(F.lit(1)).alias("n_rows")) \
-        .write.mode("overwrite").parquet(args.output + "_max_ts")
+    conv_watermark(lld).write.mode("overwrite") \
+        .parquet(args.output + "_max_ts")
     print(json.dumps({"output": args.output,
                       "max_ts": args.output + "_max_ts"}))
 

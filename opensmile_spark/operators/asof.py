@@ -306,6 +306,15 @@ def backfill_functionals(
     return merged.mapInArrow(run, schema=schema)
 
 
+def conv_watermark(lld: DataFrame, on: str = "conv_id",
+                   ts_col: str = "ts") -> DataFrame:
+    """Per-conversation watermark table (on, max_ts, n_rows) that
+    incremental_backfill compares the next run's input against: the count
+    catches late or corrected rows whose ts does not advance the max."""
+    return lld.groupBy(on).agg(F.max(ts_col).alias("max_ts"),
+                               F.count(F.lit(1)).alias("n_rows"))
+
+
 def incremental_backfill(
     prev_features: DataFrame,
     prev_max_ts: DataFrame,
@@ -356,15 +365,13 @@ def incremental_backfill(
     # watermark table is persisted each run and read back next run), and
     # without it every stale-set join back onto `lld`/`anchors` trips
     # Spark's ambiguous-self-join check on the shared scan attributes
-    cur_max = (lld.groupBy(on).agg(F.max(ts_col).alias("__cur_max_ts"),
-                                   F.count(F.lit(1)).alias("__cur_n"))
-               .localCheckpoint(eager=True))
+    cur_max = conv_watermark(lld, on, ts_col).localCheckpoint(eager=True)
     prev = prev_max_ts.withColumnRenamed("max_ts", "__prev_max")
     changed = (F.col("__prev_max").isNull()
-               | (F.col("__cur_max_ts") != F.col("__prev_max")))
+               | (F.col("max_ts") != F.col("__prev_max")))
     if "n_rows" in prev_max_ts.columns:
         prev = prev.withColumnRenamed("n_rows", "__prev_n")
-        changed = changed | (F.col("__cur_n") != F.col("__prev_n"))
+        changed = changed | (F.col("n_rows") != F.col("__prev_n"))
     stale = cur_max.join(prev, on, "left").filter(changed).select(on)
     # rename the key on the stale side: it shares lineage with `lld`
     # (cur_max derives from it), and Spark's ambiguous-self-join check
@@ -393,6 +400,4 @@ def incremental_backfill(
     )
     carried = only_stale(prev_features, "left_anti")
     features = carried.unionByName(fresh_feats)
-    max_ts = cur_max.withColumnRenamed("__cur_max_ts", "max_ts") \
-        .withColumnRenamed("__cur_n", "n_rows")
-    return features, max_ts
+    return features, cur_max

@@ -342,6 +342,7 @@ def test_incremental_backfill_detects_deletion(spark):
     from pyspark.sql import functions as F
 
     from opensmile_spark.operators.asof import (backfill_functionals,
+                                                conv_watermark,
                                                 incremental_backfill)
     from tests.conftest import make_conv
 
@@ -358,10 +359,7 @@ def test_incremental_backfill_detects_deletion(spark):
     backfill_functionals(day1, grid(day1), ["char_len"],
                          families=["means"]) \
         .write.mode("overwrite").parquet(f"{d}/feats")
-    # the count-bearing watermark incremental_backfill itself emits
-    day1.groupBy("conv_id").agg(F.max("ts").alias("max_ts"),
-                                F.count(F.lit(1)).alias("n_rows")) \
-        .write.mode("overwrite").parquet(f"{d}/max")
+    conv_watermark(day1).write.mode("overwrite").parquet(f"{d}/max")
     feats1 = spark.read.parquet(f"{d}/feats")
     max1 = spark.read.parquet(f"{d}/max")
 

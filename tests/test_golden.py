@@ -35,7 +35,9 @@ def test_egemaps_core_matches_golden(spark):
         golden = json.load(f)
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", "/root/repo/__spark_entry__.py")
+        "spark_entry_under_test",
+        os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     df = mod.queries()["egemaps_core"](spark, golden["sf_dir"])

@@ -117,6 +117,61 @@ def test_cli_dedup_and_decontaminate_inprocess(spark, tmp_path):
     assert kept == [1, 2, 4]          # 3 matches the benchmark -> removed
 
 
+def test_cli_backfill_incremental_inprocess(spark, tmp_path):
+    """backfill on day 1, then backfill --prev-features/--prev-max-ts on
+    day 2: the refresh equals a full backfill of day 2, and the watermark
+    table it writes next to its output is conv_watermark of day 2's LLD."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from opensmile_spark.cli import main
+    from opensmile_spark.datagen import generate_transcripts
+    from opensmile_spark.lld import compute_lld
+    from opensmile_spark.operators import sma
+    from opensmile_spark.operators.asof import conv_watermark
+
+    day2 = generate_transcripts(spark, n_convs=6, turns_per_conv=8)
+    convs = sorted(r["conv_id"]
+                   for r in day2.select("conv_id").distinct().collect())
+    # day 1 lacks the last two turns of one conversation and all of another
+    day1 = day2.filter(
+        ~((F.col("conv_id") == convs[0]) & (F.col("turn_idx") >= 6))
+        & (F.col("conv_id") != convs[1]))
+    for day, t in (("day1", day1), ("day2", day2)):
+        t.write.parquet(str(tmp_path / day))
+        t.select("conv_id", F.col("ts").alias("anchor_ts")) \
+            .write.parquet(str(tmp_path / f"{day}_anchors"))
+
+    def backfill(day, out, *extra):
+        main(["backfill", "--input", str(tmp_path / day),
+              "--anchors", str(tmp_path / f"{day}_anchors"),
+              "--output", str(tmp_path / out),
+              "--value-cols", "char_len_sma3",
+              "--families", "means,moments", *extra])
+
+    backfill("day1", "feats1")
+    backfill("day2", "feats2",
+             "--prev-features", str(tmp_path / "feats1"),
+             "--prev-max-ts", str(tmp_path / "feats1_max_ts"))
+    backfill("day2", "full2")
+
+    key = ["conv_id", "anchor_ts"]
+
+    def read(out):
+        return spark.read.parquet(str(tmp_path / out)).toPandas() \
+            .sort_values(key).reset_index(drop=True)
+
+    inc, full = read("feats2"), read("full2")
+    assert len(inc) == day2.count()
+    pd.testing.assert_frame_equal(inc, full[inc.columns], check_exact=True)
+
+    lld2 = sma(compute_lld(spark.read.parquet(str(tmp_path / "day2"))),
+               ["char_len"], 3)
+    written = spark.read.parquet(str(tmp_path / "feats2_max_ts"))
+    assert written.columns == ["conv_id", "max_ts", "n_rows"]
+    assert sorted(written.collect()) == sorted(conv_watermark(lld2).collect())
+
+
 def test_cli_sample_inprocess(spark, tmp_path):
     """The sample subcommand: uniform deterministic rate, then domain
     mixing via --strata-col/--weights — output rates and row counts are

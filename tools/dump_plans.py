@@ -1,8 +1,9 @@
 """Dump .explain("formatted") for every bench stage to plans/<tag>/.
 
-Builds the SAME DataFrames bench.py times (stage construction mirrored from
-bench._headline_stages plus the extra stages) and writes one plan file per
-stage: plans/<tag>/<stage>_<suffix>.txt.
+Builds the stage registry's DataFrames (tools/stages.py: the headline
+stages bench.py times, then the extras) over the same inputs bench.py
+loads, `lld` cached, and writes one plan file per stage:
+plans/<tag>/<stage>_<suffix>.txt.
 
 Usage: python tools/dump_plans.py <tag> <suffix> [stage ...]
 e.g.   python tools/dump_plans.py r06 before
@@ -13,73 +14,16 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools.stages import (  # noqa: E402
+    bench_spark, explain, load_inputs, stage_table,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def build_stages(spark):
-    from pyspark.sql import functions as F
-
-    from opensmile_spark.bpe import bpe_encode_ids, bpe_train
-    from opensmile_spark.dedup import minhash_lsh_pairs, ngram_jaccard
-    from opensmile_spark.functionals import functionals_kernel, functionals_sql
-    from opensmile_spark.lld import compute_lld
-    from opensmile_spark.operators import (
-        asof_join, backfill_functionals, delta_regression, sessionize, sma,
-    )
-    from opensmile_spark.packing import pack_sequences
-    from opensmile_spark.similarity import cosine_topk
-    from opensmile_spark.transcripts import transcripts_from_events
-
-    transcripts = transcripts_from_events(spark, SF_DIR)
-    lld_plan = compute_lld(transcripts)
-    lld = lld_plan
-    anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-    def flagship():
-        l2 = compute_lld(transcripts)
-        l2 = sma(l2, ["char_len", "token_cnt"], 3)
-        l2 = sessionize(l2, gap_seconds=43200.0)
-        return functionals_kernel(
-            l2, ["char_len_sma3", "token_cnt_sma3"],
-            ("conv_id", "session_id"),
-            families=["means", "moments", "percentiles", "regression",
-                      "peaks2"],
-            repartition_cols=("conv_id",),
-        )
-
-    stages = {
-        "lld": lld_plan,
-        "windows_sma_delta": delta_regression(
-            sma(lld, ["char_len", "token_cnt", "reply_latency"], 3),
-            ["char_len"], 2),
-        "sessionize": sessionize(lld, gap_seconds=43200.0),
-        "functionals_sql": functionals_sql(
-            lld, ["char_len", "token_cnt", "reply_latency"]),
-        "functionals_kernel": flagship(),
-        "asof_join": asof_join(anchors, lld.select("conv_id", "ts",
-                                                   "char_len"),
-                               value_cols=["char_len"]),
-        "backfill_means": backfill_functionals(
-            lld, anchors, ["char_len"], families=["means", "moments"]),
-        "backfill_full": backfill_functionals(
-            lld, anchors, ["char_len"],
-            families=["means", "moments", "extremes", "percentiles",
-                      "regression"]),
-        "dedup_minhash_lsh": ngram_jaccard(
-            docs, minhash_lsh_pairs(docs, n_hashes=8, bands=4)),
-        "ann_cosine_topk": cosine_topk(
-            emb, emb.filter(F.col("vec_id") < 20), k=10),
-        "tokenize_pack": pack_sequences(
-            bpe_encode_ids(docs, bpe_train(docs, n_merges=200, min_count=2))
-            .select("source", "doc_id", "bpe_token_ids"),
-            budget=2048, group_cols=["source"]),
-    }
-    return stages
+SCRATCH = "/dev/shm/opensmile_spark_plans_scratch"
 
 
 def main():
@@ -87,21 +31,15 @@ def main():
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
 
-    from opensmile_spark import get_spark
-
-    spark = get_spark("plans", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(8, 2 * CPUS))
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", tag)
+    spark = bench_spark("plans", CPUS, SCRATCH)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
-    for name, df in build_stages(spark).items():
+    for name, build in stage_table(*load_inputs(spark, SF_DIR)):
         if only and name not in only:
             continue
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")))
+            fh.write(explain(build()))
         print(f"wrote {path}")
     spark.stop()
 

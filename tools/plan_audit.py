@@ -20,15 +20,13 @@ Usage: python tools/plan_audit.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def plan_str(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
+from tools.stages import explain  # noqa: E402
 
 
 def count(pattern, plan):
@@ -65,7 +63,7 @@ def main():
     chain = sessionize(
         delta_regression(sma(lld, ["char_len"], 3), ["char_len"], 2),
         gap_seconds=300.0)
-    p = plan_str(chain)
+    p = explain(chain)
     # turn_idx derivation partitions by the DERIVED conv_id, so the entire
     # scan -> turn_idx -> LLD -> sma -> delta -> sessionize chain shares ONE
     # hash exchange (round 3; was 2 when turn_idx partitioned by user_id)
@@ -75,7 +73,7 @@ def main():
           f"derivation and ALL downstream window ops)")
 
     proj = lld.select("conv_id", "char_len")
-    p = plan_str(proj)
+    p = explain(proj)
     m = re.search(r"ReadSchema: ([^\n]+)", p)
     read = m.group(1) if m else ""
     check("column pruning to scan",
@@ -83,20 +81,20 @@ def main():
           f"(scan reads {read[:90]}...)")
 
     filt = t.filter(F.col("role") == "tool")
-    p = plan_str(filt)
+    p = explain(filt)
     check("filter present post-window",
           "Filter" in p, "(role filter cannot push below row_number - "
           "correctly placed above the window)")
 
     ev = spark.read.parquet(f"{sf}/events.parquet").filter(
         F.col("event_type") == "purchase").select("event_id")
-    p = plan_str(ev)
+    p = explain(ev)
     check("predicate pushdown to parquet",
           "PushedFilters: [IsNotNull(event_type), EqualTo(event_type,purchase)]"
           in p or "EqualTo(event_type,purchase)" in p)
 
     fs = functionals_sql(lld, ["char_len"])
-    p = plan_str(fs)
+    p = explain(fs)
     check("functionals_sql no Python",
           "Python" not in p and "FlatMap" not in p)
     n_agg = count(r"HashAggregate|ObjectHashAggregate|SortAggregate", p)
@@ -105,14 +103,14 @@ def main():
     anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
     aj = asof_join(anchors, lld.select("conv_id", "ts", "char_len"),
                    value_cols=["char_len"])
-    p = plan_str(aj)
+    p = explain(aj)
     check("asof_join has no join node",
           n_op(r"\w*Join", p) == 0 and n_op("Union", p) == 1
           and n_op("Exchange", p) == 1,
           f"(window-based merge; exchanges={n_op('Exchange', p)})")
 
     mv = mvn(lld, ["char_len"], mode="full")
-    p = plan_str(mv)
+    p = explain(mv)
     check("mvn stats join is broadcast",
           "BroadcastHashJoin" in p and "SortMergeJoin" not in p)
 
@@ -123,13 +121,13 @@ def main():
     laid = spark.read.parquet("/tmp/plan_audit_sorted")
     fk = functionals_kernel(laid, ["char_len"], ("conv_id",),
                             families=["means"], pre_partitioned=True)
-    p = plan_str(fk)
+    p = explain(fk)
     check("pre_partitioned kernel zero-exchange",
           n_op("Exchange", p) == 0)
 
     fk2 = functionals_kernel(laid, ["char_len"], ("conv_id",),
                              families=["means"])
-    p = plan_str(fk2)
+    p = explain(fk2)
     check("standard kernel exactly one exchange",
           n_op("Exchange", p) == 1)
 
@@ -141,7 +139,7 @@ def main():
     bf = backfill_functionals(
         laid, laid.select("conv_id", F.col("ts").alias("anchor_ts")),
         ["char_len"], families=["means"])
-    p = plan_str(bf)
+    p = explain(bf)
     check("backfill_functionals one exchange, one MapInArrow, no pandas",
           n_op("Exchange", p) == 1 and n_op("MapInArrow", p) == 1
           and n_op("MapInPandas", p) == 0,
@@ -149,7 +147,7 @@ def main():
           f"arrow={n_op('MapInArrow', p)}, "
           f"pandas={n_op('MapInPandas', p)})")
 
-    p = plan_str(viterbi_smooth_df(laid, "char_len"))
+    p = explain(viterbi_smooth_df(laid, "char_len"))
     check("viterbi_smooth_df one MapInArrow",
           n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
           f"(arrow={n_op('MapInArrow', p)}, "
@@ -161,7 +159,7 @@ def main():
 
     sessions, process_batch = closed_session_functionals(
         laid.select("conv_id", "turn_idx", "ts", "char_len"))
-    p = plan_str(process_batch(sessions))
+    p = explain(process_batch(sessions))
     check("closed_session_functionals one MapInArrow, no pandas",
           n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
           f"(arrow={n_op('MapInArrow', p)}, "
@@ -175,18 +173,18 @@ def main():
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     lt = lsh_topk(emb, emb.filter(F.col("vec_id") < 3), dim=64, k=5,
                   bits=4, tables=8)
-    p = plan_str(lt)
+    p = explain(lt)
     check("lsh_topk single index scan (no per-table union)",
           n_op("Union", p) == 0 and n_op("Scan parquet", p) <= 2,
           f"(scans={n_op('Scan parquet', p)})")
 
     nd = embedding_near_dups(emb, threshold=0.9, method="lsh", dim=64)
-    p = plan_str(nd)
+    p = explain(nd)
     check("embedding_near_dups production path has no cartesian product",
           "CartesianProduct" not in p and "BroadcastNestedLoop" not in p)
 
     ws = weighted_sma(lld, ["char_len"], 5, "hamming")
-    p = plan_str(ws)
+    p = explain(ws)
     check("weighted_sma is one window over the shared conv exchange",
           n_op("Window", p) >= 1 and "pythonUDF" not in p
           and "ArrowEval" not in p)
@@ -197,7 +195,7 @@ def main():
     fk_flag = functionals_kernel(
         chain, ["char_len_sma3"], ("conv_id", "session_id"),
         families=["means"], repartition_cols=("conv_id",))
-    p = plan_str(fk_flag)
+    p = explain(fk_flag)
     check("flagship pipeline ONE total exchange",
           n_op("Exchange", p) == 1,
           f"(exchanges={n_op('Exchange', p)}; scan -> turn_idx -> LLD -> "
@@ -207,7 +205,7 @@ def main():
     ivf_build(emb, "/tmp/plan_audit_ivf", n_centroids=8, fit_fraction=0.5)
     pr = ivf_probe(spark, "/tmp/plan_audit_ivf",
                    emb.filter(F.col("vec_id") < 3), k=5, n_probe=2)
-    p = plan_str(pr)
+    p = explain(pr)
 
     def scan_metrics(df):
         """Executed-plan leaf (FileScan) SQLMetrics — the physical truth of
@@ -235,7 +233,7 @@ def main():
     from opensmile_spark.text import repetition_metrics
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    p = plan_str(repetition_metrics(docs, dup_k=2).select(
+    p = explain(repetition_metrics(docs, dup_k=2).select(
         "doc_id", "top_2gram_frac", "top_3gram_frac", "dup_2gram_ratio"))
     check("repetition_metrics zero-shuffle zero-Python",
           n_op("Exchange", p) == 0
@@ -254,13 +252,13 @@ def main():
                                          pack_concat)
     from opensmile_spark.text import token_count
 
-    p = plan_str(chunk_documents(docs, max_tokens=32, overlap=8))
+    p = explain(chunk_documents(docs, max_tokens=32, overlap=8))
     check("chunk_documents narrow zero-shuffle zero-Python",
           n_op("Exchange", p) == 0
           and count(r"(?i)python|ArrowEval|BatchEval", p) == 0,
           f"(exchanges={n_op('Exchange', p)}; explode pipelines with scan)")
 
-    p = plan_str(pack_concat(token_count(docs), 256, group_cols=["source"]))
+    p = explain(pack_concat(token_count(docs), 256, group_cols=["source"]))
     check("pack_concat one exchange zero-Python",
           n_op("Exchange", p) == 1
           and count(r"(?i)python|ArrowEval|BatchEval", p) == 0
@@ -268,7 +266,7 @@ def main():
           f"(exchanges={n_op('Exchange', p)}, windows={n_op('Window', p)}; "
           f"group cumsum + bounded span explode)")
 
-    p = plan_str(deterministic_shuffle(docs, n_shards=64, seed=1))
+    p = explain(deterministic_shuffle(docs, n_shards=64, seed=1))
     check("deterministic_shuffle one exchange zero-Python",
           n_op("Exchange", p) == 1
           and count(r"(?i)python|ArrowEval|BatchEval", p) == 0,
@@ -282,7 +280,7 @@ def main():
     # map-side-combined contamination counts)
     from opensmile_spark.pipeline import corpus_pipeline
 
-    p = plan_str(corpus_pipeline(
+    p = explain(corpus_pipeline(
         docs, docs.filter(F.col("doc_id") % 10 == 0),
         min_quality=0.5, k_shingle=5, min_overlap=2, n_shards=4))
     joins = re.findall(r"\(\d+\) (\w*Join\w*)", p)
@@ -300,7 +298,7 @@ def main():
     # aggregate is a tiny separate stream).
     from opensmile_spark.operators import resample
 
-    p = plan_str(resample(
+    p = explain(resample(
         lld.select("conv_id", "turn_idx", "ts", "char_len"),
         86400.0, value_cols=["char_len"]))
     check("resample no join node, zero Python",
@@ -315,7 +313,7 @@ def main():
     # tables), never in the per-candidate scoring path.
     from opensmile_spark.similarity import ivfpq_topk
 
-    p = plan_str(ivfpq_topk(emb, emb.filter(F.col("vec_id") < 3), k=5,
+    p = explain(ivfpq_topk(emb, emb.filter(F.col("vec_id") < 3), k=5,
                             n_centroids=4, n_probe=2, m=8, n_codes=8))
     n_py = (n_op("ArrowEvalPython", p) + n_op("MapInPandas", p)
             + n_op("FlatMapGroupsInPandas", p))
@@ -332,7 +330,7 @@ def main():
     from opensmile_spark.linededup import line_dedup
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    p = plan_str(line_dedup(docs))
+    p = explain(line_dedup(docs))
     check("line_dedup linear shuffles, zero Python",
           n_op("Exchange", p) <= 4
           and count(r"(?i)pythonudf|ArrowEval|BatchEval", p) == 0
@@ -343,7 +341,7 @@ def main():
     # the single Arrow kernel; no exchange, no join, ranks broadcast.
     from opensmile_spark.bpe import BPEModel, bpe_encode
 
-    p = plan_str(bpe_encode(docs, BPEModel(merges=[("a", "b")])))
+    p = explain(bpe_encode(docs, BPEModel(merges=[("a", "b")])))
     check("bpe_encode map-only (one Arrow kernel, zero shuffle)",
           n_op("Exchange", p) == 0 and count(r"\) \w*Join", p) == 0
           and n_op("ArrowEvalPython", p) == 1,
@@ -360,7 +358,7 @@ def main():
         "source", "doc_id",
         F.transform(F.split(F.trim(F.col("text")), r"\s+"),
                     lambda w: F.length(w).cast("int")).alias("ids"))
-    p = plan_str(pack_sequences(ids_df, budget=64, ids_col="ids",
+    p = explain(pack_sequences(ids_df, budget=64, ids_col="ids",
                                 group_cols=["source"]))
     check("pack_sequences two exchanges, zero Python, no join",
           n_op("Exchange", p) <= 2
@@ -375,7 +373,7 @@ def main():
 
     labeled = docs.withColumn("label", (F.col("doc_id") % 5 != 0).cast("int"))
     w, params = nb_fit(labeled)
-    p = plan_str(nb_score(docs, w, params))
+    p = explain(nb_score(docs, w, params))
     check("nb_score broadcast model join, zero Python",
           n_op("BroadcastHashJoin", p) >= 1
           and count(r"(?i)pythonudf|ArrowEval|BatchEval", p) == 0
@@ -388,7 +386,7 @@ def main():
     # exchanges, zero joins (the plan a 100 TB HTML scan wants).
     from opensmile_spark.htmlops import html_signals, html_to_text, synth_html
 
-    p = plan_str(html_signals(html_to_text(synth_html(docs))))
+    p = explain(html_signals(html_to_text(synth_html(docs))))
     check("html_to_text+signals map-only, zero Python, zero shuffle",
           n_op("Exchange", p) == 0
           and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInPandas", p) == 0
@@ -401,7 +399,7 @@ def main():
     from opensmile_spark.urlops import (
         normalize_url, parse_urls, synth_urls, url_signals)
 
-    p = plan_str(normalize_url(url_signals(parse_urls(synth_urls(docs)))))
+    p = explain(normalize_url(url_signals(parse_urls(synth_urls(docs)))))
     check("url parse+signals+normalize map-only, zero Python, zero shuffle",
           n_op("Exchange", p) == 0
           and count(r"(?i)pythonudf|ArrowEval|BatchEval|MapInPandas", p) == 0

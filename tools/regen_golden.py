@@ -20,10 +20,10 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-GOLDEN = os.path.join(os.path.dirname(__file__), os.pardir,
-                      "tests", "golden", "egemaps_core_sf0001.json")
+GOLDEN = os.path.join(ROOT, "tests", "golden", "egemaps_core_sf0001.json")
 SF_DIR = "/root/testdata/sf0.001"
 KEYS = ["conv_id", "session_id"]
 
@@ -32,7 +32,7 @@ def compute_rows():
     from opensmile_spark import get_spark
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_golden", "/root/repo/__spark_entry__.py")
+        "spark_entry_golden", os.path.join(ROOT, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 

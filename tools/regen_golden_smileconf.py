@@ -14,7 +14,7 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 GOLDEN = os.path.join(os.path.dirname(__file__), os.pardir,
                       "tests", "golden", "is13_compiled_sf0001.json")

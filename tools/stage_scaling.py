@@ -33,27 +33,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.stages import bench_spark  # noqa: E402
+
 BASE = "/dev/shm/opensmile_spark_stage_scaling"
-
-
-def _spark(n: int):
-    from opensmile_spark import get_spark
-
-    return get_spark(
-        f"stage_scaling_{n}", master=f"local[{n}]",
-        shuffle_partitions=max(8, 2 * n),
-        extra_conf={
-            "spark.local.dir": BASE + "_scratch",
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
-            # many sessions in one JVM: same code-cache sizing rationale
-            # as bench.py's scaling block (JIT shutoff drifts late pairs)
-            "spark.driver.extraJavaOptions":
-                "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
-        })
-
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
+SCRATCH = BASE + "_scratch"
 
 
 def prepare(convs: int) -> dict:
@@ -63,7 +46,8 @@ def prepare(convs: int) -> dict:
     from opensmile_spark.datagen import generate_transcripts
     from opensmile_spark.lld import compute_lld
 
-    s = _spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    s = bench_spark("stage_scaling",
+                    int(os.environ.get("SPARK_GRAFT_CPUS", "32")), SCRATCH)
     t = generate_transcripts(s, n_convs=convs, turns_per_conv=30,
                              partitions=64)
     (t.repartition(192, "conv_id")
@@ -116,6 +100,8 @@ def stage_plans(s):
 
 
 def main():
+    from opensmile_spark.io import null_sink
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--convs", type=int, default=400_000)
     ap.add_argument("--reps", type=int, default=2)
@@ -129,16 +115,16 @@ def main():
     for rep in range(args.reps):
         order = (lo, hi) if rep % 2 == 0 else (hi, lo)
         for n in order:
-            s = _spark(n)
+            s = bench_spark("stage_scaling", n, SCRATCH)
             s.conf.set("spark.sql.files.maxPartitionBytes", "16m")
             plans = stage_plans(s)
             names = list(plans)
             # warm-up: spawn workers + JIT the scan path once per session
-            _noop(s.read.parquet(f"{BASE}/lld").select("char_len").limit(
+            null_sink(s.read.parquet(f"{BASE}/lld").select("char_len").limit(
                 1_000_000))
             for name, df in plans.items():
                 t0 = time.time()
-                _noop(df)
+                null_sink(df)
                 dt = time.time() - t0
                 times.setdefault(name, {}).setdefault(n, []).append(dt)
             s.stop()
@@ -159,7 +145,7 @@ def main():
         }
     print(json.dumps(out))
     shutil.rmtree(BASE, ignore_errors=True)
-    shutil.rmtree(BASE + "_scratch", ignore_errors=True)
+    shutil.rmtree(SCRATCH, ignore_errors=True)
 
 
 if __name__ == "__main__":
