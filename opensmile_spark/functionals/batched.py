@@ -161,20 +161,34 @@ EXPANDING_FAMILIES = {"means", "extremes", "moments", "percentiles",
 EXPANDING_UNSUPPORTED_KEYS = {"linregerrA", "qregerrA"}
 
 # ---------------------------------------------------------------------------
-# exact expanding-window central statistics: blocked two-pass + Chan merge.
+# exact expanding-window statistics over many conversations at once.
+#
+# A call carries G conversations (one flat value array plus offsets) and A
+# anchors, each a prefix length h of its own conversation. Prefix sums and
+# running extrema must not cross a conversation edge — a cumsum over the
+# flat array would make a conversation's bits depend on the ones before
+# it — so every conversation becomes one row of a (rows, L) matrix and the
+# scans run along axis 1. Conversations are grouped into power-of-two
+# length classes so the padding stays under 2x; a row is padded past its
+# last read position only, so each row scan equals that conversation's own
+# 1-D scan bit for bit (`_Convs.length_classes`).
 #
 # Central moments over every prefix x[0:h] cannot use raw-moment expansion
 # (module discipline above) and a per-element Welford scan is a Python loop.
-# Instead: split the series into blocks of B, compute each block's central
-# stats EXACTLY (two-pass, vectorized), cumulate blocks with Chan/Pébay
-# parallel combines (N/B-step Python loop over scalars), then for each
-# anchor h merge cum-stats of the h//B full blocks with the exact two-pass
-# stats of the <=B-element remainder (vectorized across anchors). Work is
+# Instead: split each conversation into blocks of B on its own grid,
+# compute each block's central stats EXACTLY (two-pass, vectorized),
+# cumulate blocks with Chan/Pébay parallel combines (a scalar loop per
+# conversation over its full blocks), then for each anchor h merge the
+# cum-stats of the h//B full blocks with the exact two-pass stats of the
+# <=B-element remainder (vectorized across all anchors). Work is
 # O(N + A*B + N/B); every sum is centered — the same discipline as the
 # salted combine in operators/salt.py:82-123.
 # ---------------------------------------------------------------------------
 
 _CHAN_B = 256
+
+# cells of one dense-select chunk: bounds the (anchors, L) rank-count matrix
+_DENSE_CELLS = 1 << 21
 
 
 def _chan_merge(sa, sb, names, m34, pairs):
@@ -231,53 +245,123 @@ def _two_pass_stats(cols, starts, sizes, names, m34, pairs):
     return st
 
 
-# below this n*A product the dense (A, n) path beats the coarse-matrix
-# machinery's fixed cost; tests monkeypatch it to force either path
-_SELECT_DENSE_CUTOFF = 32768
+def _segments(starts, sizes):
+    """Flat index of the concatenated segments [starts[i], starts[i] +
+    sizes[i]), and each segment's offset in it."""
+    offs = np.zeros(sizes.size, dtype=np.int64)
+    offs[1:] = np.cumsum(sizes)[:-1]
+    idx = (np.arange(int(sizes.sum()), dtype=np.int64)
+           + np.repeat(starts - offs, sizes))
+    return idx, offs
 
 
-def _expanding_select(x, his, targets, B=_CHAN_B, W=256, chunk=8192):
-    """Exact order statistics over prefixes: for every anchor a, the
-    targets[j][a]-th smallest (1-based) element of x[0:his[a]] — the
-    selection core of expanding percentiles.
+class _Convs:
+    """The conversations and anchors of one compute_expanding call: flat
+    float64 values `x`, conversation g at x[offs[g]:offs[g+1]], and anchor
+    a reading the prefix of length h[a] of conversation ga[a]. Anchors are
+    grouped by conversation, in conversation order."""
+
+    def __init__(self, xs, hs):
+        hs = [np.asarray(h, dtype=np.int64) for h in hs]
+        lens = np.array([v.size for v in xs], dtype=np.int64)
+        self.offs = np.zeros(lens.size + 1, dtype=np.int64)
+        np.cumsum(lens, out=self.offs[1:])
+        self.x = (np.concatenate(xs).astype(np.float64, copy=False)
+                  if xs else np.empty(0))
+        self.h = np.concatenate(hs) if hs else np.empty(0, dtype=np.int64)
+        cnt = np.array([h.size for h in hs], dtype=np.int64)
+        self.ga = np.repeat(np.arange(lens.size, dtype=np.int64), cnt)
+        if not (self.h >= 1).all() or not (self.h <= lens[self.ga]).all():
+            raise ValueError("compute_expanding: windows must be non-empty "
+                             "prefixes of their conversation")
+        self.lens, self.cnt = lens, cnt
+        self.astart = np.zeros(lens.size + 1, dtype=np.int64)
+        np.cumsum(cnt, out=self.astart[1:])
+        # per conversation: the longest prefix any of its anchors reads
+        self.m = np.zeros(lens.size, dtype=np.int64)
+        np.maximum.at(self.m, self.ga, self.h)
+        self.classes = self.length_classes(np.flatnonzero(self.m > 0))
+
+    def length_classes(self, convs):
+        """[(idx, anchors, rows)] per power-of-two class of m over `convs`
+        (ascending, all with anchors): idx (rows, L) indexes each
+        conversation's first m[g] values in x, padded by repeating its
+        last one; anchors are the class's anchors and rows their rows."""
+        m = self.m[convs]
+        e = np.frexp(m.astype(np.float64))[1]
+        conv_e = np.full(self.m.size, -1, dtype=np.int64)
+        conv_e[convs] = e
+        anchor_e = conv_e[self.ga]
+        out = []
+        for k in np.unique(e):
+            cv = convs[e == k]
+            mc = self.m[cv]
+            col = np.minimum(np.arange(int(mc.max()), dtype=np.int64),
+                             (mc - 1)[:, None])
+            anchors = np.flatnonzero(anchor_e == k)
+            out.append((self.offs[cv][:, None] + col, anchors,
+                        np.searchsorted(cv, self.ga[anchors])))
+        return out
+
+    def at_anchors(self, scans):
+        """scans(idx) -> list of (rows, L) row scans over a class's padded
+        index matrix; returns each one read at every anchor's last
+        position h-1, as float64."""
+        got = [np.empty(self.h.size)
+               for _ in scans(np.zeros((0, 1), dtype=np.int64))]
+        for idx, anchors, rows in self.classes:
+            for g, r in zip(got, scans(idx)):
+                g[anchors] = r[rows, self.h[anchors] - 1]
+        return got
+
+
+def _dense_select(cv, convs, ranks, outs):
+    """Dense order statistics for the anchors of `convs`, batched per
+    length class: each row's stable argsort, then per anchor the in-window
+    cumulative count over the sorted row, and for every rank t the first
+    sorted position where that count reaches t — an in-window position, so
+    it IS the t-th smallest element. Fills outs[r][s][a] with the
+    ranks[r][s][a]-th smallest element of anchor a's window."""
+    for idx, anchors, rows in cv.length_classes(convs):
+        V = cv.x[idx]
+        order = np.argsort(V, axis=1, kind="stable")
+        sorted_vals = np.take_along_axis(V, order, axis=1)
+        L = V.shape[1]
+        step = max(1, _DENSE_CELLS // L)
+        for c0 in range(0, anchors.size, step):
+            a = anchors[c0:c0 + step]
+            r = rows[c0:c0 + step]
+            cum = np.cumsum(order[r] < cv.h[a][:, None], axis=1,
+                            dtype=np.int32)
+            # rows of `cum` are nondecreasing; offsetting row i by i*(L+1)
+            # makes the flattened matrix sorted, so one searchsorted per
+            # rank finds every row's first position with count >= t
+            lift = np.arange(a.size, dtype=np.int64)
+            key = (cum + (lift * (L + 1))[:, None]).ravel()
+            for pair, out in zip(ranks, outs):
+                for t, o in zip(pair, out):
+                    j = np.searchsorted(key, t[a] + lift * (L + 1)) - lift * L
+                    o[a] = sorted_vals[r, j]
+
+
+def _coarse_select(x, his, ranks, B=_CHAN_B, W=256, chunk=8192):
+    """_expanding_select's machinery for one long conversation x, its
+    prefix lengths his and rank pairs: returns [(v1, v2)] float64.
 
     Offline 2D dominance counting, fully vectorized: global stable ranks g
     (ties by index), a coarse cumulative matrix M[k, v] = |{i < k*B :
     g[i] < v*W}| (N^2/(B*W) cells — a few thousand), per-anchor remainder
     rank-histograms for the <=B elements past the last block boundary, and
-    a two-level select per target: coarse bucket via monotone count
+    a two-level select per rank: coarse bucket via monotone count
     comparison, then the exact member inside the <=W-wide bucket via a
-    masked cumulative count over `order`. O(N + A*(B + N/W + W)) work —
-    linear like the Chan path, never the O(sum of window sizes) gather.
-
-    Small inputs take a dense path (r6): the coarse-matrix machinery has
-    ~2 ms of fixed per-call cost, which dominated point-in-time backfills
-    over SHORT conversations (the per-conv kernel calls this once per
-    conversation). For n*A below the cutoff, a dense (A, n) in-window
-    cumulative count over the SAME stable ranks selects the same
-    elements — selection never performs a float operation, and both
-    paths order ties by original index (stable argsort), so the returned
-    bits are identical by construction (pinned by
-    tests/test_batched_kernels.py::test_expanding_select_dense_matches)."""
-    # float64 out of both paths; the conversion is exact, so ranks and the
-    # selected elements are those of the input
-    x = np.asarray(x, dtype=np.float64)
+    masked cumulative count over `order`. A pair's second rank reuses the
+    first one's bucket scan; only anchors whose second rank lies in a
+    later bucket are scanned again. O(N + A*(B + N/W + W)) work — linear
+    like the Chan path, never the O(sum of window sizes) gather."""
+    A = his.size
+    outs = [(np.empty(A), np.empty(A)) for _ in ranks]
+    x = x[:int(his.max())]            # no window reads past the longest
     n = x.size
-    his_arr = np.asarray(his, dtype=np.int64)
-    if n * his_arr.size <= _SELECT_DENSE_CUTOFF:
-        order = np.argsort(x, kind="stable")
-        sorted_vals = x[order]
-        valid = order[None, :] < his_arr[:, None]
-        cum = np.cumsum(valid, axis=1)
-        outs = []
-        for tgt in targets:
-            t = np.asarray(tgt, dtype=np.int64)
-            # first sorted position whose in-window count reaches t — that
-            # position is in-window (the count increments only there), so
-            # it IS the t-th smallest element of x[0:h]
-            j_star = (cum < t[:, None]).sum(axis=1)
-            outs.append(sorted_vals[j_star])
-        return outs
     order = np.argsort(x, kind="stable")          # rank -> index
     sorted_vals = x[order]
     g = np.empty(n, dtype=np.int64)               # index -> rank
@@ -285,89 +369,152 @@ def _expanding_select(x, his, targets, B=_CHAN_B, W=256, chunk=8192):
     nb = (n + B - 1) // B
     nv = (n + W - 1) // W
     # M[k, v] = count(idx < k*B and g < v*W); build by 2D histogram + cumsum
-    hist = np.zeros((nb + 1, nv + 1), dtype=np.int64)
     idx_blk = np.arange(n, dtype=np.int64) // B
-    np.add.at(hist, (idx_blk + 1, g // W + 1), 1)
+    hist = np.bincount((idx_blk + 1) * (nv + 1) + g // W + 1,
+                       minlength=(nb + 1) * (nv + 1)).reshape(nb + 1, nv + 1)
     M = hist.cumsum(axis=0).cumsum(axis=1)
-
-    his = np.asarray(his, dtype=np.int64)
-    A = his.size
-    outs = [np.empty(A) for _ in targets]
-    # pad order/sorted_vals so bucket gathers never index past the end
-    order_pad = np.concatenate([order, np.full(W, n, dtype=np.int64)])
-    vals_pad = np.concatenate([sorted_vals, np.zeros(W)])
+    # order and sorted_vals as one row per rank bucket, so a bucket scan
+    # copies whole rows (int32 halves the bytes; n < 2**31)
+    buckets = np.full(nv * W, n, dtype=np.int32)
+    buckets[:n] = order
+    buckets = buckets.reshape(nv, W)
+    bucket_vals = np.zeros(nv * W)
+    bucket_vals[:n] = sorted_vals
+    bucket_vals = bucket_vals.reshape(nv, W)
 
     for c0 in range(0, A, chunk):
         sel = slice(c0, min(c0 + chunk, A))
         h = his[sel]
+        h32 = h.astype(np.int32)
         kk = h // B
         rr = h - kk * B
         m = h.size
         # remainder coarse histogram: ranks of elements [k*B, h)
-        crem = np.zeros((m, nv + 1), dtype=np.int64)
         nzr = np.flatnonzero(rr > 0)
-        if nzr.size:
-            sizes = rr[nzr]
-            so = np.zeros(nzr.size, dtype=np.int64)
-            so[1:] = np.cumsum(sizes)[:-1]
-            gather = (np.arange(int(sizes.sum()), dtype=np.int64)
-                      + np.repeat(kk[nzr] * B - so, sizes))
-            rows = np.repeat(nzr, sizes)
-            np.add.at(crem, (rows, g[gather] // W + 1), 1)
+        gather, _ = _segments(kk[nzr] * B, rr[nzr])
+        crem = np.bincount(np.repeat(nzr, rr[nzr]) * (nv + 1)
+                           + g[gather] // W + 1,
+                           minlength=m * (nv + 1)).reshape(m, nv + 1)
         ccoarse = M[kk] + np.cumsum(crem, axis=1)   # (m, nv+1) monotone rows
-        for j, tgt in enumerate(targets):
-            t = np.asarray(tgt[sel], dtype=np.int64)
-            # smallest v with ccoarse[:, v] >= t  (rows monotone)
-            v_star = (ccoarse < t[:, None]).sum(axis=1)
-            t_res = t - np.take_along_axis(
-                ccoarse, (v_star - 1)[:, None], axis=1)[:, 0]
-            rstart = (v_star - 1) * W
-            member_idx = order_pad[rstart[:, None]
-                                   + np.arange(W, dtype=np.int64)]
-            inwin = (member_idx < h[:, None]).cumsum(axis=1)
-            j_star = (inwin < t_res[:, None]).sum(axis=1)
-            outs[j][sel] = vals_pad[rstart + j_star]
+
+        def scan(t, r):
+            """Bucket scan of rows r for ranks t: returns the selector
+            of in-bucket ranks and the count through the bucket."""
+            cc = ccoarse[r]
+            # smallest v with cc[:, v] >= t  (rows monotone)
+            v_star = (cc < t[:, None]).sum(axis=1)
+            below = cc[np.arange(r.size), v_star - 1]
+            inwin = (buckets[v_star - 1] < h32[r][:, None]).cumsum(
+                axis=1, dtype=np.int16)
+
+            def pick(tt):
+                # in-bucket ranks are at most W: compare in int16 too
+                j_star = (inwin < (tt - below).astype(np.int16)[:, None]
+                          ).sum(axis=1)
+                return bucket_vals[v_star - 1, j_star]
+            return pick, cc[np.arange(r.size), v_star]
+
+        every = np.arange(m, dtype=np.int64)
+        for (t1, t2), (o1, o2) in zip(ranks, outs):
+            t1 = np.asarray(t1[sel], dtype=np.int64)
+            t2 = np.asarray(t2[sel], dtype=np.int64)
+            pick, through = scan(t1, every)
+            o1[sel] = pick(t1)
+            same = t2 <= through
+            v2 = pick(np.where(same, t2, t1))
+            far = np.flatnonzero(~same)
+            if far.size:
+                pick_far, _ = scan(t2[far], far)
+                v2[far] = pick_far(t2[far])
+            o2[sel] = v2
     return outs
 
 
-def _expanding_stats(cols, his, m34=(), pairs=(), B=_CHAN_B):
-    """Exact central stats over every prefix x[0:h], h in his (h >= 1)."""
+# below this n*A product the dense (A, n) path beats the coarse-matrix
+# machinery's fixed cost; tests monkeypatch it to force the dense path
+_SELECT_DENSE_CUTOFF = 32768
+
+
+def _expanding_select(cv, ranks):
+    """Exact order statistics over prefixes: for every anchor a of `cv`
+    and every pair (t1, t2) in `ranks`, the t1[a]-th and t2[a]-th smallest
+    (1-based, t1 <= t2) elements of its window — the selection core of
+    expanding percentiles. Returns [(v1, v2)] float64.
+
+    Conversations whose n*A is below the cutoff take the dense path
+    together, batched per length class; the coarse machinery's fixed cost
+    only pays off above it, so the others run it one by one. Both paths
+    select by the SAME stable ranks (ties by index) and selection never
+    performs a float operation, so they return identical bits (pinned by
+    tests/test_batched_kernels.py::test_expanding_select_dense_matches)."""
+    A = cv.h.size
+    outs = [(np.empty(A), np.empty(A)) for _ in ranks]
+    busy = cv.cnt > 0
+    dense = busy & (cv.lens * cv.cnt <= _SELECT_DENSE_CUTOFF)
+    if dense.any():
+        _dense_select(cv, np.flatnonzero(dense), ranks, outs)
+    for g in np.flatnonzero(busy & ~dense):
+        sl = slice(cv.astart[g], cv.astart[g + 1])
+        got = _coarse_select(cv.x[cv.offs[g]:cv.offs[g + 1]], cv.h[sl],
+                             [(t1[sl], t2[sl]) for t1, t2 in ranks])
+        for (o1, o2), (v1, v2) in zip(outs, got):
+            o1[sl], o2[sl] = v1, v2
+    return outs
+
+
+def _expanding_stats(cv, cols, m34=(), pairs=(), B=_CHAN_B):
+    """Exact central stats over every anchor's prefix; `cols` are flat
+    arrays laid out like cv.x."""
     names = list(cols)
-    n = next(iter(cols.values())).size
-    nb = (n + B - 1) // B
-    bstarts = (np.arange(nb) * B).astype(np.int64)
-    bsizes = np.minimum(bstarts + B, n) - bstarts
-    blk = _two_pass_stats(cols, bstarts, bsizes, names, m34, pairs)
+    keys = [(s, c) for c in names
+            for s in ("mean", "M2") + (("M3", "M4") if c in m34 else ())]
+    keys += [("C", a, b) for a, b in pairs]
+    h = cv.h
+    A = h.size
+    kk = h // B
+    rr = h - kk * B
 
-    keys = [k for k in blk if k != "n"]
-    cum = {k: np.zeros(nb + 1) for k in keys}
-    cum["n"] = np.zeros(nb + 1)
-    run = {k: 0.0 for k in keys}
-    run["n"] = 0.0
-    for i in range(nb):
-        sb = {k: blk[k][i] for k in blk}
-        run = _chan_merge(run, sb, names, m34, pairs)
-        for k in run:
-            cum[k][i + 1] = run[k]
+    # cum-stats of the kk full blocks before each anchor. The block chain
+    # stays a scalar loop per conversation: scalar and array float powers
+    # round differently, so merging across conversations would move bits.
+    sa = {k: np.zeros(A) for k in keys}
+    sa["n"] = np.zeros(A)
+    nfull = np.zeros(cv.lens.size, dtype=np.int64)
+    np.maximum.at(nfull, cv.ga, kk)
+    chained = np.flatnonzero(nfull > 0)
+    if chained.size:
+        nblk = nfull[chained]
+        first = np.zeros(chained.size, dtype=np.int64)
+        first[1:] = np.cumsum(nblk)[:-1]
+        total = int(nblk.sum())
+        bstart = (np.repeat(cv.offs[chained] - B * first, nblk)
+                  + B * np.arange(total, dtype=np.int64))
+        gather = (bstart[:, None] + np.arange(B, dtype=np.int64)).ravel()
+        blk = _two_pass_stats({c: cols[c][gather] for c in names},
+                              np.arange(total, dtype=np.int64) * B,
+                              np.full(total, B, dtype=np.int64),
+                              names, m34, pairs)
+        for g, b0, nb in zip(chained, first, nblk):
+            cum = {k: np.zeros(nb + 1) for k in sa}
+            run = {k: 0.0 for k in sa}
+            for i in range(nb):
+                sb = {k: blk[k][b0 + i] for k in blk}
+                run = _chan_merge(run, sb, names, m34, pairs)
+                for k in run:
+                    cum[k][i + 1] = run[k]
+            sl = slice(cv.astart[g], cv.astart[g + 1])
+            for k in sa:
+                sa[k][sl] = cum[k][kk[sl]]
 
-    his = np.asarray(his, dtype=np.int64)
-    kk = his // B
-    rr = his - kk * B
-    A = his.size
     rem = {k: np.zeros(A) for k in keys}
     rem["n"] = rr.astype(np.float64)
     nz = np.flatnonzero(rr > 0)
     if nz.size:
-        sizes = rr[nz]
-        starts_out = np.zeros(nz.size, dtype=np.int64)
-        starts_out[1:] = np.cumsum(sizes)[:-1]
-        gather = (np.arange(int(sizes.sum()), dtype=np.int64)
-                  + np.repeat(kk[nz] * B - starts_out, sizes))
-        gcols = {c: cols[c][gather] for c in names}
-        rs = _two_pass_stats(gcols, starts_out, sizes, names, m34, pairs)
+        gather, starts = _segments(cv.offs[cv.ga[nz]] + kk[nz] * B, rr[nz])
+        rs = _two_pass_stats({c: cols[c][gather] for c in names}, starts,
+                             rr[nz], names, m34, pairs)
         for k in keys:
             rem[k][nz] = rs[k]
-    sa = {k: cum[k][kk] for k in cum}
     return _chan_merge(sa, rem, names, m34, pairs)
 
 
@@ -378,6 +525,16 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
     O(sum his) gather — the difference between linear and quadratic work
     for point-in-time backfills with unbounded lookback.
 
+    Multi-conversation form: `x` a sequence of 1-D arrays, one per
+    conversation, and `his` a sequence of as many prefix-length arrays.
+    Every output is then the concatenation, in conversation order, of the
+    per-conversation outputs, and each conversation's part is bit-identical
+    to calling compute_expanding on that conversation alone: nothing
+    accumulates across a conversation edge (see the section comment
+    above). One call evaluates a whole block of conversations, so the
+    Python dispatch is paid per block, not per conversation. Values are
+    read as float64.
+
     means/extremes are pure raw sums / running extrema (plain prefix
     scans); moments and regression use the exact blocked-Chan central-stat
     machinery above (variance/skew/kurtosis from centered M2/M3/M4;
@@ -387,43 +544,43 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
     mean-|residual| outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly
     per-window and are NOT returned — the caller routes them to the gather.
     Percentiles use the exact offline order-statistic machinery
-    (_expanding_select) — bit-identical to sorting each window, never the
-    gather. Same output names, guards, and formulas as kernels.py
-    f_moments / f_percentiles / f_regression
+    (_expanding_select), one selection per distinct fraction — bit-identical
+    to sorting each window, never the gather. Same output names, guards,
+    and formulas as kernels.py f_moments / f_percentiles / f_regression
     (functionalRegression.cpp:219-246 closed forms expressed via the
     algebraically-identical centered normal equations)."""
     options = options or {}
-    if not (np.asarray(his) >= 1).all():
-        raise ValueError("compute_expanding: windows must be non-empty")
-    n = x.size
-    j = np.asarray(his, dtype=np.int64) - 1     # inclusive end index
-    N = his.astype(np.float64)
+    if isinstance(x, np.ndarray):
+        x, his = [x], [his]
+    cv = _Convs(x, his)
+    x = cv.x
+    N = cv.h.astype(np.float64)
     out: dict[str, np.ndarray] = {}
 
-    def pref(v):
-        return np.cumsum(v)[j]
+    def pref(*vs):
+        return cv.at_anchors(lambda idx: [np.cumsum(v[idx], axis=1)
+                                          for v in vs])
+
+    if "means" in families or "extremes" in families:
+        (sx,) = pref(x)
+        mean = sx / N
 
     if "means" in families:
         absx = np.abs(x)
         nz = x != 0.0
         pos = x > 0.0
         neg = x < 0.0
-        mean = pref(x) / N
-        nnz = pref(nz.astype(np.float64))
-        npos = pref(pos.astype(np.float64))
-        nneg = pref(neg.astype(np.float64))
-        absmean = pref(absx) / N
-        qmean = pref(x * x) / N
         with np.errstate(divide="ignore", invalid="ignore"):
             logabs = np.where(nz, np.log(np.where(nz, absx, 1.0)), 0.0)
-        nz_s = pref(np.where(nz, x, 0.0))
-        nzabs_s = pref(np.where(nz, absx, 0.0))
-        nzq_s = pref(np.where(nz, x * x, 0.0))
-        nzlog_s = pref(logabs)
-        pos_s = pref(np.where(pos, x, 0.0))
-        posq_s = pref(np.where(pos, x * x, 0.0))
-        neg_s = pref(np.where(neg, x, 0.0))
-        negq_s = pref(np.where(neg, x * x, 0.0))
+        (nnz, npos, nneg, sabs, sq, nz_s, nzabs_s, nzq_s, nzlog_s, pos_s,
+         posq_s, neg_s, negq_s) = pref(
+            nz.astype(np.float64), pos.astype(np.float64),
+            neg.astype(np.float64), absx, x * x, np.where(nz, x, 0.0),
+            np.where(nz, absx, 0.0), np.where(nz, x * x, 0.0), logabs,
+            np.where(pos, x, 0.0), np.where(pos, x * x, 0.0),
+            np.where(neg, x, 0.0), np.where(neg, x * x, 0.0))
+        absmean = sabs / N
+        qmean = sq / N
         safe_nnz = np.where(nnz > 0, nnz, 1.0)
         safe_np = np.where(npos > 0, npos, 1.0)
         safe_nn = np.where(nneg > 0, nneg, 1.0)
@@ -457,28 +614,30 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         out["nzrqmean"] = np.sqrt(out["nzqmean"])
 
     if "extremes" in families:
-        rmax = np.maximum.accumulate(x)
-        rmin = np.minimum.accumulate(x)
-        gmax = rmax[j]
-        gmin = rmin[j]
-        idx = np.arange(n, dtype=np.int64)
-        # first index achieving each running max/min: strict-update points,
-        # then running max of the update positions (monotone by construction)
-        prev_max = np.empty(n)
-        prev_max[0] = -np.inf
-        prev_max[1:] = rmax[:-1]
-        prev_min = np.empty(n)
-        prev_min[0] = np.inf
-        prev_min[1:] = rmin[:-1]
-        argmax_run = np.maximum.accumulate(np.where(x > prev_max, idx, 0))
-        argmin_run = np.maximum.accumulate(np.where(x < prev_min, idx, 0))
-        maxpos = argmax_run[j].astype(np.float64)
-        minpos = argmin_run[j].astype(np.float64)
+        def extremes(idx):
+            V = x[idx]
+            rmax = np.maximum.accumulate(V, axis=1)
+            rmin = np.minimum.accumulate(V, axis=1)
+            col = np.arange(V.shape[1], dtype=np.int64)
+            # first index achieving each running max/min: strict-update
+            # points, then running max of the update positions (monotone by
+            # construction)
+            prev_max = np.empty_like(V)
+            prev_max[:, 0] = -np.inf
+            prev_max[:, 1:] = rmax[:, :-1]
+            prev_min = np.empty_like(V)
+            prev_min[:, 0] = np.inf
+            prev_min[:, 1:] = rmin[:, :-1]
+            return [rmax, rmin,
+                    np.maximum.accumulate(np.where(V > prev_max, col, 0),
+                                          axis=1),
+                    np.maximum.accumulate(np.where(V < prev_min, col, 0),
+                                          axis=1)]
+        gmax, gmin, maxpos, minpos = cv.at_anchors(extremes)
         tn = options.get("extremes", {}).get("timeNorm", "frames")
         if tn == "segment":
             maxpos = maxpos / N
             minpos = minpos / N
-        mean = pref(x) / N
         out["max"] = gmax
         out["min"] = gmin
         out["range"] = gmax - gmin
@@ -494,20 +653,20 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         plist = list(popts.get("percentiles", (0.20, 0.50, 0.80)))
         pranges = list(popts.get("pctlranges", ((0, 2),)))
         pquots = list(popts.get("pctlquotients", ()))
-        fracs = [0.25, 0.50, 0.75] + plist
-        hl = np.asarray(his, dtype=np.int64)
-        targets, meta = [], []
+        # one selection per distinct fraction (the default list asks for
+        # 0.5 twice: quartile2 and percentile50.0)
+        fracs = list(dict.fromkeys([0.25, 0.50, 0.75] + plist))
+        hl = cv.h
+        ranks, meta = [], []
         for p in fracs:
             idxf = p * (N - 1.0)
             i1 = np.clip(np.floor(idxf).astype(np.int64), 0, hl - 1)
             i2 = np.clip(np.ceil(idxf).astype(np.int64), 0, hl - 1)
-            meta.append((idxf, i1, i2, len(targets)))
-            targets.append(i1 + 1)
-            targets.append(i2 + 1)
-        got = _expanding_select(x, hl, targets)
+            meta.append((idxf, i1, i2))
+            ranks.append((i1 + 1, i2 + 1))
         pct = {}
-        for p, (idxf, i1, i2, base) in zip(fracs, meta):
-            v1, v2 = got[base], got[base + 1]
+        for p, (idxf, i1, i2), (v1, v2) in zip(fracs, meta,
+                                               _expanding_select(cv, ranks)):
             w1 = idxf - i1
             w2 = i2 - idxf
             pct[p] = np.where(i1 != i2, v1 * w2 + v2 * w1, v1)
@@ -546,11 +705,12 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         m34 = ("y",) if "moments" in families else ()
         pairs = []
         if "regression" in families:
-            u = np.arange(n, dtype=np.float64)
+            u = (np.arange(x.size, dtype=np.int64)
+                 - np.repeat(cv.offs[:-1], cv.lens)).astype(np.float64)
             scols["u"] = u
             scols["v"] = u * u
             pairs = [("u", "y"), ("v", "y"), ("u", "v")]
-        st = _expanding_stats(scols, his, m34=m34, pairs=pairs)
+        st = _expanding_stats(cv, scols, m34=m34, pairs=pairs)
 
     if "moments" in families:
         m2 = st[("M2", "y")] / N
@@ -579,7 +739,7 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         Cuy, Cvy, Cuv = (st[("C", "u", "y")], st[("C", "v", "y")],
                          st[("C", "u", "v")])
         multi = N > 1
-        x0 = x[0] if n else 0.0
+        x0 = x[cv.offs[cv.ga]]      # each anchor's conversation's first value
         safeM2u = np.where(M2u > 0, M2u, 1.0)
         m = np.where(multi & (M2u > 0), Cuy / safeM2u, 0.0)
         t = np.where(multi, mean_y - m * mean_u, x0)

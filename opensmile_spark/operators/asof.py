@@ -16,14 +16,13 @@ AT the anchor timestamp is visible — mirroring "frame written at t is
 readable at t").
 
 `backfill_functionals` materializes whole functional vectors at every
-(conv_id, anchor_ts) grid point using a per-conversation vectorized kernel:
-for A anchors over N turns it does one sort plus prefix scans — not A
-separate window jobs. Physically it is ONE union-tag shuffle + mapInArrow
-over blocks of whole conversations (groupbatch.group_blocks, shared with
-functionals_kernel), not a per-conversation cogroup: cogrouped
-applyInPandas pays ~0.5-1 ms of pandas dispatch PER GROUP, which at high
-conversation cardinality dominates the numpy kernel by an order of
-magnitude.
+(conv_id, anchor_ts) grid point: for A anchors over N turns it does one
+sort plus prefix scans — not A separate window jobs. Physically it is ONE
+union-tag shuffle + mapInArrow over blocks of whole conversations
+(groupbatch.group_blocks, shared with functionals_kernel), and each block
+is evaluated by one kernel call per value column: Python dispatch is paid
+per Arrow block, never per conversation, which at high conversation
+cardinality would dominate the numpy work by an order of magnitude.
 """
 
 from __future__ import annotations
@@ -51,7 +50,9 @@ def asof_join(
     """For each anchor row: latest `right` row with right_ts <= anchor_ts
     (right_ts < anchor_ts when strict=True). Null columns when no prior row
     exists (the DMEM_PAD_ZERO analogue is a caller-side fillna; padding
-    policies per dataMemoryLevel.hpp:26-28).
+    policies per dataMemoryLevel.hpp:26-28). A null timestamp on either
+    side matches nothing: null-ts right rows are dropped, so a null
+    anchor_ts, which sorts first, has no prior row.
 
     `right_order_col` breaks ties between right rows sharing a timestamp:
     the row with the HIGHEST value wins (deterministic across repartitioning
@@ -71,7 +72,7 @@ def asof_join(
         *[F.col(c) for c in anchors.columns if c not in (on, anchor_ts)],
         *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in value_cols],
     )
-    r = right.select(
+    r = right.filter(F.col(right_ts).isNotNull()).select(
         F.col(on),
         F.col(right_ts).alias("__t"),
         F.lit(0).alias("__is_anchor"),
@@ -136,23 +137,26 @@ def backfill_functionals(
     only turns with ts <= anchor_ts (zero temporal leakage, enforced in one
     place), optionally bounded to a trailing window of `window_seconds`.
 
+    A null timestamp on either side matches nothing: null-ts turns are
+    never visible, and an anchor with a null anchor_ts sees no turn.
+
     Physical strategy: union-tag the turn and anchor tables (side 0 / 1),
     ONE repartition by conv + in-partition sort, then a single mapInArrow
     pass over blocks of whole conversations (groupbatch.group_blocks holds
-    back a conversation that straddles an Arrow batch edge). Each
-    conversation's numpy math is unchanged from the cogroup formulation —
-    same sort order, same per-conv arrays, bit-identical outputs — but the
-    Python dispatch is amortized over every conversation in a block instead
-    of paid per conversation. The key and anchor_ts columns keep their
-    input types. Per-anchor windows are gathered into ONE concatenated
-    array and evaluated for ALL anchors at once by batched.compute_groups —
-    no per-anchor Python dispatch, except for a family whose options lie
-    outside BATCHED_SUPPORTED_OPTIONS, which compute_groups runs through
-    the per-window reference kernel.
-    Anchor blocks are chunked so the gathered array stays bounded
-    (`max_gather_elems`) regardless of anchor density. Empty windows
-    emit null features (anchor row is kept so the grid is complete — the
-    PAD_ZERO/PAD_NONE choice is the caller's fillna/dropna).
+    back a conversation that straddles an Arrow batch edge). Each block is
+    evaluated at once: one vectorized pass finds every anchor's visible
+    turn range, one batched.compute_expanding call per value column covers
+    every conversation of the block, and the per-anchor windows of the
+    gathered families are concatenated into ONE array evaluated for ALL
+    anchors by batched.compute_groups — no per-conversation or per-anchor
+    Python dispatch, except for a family whose options lie outside
+    BATCHED_SUPPORTED_OPTIONS, which compute_groups runs through the
+    per-window reference kernel. Every conversation's outputs are
+    bit-identical whatever else shares its block. The key and anchor_ts
+    columns keep their input types. The gather is chunked so the gathered
+    array stays bounded (`max_gather_elems`) regardless of anchor density.
+    Empty windows emit null features (anchor row is kept so the grid is
+    complete — the PAD_ZERO/PAD_NONE choice is the caller's fillna/dropna).
 
     Cost model per family on an UNBOUNDED (expanding) grid with N turns and
     A anchors per conversation: means/extremes/moments/percentiles and all
@@ -183,36 +187,77 @@ def backfill_functionals(
     else:
         exp_fams, exp_keys, gather_fams = (), frozenset(), tuple(families)
 
-    def _one_conv(ts_vals, col_arrays, anchor_vals):
-        """Per-conversation math — unchanged from the r5 cogroup
-        formulation (same op sequence on the same sorted arrays =>
-        bit-identical outputs)."""
-        # prefix positions: count of turns with ts <= anchor (searchsorted right)
-        hi = np.searchsorted(ts_vals, anchor_vals, side="right")
+    def _emit(rb, starts, ends):
+        """One block of whole conversations (groupbatch.group_blocks) ->
+        one output RecordBatch, evaluated for every anchor of the block at
+        once. Rows are sorted by (__k, __side, __t, __ord): per conv,
+        side-0 turn rows sorted by (ts, order), then side-1 anchor rows
+        sorted by anchor_ts. Output rows are the anchor rows, in input
+        order."""
+        side = rb.column("__side").to_numpy(zero_copy_only=False)
+        anchor_rows = np.flatnonzero(side == 1)
+        if not anchor_rows.size:
+            return None   # convs with turns but no anchors: no output rows
+        turn_rows = np.flatnonzero(side == 0)
+        conv = np.repeat(np.arange(starts.size, dtype=np.int64),
+                         ends - starts)
+        t_col = rb.column("__t")
+        t_np = t_col.to_numpy(zero_copy_only=False)
+        # turns of conv g are turn_rows[offs[g]:offs[g+1]], sorted by ts
+        offs = np.zeros(starts.size + 1, dtype=np.int64)
+        np.cumsum(np.bincount(conv[turn_rows], minlength=starts.size),
+                  out=offs[1:])
+        turn_t, anchor_t = t_np[turn_rows], t_np[anchor_rows]
+        ca = conv[anchor_rows]
+        # visible turns per anchor, for every anchor in one pass: rank the
+        # times against the block's distinct turn times, so (conv, rank)
+        # is one int64 key that is sorted over the turn rows
+        uniq = np.unique(turn_t)
+        stride = uniq.size + 1
+        turn_key = conv[turn_rows] * stride + np.searchsorted(uniq, turn_t)
+
+        def n_before(bound, how):
+            """turns of each anchor's conv with ts <= bound (how="right")
+            or ts < bound (how="left")."""
+            key = ca * stride + np.searchsorted(uniq, bound, side=how)
+            return np.searchsorted(turn_key, key) - offs[ca]
+
+        hi = n_before(anchor_t, "right")
         if window_seconds is not None:
-            lo = np.searchsorted(
-                ts_vals,
-                anchor_vals - np.timedelta64(int(window_seconds * 1e6), "us"),
-                side="left",
-            )
+            lo = n_before(anchor_t - np.timedelta64(
+                int(window_seconds * 1e6), "us"), "left")
         else:
             lo = np.zeros_like(hi)
+        # a null anchor_ts sees nothing (null turns never reach the kernel)
+        null_anchor = t_col.is_null().to_numpy(
+            zero_copy_only=False)[anchor_rows]
+        hi[null_anchor] = 0
+        lo[null_anchor] = 0
 
-        A = len(anchor_vals)
+        A = anchor_rows.size
         out_cols = {f: np.full(A, np.nan) for f in feat_names}
-        sizes = (hi - lo).astype(np.int64)
+        sizes = hi - lo
         nonempty = np.flatnonzero(sizes > 0)
+        turn_vals = {c: rb.column(c).to_numpy(zero_copy_only=False)
+                     .astype(np.float64, copy=False)[turn_rows]
+                     for c in value_cols}
 
-        # prefix-scan families: one pass over the conversation, no gather
+        # prefix-scan families: one compute_expanding call per value column
+        # over every conversation of the block, no gather
         if exp_fams and nonempty.size:
+            cuts = np.searchsorted(ca[nonempty],
+                                   np.arange(1, starts.size))
+            his = np.split(hi[nonempty], cuts)
             for c in value_cols:
-                ex = compute_expanding(col_arrays[c], hi[nonempty],
-                                       exp_fams, options)
+                ex = compute_expanding(np.split(turn_vals[c], offs[1:-1]),
+                                       his, exp_fams, options)
                 for k, v in ex.items():
                     if k in exp_keys:
                         out_cols[f"{c}_{k}"][nonempty] = v
 
-        # block anchors so the gathered windows stay within the memory cap
+        # every window of the block in one gather, chunked so the gathered
+        # array stays within the memory cap
+        first = offs[ca] + lo
         blk_start = 0
         csum = np.cumsum(sizes[nonempty])
         while gather_fams and blk_start < nonempty.size:
@@ -225,48 +270,22 @@ def backfill_functionals(
             bstarts = np.zeros(sel.size, dtype=np.int64)
             bstarts[1:] = np.cumsum(bsizes)[:-1]
             bends = bstarts + bsizes
-            # gather index: element j of window i reads lo[i] + (j - bstarts[i])
+            # gather index: element j of window i reads first[i] + (j - bstarts[i])
             gather = (np.arange(int(bsizes.sum()), dtype=np.int64)
-                      + np.repeat(lo[sel] - bstarts, bsizes))
+                      + np.repeat(first[sel] - bstarts, bsizes))
             for c in value_cols:
-                got = compute_groups(col_arrays[c][gather], bstarts, bends,
+                got = compute_groups(turn_vals[c][gather], bstarts, bends,
                                      gather_fams, options)
                 for k, v in got.items():
                     if k not in exp_keys:
                         out_cols[f"{c}_{k}"][sel] = v
             blk_start = blk_end
-        return sizes, out_cols
 
-    def _emit(rb, starts, ends):
-        """One block of whole conversations (groupbatch.group_blocks) ->
-        one output RecordBatch. Rows are sorted by (__k, __side, __t,
-        __ord): per conv, side-0 turn rows sorted by (ts, order) — the
-        cogroup kernel's mergesort order — then side-1 anchor rows sorted
-        by anchor_ts. Output rows are the anchor rows, in input order."""
-        side_np = rb.column("__side").to_numpy(zero_copy_only=False)
-        t_np = rb.column("__t").to_numpy(zero_copy_only=False)
-        vals = {c: rb.column(c).to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False) for c in value_cols}
-        size_chunks = []
-        feat_chunks: dict[str, list] = {f: [] for f in feat_names}
-        for s, e in zip(starts, ends):
-            a0 = s + int(np.searchsorted(side_np[s:e], 1, side="left"))
-            if a0 == e:
-                continue   # conv has turns but no anchors: no output rows
-            col_arrays = {c: vals[c][s:a0] for c in value_cols}
-            sizes, out_cols = _one_conv(t_np[s:a0], col_arrays, t_np[a0:e])
-            size_chunks.append(sizes)
-            for f in feat_names:
-                feat_chunks[f].append(out_cols[f])
-        if not size_chunks:
-            return None
-        anchor_rows = np.flatnonzero(side_np == 1)
         arrays = [rb.column("__k").take(anchor_rows),
-                  rb.column("__t").take(anchor_rows),
-                  pa.array(np.concatenate(size_chunks), type=pa.int64())]
+                  t_col.take(anchor_rows),
+                  pa.array(sizes, type=pa.int64())]
         # from_pandas=True: NaN (empty window) -> null
-        arrays += [pa.array(np.concatenate(feat_chunks[f]),
-                            type=pa.float64(), from_pandas=True)
+        arrays += [pa.array(out_cols[f], type=pa.float64(), from_pandas=True)
                    for f in feat_names]
         return pa.RecordBatch.from_arrays(
             arrays, names=[on, anchor_ts, "n_visible"] + feat_names)
@@ -277,7 +296,8 @@ def backfill_functionals(
             if out is not None:
                 yield out
 
-    left = lld.select(
+    # a null ts matches nothing: null-ts turns are never visible
+    left = lld.filter(F.col(ts_col).isNotNull()).select(
         F.col(on).alias("__k"),
         F.lit(0).alias("__side"),
         F.col(ts_col).alias("__t"),
@@ -381,20 +401,15 @@ def incremental_backfill(
     def only_stale(df, how):
         # DataFrame-bound column refs: the stale side shares lineage with
         # `lld` (it derives from the same scan), and both the lld and
-        # anchor sides pass through here before being cogrouped — string
-        # or alias-based join columns trip Spark's ambiguous-self-join
-        # check on the shared attributes, instance-bound ones do not
+        # anchor sides pass through here before backfill unions them —
+        # string or alias-based join columns trip Spark's
+        # ambiguous-self-join check on the shared attributes,
+        # instance-bound ones do not
         return df.join(F.broadcast(stale_k),
                        df[on] == stale_k["__stale_key"], how)
 
-    # the restricted slices are MATERIALIZED (localCheckpoint) before the
-    # cogroup: (a) Spark's ambiguous-self-join check false-positives on a
-    # cogroup whose two children both carry joins over a shared scan, and
-    # (b) the materialized working set is proportional to the CHANGED
-    # conversations — the thing an incremental refresh is sized by anyway
     fresh_feats = backfill_functionals(
-        only_stale(lld, "left_semi").localCheckpoint(eager=True),
-        only_stale(anchors, "left_semi").localCheckpoint(eager=True),
+        only_stale(lld, "left_semi"), only_stale(anchors, "left_semi"),
         value_cols, families, options, window_seconds,
         on, anchor_ts, ts_col, order_col,
     )

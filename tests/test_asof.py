@@ -258,6 +258,90 @@ def test_backfill_batch_split_invariance(spark):
         assert a.equals(b), window
 
 
+def _null_ts_case(spark):
+    """Conv a: turns at 0 s, 10 s, 20 s plus one null-ts turn (x=100).
+    Conv b: one null-ts turn (x=7) and a turn at 30 s. Anchors: a@null,
+    a@5 s, a@15 s, b@1 s."""
+    t0 = 1_704_067_200.0
+    turns = [("a", 0, 1.0, t0), ("a", 1, 2.0, t0 + 10), ("a", 2, 3.0, t0 + 20),
+             ("a", 3, 100.0, None), ("b", 0, 7.0, None), ("b", 1, 5.0, t0 + 30)]
+    lld = spark.createDataFrame(
+        turns, "conv_id string, turn_idx int, x double, epoch double") \
+        .withColumn("ts", F.timestamp_seconds("epoch")).drop("epoch")
+    anchors = spark.createDataFrame(
+        [("a", None), ("a", t0 + 5), ("a", t0 + 15), ("b", t0 + 1)],
+        "conv_id string, epoch double") \
+        .withColumn("anchor_ts", F.timestamp_seconds("epoch")).drop("epoch")
+
+    def key(r):
+        return (r["conv_id"], None if r["anchor_ts"] is None
+                else r["anchor_ts"].timestamp() - t0)
+    return lld, anchors, key
+
+
+def test_null_timestamps_match_nothing(spark):
+    """A null ts on either side matches nothing, as in the oracles' join
+    on epoch_us(l.ts) <= a.anchor_us: a null-ts turn is never visible and
+    a null anchor_ts sees no turn."""
+    lld, anchors, key = _null_ts_case(spark)
+    got = {key(r): r for r in backfill_functionals(
+        lld, anchors, ["x"], families=["means"]).collect()}
+    assert {k: r["n_visible"] for k, r in got.items()} == {
+        ("a", None): 0, ("a", 5.0): 1, ("a", 15.0): 2, ("b", 1.0): 0}
+    assert got[("a", None)]["x_amean"] is None
+    assert got[("b", 1.0)]["x_amean"] is None
+    assert got[("a", 5.0)]["x_amean"] == 1.0
+    assert got[("a", 15.0)]["x_amean"] == 1.5
+
+    joined = asof_join(anchors, lld.select("conv_id", "ts", "x"),
+                       value_cols=["x"])
+    assert {key(r): r["x"] for r in joined.collect()} == {
+        ("a", None): None, ("a", 5.0): 1.0, ("a", 15.0): 2.0,
+        ("b", 1.0): None}
+
+
+def test_backfill_conversation_independent_of_block(spark):
+    """One conversation's backfill rows are identical alone and alongside
+    300 others that share its Arrow blocks — on the expanding grid and on
+    a trailing window. Ties, +-0.0 and a 1e9 offset in the values."""
+    rng = np.random.default_rng(3)
+    t0 = 1_704_067_200.0
+
+    def conv(k, n):
+        ts = t0 + np.cumsum(rng.integers(1, 200, n)).astype(float)
+        x = np.round(rng.normal(0.0, 3.0, n)) + (1e9 if n > 100 else 0.0)
+        x[::7] = -0.0
+        return ([(k, i, float(x[i]), float(ts[i])) for i in range(n)],
+                [(k, float(t)) for t in ts[::3]] + [(k, float(ts[-1]) + 5)])
+
+    target_turns, target_anchors = conv("target", 600)
+    turns, anchors = list(target_turns), list(target_anchors)
+    for i in range(300):
+        ct, ca = conv(f"o{i:03d}", int(rng.integers(1, 60)))
+        turns += ct
+        anchors += ca
+
+    def frames(turn_rows, anchor_rows):
+        lld = spark.createDataFrame(
+            turn_rows, "conv_id string, turn_idx int, x double, epoch double") \
+            .withColumn("ts", F.timestamp_seconds("epoch")).drop("epoch")
+        anc = spark.createDataFrame(anchor_rows, "conv_id string, epoch double") \
+            .withColumn("anchor_ts", F.timestamp_seconds("epoch")).drop("epoch")
+        return lld, anc
+
+    fams = ["means", "moments", "extremes", "percentiles", "regression"]
+    alone, together = frames(target_turns, target_anchors), frames(turns,
+                                                                   anchors)
+    for window in (None, 900.0):
+        a, b = (backfill_functionals(lld, anc, ["x"], families=fams,
+                                     window_seconds=window)
+                .filter(F.col("conv_id") == "target").toArrow()
+                .sort_by([("anchor_ts", "ascending")])
+                for lld, anc in (alone, together))
+        assert a.num_rows == len(target_anchors)
+        assert a.equals(b), window
+
+
 def test_asof_multi_conv_no_crosstalk(spark):
     t0 = 1_704_067_200.0
     a = make_conv(spark, "a", [1.0])

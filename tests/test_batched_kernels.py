@@ -533,16 +533,25 @@ def test_lsp_formants_companion_eigvals_match_roots(fams, opts):
 
 
 def test_expanding_select_dense_matches(monkeypatch):
-    """The r6 dense small-input path of _expanding_select must return the
+    """The dense small-input path of _expanding_select must return the
     SAME BITS as the coarse-matrix machinery (both select elements via
     stable ranks; selection performs no float op) — adversarial ties,
     -0.0/0.0 mixes, and NaN included, since the driver's byte hash
     distinguishes -0.0 from 0.0. Both paths return float64, float32
-    input included."""
+    input included. With W=8 buckets the machinery's paired scan serves
+    both i1 == i2 pairs and pairs whose second rank lies in the next
+    bucket (rescanned)."""
     from opensmile_spark.functionals import batched
 
+    def next_bucket(x, his, t1, t2, W):
+        g = np.empty(x.size, dtype=np.int64)
+        g[np.argsort(x, kind="stable")] = np.arange(x.size)
+        return sum(int(r[a - 1] // W != r[b - 1] // W) for r, a, b in
+                   ((np.sort(g[:h]), a, b) for h, a, b in zip(his, t1, t2)))
+
     rng = np.random.RandomState(23)
-    for n in (1, 2, 7, 66, 250):
+    same = far = 0
+    for n in (1, 2, 7, 66, 250, 700):
         cases = [rng.rand(n)]
         tie = np.repeat(rng.rand(max(1, n // 4)), 4)[:n].copy()
         cases.append(tie)
@@ -556,20 +565,64 @@ def test_expanding_select_dense_matches(monkeypatch):
         cases.append(rng.rand(n).astype(np.float32))
         for x in cases:
             his = np.arange(1, x.size + 1, dtype=np.int64)
-            targets = []
+            ranks = []
             for p in (0.25, 0.5, 0.75, 0.2, 0.8):
                 idxf = p * (his.astype(float) - 1.0)
-                targets.append(
-                    np.clip(np.floor(idxf).astype(np.int64), 0, his - 1) + 1)
-                targets.append(
-                    np.clip(np.ceil(idxf).astype(np.int64), 0, his - 1) + 1)
+                ranks.append((
+                    np.clip(np.floor(idxf).astype(np.int64), 0, his - 1) + 1,
+                    np.clip(np.ceil(idxf).astype(np.int64), 0, his - 1) + 1))
             monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", 1 << 60)
-            dense = batched._expanding_select(x, his, targets)
-            monkeypatch.setattr(batched, "_SELECT_DENSE_CUTOFF", -1)
-            machinery = batched._expanding_select(x, his, targets)
-            for d, m in zip(dense, machinery):
-                assert d.dtype == m.dtype == np.float64, (n, x.dtype)
-                assert d.tobytes() == m.tobytes(), (n, x[:8])
+            dense = batched._expanding_select(batched._Convs([x], [his]),
+                                              ranks)
+            for B, W in ((batched._CHAN_B, 256), (16, 8)):
+                machinery = batched._coarse_select(x, his, ranks, B=B, W=W)
+                for d, m in zip(dense, machinery):
+                    for dv, mv in zip(d, m):
+                        assert dv.dtype == mv.dtype == np.float64, (n, x.dtype)
+                        assert dv.tobytes() == mv.tobytes(), (n, W, x[:8])
+            if x.dtype == np.float64:
+                for t1, t2 in ranks:
+                    same += int((t1 == t2).sum())
+                    far += next_bucket(x, his, t1, t2, 8)
+    assert same > 0 and far > 0, (same, far)
+
+
+def test_expanding_block_equals_alone():
+    """compute_expanding over one block of conversations gives each
+    conversation exactly the bits of calling it on that conversation
+    alone: nothing accumulates across a conversation edge. Lengths around
+    the 256-row Chan block and one conversation long enough for the
+    coarse order-statistic path; ties, NaN, +-0.0 and a 1e9 offset."""
+    from opensmile_spark.functionals import batched
+    from opensmile_spark.functionals.batched import compute_expanding
+
+    rng = np.random.RandomState(5)
+    lens = (1, 2, 39, 255, 256, 257, 511, 512, 513, 600, 5000)
+    xs, hs = [], []
+    for i, n in enumerate(lens):
+        x = np.round(rng.randn(n) * 3.0)               # ties
+        x[i % 3::7] = 0.0
+        x[(i + 1) % 5::9] = -0.0
+        x[(i + 2) % 4::13] = np.nan
+        if i % 2:
+            x = x + 1e9
+        xs.append(x)
+        h = [v for v in (1, 256, 257, 512, 513, n) if v <= n]
+        h += list(rng.randint(1, n + 1, 6 if n < 5000 else 40))
+        hs.append(np.array(h, dtype=np.int64))
+    # the long conversation takes the coarse select, the others the dense
+    assert lens[-1] * hs[-1].size > batched._SELECT_DENSE_CUTOFF
+    fams = ["means", "moments", "extremes", "percentiles", "regression"]
+    block = compute_expanding(xs, hs, fams)
+    pos = 0
+    for x, h in zip(xs, hs):
+        alone = compute_expanding(x, h, fams)
+        assert list(alone) == list(block)
+        for k, v in alone.items():
+            assert v.tobytes() == block[k][pos:pos + h.size].tobytes(), (
+                x.size, k)
+        pos += h.size
+    assert pos == block["amean"].size
 
 
 # --- the family router (batched.output_keys / batched.compute_groups) ------

@@ -3,7 +3,8 @@
 import numpy as np
 import pytest
 
-from opensmile_spark.functionals.kernels import f_peaks2, f_peaks2_dictref
+from opensmile_spark.functionals.kernels import f_peaks2
+from tests.peaks2_dictref import f_peaks2_dictref
 
 
 def run_both(x, **kw):
