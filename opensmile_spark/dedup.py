@@ -18,29 +18,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from opensmile_spark.exprcache import expr_memo
+from opensmile_spark.util import sql_ident
 
-# Expression construction in this module is py4j-heavy (nested lambda HOFs:
-# the shingle transform, the n_hashes-wide minhash fold, the simhash bit
-# votes) — measured ~1 s per minhash+jaccard query CONSTRUCTION at bench
-# scale, dominating the query's own runtime. The builders below are pure
-# functions of their (string/int) parameters, so their unresolved Columns
-# are memoized via exprcache.expr_memo; no data or results are cached.
-
-
-@expr_memo
-def _tokens(text_col):
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+# The builders below (tokens, shingles, the n_hashes-wide minhash fold, the
+# LSH band keys, the simhash bit votes) render SQL text: built as Column
+# trees their nested lambda HOFs cost one py4j round trip per node — ~1 s
+# per minhash+jaccard query CONSTRUCTION at bench scale, more than the
+# query's own runtime — while one text is parsed once per builder call.
 
 
-@expr_memo
-def _shingles(text_col, k: int):
+def _tokens(text_col: str) -> str:
+    return rf"split(trim(lower({sql_ident(text_col)})), '\\s+')"
+
+
+def _shingles(text_col: str, k: int) -> str:
     toks = _tokens(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
-    )
+    return (f"array_distinct(transform(sequence(0, greatest((size({toks})"
+            f" - {k}), 0)), x -> array_join(slice({toks}, (x + 1), {k}),"
+            f" ' ')))")
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -85,32 +80,23 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     from opensmile_spark.util import ensure_min_partitions
 
     df = ensure_min_partitions(df)   # md5 map side must not run on 1 split
-    sig, unsentinel = _mh_sig_exprs(id_col, text_col, k_shingle, n_hashes)
-    barrier = df.select(id_col, F.explode(F.array(sig)).alias("__sig"))
-    return barrier.select(id_col, *unsentinel)
+    sig, unsentinel = _mh_sig_exprs(text_col, k_shingle, n_hashes)
+    barrier = df.selectExpr(sql_ident(id_col), f"explode(array({sig})) AS __sig")
+    return barrier.selectExpr(sql_ident(id_col), *unsentinel)
 
 
-@expr_memo
-def _mh_sig_exprs(id_col: str, text_col: str, k_shingle: int, n_hashes: int):
-    """(fold signature Column, sentinel-to-NULL output Columns)."""
-    n_digests = (n_hashes + 3) // 4
-    digests = F.transform(
+def _mh_sig_exprs(text_col: str, k_shingle: int, n_hashes: int):
+    """(fold signature, sentinel-to-NULL outputs) as SQL text."""
+    digests = "transform({}, x -> concat({}))".format(
         _shingles(text_col, k_shingle),
-        lambda s: F.concat(*[F.md5(F.concat(F.lit(f"{d}|"), s))
-                             for d in range(n_digests)]),
-    )
-    init = F.array_repeat(F.lit("g" * 8), n_hashes)
-    sig = F.aggregate(
-        digests, init,
-        lambda acc, d: F.zip_with(
-            acc,
-            F.array(*[F.substring(d, 32 * (i // 4) + 8 * (i % 4) + 1, 8)
-                      for i in range(n_hashes)]),
-            lambda a, b: F.least(a, b)),
-    )
+        ", ".join(f"md5(concat('{d}|', x))" for d in range((n_hashes + 3) // 4)))
+    subs = ", ".join(f"substring(y, {32 * (i // 4) + 8 * (i % 4) + 1}, 8)"
+                     for i in range(n_hashes))
+    sig = (f"aggregate({digests}, array_repeat('gggggggg', {n_hashes}), "
+           f"(x, y) -> zip_with(x, array({subs}), (x, y) -> least(x, y)))")
     unsentinel = [
-        F.when(F.element_at("__sig", i + 1) == "g" * 8, None)
-        .otherwise(F.element_at("__sig", i + 1)).alias(f"mh{i}")
+        f"CASE WHEN (element_at(__sig, {i + 1}) = 'gggggggg') THEN NULL "
+        f"ELSE element_at(__sig, {i + 1}) END AS mh{i}"
         for i in range(n_hashes)
     ]
     return sig, unsentinel
@@ -130,43 +116,36 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     groupBy form computes signatures once and emits the identical pair set
     (same buckets, same a < b ordering, same distinct)."""
     sig = minhash_signatures(df, id_col, text_col, k_shingle, n_hashes)
-    band_keys, stack_expr, pair_arr = _lsh_band_exprs(id_col, n_hashes, bands)
-    banded = sig.select(id_col, *band_keys)
-    stacked = banded.selectExpr(id_col, stack_expr)
+    band_keys, stack_expr, pair_arr = _lsh_band_exprs(n_hashes, bands)
+    banded = sig.selectExpr(sql_ident(id_col), *band_keys)
+    stacked = banded.selectExpr(sql_ident(id_col), stack_expr)
     buckets = (
         stacked.groupBy("band_no", "band_key")
         .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("__ids"))
         .filter(F.size("__ids") > 1)
     )
     return (
-        buckets.select(F.explode(pair_arr).alias("__p"))
+        buckets.selectExpr(f"explode({pair_arr}) AS __p")
         .select(F.col("__p.id_a"), F.col("__p.id_b"))
         .distinct()
     )
 
 
-@expr_memo
-def _lsh_band_exprs(id_col: str, n_hashes: int, bands: int):
-    """(band key Columns, stack expr string, in-bucket pair explosion)."""
+def _lsh_band_exprs(n_hashes: int, bands: int):
+    """(band keys, stack expr, in-bucket pair explosion) as SQL text."""
     rows_per_band = n_hashes // bands
     band_keys = [
-        F.md5(F.concat_ws("|", F.lit(b), *[
-            F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
-        ])).alias(f"band{b}")
+        "md5(concat_ws('|', {}, {})) AS band{}".format(
+            b, ", ".join(f"mh{b * rows_per_band + r}"
+                         for r in range(rows_per_band)), b)
         for b in range(bands)
     ]
     stack_expr = "stack({n}, {args}) as (band_no, band_key)".format(
         n=bands,
         args=", ".join(f"'{b}', band{b}" for b in range(bands)),
     )
-    ids = F.col("__ids")
-    pair_arr = F.flatten(F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + 2, F.size(ids)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-        ),
-    ))
+    pair_arr = ("flatten(transform(__ids, (x, y) -> transform(slice(__ids,"
+                " (y + 2), size(__ids)), z -> struct(x AS id_a, z AS id_b))))")
     return band_keys, stack_expr, pair_arr
 
 
@@ -199,8 +178,8 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     # parallel either way
     cand = ensure_min_partitions(df).join(
         F.broadcast(pair_ids), id_col, "left_semi")
-    sh = cand.select(
-        F.col(id_col), _shingles(text_col, k_shingle).alias("sh"))
+    sh = cand.selectExpr(
+        sql_ident(id_col), f"{_shingles(text_col, k_shingle)} AS sh")
     # the verify join reads sh TWICE (id_a and id_b sides) and Spark does
     # not CSE across join sides — materialize the candidate-bounded
     # shingle table once (r6 second pass; same discipline as the pair
@@ -232,38 +211,27 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     from opensmile_spark.util import ensure_min_partitions
 
     df = ensure_min_partitions(df)   # per-token hashing must not run on 1 split
-    return df.select(F.col(id_col), _simhash_expr(text_col, bits))
+    return df.selectExpr(sql_ident(id_col), _simhash_expr(text_col, bits))
 
 
-@expr_memo
-def _simhash_expr(text_col: str, bits: int):
-    toks = F.array_distinct(_tokens(text_col))
-    h = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-    )
+def _simhash_expr(text_col: str, bits: int) -> str:
+    h = (f"transform(array_distinct({_tokens(text_col)}), x -> "
+         f"CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT))")
     # ONE fold over the token array producing ALL `bits` vote counters at
     # once (accumulator = int array), instead of `bits` separate aggregate
     # expressions each re-traversing the array — O(tokens * bits) work
     # either way, but a single pass over the data and one expression tree
     # instead of `bits` of them (the r3 bench's most expensive stage was
     # dominated by the 32-fold variant)
-    votes = F.aggregate(
-        h,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, v: F.zip_with(
-            acc,
-            F.array(*[F.when(F.shiftright(v, b) % 2 == 1, 1).otherwise(-1)
-                      for b in range(bits)]),
-            lambda a, d: a + d),
-    )
-    weights = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    sig = F.aggregate(
-        F.zip_with(votes, weights,
-                   lambda vote, w: F.when(vote > 0, w)
-                   .otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
-    return sig.alias("simhash")
+    bit_votes = ", ".join(
+        f"CASE WHEN ((shiftright(y, {b}) % 2) = 1) THEN 1 ELSE -1 END"
+        for b in range(bits))
+    votes = (f"aggregate({h}, array_repeat(0, {bits}), (x, y) -> "
+             f"zip_with(x, array({bit_votes}), (x, y) -> (x + y)))")
+    weights = ", ".join(f"CAST({1 << b} AS BIGINT)" for b in range(bits))
+    return (f"aggregate(zip_with({votes}, array({weights}), (x, y) -> "
+            f"CASE WHEN (x > 0) THEN y ELSE CAST(0 AS BIGINT) END), "
+            f"CAST(0 AS BIGINT), (x, y) -> (x + y)) AS simhash")
 
 
 def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
@@ -274,8 +242,8 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     Hamming d < blocks shares at least one exact block (pigeonhole), so we
     bucket-join per block, then verify exactly with bit_count(xor)."""
     sig = simhash(df, id_col, text_col, bits)
-    stack_expr, pair_arr = _simhash_block_exprs(id_col, bits, blocks)
-    stacked = sig.selectExpr(id_col, "simhash", stack_expr)
+    stack_expr, pair_arr = _simhash_block_exprs(bits, blocks)
+    stacked = sig.selectExpr(sql_ident(id_col), "simhash", stack_expr)
     # per-bucket member list + in-bucket ordered-pair explosion instead of
     # a block self-join (r6, the minhash_lsh_pairs treatment): the join
     # evaluated the whole simhash token-fold pipeline twice — Spark does
@@ -290,16 +258,15 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
         .filter(F.size("__m") > 1)
     )
     cand = (
-        buckets.select(F.explode(pair_arr).alias("__p"))
+        buckets.selectExpr(f"explode({pair_arr}) AS __p")
         .select(F.col("__p.id_a"), F.col("__p.id_b"), F.col("__p.hamming"))
         .distinct()
     )
     return cand.filter(F.col("hamming") <= max_hamming)
 
 
-@expr_memo
-def _simhash_block_exprs(id_col: str, bits: int, blocks: int):
-    """(block stack expr string, in-bucket pair explosion Column)."""
+def _simhash_block_exprs(bits: int, blocks: int):
+    """(block stack expr, in-bucket pair explosion) as SQL text."""
     bw = bits // blocks
     mask = (1 << bw) - 1
     stack_expr = "stack({n}, {args}) as (blk_no, blk)".format(
@@ -308,17 +275,9 @@ def _simhash_block_exprs(id_col: str, bits: int, blocks: int):
             f"'{b}', shiftright(simhash, {b * bw}) & {mask}"
             for b in range(blocks)),
     )
-    m = F.col("__m")
-    pair_arr = F.flatten(F.transform(
-        m,
-        lambda x, i: F.transform(
-            F.slice(m, i + 2, F.size(m)),
-            lambda y: F.struct(
-                x["i"].alias("id_a"), y["i"].alias("id_b"),
-                F.bit_count(x["s"].bitwiseXOR(y["s"])).alias("hamming"),
-            ),
-        ),
-    ))
+    pair_arr = ("flatten(transform(__m, (x, y) -> transform(slice(__m,"
+                " (y + 2), size(__m)), z -> struct(x['i'] AS id_a, z['i'] AS"
+                " id_b, bit_count((x['s'] ^ z['s'])) AS hamming))))")
     return stack_expr, pair_arr
 
 
@@ -530,11 +489,9 @@ def ngram_decontaminate(docs: DataFrame, benchmark: DataFrame,
     hash join + map-side-combinable count — the corpus itself never
     shuffles. Returns (doc_id, n_contaminated) for flagged docs only;
     remove them with a left_anti join (decontaminate_survivors)."""
-    d = docs.select(
-        F.col(id_col),
-        F.explode(_shingles(text_col, k_shingle)).alias("__sh"))
-    b = benchmark.select(
-        F.explode(_shingles(text_col, k_shingle)).alias("__sh")).distinct()
+    sh = f"explode({_shingles(text_col, k_shingle)}) AS __sh"
+    d = docs.selectExpr(sql_ident(id_col), sh)
+    b = benchmark.selectExpr(sh).distinct()
     return (
         d.join(F.broadcast(b), "__sh")
         .groupBy(id_col)

@@ -25,12 +25,12 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from opensmile_spark.exprcache import expr_memo
 from opensmile_spark.functionals.batched import compute_groups, output_keys
 from opensmile_spark.groupbatch import group_blocks
+from opensmile_spark.util import sql_double, sql_ident
 
 DEFAULT_FAMILIES = [
     "means", "moments", "extremes", "percentiles", "regression",
@@ -225,36 +225,36 @@ def functionals_sql(
     Aggregation semantics per group are untouched — the same aggregate
     functions see the same rows — so the doubles are identical.
 
-    Expression construction is memoized (exprcache.expr_memo): the bank's
-    ~160 aggregate/projection Columns cost ~0.7 s of py4j round trips to
-    build — more than executing the query on 100k rows — and are a pure
-    function of (group_cols, value_cols, order_col, percentiles).
+    Every expression is SQL text (_fsql_exprs), parsed once per builder
+    call: built node by node as Columns, the bank's ~160 aggregate and
+    projection expressions cost one py4j round trip per node — more than
+    executing the query on 100k rows. Doubles are written `0.0D`: a bare
+    `0.0` parses as DECIMAL.
     """
     group_cols = list(group_cols)
     proj_cols, pct_aggs, aggs, final = _fsql_exprs(
-        tuple(group_cols), tuple(value_cols), order_col,
-        tuple(float(p) for p in percentiles))
-    proj = df.select(*proj_cols)
-    decl = proj.groupBy(*group_cols).agg(*aggs)
-    pct_keys = [F.col(c).alias(f"__pk{i}") for i, c in enumerate(group_cols)]
-    pct = proj.groupBy(*pct_keys).agg(*pct_aggs)
+        group_cols, value_cols, order_col, percentiles)
+    keys = [sql_ident(c) for c in group_cols]
+    proj = df.selectExpr(*proj_cols)
+    decl = proj.groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
+    pct = proj.groupBy(*(F.expr(f"{k} AS `__pk{i}`")
+                         for i, k in enumerate(keys))) \
+        .agg(*map(F.expr, pct_aggs))
     # null-safe: a NULL group key is a group of its own and must not be
     # dropped by the join
-    out = decl.join(pct, [F.col(c).eqNullSafe(F.col(f"__pk{i}"))
-                          for i, c in enumerate(group_cols)])
-    return out.select(*group_cols, *final)
+    out = decl.join(pct, [F.expr(k).eqNullSafe(F.col(f"__pk{i}"))
+                          for i, k in enumerate(keys)])
+    return out.selectExpr(*keys, *final)
 
 
-@expr_memo
-def _fsql_exprs(group_cols: tuple, value_cols: tuple, order_col: str,
-                percentiles: tuple):
-    """Unresolved expression lists for functionals_sql (see its docstring):
-    (projection cols, percentile aggs, declarative aggs, final select)."""
-    w = Window.partitionBy(*group_cols).orderBy(order_col)
+def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
+    """SQL text of functionals_sql's expressions (see its docstring):
+    (projection, percentile aggs, declarative aggs, final select)."""
+    keys = ", ".join(map(sql_ident, group_cols))
     proj_cols = [
-        *group_cols,
-        *value_cols,
-        (F.row_number().over(w) - 1).cast("double").alias("__i"),
+        *map(sql_ident, [*group_cols, *value_cols]),
+        f"CAST((row_number() OVER (PARTITION BY {keys} ORDER BY "
+        f"{sql_ident(order_col)}) - 1) AS DOUBLE) AS __i",
     ]
 
     pct_list = [0.25, 0.50, 0.75]
@@ -262,97 +262,94 @@ def _fsql_exprs(group_cols: tuple, value_cols: tuple, order_col: str,
         if float(p) not in pct_list:
             pct_list.append(float(p))
     pidx = {p: i + 1 for i, p in enumerate(pct_list)}   # element_at: 1-based
+    pct_arr = ", ".join(map(sql_double, pct_list))
 
     pct_aggs = [
-        F.percentile(F.col(c), F.array(*[F.lit(p) for p in pct_list]))
-        .alias(f"__pct_{c}")
+        f"percentile({sql_ident(c)}, array({pct_arr}), 1) "
+        f"AS {sql_ident('__pct_' + c)}"
         for c in value_cols
     ]
 
-    aggs = [F.count("*").cast("long").alias("n_turns")]
+    aggs = ["CAST(count(*) AS BIGINT) AS n_turns"]
     final: list = ["n_turns"]
     for c in value_cols:
-        x = F.col(c)
-        n = F.count(x)
-        nd = n.cast("double")
-        mean = F.sum(x) / nd
+        x = sql_ident(c)
+        n = f"count({x})"
+        nd = f"CAST({n} AS DOUBLE)"
+        mean = f"(sum({x}) / {nd})"
         # central-moment aggregators (numerically stable): var_pop instead
         # of E[x^2]-mean^2 (which catastrophically cancels for large-mean
         # columns); Spark's skewness/kurtosis are population central-moment
         # based (kurtosis is EXCESS -> +3 to match functionalMoments.cpp)
-        m2 = F.var_pop(x)
-        sd = F.when(m2 > 0, F.stddev_pop(x)).otherwise(0.0)
-        skw = F.when(m2 > 0, F.skewness(x)).otherwise(0.0)
-        krt = F.when(m2 > 0, F.kurtosis(x) + F.lit(3.0)).otherwise(0.0)
-        nnz = F.sum(F.when(x != 0.0, 1).otherwise(0)).cast("double")
+        m2 = f"var_pop({x})"
+        sd = f"CASE WHEN ({m2} > 0) THEN stddev_pop({x}) ELSE 0.0D END"
+        skw = f"CASE WHEN ({m2} > 0) THEN skewness({x}) ELSE 0.0D END"
+        krt = f"CASE WHEN ({m2} > 0) THEN (kurtosis({x}) + 3.0D) ELSE 0.0D END"
+        nz = f"({x} != 0.0D)"
+        nnz = f"CAST(sum(CASE WHEN {nz} THEN 1 ELSE 0 END) AS DOUBLE)"
 
-        aggs += [
-            mean.alias(f"{c}_amean"),
-            (F.sum(F.abs(x)) / nd).alias(f"{c}_absmean"),
-            (F.sum(x * x) / nd).alias(f"{c}_qmean"),
-            F.sqrt(F.sum(x * x) / nd).alias(f"{c}_rqmean"),
-            nnz.alias(f"{c}_nnz"),
-            F.when(nnz > 0, F.sum(F.when(x != 0.0, x)) / nnz)
-            .otherwise(0.0).alias(f"{c}_nzamean"),
-            F.when(nnz > 0, F.sum(F.when(x != 0.0, F.abs(x))) / nnz)
-            .otherwise(0.0).alias(f"{c}_nzabsmean"),
-            F.when(nnz > 0, F.sum(F.when(x != 0.0, x * x)) / nnz)
-            .otherwise(0.0).alias(f"{c}_nzqmean"),
-            m2.alias(f"{c}_variance"),
-            sd.alias(f"{c}_stddev"),
-            skw.alias(f"{c}_skewness"),
-            krt.alias(f"{c}_kurtosis"),
-            F.when(m2 <= 0, 0.0)
-            .when(mean != 0.0, sd / mean)
-            .otherwise(sd).alias(f"{c}_stddevNorm"),
-            F.when(m2 <= 0, 0.0)
-            .when(mean != 0.0, sd / F.abs(mean))
-            .otherwise(sd).alias(f"{c}_coeffOfVariation"),
-            F.max(x).alias(f"{c}_max"),
-            F.min(x).alias(f"{c}_min"),
-            (F.max(x) - F.min(x)).alias(f"{c}_range"),
-            (F.max(x) - mean).alias(f"{c}_maxameandist"),
-            (mean - F.min(x)).alias(f"{c}_minameandist"),
-        ]
+        def nz_mean(v):
+            return (f"CASE WHEN ({nnz} > 0) THEN (sum(CASE WHEN {nz} THEN {v}"
+                    f" END) / {nnz}) ELSE 0.0D END")
 
-        def _pq(p, _c=c):
-            return F.element_at(F.col(f"`__pct_{_c}`"), pidx[float(p)])
+        def sd_norm(m):
+            return (f"CASE WHEN ({m2} <= 0) THEN 0.0D WHEN ({mean} != 0.0D)"
+                    f" THEN ({sd} / {m}) ELSE {sd} END")
 
-        final += [
-            f"{c}_amean", f"{c}_absmean", f"{c}_qmean", f"{c}_rqmean",
-            f"{c}_nnz", f"{c}_nzamean", f"{c}_nzabsmean", f"{c}_nzqmean",
-            f"{c}_variance", f"{c}_stddev", f"{c}_skewness", f"{c}_kurtosis",
-            f"{c}_stddevNorm", f"{c}_coeffOfVariation",
-            f"{c}_max", f"{c}_min", f"{c}_range",
-            f"{c}_maxameandist", f"{c}_minameandist",
-            _pq(0.25).alias(f"{c}_quartile1"),
-            _pq(0.50).alias(f"{c}_quartile2"),
-            _pq(0.75).alias(f"{c}_quartile3"),
-            (_pq(0.75) - _pq(0.25)).alias(f"{c}_iqr1-3"),
-        ]
-        for p in percentiles:
-            final.append(_pq(p).alias(f"{c}_percentile{p * 100:.1f}"))
+        named = {
+            "amean": mean,
+            "absmean": f"(sum(abs({x})) / {nd})",
+            "qmean": f"(sum(({x} * {x})) / {nd})",
+            "rqmean": f"sqrt((sum(({x} * {x})) / {nd}))",
+            "nnz": nnz,
+            "nzamean": nz_mean(x),
+            "nzabsmean": nz_mean(f"abs({x})"),
+            "nzqmean": nz_mean(f"({x} * {x})"),
+            "variance": m2,
+            "stddev": sd,
+            "skewness": skw,
+            "kurtosis": krt,
+            "stddevNorm": sd_norm(mean),
+            "coeffOfVariation": sd_norm(f"abs({mean})"),
+            "max": f"max({x})",
+            "min": f"min({x})",
+            "range": f"(max({x}) - min({x}))",
+            "maxameandist": f"(max({x}) - {mean})",
+            "minameandist": f"({mean} - min({x}))",
+        }
+        aggs += [f"{e} AS {sql_ident(f'{c}_{k}')}" for k, e in named.items()]
+        final += [sql_ident(f"{c}_{k}") for k in named]
+
+        pct_col = sql_ident("__pct_" + c)
+
+        def pq(p):
+            return f"element_at({pct_col}, {pidx[float(p)]})"
+
+        pcts = {
+            "quartile1": pq(0.25),
+            "quartile2": pq(0.50),
+            "quartile3": pq(0.75),
+            "iqr1-3": f"({pq(0.75)} - {pq(0.25)})",
+            **{f"percentile{p * 100:.1f}": pq(p) for p in percentiles},
+        }
         if len(percentiles) >= 3:
-            final.append(
-                F.abs(_pq(percentiles[-1]) - _pq(percentiles[0]))
-                .alias(f"{c}_pctlrange0-2")
-            )
+            pcts["pctlrange0-2"] = \
+                f"abs(({pq(percentiles[-1])} - {pq(percentiles[0])}))"
+        final += [f"{e} AS {sql_ident(f'{c}_{k}')}" for k, e in pcts.items()]
         # linear regression on index axis i=0..N-1 (functionalRegression.cpp:
         # 219-240): S1=N(N-1)/2, S2=N(N-1)(2N-1)/6,
         # t=(sum_y - num*S1/S2)/(N - S1^2/S2), m=(num - t*S1)/S2
-        i = F.col("__i")
-        num = F.sum(x * i)
-        asum = F.sum(x)
-        S1 = nd * (nd - 1) / 2
-        S2 = nd * (nd - 1) * (2 * nd - 1) / 6
-        denom = nd - S1 * S1 / S2
-        t_off = F.when((n > 1) & (denom != 0), (asum - num * S1 / S2) / denom) \
-            .otherwise(F.when(n > 1, 0.0).otherwise(F.first(x)))
-        m_slope = F.when(n > 1, (num - t_off * S1) / S2).otherwise(0.0)
-        aggs += [
-            m_slope.alias(f"{c}_linregc1"),
-            t_off.alias(f"{c}_linregc2"),
-        ]
-        final += [f"{c}_linregc1", f"{c}_linregc2"]
+        num = f"sum(({x} * __i))"
+        s1 = f"(({nd} * ({nd} - 1)) / 2)"
+        s2 = f"((({nd} * ({nd} - 1)) * (({nd} * 2) - 1)) / 6)"
+        denom = f"({nd} - (({s1} * {s1}) / {s2}))"
+        t_off = (f"CASE WHEN (({n} > 1) AND ({denom} != 0)) THEN "
+                 f"((sum({x}) - (({num} * {s1}) / {s2})) / {denom}) ELSE "
+                 f"CASE WHEN ({n} > 1) THEN 0.0D ELSE first({x}) END END")
+        m_slope = (f"CASE WHEN ({n} > 1) THEN (({num} - ({t_off} * {s1}))"
+                   f" / {s2}) ELSE 0.0D END")
+        aggs += [f"{m_slope} AS {sql_ident(c + '_linregc1')}",
+                 f"{t_off} AS {sql_ident(c + '_linregc2')}"]
+        final += [sql_ident(c + "_linregc1"), sql_ident(c + "_linregc2")]
 
     return proj_cols, pct_aggs, aggs, final

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from opensmile_spark.exprcache import expr_memo
 
 BATCHED_FAMILIES = {
     "means", "moments", "extremes", "percentiles", "regression", "crossings",
@@ -2017,7 +2016,6 @@ def runs_batched(family: str, options=None) -> bool:
             <= BATCHED_SUPPORTED_OPTIONS[family])
 
 
-@expr_memo
 def output_keys(families, options=None) -> tuple:
     """Bare output names of `families`, in compute_all order — read off one
     compute_all call on a fixed 8-element probe (names depend on families
@@ -2027,7 +2025,6 @@ def output_keys(families, options=None) -> tuple:
     return tuple(compute_all(np.arange(1.0, 9.0), list(families), options))
 
 
-@expr_memo
 def key_owners(families, options=None) -> tuple:
     """((key, family), ...) in output_keys order: a key belongs to the
     first requested family that emits it (compute_all's first-writer-wins)."""
@@ -2038,7 +2035,6 @@ def key_owners(families, options=None) -> tuple:
     return tuple(owner.items())
 
 
-@expr_memo
 def _route(families, options):
     """(output keys, batched families, loop families, keys owned by a loop
     family)."""

@@ -21,11 +21,7 @@ Every formula is mirrored in LLD_SQL (DuckDB dialect) for the oracle gate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-from opensmile_spark.exprcache import expr_memo
-from opensmile_spark.util import epoch_seconds
+from pyspark.sql import DataFrame
 
 LLD_COLS = [
     "char_len", "token_cnt", "punct_density", "caps_ratio",
@@ -59,39 +55,34 @@ def compute_lld(transcripts: DataFrame, keep_text: bool = False) -> DataFrame:
     Single narrow projection + one window (lag) — the lag shuffles by conv_id
     once; everything else stays in whole-stage codegen. At scale the input
     should already be bucketed/partitioned by conv_id so the lag window
-    reuses that distribution. The projection Columns are memoized
-    (exprcache): they are parameter-pure and py4j-priced.
+    reuses that distribution. The projection is SQL text (_LLD_EXPRS),
+    parsed once per call instead of built as a Column tree over one py4j
+    call per node.
     """
-    return transcripts.select(*_lld_cols(keep_text))
-
-
-@expr_memo
-def _lld_cols(keep_text: bool):
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    char_len = F.length("text").cast("double")
-
-    return (
-        "conv_id",
-        "turn_idx",
-        "ts",
+    return transcripts.selectExpr(
+        "conv_id", "turn_idx", "ts",
         *(["text", "role", "tool"] if keep_text else []),
-        char_len.alias("char_len"),
-        F.size(toks).cast("double").alias("token_cnt"),
-        (F.length(F.regexp_replace("text", r"[^.,!?;:]", "")).cast("double")
-         / char_len).alias("punct_density"),
-        (F.length(F.regexp_replace("text", r"[^A-Z]", "")).cast("double")
-         / char_len).alias("caps_ratio"),
-        (F.size(F.array_distinct(toks)).cast("double")
-         / F.size(toks).cast("double")).alias("ttr"),
-        F.coalesce(
-            epoch_seconds("ts") - F.lag(epoch_seconds("ts")).over(
-                Window.partitionBy("conv_id").orderBy("turn_idx")),
-            F.lit(0.0),
-        ).alias("reply_latency"),
-        F.when(
-            F.col("role") != F.coalesce(F.lag("role").over(w), F.col("role")),
-            1.0,
-        ).otherwise(0.0).alias("role_change"),
-        F.when(F.col("role") == "tool", 1.0).otherwise(0.0).alias("is_tool"),
-    )
+        *(f"{e} AS {name}" for name, e in _LLD_EXPRS.items()))
+
+
+# Spark-dialect LLD expressions in LLD_COLS order. The two lag columns
+# (reply_latency, role_change) carry an OVER clause; streaming_lld takes
+# every other one. The epoch is util.epoch_seconds' op sequence.
+_TOKS = r"split(trim(text), '\\s+')"
+_CHAR_LEN = "CAST(length(text) AS DOUBLE)"
+_W = "OVER (PARTITION BY conv_id ORDER BY turn_idx)"
+_EPOCH = "(CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS DOUBLE) * 1.0E-6D)"
+_LLD_EXPRS = {
+    "char_len": _CHAR_LEN,
+    "token_cnt": f"CAST(size({_TOKS}) AS DOUBLE)",
+    "punct_density": "(CAST(length(regexp_replace(text, '[^.,!?;:]', ''))"
+                     f" AS DOUBLE) / {_CHAR_LEN})",
+    "caps_ratio": "(CAST(length(regexp_replace(text, '[^A-Z]', ''))"
+                  f" AS DOUBLE) / {_CHAR_LEN})",
+    "ttr": f"(CAST(size(array_distinct({_TOKS})) AS DOUBLE)"
+           f" / CAST(size({_TOKS}) AS DOUBLE))",
+    "reply_latency": f"coalesce(({_EPOCH} - lag({_EPOCH}) {_W}), 0.0D)",
+    "role_change": f"CASE WHEN (role != coalesce(lag(role) {_W}, role))"
+                   " THEN 1.0D ELSE 0.0D END",
+    "is_tool": "CASE WHEN (role = 'tool') THEN 1.0D ELSE 0.0D END",
+}

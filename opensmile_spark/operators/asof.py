@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from opensmile_spark.exprcache import expr_memo
 from opensmile_spark.functionals.batched import (
     EXPANDING_FAMILIES, EXPANDING_UNSUPPORTED_KEYS, compute_expanding,
     compute_groups, key_owners, output_keys, runs_batched,
@@ -100,7 +99,6 @@ def asof_join(
     return out.withColumnRenamed("__t", anchor_ts)
 
 
-@expr_memo
 def _expanding_route(families, options):
     """(families for compute_expanding, the keys it fills, families left
     for the per-window gather) on an expanding grid.

@@ -15,37 +15,38 @@ smoothed->delta chain, whole-stage codegen'd, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from opensmile_spark.exprcache import expr_memo
-from opensmile_spark.util import epoch_seconds
+from opensmile_spark.util import epoch_seconds, sql_double, sql_ident
 
 
 def _w(partition_cols, order_col):
     return Window.partitionBy(*partition_cols).orderBy(order_col)
 
 
-def _full(partition_cols, order_col):
-    return (
-        Window.partitionBy(*partition_cols)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
+def _over(partition_cols, order_col, frame: str = "") -> str:
+    keys = ", ".join(map(sql_ident, partition_cols))
+    return f"OVER (PARTITION BY {keys} ORDER BY {sql_ident(order_col)}{frame})"
 
 
-def clamped_lag(col, i: int, partition_cols, order_col) -> Column:
-    """x[n-i] with PAD_FIRST semantics (repeat first frame)."""
-    w = _w(partition_cols, order_col)
-    wf = _full(partition_cols, order_col)
-    return F.coalesce(F.lag(col, i).over(w), F.first(col).over(wf))
+_WHOLE = " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
 
 
-def clamped_lead(col, i: int, partition_cols, order_col) -> Column:
-    """x[n+i] with PAD_FIRST semantics at the end (repeat last frame)."""
-    w = _w(partition_cols, order_col)
-    wf = _full(partition_cols, order_col)
-    return F.coalesce(F.lead(col, i).over(w), F.last(col).over(wf))
+def clamped_lag(col: str, i: int, partition_cols, order_col) -> str:
+    """SQL text of x[n-i] with PAD_FIRST semantics (repeat first frame);
+    `col` is a column name."""
+    c = sql_ident(col)
+    return (f"coalesce(lag({c}, {i}) {_over(partition_cols, order_col)}, "
+            f"first({c}) {_over(partition_cols, order_col, _WHOLE)})")
+
+
+def clamped_lead(col: str, i: int, partition_cols, order_col) -> str:
+    """SQL text of x[n+i] with PAD_FIRST semantics at the end (repeat last
+    frame); `col` is a column name."""
+    c = sql_ident(col)
+    return (f"coalesce(lead({c}, {i}) {_over(partition_cols, order_col)}, "
+            f"last({c}) {_over(partition_cols, order_col, _WHOLE)})")
 
 
 def sma(
@@ -67,39 +68,31 @@ def sma(
     if sma_win % 2 == 0:
         sma_win += 1
     suffix = suffix or (f"_sma{sma_win}nz" if no_zero_sma else f"_sma{sma_win}")
-    # ONE withColumns call (a single Project node instead of a chain) with
-    # memoized per-column expressions (exprcache: construction is py4j-
-    # priced and parameter-pure)
+    # ONE withColumns call (a single Project node instead of a chain); each
+    # column is one SQL text parsed once, not a Column tree built over one
+    # py4j call per node
     return df.withColumns({
-        c + suffix: _sma_col(c, sma_win, no_zero_sma,
-                             tuple(partition_cols), order_col)
+        c + suffix: F.expr(_sma_sql(c, sma_win, no_zero_sma,
+                                    partition_cols, order_col))
         for c in cols
     })
 
 
-@expr_memo
-def _sma_col(c: str, sma_win: int, no_zero_sma: bool,
-             partition_cols: tuple, order_col: str):
-    k = sma_win // 2
-    neighbors = [F.col(c)]
-    for i in range(1, k + 1):
-        neighbors.append(clamped_lag(F.col(c), i, partition_cols, order_col))
-        neighbors.append(clamped_lead(F.col(c), i, partition_cols, order_col))
+def _sma_sql(c: str, sma_win: int, no_zero_sma: bool, partition_cols,
+             order_col: str) -> str:
+    neighbors = [sql_ident(c)]
+    for i in range(1, sma_win // 2 + 1):
+        neighbors.append(clamped_lag(c, i, partition_cols, order_col))
+        neighbors.append(clamped_lead(c, i, partition_cols, order_col))
     if no_zero_sma:
-        arr = F.array(*neighbors)
-        nzsum = F.aggregate(
-            F.filter(arr, lambda v: v != 0.0),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        nzcnt = F.size(F.filter(arr, lambda v: v != 0.0))
-        return F.when(F.col(c) == 0.0, F.lit(0.0)).otherwise(
-            nzsum / nzcnt.cast("double")
-        )
+        nz = f"filter(array({', '.join(neighbors)}), x -> (x != 0.0D))"
+        return (f"CASE WHEN ({neighbors[0]} = 0.0D) THEN 0.0D ELSE "
+                f"(aggregate({nz}, 0.0D, (x, y) -> (x + y)) "
+                f"/ CAST(size({nz}) AS DOUBLE)) END")
     total = neighbors[0]
     for n in neighbors[1:]:
-        total = total + n
-    return total / F.lit(float(sma_win))
+        total = f"({total} + {n})"
+    return f"({total} / {sql_double(sma_win)})"
 
 
 def delta_regression(
@@ -120,29 +113,28 @@ def delta_regression(
     naming (deltaRegression.cpp nameAppend).
     """
     return df.withColumns({
-        c + suffix: _delta_col(c, deltawin, abs_output, half_wave_rect,
-                               tuple(partition_cols), order_col)
+        c + suffix: F.expr(_delta_sql(c, deltawin, abs_output, half_wave_rect,
+                                      partition_cols, order_col))
         for c in cols
     })
 
 
-@expr_memo
-def _delta_col(c: str, deltawin: int, abs_output: bool,
-               half_wave_rect: bool, partition_cols: tuple, order_col: str):
+def _delta_sql(c: str, deltawin: int, abs_output: bool,
+               half_wave_rect: bool, partition_cols, order_col: str) -> str:
     if deltawin > 0:
         norm = 2.0 * sum(i * i for i in range(1, deltawin + 1))
-        num = F.lit(0.0)
+        num = "0.0D"
         for i in range(1, deltawin + 1):
-            later = clamped_lead(F.col(c), i, partition_cols, order_col)
-            prior = clamped_lag(F.col(c), i, partition_cols, order_col)
-            num = num + F.lit(float(i)) * (later - prior)
-        d = num / F.lit(norm)
+            later = clamped_lead(c, i, partition_cols, order_col)
+            prior = clamped_lag(c, i, partition_cols, order_col)
+            num = f"({num} + ({sql_double(i)} * ({later} - {prior})))"
+        d = f"({num} / {sql_double(norm)})"
     else:
-        d = F.col(c) - clamped_lag(F.col(c), 1, partition_cols, order_col)
+        d = f"({sql_ident(c)} - {clamped_lag(c, 1, partition_cols, order_col)})"
     if half_wave_rect:
-        d = F.greatest(d, F.lit(0.0))
+        d = f"greatest({d}, 0.0D)"
     elif abs_output:
-        d = F.abs(d)
+        d = f"abs({d})"
     return d
 
 
@@ -156,13 +148,12 @@ def preemphasis(
 ) -> DataFrame:
     """cVectorPreemphasis: y[t] = x[t] - k*x[t-1]
     (/root/reference/src/dspcore/vectorPreemphasis.cpp)."""
-    out = df
-    for c in cols:
-        out = out.withColumn(
-            c + suffix,
-            F.col(c) - F.lit(k) * clamped_lag(F.col(c), 1, partition_cols, order_col),
-        )
-    return out
+    return df.withColumns({
+        c + suffix: F.expr(
+            f"({sql_ident(c)} - ({sql_double(k)} * "
+            f"{clamped_lag(c, 1, partition_cols, order_col)}))")
+        for c in cols
+    })
 
 
 def trailing_agg(

@@ -58,7 +58,7 @@ def _pos_grams(df: DataFrame, id_col: str, text_col: str, k: int
     merges two gram groups and can only OVER-mark a span as duplicated —
     the conservative direction for training-data cleaning.)
     """
-    toks = _tokens(text_col)
+    toks = F.expr(_tokens(text_col))
     n = F.size(toks)
     grams = F.when(
         n >= k,
@@ -130,7 +130,7 @@ def span_dedup(df: DataFrame, id_col: str = "doc_id",
             F.collect_list(F.struct("span_start", "span_end"))
         ).alias("__spans"))
 
-    toks = _tokens(text_col)
+    toks = F.expr(_tokens(text_col))
     out = df.join(per_doc, id_col, "left")
     no_spans = F.col("__spans").isNull()
     covered = lambda i: F.exists(

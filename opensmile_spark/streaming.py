@@ -31,20 +31,14 @@ def streaming_lld(transcripts_stream: DataFrame) -> DataFrame:
     lag-based LLDs (reply_latency, role_change) are *stateful* in streaming
     and are therefore not computed here — they belong to the sessionized
     aggregate (below) or the stateful smoother. Everything else is the exact
-    batch expression set.
+    batch expression set: compute_lld's own SQL text minus its OVER columns.
     """
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    char_len = F.length("text").cast("double")
-    return transcripts_stream.select(
+    from opensmile_spark.lld import _LLD_EXPRS
+
+    return transcripts_stream.selectExpr(
         "conv_id", "turn_idx", "ts",
-        char_len.alias("char_len"),
-        F.size(toks).cast("double").alias("token_cnt"),
-        (F.length(F.regexp_replace("text", r"[^.,!?;:]", "")).cast("double")
-         / char_len).alias("punct_density"),
-        (F.size(F.array_distinct(toks)).cast("double")
-         / F.size(toks).cast("double")).alias("ttr"),
-        F.when(F.col("role") == "tool", 1.0).otherwise(0.0).alias("is_tool"),
-    )
+        *(f"{e} AS {name}" for name, e in _LLD_EXPRS.items()
+          if " OVER " not in e))
 
 
 def streaming_session_functionals(

@@ -22,6 +22,17 @@ def epoch_seconds(col) -> Column:
     return F.unix_micros(col.cast("timestamp")).cast("double") * F.lit(0.000001)
 
 
+def sql_ident(name: str) -> str:
+    """`name` as one backtick-quoted SQL identifier (an embedded backtick
+    doubled), so spaces, hyphens and dots stay inside the column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(x: float) -> str:
+    """`x` as a SQL DOUBLE literal: a bare 0.2 would parse as DECIMAL."""
+    return repr(float(x)) + "D"
+
+
 def ensure_min_partitions(df, factor: int = 1):
     """Repartition small-split inputs up to the cluster's default
     parallelism BEFORE a CPU-heavy map side (hashing, shingling, scoring).

@@ -5,8 +5,10 @@ Checks (SURVEY.md §4 / BENCH.md plan-level claims):
      (window specs share partitioning).
   2. Column pruning reaches the parquet scan (ReadSchema shows only the
      needed columns) and filters push down (PushedFilters).
-  3. functionals_sql is a single partial+final HashAggregate pair, no
-     Python, no extra exchange beyond the groupBy.
+  3. functionals_sql has no Python and the r6 split shape: one
+     partial+final HashAggregate pair for the declarative bank, one
+     ObjectHashAggregate pair holding only the percentiles, no
+     SortAggregate.
   4. asof_join is one exchange + one sort + window — no join node at all.
   5. MVN full-mode stats join is a broadcast join (no shuffled join).
   6. pre_partitioned kernel has NO exchange.
@@ -97,8 +99,21 @@ def main():
     p = explain(fs)
     check("functionals_sql no Python",
           "Python" not in p and "FlatMap" not in p)
-    n_agg = count(r"HashAggregate|ObjectHashAggregate|SortAggregate", p)
-    check("functionals_sql partial+final agg", n_agg >= 2, f"(aggs={n_agg})")
+    # the r6 split: the declarative bank is one whole-stage-compiled
+    # HashAggregate pair, the percentile side one ObjectHashAggregate pair
+    # whose functions are percentiles only — an aggregate rendered onto the
+    # wrong side changes these counts
+    n_hash, n_obj = n_op("HashAggregate", p), n_op("ObjectHashAggregate", p)
+    n_sort = n_op("SortAggregate", p)
+    obj_fns = re.findall(r"\(\d+\) ObjectHashAggregate\n.*\nKeys.*\n"
+                         r"Functions \[(\d+)\]: \[(.*)\]", p)
+    pct_only = all(int(k) == len(re.findall(r"percentile\(", fns))
+                   for k, fns in obj_fns)
+    check("functionals_sql split aggs",
+          (n_hash, n_obj, n_sort) == (2, 2, 0) and len(obj_fns) == 2
+          and pct_only,
+          f"(HashAggregate={n_hash}, ObjectHashAggregate={n_obj}, "
+          f"SortAggregate={n_sort}, percentile-only={pct_only})")
 
     anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
     aj = asof_join(anchors, lld.select("conv_id", "ts", "char_len"),
