@@ -247,6 +247,55 @@ def functionals_sql(
     return out.selectExpr(*keys, *final)
 
 
+def _fsql_named(c: str) -> dict:
+    """SQL text of functionals_sql's declarative per-column aggregates of
+    value column `c`, by functional name (amean ... minameandist)."""
+    x = sql_ident(c)
+    n = f"count({x})"
+    nd = f"CAST({n} AS DOUBLE)"
+    mean = f"(sum({x}) / {nd})"
+    # central-moment aggregators (numerically stable): var_pop instead
+    # of E[x^2]-mean^2 (which catastrophically cancels for large-mean
+    # columns); Spark's skewness/kurtosis are population central-moment
+    # based (kurtosis is EXCESS -> +3 to match functionalMoments.cpp)
+    m2 = f"var_pop({x})"
+    sd = f"CASE WHEN ({m2} > 0) THEN stddev_pop({x}) ELSE 0.0D END"
+    skw = f"CASE WHEN ({m2} > 0) THEN skewness({x}) ELSE 0.0D END"
+    krt = f"CASE WHEN ({m2} > 0) THEN (kurtosis({x}) + 3.0D) ELSE 0.0D END"
+    nz = f"({x} != 0.0D)"
+    nnz = f"CAST(sum(CASE WHEN {nz} THEN 1 ELSE 0 END) AS DOUBLE)"
+
+    def nz_mean(v):
+        return (f"CASE WHEN ({nnz} > 0) THEN (sum(CASE WHEN {nz} THEN {v}"
+                f" END) / {nnz}) ELSE 0.0D END")
+
+    def sd_norm(m):
+        return (f"CASE WHEN ({m2} <= 0) THEN 0.0D WHEN ({mean} != 0.0D)"
+                f" THEN ({sd} / {m}) ELSE {sd} END")
+
+    return {
+        "amean": mean,
+        "absmean": f"(sum(abs({x})) / {nd})",
+        "qmean": f"(sum(({x} * {x})) / {nd})",
+        "rqmean": f"sqrt((sum(({x} * {x})) / {nd}))",
+        "nnz": nnz,
+        "nzamean": nz_mean(x),
+        "nzabsmean": nz_mean(f"abs({x})"),
+        "nzqmean": nz_mean(f"({x} * {x})"),
+        "variance": m2,
+        "stddev": sd,
+        "skewness": skw,
+        "kurtosis": krt,
+        "stddevNorm": sd_norm(mean),
+        "coeffOfVariation": sd_norm(f"abs({mean})"),
+        "max": f"max({x})",
+        "min": f"min({x})",
+        "range": f"(max({x}) - min({x}))",
+        "maxameandist": f"(max({x}) - {mean})",
+        "minameandist": f"({mean} - min({x}))",
+    }
+
+
 def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
     """SQL text of functionals_sql's expressions (see its docstring):
     (projection, percentile aggs, declarative aggs, final select)."""
@@ -273,53 +322,13 @@ def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
     aggs = ["CAST(count(*) AS BIGINT) AS n_turns"]
     final: list = ["n_turns"]
     for c in value_cols:
-        x = sql_ident(c)
-        n = f"count({x})"
-        nd = f"CAST({n} AS DOUBLE)"
-        mean = f"(sum({x}) / {nd})"
-        # central-moment aggregators (numerically stable): var_pop instead
-        # of E[x^2]-mean^2 (which catastrophically cancels for large-mean
-        # columns); Spark's skewness/kurtosis are population central-moment
-        # based (kurtosis is EXCESS -> +3 to match functionalMoments.cpp)
-        m2 = f"var_pop({x})"
-        sd = f"CASE WHEN ({m2} > 0) THEN stddev_pop({x}) ELSE 0.0D END"
-        skw = f"CASE WHEN ({m2} > 0) THEN skewness({x}) ELSE 0.0D END"
-        krt = f"CASE WHEN ({m2} > 0) THEN (kurtosis({x}) + 3.0D) ELSE 0.0D END"
-        nz = f"({x} != 0.0D)"
-        nnz = f"CAST(sum(CASE WHEN {nz} THEN 1 ELSE 0 END) AS DOUBLE)"
-
-        def nz_mean(v):
-            return (f"CASE WHEN ({nnz} > 0) THEN (sum(CASE WHEN {nz} THEN {v}"
-                    f" END) / {nnz}) ELSE 0.0D END")
-
-        def sd_norm(m):
-            return (f"CASE WHEN ({m2} <= 0) THEN 0.0D WHEN ({mean} != 0.0D)"
-                    f" THEN ({sd} / {m}) ELSE {sd} END")
-
-        named = {
-            "amean": mean,
-            "absmean": f"(sum(abs({x})) / {nd})",
-            "qmean": f"(sum(({x} * {x})) / {nd})",
-            "rqmean": f"sqrt((sum(({x} * {x})) / {nd}))",
-            "nnz": nnz,
-            "nzamean": nz_mean(x),
-            "nzabsmean": nz_mean(f"abs({x})"),
-            "nzqmean": nz_mean(f"({x} * {x})"),
-            "variance": m2,
-            "stddev": sd,
-            "skewness": skw,
-            "kurtosis": krt,
-            "stddevNorm": sd_norm(mean),
-            "coeffOfVariation": sd_norm(f"abs({mean})"),
-            "max": f"max({x})",
-            "min": f"min({x})",
-            "range": f"(max({x}) - min({x}))",
-            "maxameandist": f"(max({x}) - {mean})",
-            "minameandist": f"({mean} - min({x}))",
-        }
+        named = _fsql_named(c)
         aggs += [f"{e} AS {sql_ident(f'{c}_{k}')}" for k, e in named.items()]
         final += [sql_ident(f"{c}_{k}") for k in named]
 
+        x = sql_ident(c)
+        n = f"count({x})"
+        nd = f"CAST({n} AS DOUBLE)"
         pct_col = sql_ident("__pct_" + c)
 
         def pq(p):

@@ -8,8 +8,8 @@ groups are small (the common case: tens of turns per session). All 19
 families are batched, the sequential automatons (peaks, peaks2, segments,
 onset) and the per-group transforms (lpc, lsp, formants, modulation)
 included. Some family OPTIONS are not implemented here
-(BATCHED_SUPPORTED_OPTIONS); a family that sets one runs the per-group
-reference kernel instead.
+(BATCHED_SUPPORTED_OPTIONS); a family that sets one to a non-default
+value runs the per-group reference kernel instead.
 
 `compute_groups` is the single place that makes that choice — the analogue
 of cFunctionals' one shared pre-pass plus dispatch of each enabled
@@ -20,11 +20,20 @@ all evaluate their groups through it, and `output_keys` names its outputs.
 Numerical discipline: central moments are computed exactly as kernels.py
 does (sum((x-mean)^k)), NOT via raw-moment expansion (which catastrophically
 cancels for large means like reply-latency epochs). Equality with the
-per-group path is pinned by tests/test_batched_kernels.py at rtol 1e-8
-(summation order differs: reduceat is sequential, ndarray.sum pairwise).
+per-group path is pinned by tests/test_batched_kernels.py at rtol 1e-8:
+reduceat adds in neither a sequential nor ndarray.sum's order (on 300
+random segments of 1-400 values, numpy 1.26.4, it differed from a
+sequential sum in 257 and from x[s:e].sum() in 225).
+
+Each of means, moments, extremes and percentiles has ONE finisher
+(`_finish_*`) that turns per-window reductions into the named outputs;
+compute_batched (reduceat over groups) and compute_expanding (prefix
+scans over anchors) make their own reductions and share it.
 """
 
 from __future__ import annotations
+
+import inspect
 
 import numpy as np
 
@@ -36,9 +45,10 @@ BATCHED_FAMILIES = {
 }
 
 # per-family options the batched path implements with kernel-equal results;
-# a family with any OTHER option falls back to the per-group reference path
-# (compute_groups consults this so e.g. eGeMAPS-style custom percentiles
-# keep the reduceat fast path instead of evicting the family)
+# a family with any OTHER option at a non-default value falls back to the
+# per-group reference path (runs_batched consults this so e.g. eGeMAPS-style
+# custom percentiles keep the reduceat fast path instead of evicting the
+# family)
 BATCHED_SUPPORTED_OPTIONS = {
     "means": {"timeNorm", "T"},
     "moments": set(),
@@ -50,12 +60,12 @@ BATCHED_SUPPORTED_OPTIONS = {
     "samples": {"positions"},
     "dct": {"firstCoeff", "lastCoeff"},
     # onset batches ONLY under the default equal thresholds (the automaton
-    # degenerates to edge detection); any threshold/useAbsVal option falls
+    # degenerates to edge detection); any other threshold/useAbsVal falls
     # back to the per-group reference path
     "onset": {"timeNorm", "T"},
     # segments batches ONLY under the default nonX/X=0/segMinLng=3/
     # pauseMinLng=2/maxNumSeg=20 config (the automaton reduces to
-    # run-length algebra there); any algorithm/threshold/length option
+    # run-length algebra there); any other algorithm/threshold/length
     # falls back to the reference automaton
     "segments": {"timeNorm", "T"},
     # peaks2 batches under EVERY option: the lane-parallel transcription
@@ -148,6 +158,157 @@ def _lpc_poly_batched(x, starts, ends, pos_in, size_rep, order):
     for k in range(order):
         av[:, k + 1] = -np.where(zero | (k + 1 > p), 0.0, a[:, k + 1])
     return av
+
+
+# ---------------------------------------------------------------------------
+# the per-family finishers. N is the window size (float64), one entry per
+# window; every other argument is a per-window reduction made by the
+# calling evaluator. Each returns the family's outputs in kernels.py order.
+# ---------------------------------------------------------------------------
+
+def _add(out, vals):
+    """Merge one family's outputs into `out`; the first writer of a key
+    shared by several families (amean) wins, as in compute_all."""
+    for k, v in vals.items():
+        out.setdefault(k, v)
+
+
+def _means_terms(x):
+    """Yields the per-element terms whose window sums _finish_means reads,
+    in its order, one at a time (a caller that reduces each term before
+    taking the next holds one term in memory, not 13)."""
+    absx = np.abs(x)
+    nz = x != 0.0
+    pos = x > 0.0
+    neg = x < 0.0
+    for m in (nz, pos, neg):
+        yield m.astype(np.float64)
+    yield absx
+    yield x * x
+    yield np.where(nz, x, 0.0)
+    yield np.where(nz, absx, 0.0)
+    yield np.where(nz, x * x, 0.0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        logabs = np.where(nz, np.log(np.where(nz, absx, 1.0)), 0.0)
+    yield logabs
+    for m in (pos, neg):
+        yield np.where(m, x, 0.0)
+        yield np.where(m, x * x, 0.0)
+
+
+def _finish_means(N, mean, sums, opts):
+    """sums: the window sums of the _means_terms, in their order."""
+    (nnz, npos, nneg, sabs, sq, nz_s, nzabs_s, nzq_s, nzlog_s, pos_s,
+     posq_s, neg_s, negq_s) = sums
+    absmean = sabs / N
+    qmean = sq / N
+    safe_nnz = np.where(nnz > 0, nnz, 1.0)
+    safe_np = np.where(npos > 0, npos, 1.0)
+    safe_nn = np.where(nneg > 0, nneg, 1.0)
+    nzqmean = np.where(nnz > 0, nzq_s / safe_nnz, 0.0)
+    nzgmean = np.where(nnz > 0, np.exp(nzlog_s / safe_nnz), 0.0)
+    posqmean = np.where(npos > 0, posq_s / safe_np, 0.0)
+    negqmean = np.where(nneg > 0, negq_s / safe_nn, 0.0)
+    tn = opts.get("timeNorm", "frames")
+    return {
+        "amean": mean,
+        "absmean": absmean,
+        "qmean": qmean,
+        "nzamean": np.where(nnz > 0, nz_s / safe_nnz, 0.0),
+        "nzabsmean": np.where(nnz > 0, nzabs_s / safe_nnz, 0.0),
+        "nzqmean": nzqmean,
+        "nzgmean": nzgmean,
+        "nnz": (nnz / N if tn == "segment" else
+                nnz / opts.get("T", 1.0) if tn == "second" else nnz),
+        "flatness": np.where(absmean != 0.0, nzgmean
+                             / np.where(absmean != 0, absmean, 1.0), 1.0),
+        "posamean": np.where(npos > 0, pos_s / safe_np, 0.0),
+        "negamean": np.where(nneg > 0, neg_s / safe_nn, 0.0),
+        "posqmean": posqmean,
+        "posrqmean": np.sqrt(posqmean),
+        "negqmean": negqmean,
+        "negrqmean": np.sqrt(negqmean),
+        "rqmean": np.sqrt(qmean),
+        "nzrqmean": np.sqrt(nzqmean),
+    }
+
+
+def _finish_moments(N, mean, M2, M3, M4):
+    """M2/M3/M4: window sums of the squared/cubed/4th-power deviations."""
+    m2 = M2 / N
+    sqm2 = np.where(m2 > 0, np.sqrt(np.where(m2 > 0, m2, 1.0)), 0.0)
+    d3 = N * m2 * sqm2
+    d4 = N * m2 * m2
+    mean1 = np.where(mean != 0.0, mean, 1.0)
+    amean1 = np.where(mean != 0.0, np.abs(mean), 1.0)
+    return {
+        "variance": m2,
+        "stddev": sqm2,
+        "skewness": np.where(d3 > 0, M3 / np.where(d3 > 0, d3, 1.0), 0.0),
+        "kurtosis": np.where(d4 > 0, M4 / np.where(d4 > 0, d4, 1.0), 0.0),
+        "amean": mean,
+        "stddevNorm": np.where(m2 > 0, sqm2 / mean1, 0.0),
+        "coeffOfVariation": np.where(m2 > 0, sqm2 / amean1, 0.0),
+    }
+
+
+def _finish_extremes(N, mean, gmax, gmin, maxpos, minpos, opts):
+    """maxpos/minpos: window-local index of the first max/min (float64)."""
+    if opts.get("timeNorm", "frames") == "segment":
+        maxpos = maxpos / N
+        minpos = minpos / N
+    return {
+        "max": gmax,
+        "min": gmin,
+        "range": gmax - gmin,
+        "maxPos": maxpos,
+        "minPos": minpos,
+        "amean": mean,
+        "maxameandist": gmax - mean,
+        "minameandist": mean - gmin,
+    }
+
+
+def _finish_percentiles(N, pick, opts):
+    """pick([(i1, i2), ...]) -> [(v1, v2), ...]: for each pair of 0-based
+    rank arrays, every window's i1-th and i2-th smallest values. One pair
+    per distinct fraction (the default list asks for 0.5 twice:
+    quartile2 and percentile50.0)."""
+    plist = list(opts.get("percentiles", (0.20, 0.50, 0.80)))
+    pranges = list(opts.get("pctlranges", ((0, 2),)))
+    pquots = list(opts.get("pctlquotients", ()))
+    fracs = list(dict.fromkeys([0.25, 0.50, 0.75] + plist))
+    last = (N - 1).astype(np.int64)
+    idxf = [p * (N - 1.0) for p in fracs]
+    pairs = [(np.clip(np.floor(f).astype(np.int64), 0, last),
+              np.clip(np.ceil(f).astype(np.int64), 0, last)) for f in idxf]
+    pct = {p: np.where(i1 != i2, v1 * (i2 - f) + v2 * (f - i1), v1)
+           for p, f, (i1, i2), (v1, v2) in zip(fracs, idxf, pairs,
+                                               pick(pairs))}
+    q1, q2, q3 = pct[0.25], pct[0.50], pct[0.75]
+    out = {"quartile1": q1, "quartile2": q2, "quartile3": q3,
+           "iqr1-2": q2 - q1, "iqr2-3": q3 - q2, "iqr1-3": q3 - q1}
+    pvals = [pct[p] for p in plist]
+    for p, v in zip(plist, pvals):
+        out[f"percentile{p * 100:.1f}"] = v
+    for a, b in pranges:
+        out[f"pctlrange{a}-{b}"] = np.abs(pvals[b] - pvals[a])
+    for a, b in pquots:
+        # f_percentiles' pctlquotient with the same quirks: numerator-only
+        # guard + smileMath_ratioLimit(q, 50, 100)
+        va, vb = pvals[a], pvals[b]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            q = np.where(vb != 0.0, va / np.where(vb != 0.0, vb, 1.0),
+                         np.where(va > 0, np.inf, -np.inf))
+            hi = q > 50.0
+            lo = q < -50.0
+            qh = np.tanh((np.sqrt(np.where(hi, q, 50.0) - 49.0) - 1.0)
+                         / 50.0) * 100.0 + 50.0
+            ql = np.tanh(-(np.sqrt(-np.where(lo, q, -50.0) - 49.0) - 1.0)
+                         / 50.0) * 100.0 - 50.0
+        q = np.where(hi, qh, np.where(lo, ql, q))
+        out[f"pctlquotient{a}-{b}"] = np.where(va != 0.0, q, 0.0)
+    return out
 
 
 EXPANDING_FAMILIES = {"means", "extremes", "moments", "percentiles",
@@ -544,8 +705,9 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
     per-window and are NOT returned — the caller routes them to the gather.
     Percentiles use the exact offline order-statistic machinery
     (_expanding_select), one selection per distinct fraction — bit-identical
-    to sorting each window, never the gather. Same output names, guards,
-    and formulas as kernels.py f_moments / f_percentiles / f_regression
+    to sorting each window, never the gather. means, moments, extremes
+    and percentiles finish through the same _finish_* as compute_batched;
+    regression has kernels.py f_regression's names and guards
     (functionalRegression.cpp:219-246 closed forms expressed via the
     algebraically-identical centered normal equations)."""
     options = options or {}
@@ -565,52 +727,8 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         mean = sx / N
 
     if "means" in families:
-        absx = np.abs(x)
-        nz = x != 0.0
-        pos = x > 0.0
-        neg = x < 0.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            logabs = np.where(nz, np.log(np.where(nz, absx, 1.0)), 0.0)
-        (nnz, npos, nneg, sabs, sq, nz_s, nzabs_s, nzq_s, nzlog_s, pos_s,
-         posq_s, neg_s, negq_s) = pref(
-            nz.astype(np.float64), pos.astype(np.float64),
-            neg.astype(np.float64), absx, x * x, np.where(nz, x, 0.0),
-            np.where(nz, absx, 0.0), np.where(nz, x * x, 0.0), logabs,
-            np.where(pos, x, 0.0), np.where(pos, x * x, 0.0),
-            np.where(neg, x, 0.0), np.where(neg, x * x, 0.0))
-        absmean = sabs / N
-        qmean = sq / N
-        safe_nnz = np.where(nnz > 0, nnz, 1.0)
-        safe_np = np.where(npos > 0, npos, 1.0)
-        safe_nn = np.where(nneg > 0, nneg, 1.0)
-        out["amean"] = mean
-        out["absmean"] = absmean
-        out["qmean"] = qmean
-        out["nzamean"] = np.where(nnz > 0, nz_s / safe_nnz, 0.0)
-        out["nzabsmean"] = np.where(nnz > 0, nzabs_s / safe_nnz, 0.0)
-        out["nzqmean"] = np.where(nnz > 0, nzq_s / safe_nnz, 0.0)
-        nzgmean = np.where(nnz > 0, np.exp(nzlog_s / safe_nnz), 0.0)
-        out["nzgmean"] = nzgmean
-        tn = options.get("means", {}).get("timeNorm", "frames")
-        if tn == "segment":
-            out["nnz"] = nnz / N
-        elif tn == "second":
-            out["nnz"] = nnz / options.get("means", {}).get("T", 1.0)
-        else:
-            out["nnz"] = nnz
-        out["flatness"] = np.where(absmean != 0.0, nzgmean
-                                   / np.where(absmean != 0, absmean, 1.0),
-                                   1.0)
-        posqmean = np.where(npos > 0, posq_s / safe_np, 0.0)
-        negqmean = np.where(nneg > 0, negq_s / safe_nn, 0.0)
-        out["posamean"] = np.where(npos > 0, pos_s / safe_np, 0.0)
-        out["negamean"] = np.where(nneg > 0, neg_s / safe_nn, 0.0)
-        out["posqmean"] = posqmean
-        out["posrqmean"] = np.sqrt(posqmean)
-        out["negqmean"] = negqmean
-        out["negrqmean"] = np.sqrt(negqmean)
-        out["rqmean"] = np.sqrt(qmean)
-        out["nzrqmean"] = np.sqrt(out["nzqmean"])
+        _add(out, _finish_means(N, mean, pref(*_means_terms(x)),
+                                options.get("means", {})))
 
     if "extremes" in families:
         def extremes(idx):
@@ -632,72 +750,14 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
                                           axis=1),
                     np.maximum.accumulate(np.where(V < prev_min, col, 0),
                                           axis=1)]
-        gmax, gmin, maxpos, minpos = cv.at_anchors(extremes)
-        tn = options.get("extremes", {}).get("timeNorm", "frames")
-        if tn == "segment":
-            maxpos = maxpos / N
-            minpos = minpos / N
-        out["max"] = gmax
-        out["min"] = gmin
-        out["range"] = gmax - gmin
-        out["maxPos"] = maxpos
-        out["minPos"] = minpos
-        if "amean" not in out:
-            out["amean"] = mean
-        out["maxameandist"] = gmax - mean
-        out["minameandist"] = mean - gmin
+        _add(out, _finish_extremes(N, mean, *cv.at_anchors(extremes),
+                                   options.get("extremes", {})))
 
     if "percentiles" in families:
-        popts = options.get("percentiles", {})
-        plist = list(popts.get("percentiles", (0.20, 0.50, 0.80)))
-        pranges = list(popts.get("pctlranges", ((0, 2),)))
-        pquots = list(popts.get("pctlquotients", ()))
-        # one selection per distinct fraction (the default list asks for
-        # 0.5 twice: quartile2 and percentile50.0)
-        fracs = list(dict.fromkeys([0.25, 0.50, 0.75] + plist))
-        hl = cv.h
-        ranks, meta = [], []
-        for p in fracs:
-            idxf = p * (N - 1.0)
-            i1 = np.clip(np.floor(idxf).astype(np.int64), 0, hl - 1)
-            i2 = np.clip(np.ceil(idxf).astype(np.int64), 0, hl - 1)
-            meta.append((idxf, i1, i2))
-            ranks.append((i1 + 1, i2 + 1))
-        pct = {}
-        for p, (idxf, i1, i2), (v1, v2) in zip(fracs, meta,
-                                               _expanding_select(cv, ranks)):
-            w1 = idxf - i1
-            w2 = i2 - idxf
-            pct[p] = np.where(i1 != i2, v1 * w2 + v2 * w1, v1)
-        q1, q2, q3 = pct[0.25], pct[0.50], pct[0.75]
-        out["quartile1"] = q1
-        out["quartile2"] = q2
-        out["quartile3"] = q3
-        out["iqr1-2"] = q2 - q1
-        out["iqr2-3"] = q3 - q2
-        out["iqr1-3"] = q3 - q1
-        pvals = []
-        for p in plist:
-            v = pct[p]
-            out[f"percentile{p * 100:.1f}"] = v
-            pvals.append(v)
-        for a, b in pranges:
-            out[f"pctlrange{a}-{b}"] = np.abs(pvals[b] - pvals[a])
-        for a, b in pquots:
-            # identical quirks to compute_batched: numerator-only guard +
-            # smileMath_ratioLimit(q, 50, 100)
-            va, vb = pvals[a], pvals[b]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                q = np.where(vb != 0.0, va / np.where(vb != 0.0, vb, 1.0),
-                             np.where(va > 0, np.inf, -np.inf))
-                hi = q > 50.0
-                lo = q < -50.0
-                qh = np.tanh((np.sqrt(np.where(hi, q, 50.0) - 49.0) - 1.0)
-                             / 50.0) * 100.0 + 50.0
-                ql = np.tanh(-(np.sqrt(-np.where(lo, q, -50.0) - 49.0) - 1.0)
-                             / 50.0) * 100.0 - 50.0
-            q = np.where(hi, qh, np.where(lo, ql, q))
-            out[f"pctlquotient{a}-{b}"] = np.where(va != 0.0, q, 0.0)
+        _add(out, _finish_percentiles(
+            N, lambda pairs: _expanding_select(
+                cv, [(i1 + 1, i2 + 1) for i1, i2 in pairs]),
+            options.get("percentiles", {})))
 
     if "moments" in families or "regression" in families:
         scols = {"y": x}
@@ -712,23 +772,8 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         st = _expanding_stats(cv, scols, m34=m34, pairs=pairs)
 
     if "moments" in families:
-        m2 = st[("M2", "y")] / N
-        sqm2 = np.where(m2 > 0, np.sqrt(np.where(m2 > 0, m2, 1.0)), 0.0)
-        m3 = st[("M3", "y")]
-        m4 = st[("M4", "y")]
-        out["variance"] = m2
-        out["stddev"] = sqm2
-        d3 = N * m2 * sqm2
-        d4 = N * m2 * m2
-        out["skewness"] = np.where(d3 > 0, m3 / np.where(d3 > 0, d3, 1.0), 0.0)
-        out["kurtosis"] = np.where(d4 > 0, m4 / np.where(d4 > 0, d4, 1.0), 0.0)
-        mean = st[("mean", "y")]
-        if "amean" not in out:
-            out["amean"] = mean
-        mean1 = np.where(mean != 0.0, mean, 1.0)
-        out["stddevNorm"] = np.where(m2 > 0, sqm2 / mean1, 0.0)
-        amean1 = np.where(mean != 0.0, np.abs(mean), 1.0)
-        out["coeffOfVariation"] = np.where(m2 > 0, sqm2 / amean1, 0.0)
+        _add(out, _finish_moments(N, st[("mean", "y")], st[("M2", "y")],
+                                  st[("M3", "y")], st[("M4", "y")]))
 
     if "regression" in families:
         mean_y = st[("mean", "y")]
@@ -1423,156 +1468,34 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
     gmax = np.maximum.reduceat(x, starts)
     gmin = np.minimum.reduceat(x, starts)
 
-    need_sorted = "percentiles" in families
-    if need_sorted:
-        xs = x.copy()
-        for s, e in zip(starts, ends):
-            xs[s:e].sort()
-
     if "means" in families:
-        absx = np.abs(x)
-        nz = x != 0.0
-        pos = x > 0.0
-        neg = x < 0.0
-        nnz = _seg_sum(nz.astype(np.float64), starts)
-        npos = _seg_sum(pos.astype(np.float64), starts)
-        nneg = _seg_sum(neg.astype(np.float64), starts)
-        absmean = _seg_sum(absx, starts) / N
-        qsum = _seg_sum(x * x, starts)
-        qmean = qsum / N
-        with np.errstate(divide="ignore", invalid="ignore"):
-            logabs = np.where(nz, np.log(np.where(nz, absx, 1.0)), 0.0)
-        nz_s = _seg_sum(np.where(nz, x, 0.0), starts)
-        nzabs_s = _seg_sum(np.where(nz, absx, 0.0), starts)
-        nzq_s = _seg_sum(np.where(nz, x * x, 0.0), starts)
-        nzlog_s = _seg_sum(logabs, starts)
-        pos_s = _seg_sum(np.where(pos, x, 0.0), starts)
-        posq_s = _seg_sum(np.where(pos, x * x, 0.0), starts)
-        neg_s = _seg_sum(np.where(neg, x, 0.0), starts)
-        negq_s = _seg_sum(np.where(neg, x * x, 0.0), starts)
-
-        safe_nnz = np.where(nnz > 0, nnz, 1.0)
-        safe_np = np.where(npos > 0, npos, 1.0)
-        safe_nn = np.where(nneg > 0, nneg, 1.0)
-        out["amean"] = mean
-        out["absmean"] = absmean
-        out["qmean"] = qmean
-        out["nzamean"] = np.where(nnz > 0, nz_s / safe_nnz, 0.0)
-        out["nzabsmean"] = np.where(nnz > 0, nzabs_s / safe_nnz, 0.0)
-        out["nzqmean"] = np.where(nnz > 0, nzq_s / safe_nnz, 0.0)
-        nzgmean = np.where(nnz > 0, np.exp(nzlog_s / safe_nnz), 0.0)
-        out["nzgmean"] = nzgmean
-        tn = options.get("means", {}).get("timeNorm", "frames")
-        if tn == "segment":
-            out["nnz"] = nnz / N
-        elif tn == "second":
-            out["nnz"] = nnz / options.get("means", {}).get("T", 1.0)
-        else:
-            out["nnz"] = nnz
-        out["flatness"] = np.where(absmean != 0.0, nzgmean
-                                   / np.where(absmean != 0, absmean, 1.0), 1.0)
-        posamean = np.where(npos > 0, pos_s / safe_np, 0.0)
-        posqmean = np.where(npos > 0, posq_s / safe_np, 0.0)
-        negamean = np.where(nneg > 0, neg_s / safe_nn, 0.0)
-        negqmean = np.where(nneg > 0, negq_s / safe_nn, 0.0)
-        out["posamean"] = posamean
-        out["negamean"] = negamean
-        out["posqmean"] = posqmean
-        out["posrqmean"] = np.sqrt(posqmean)
-        out["negqmean"] = negqmean
-        out["negrqmean"] = np.sqrt(negqmean)
-        out["rqmean"] = np.sqrt(qmean)
-        out["nzrqmean"] = np.sqrt(out["nzqmean"])
+        _add(out, _finish_means(N, mean, [_seg_sum(t, starts)
+                                          for t in _means_terms(x)],
+                                options.get("means", {})))
 
     if "moments" in families:
         d = x - mean_rep
         d2 = d * d
-        m2 = _seg_sum(d2, starts) / N
-        m3 = _seg_sum(d2 * d, starts)
-        m4 = _seg_sum(d2 * d2, starts)
-        sqm2 = np.where(m2 > 0, np.sqrt(np.where(m2 > 0, m2, 1.0)), 0.0)
-        out["variance"] = m2
-        out["stddev"] = sqm2
-        d3 = N * m2 * sqm2
-        d4 = N * m2 * m2
-        out["skewness"] = np.where(d3 > 0, m3 / np.where(d3 > 0, d3, 1.0), 0.0)
-        out["kurtosis"] = np.where(d4 > 0, m4 / np.where(d4 > 0, d4, 1.0), 0.0)
-        if "amean" not in out:
-            out["amean"] = mean
-        mean1 = np.where(mean != 0.0, mean, 1.0)
-        out["stddevNorm"] = np.where(m2 > 0, sqm2 / mean1, 0.0)
-        amean1 = np.where(mean != 0.0, np.abs(mean), 1.0)
-        out["coeffOfVariation"] = np.where(m2 > 0, sqm2 / amean1, 0.0)
+        _add(out, _finish_moments(N, mean, _seg_sum(d2, starts),
+                                  _seg_sum(d2 * d, starts),
+                                  _seg_sum(d2 * d2, starts)))
 
     if "extremes" in families:
         idx = np.arange(x.size, dtype=np.int64)
-        maxpos = (np.minimum.reduceat(
-            np.where(x == np.repeat(gmax, (ends - starts)), idx, _BIG), starts)
-            - starts).astype(np.float64)
-        minpos = (np.minimum.reduceat(
-            np.where(x == np.repeat(gmin, (ends - starts)), idx, _BIG), starts)
-            - starts).astype(np.float64)
-        tn = options.get("extremes", {}).get("timeNorm", "frames")
-        if tn == "segment":
-            maxpos = maxpos / N
-            minpos = minpos / N
-        out["max"] = gmax
-        out["min"] = gmin
-        out["range"] = gmax - gmin
-        out["maxPos"] = maxpos
-        out["minPos"] = minpos
-        if "amean" not in out:
-            out["amean"] = mean
-        out["maxameandist"] = gmax - mean
-        out["minameandist"] = mean - gmin
+        maxpos, minpos = ((np.minimum.reduceat(
+            np.where(x == np.repeat(g, ends - starts), idx, _BIG), starts)
+            - starts).astype(np.float64) for g in (gmax, gmin))
+        _add(out, _finish_extremes(N, mean, gmax, gmin, maxpos, minpos,
+                                   options.get("extremes", {})))
 
     if "percentiles" in families:
-        popts = options.get("percentiles", {})
-        plist = list(popts.get("percentiles", (0.20, 0.50, 0.80)))
-        pranges = list(popts.get("pctlranges", ((0, 2),)))
-        pquots = list(popts.get("pctlquotients", ()))
-
-        def interp(p):
-            idxf = p * (N - 1.0)
-            i1 = np.floor(idxf).astype(np.int64)
-            i2 = np.ceil(idxf).astype(np.int64)
-            np.clip(i1, 0, (N - 1).astype(np.int64), out=i1)
-            np.clip(i2, 0, (N - 1).astype(np.int64), out=i2)
-            v1 = xs[starts + i1]
-            v2 = xs[starts + i2]
-            w1 = idxf - i1
-            w2 = i2 - idxf
-            return np.where(i1 != i2, v1 * w2 + v2 * w1, v1)
-
-        q1, q2, q3 = interp(0.25), interp(0.50), interp(0.75)
-        out["quartile1"] = q1
-        out["quartile2"] = q2
-        out["quartile3"] = q3
-        out["iqr1-2"] = q2 - q1
-        out["iqr2-3"] = q3 - q2
-        out["iqr1-3"] = q3 - q1
-        pvals = []
-        for p in plist:
-            v = interp(p)
-            out[f"percentile{p * 100:.1f}"] = v
-            pvals.append(v)
-        for a, b in pranges:
-            out[f"pctlrange{a}-{b}"] = np.abs(pvals[b] - pvals[a])
-        for a, b in pquots:
-            # vectorized f_percentiles pctlquotient: numerator-only guard +
-            # smileMath_ratioLimit(q, 50, 100) — same quirks as kernels.py
-            va, vb = pvals[a], pvals[b]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                q = np.where(vb != 0.0, va / np.where(vb != 0.0, vb, 1.0),
-                             np.where(va > 0, np.inf, -np.inf))
-                hi = q > 50.0
-                lo = q < -50.0
-                qh = np.tanh((np.sqrt(np.where(hi, q, 50.0) - 49.0) - 1.0)
-                             / 50.0) * 100.0 + 50.0
-                ql = np.tanh(-(np.sqrt(-np.where(lo, q, -50.0) - 49.0) - 1.0)
-                             / 50.0) * 100.0 - 50.0
-            q = np.where(hi, qh, np.where(lo, ql, q))
-            out[f"pctlquotient{a}-{b}"] = np.where(va != 0.0, q, 0.0)
+        xs = x.copy()
+        for s, e in zip(starts, ends):
+            xs[s:e].sort()
+        _add(out, _finish_percentiles(
+            N, lambda pairs: [(xs[starts + i1], xs[starts + i2])
+                              for i1, i2 in pairs],
+            options.get("percentiles", {})))
 
     if "regression" in families:
         num = _seg_sum(x * ii, starts)
@@ -1659,8 +1582,7 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         mc = interior & (((am1 * ap1 <= 0.0) & (a0 == 0.0)) | (am1 * a0 < 0.0))
         out["zcr"] = _seg_sum(zc.astype(np.float64), starts) / N
         out["mcr"] = _seg_sum(mc.astype(np.float64), starts) / N
-        if "amean" not in out:
-            out["amean"] = mean
+        out.setdefault("amean", mean)
 
     if "times" in families:
         tn = options.get("times", {}).get("timeNorm", "segment")
@@ -1714,8 +1636,8 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
 
     if "segments" in families:
         # f_segments under the DEFAULT config (nonX, X=0, segMinLng=3,
-        # pauseMinLng=2, maxNumSeg=20; any explicit algorithm/threshold
-        # option falls back to the reference automaton). The state machine
+        # pauseMinLng=2, maxNumSeg=20; any non-default algorithm/threshold
+        # falls back to the reference automaton). The state machine
         # reduces exactly to run-length algebra: consecutive non-match
         # runs of length >= pauseMinLng split a group into CLUSTERS
         # (shorter gaps never reset the match counter — state 1/2 only
@@ -1809,9 +1731,9 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         # with thresholdOnset == thresholdOffset the automaton state after
         # element i is exactly (x[i] > t), so onsets are the rising edges
         # of the boolean series and offsets the falling ones — pure
-        # vectorized edge detection. Any explicit threshold/useAbsVal
-        # option routes the family back to the per-group reference path
-        # (BATCHED_SUPPORTED_OPTIONS).
+        # vectorized edge detection. Any non-default threshold/useAbsVal
+        # routes the family back to the per-group reference path
+        # (runs_batched).
         b = x > 0.0
         bm1 = np.empty_like(b)
         bm1[1:] = b[:-1]
@@ -2002,18 +1924,25 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                                   options.get("peaks", {}))
         else:
             continue
-        for k, v in vals.items():
-            if k not in out:        # first-writer-wins like compute_all
-                out[k] = v
+        _add(out, vals)
 
     return out
 
 
 def runs_batched(family: str, options=None) -> bool:
-    """True when `family` with its options runs on compute_batched."""
-    return (family in BATCHED_FAMILIES
-            and set((options or {}).get(family, {}))
-            <= BATCHED_SUPPORTED_OPTIONS[family])
+    """True when `family` with its options runs on compute_batched: each
+    option it sets is in BATCHED_SUPPORTED_OPTIONS or equals the default
+    of the family's kernels.py signature (an explicit default changes
+    nothing, so it must not evict the family)."""
+    from opensmile_spark.functionals.kernels import FAMILIES
+
+    if family not in BATCHED_FAMILIES:
+        return False
+    other = {k: v for k, v in (options or {}).get(family, {}).items()
+             if k not in BATCHED_SUPPORTED_OPTIONS[family]}
+    params = inspect.signature(FAMILIES[family]).parameters if other else {}
+    return all(k in params and np.array_equal(v, params[k].default)
+               for k, v in other.items())
 
 
 def output_keys(families, options=None) -> tuple:
@@ -2049,8 +1978,8 @@ def compute_groups(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                    families, options=None) -> dict[str, np.ndarray]:
     """{key: float64 array, one value per group} for every output key of
     `families` (output_keys order); group i is x[starts[i]:ends[i]],
-    non-empty. Families whose options fit BATCHED_SUPPORTED_OPTIONS run in
-    one compute_batched call; the others run the per-group compute_all
+    non-empty. Families that pass runs_batched run in one
+    compute_batched call; the others run the per-group compute_all
     reference loop, so their keys are bit-equal to compute_all."""
     from opensmile_spark.functionals.kernels import compute_all
 

@@ -147,9 +147,9 @@ def backfill_functionals(
     every conversation of the block, and the per-anchor windows of the
     gathered families are concatenated into ONE array evaluated for ALL
     anchors by batched.compute_groups — no per-conversation or per-anchor
-    Python dispatch, except for a family whose options lie outside
-    BATCHED_SUPPORTED_OPTIONS, which compute_groups runs through the
-    per-window reference kernel. Every conversation's outputs are
+    Python dispatch, except for a family with a non-default option
+    outside BATCHED_SUPPORTED_OPTIONS, which compute_groups runs through
+    the per-window reference kernel. Every conversation's outputs are
     bit-identical whatever else shares its block. The key and anchor_ts
     columns keep their input types. The gather is chunked so the gathered
     array stays bounded (`max_gather_elems`) regardless of anchor density.

@@ -1,8 +1,10 @@
 """SparkSession factory tuned for the engine.
 
-Defaults are chosen for correctness-reproducibility (UTC session timezone so
-timestamp arithmetic matches the DuckDB oracle) and for scale (AQE on, skew
-join handling on, Arrow enabled for the pandas-UDF kernel path).
+Settings are chosen for correctness-reproducibility (UTC session timezone
+so timestamp arithmetic matches the DuckDB oracle) and for wide codegen'd
+aggregates. What Spark already defaults to (AQE with partition coalescing
+and skew-join handling, 10000-record Arrow batches) is left to Spark;
+tests/test_session.py pins those defaults.
 
 On a real cluster the same builder is used by spark-submit --py-files; only
 master/memory change. Shuffle partitioning is the caller's knob: at 100 TB
@@ -40,12 +42,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # functional banks are WIDE: a 3-column functionals_sql already
         # carries ~100 aggregation-buffer fields, and the default
         # spark.sql.codegen.maxFields=100 silently evicts such operators

@@ -54,35 +54,26 @@ def streaming_session_functionals(
     the lateness bound the reference enforces physically with its ring
     buffer (dataMemoryLevel.hpp:245 noHang). Aggregates limited to the
     single-pass (partial-combinable) functional subset — order statistics
-    need the batch kernel over closed sessions.
+    need the batch kernel over closed sessions. Each aggregate is
+    functionals_sql's own SQL text for that functional.
     """
-    x = F.col(value_col)
+    from opensmile_spark.functionals.bank import _fsql_named
+    from opensmile_spark.util import sql_ident
+
+    named = _fsql_named(value_col)
+    feats = ("amean", "absmean", "qmean", "rqmean", "variance", "max",
+             "min", "nnz")
     return (
         lld_stream.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap), F.col("conv_id"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.avg(x).alias(f"{value_col}_amean"),
-            F.avg(F.abs(x)).alias(f"{value_col}_absmean"),
-            F.avg(x * x).alias(f"{value_col}_qmean"),
-            F.sqrt(F.avg(x * x)).alias(f"{value_col}_rqmean"),
-            F.var_pop(x).alias(f"{value_col}_variance"),
-            F.max(x).alias(f"{value_col}_max"),
-            F.min(x).alias(f"{value_col}_min"),
-            F.sum(F.when(x != 0.0, 1).otherwise(0)).cast("double")
-            .alias(f"{value_col}_nnz"),
-        )
+        .agg(F.count("*").alias("n_turns"),
+             *(F.expr(named[k]).alias(f"{value_col}_{k}") for k in feats))
         .select(
             "conv_id",
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
             "n_turns",
-            *[F.col(c) for c in [
-                f"{value_col}_amean", f"{value_col}_absmean",
-                f"{value_col}_qmean", f"{value_col}_rqmean",
-                f"{value_col}_variance", f"{value_col}_max",
-                f"{value_col}_min", f"{value_col}_nnz",
-            ]],
+            *(F.col(sql_ident(f"{value_col}_{k}")) for k in feats),
         )
     )
 

@@ -139,8 +139,8 @@ def test_backfill_long_key(spark):
 
 
 def test_backfill_reference_loop_path(spark):
-    """A family whose options lie outside BATCHED_SUPPORTED_OPTIONS
-    (segments nonX) runs the per-window reference loop next to the
+    """A family with a non-default option outside BATCHED_SUPPORTED_OPTIONS
+    (segments, segMinLng=2) runs the per-window reference loop next to the
     expanding (means, regression) and gathered (crossings, regression
     |residual|) paths; `amean` is emitted by both means and crossings.
     Every anchor equals compute_all on its visible slice, expanding and
@@ -149,7 +149,7 @@ def test_backfill_reference_loop_path(spark):
 
     t0 = 1_704_067_200.0
     fams = ["means", "crossings", "regression", "segments"]
-    opts = {"segments": {"algorithm": "nonX", "X": 0.0}}
+    opts = {"segments": {"algorithm": "nonX", "X": 0.0, "segMinLng": 2}}
     rng = np.random.default_rng(3)
     convs = {}
     for k, n in (("a", 40), ("b", 9)):

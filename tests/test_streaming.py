@@ -44,6 +44,10 @@ def test_streaming_lld_matches_batch(spark, stream_dir):
 
 
 def test_streaming_session_functionals(spark, stream_dir):
+    """Every feature of every session equals compute_all on that
+    session's rows: max, min, nnz and n_turns exactly, the rest to rtol
+    1e-9."""
+    from opensmile_spark.functionals.kernels import compute_all
     from opensmile_spark.streaming import (
         run_stream_to_memory, streaming_lld, streaming_session_functionals,
     )
@@ -54,14 +58,26 @@ def test_streaming_session_functionals(spark, stream_dir):
     run_stream_to_memory(s, "sess_out")
     got = spark.sql("SELECT * FROM sess_out").toPandas()
     assert len(got) > 10                       # multiple sessions detected
-    assert (got["n_turns"] >= 1).all()
-    # per-session amean must equal the batch mean over the same window
+    feats = ["amean", "absmean", "qmean", "rqmean", "variance", "max",
+             "min", "nnz"]
+    assert list(got.columns) == (
+        ["conv_id", "session_start", "session_end", "n_turns"]
+        + [f"char_len_{k}" for k in feats])
     batch = streaming_lld(spark.read.parquet(stream_dir)).toPandas()
-    row = got.iloc[0]
-    sub = batch[(batch.conv_id == row.conv_id)
-                & (batch.ts >= row.session_start)
-                & (batch.ts < row.session_end)]
-    assert np.isclose(sub.char_len.mean(), row.char_len_amean)
+    for row in got.itertuples():
+        sub = batch[(batch.conv_id == row.conv_id)
+                    & (batch.ts >= row.session_start)
+                    & (batch.ts < row.session_end)].sort_values("turn_idx")
+        assert row.n_turns == len(sub)
+        want = compute_all(sub.char_len.to_numpy(dtype=np.float64),
+                           ["means", "moments", "extremes"])
+        for k in feats:
+            g = getattr(row, f"char_len_{k}")
+            if k in ("max", "min", "nnz"):
+                assert g == want[k], (row.conv_id, k, g, want[k])
+            else:
+                assert np.isclose(g, want[k], rtol=1e-9, atol=0.0), (
+                    row.conv_id, k, g, want[k])
 
 
 def test_stateful_expanding_stats(spark, stream_dir):
