@@ -1121,7 +1121,7 @@ def q_functionals_acf_amdf(spark, sf_dir):
 
 
 def q_dedup_components(spark, sf_dir):
-    """Near-dup clusters: connected components (min-label propagation) of
+    """Near-dup clusters: connected components (large-star/small-star) of
     the simhash near-dup pair graph — every clustered doc labeled with its
     component's min id (the survivor). Oracle: recursive-CTE transitive
     min in DuckDB."""
@@ -5617,58 +5617,45 @@ def q_nb_quality(spark, sf_dir):
 def q_streaming_sessions(spark, sf_dir):
     """SURVEY §2.8 executed AS A STREAM, hash-checked against a batch
     oracle: the transcripts table is replayed through readStream (file
-    source), the stateless streaming LLD, and a session_window(433 s)
-    aggregation with watermark, driven to completion with
-    Trigger.AvailableNow — the EOI-flush analogue of the reference's
-    end-of-input ticks (componentManager.cpp:1485-1502). One far-future
-    sentinel row advances the global watermark past every real session so
-    append mode flushes ALL of them deterministically; the oracle is the
-    pure-batch SQL session rule (split when gap >= 433 s, exactly
-    session_window's merge-iff-overlap) + the same single-pass
+    source), the stateless streaming LLD, and closed_session_functionals
+    (433 s gap, 0 s watermark), driven to completion with
+    Trigger.AvailableNow by run_stream_to_memory, whose flush emits the
+    sessions still open at end of input — the reference's end-of-input
+    ticks (componentManager.cpp:1485-1502). No sentinel row: every
+    session of every conversation must come out of the library. The
+    oracle is the pure-batch SQL session rule (split when gap >= 433 s;
+    the stream, like session_window, splits when gap > 433 s — the two
+    differ only on a gap of exactly 433 s) + the same single-pass
     aggregates. Stream/batch equivalence as a driver gate, not just a
     pytest (test_streaming.py pins the remaining streaming surface)."""
+    import shutil
     import tempfile
     import uuid
 
-    from opensmile_spark.streaming import (run_stream_to_memory,
-                                           streaming_lld,
-                                           streaming_session_functionals)
+    from opensmile_spark.streaming import (closed_session_functionals,
+                                           run_stream_to_memory,
+                                           streaming_lld)
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     # withWatermark requires TIMESTAMP (not NTZ); the session pins UTC so
     # the cast preserves epoch values and the DuckDB twin is unaffected
     t = (_transcripts(spark, sf_dir).select(*cols)
          .withColumn("ts", F.col("ts").cast("timestamp")))
-    sentinel = (
-        t.groupBy()
-        .agg(F.max("ts").alias("ts"))
-        .select(
-            F.lit("__wm__").alias("conv_id"),
-            F.lit(0).cast("int").alias("turn_idx"),
-            F.lit("system").alias("role"),
-            F.lit("x").alias("text"),
-            F.lit(None).cast("string").alias("tool"),
-            (F.col("ts") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-        )
-    )
     d = tempfile.mkdtemp(prefix="osk_stream_gate_")
-    t.unionByName(sentinel).write.mode("overwrite").parquet(d)
-    batch = spark.read.parquet(d)
-    stream = spark.readStream.schema(batch.schema).parquet(d)
-    sess = streaming_session_functionals(
-        streaming_lld(stream), gap="433 seconds", watermark="0 seconds")
+    t.write.mode("overwrite").parquet(d)
+    stream = spark.readStream.schema(t.schema).parquet(d)
+    sess, flush = closed_session_functionals(
+        streaming_lld(stream), gap="433 seconds", watermark="0 seconds",
+        families=["means", "moments", "extremes"])
     name = "gate_stream_sessions_" + uuid.uuid4().hex[:8]
-    run_stream_to_memory(sess, name)
-    # the memory sink holds materialized rows; the replayed files are done
-    import shutil
-
+    run_stream_to_memory(sess, name, flush=flush)
+    # the memory table holds materialized rows; the replayed files are done
     shutil.rmtree(d, ignore_errors=True)
     vc = "char_len"
     aggs = [f"{vc}_amean", f"{vc}_absmean", f"{vc}_qmean", f"{vc}_rqmean",
             f"{vc}_variance", f"{vc}_max", f"{vc}_min", f"{vc}_nnz"]
     return (
         spark.sql(f"SELECT * FROM {name}")
-        .filter(F.col("conv_id") != "__wm__")
         .select(
             "conv_id",
             F.round(_epoch("session_start"), 6).alias("session_start_epoch"),

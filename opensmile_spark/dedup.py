@@ -343,53 +343,6 @@ def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
     return _exact_cosine_pairs(emb, cand, id_col, vec_col, threshold)
 
 
-def _cc_min_label(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Min-label propagation CC (the round-1/2 algorithm, kept as the
-    small-graph reference twin for tests): each round every node adopts the
-    smallest label in its closed neighborhood — O(diameter) rounds, so a
-    long chain needs as many rounds as its length. connected_components
-    (large-star/small-star) replaces it as the default."""
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                  F.col("id_a").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.groupBy("src").agg(F.min("dst").alias("__m"))
-        .select(F.col("src").alias("id"),
-                F.least(F.col("__m"), F.col("src")).alias("component"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .groupBy("src").agg(F.min("component").alias("nbr_min"))
-            .withColumnRenamed("src", "id")
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"),
-                        F.coalesce("nbr_min", "component"))
-                .alias("component"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n").join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al., 'Connected Components in
     MapReduce and Beyond', SoCC'14): for every node u, connect each
@@ -438,9 +391,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     adversarial chains when capped). Each round is two grouped shuffles on
     node id; lineage is cut per round with localCheckpoint. On convergence
     the edge set is a forest of stars whose centers are the component
-    minima, so labels read off directly. Equality with the min-label
-    reference and a union-find oracle (incl. a 400-node chain) is pinned by
-    tests/test_similarity.py.
+    minima, so labels read off directly. Equality with a union-find oracle
+    (incl. a 400-node chain) is pinned by tests/test_similarity.py.
 
     Input: pairs (id_a, id_b). Output: (id, component) for every node that
     appears in any pair (singletons are their own component by definition
@@ -458,7 +410,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             new_edges.count() == edges.count()
             and new_edges.exceptAll(edges).limit(1).count() == 0
         )
-        old = edges
         edges = new_edges
         if same:
             break

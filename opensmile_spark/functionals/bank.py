@@ -170,8 +170,8 @@ def functionals_kernel(
         proj = df.select(*in_cols)
     else:
         rcols = list(repartition_cols) if repartition_cols else group_cols
-        assert rcols == group_cols[: len(rcols)], \
-            "repartition_cols must be a prefix of group_cols"
+        if rcols != group_cols[: len(rcols)]:
+            raise ValueError("repartition_cols must be a prefix of group_cols")
         proj = df.select(*in_cols, order_col) \
             .repartition(*rcols) \
             .sortWithinPartitions(*group_cols, order_col) \

@@ -253,7 +253,8 @@ def median_smooth(
     (shrinking at partition edges), interpolated median (mean of the two
     middle order statistics for even counts — equals quantile_cont 0.5).
     Built-in exprs only: collect_list window + sort_array + element_at."""
-    assert win % 2 == 1, "median window must be odd"
+    if win % 2 != 1:
+        raise ValueError("median window must be odd")
     half = win // 2
     w = _w(partition_cols, order_col).rowsBetween(-half, half)
     out = df

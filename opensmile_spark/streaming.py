@@ -1,22 +1,20 @@
 """Structured Streaming surface — the incremental/online half of the engine.
 
 The reference is an incremental real-time engine (tick loop,
-/root/reference/src/core/componentManager.cpp:1416-1520; about.rst:29-36).
-Spark's analogue is Structured Streaming:
+componentManager.cpp:1416-1520; about.rst:29-36). Spark's analogue is
+Structured Streaming:
 
-  cExternalSource push source  -> readStream (rate/kafka/file) or
-                                  MemoryStream in tests
+  cExternalSource push source  -> readStream (rate/kafka/file)
   ring-buffer bounded lateness -> withWatermark(ts, delay)
-  cTurnDetector sessionisation -> session_window(ts, gap) aggregation
-  incremental LLDs             -> same stateless column exprs as batch
-                                  (compute_lld works on streaming frames)
-  stateful ops (adaptive MVN,
-  Viterbi-style smoothing)     -> applyInPandasWithState per conv_id
+  cTurnDetector sessionisation -> closed_session_functionals: one
+                                  applyInPandasWithState processor per
+                                  conv_id with an event-time gap timeout
+  end-of-input ticks           -> run_stream_to_memory(flush=...): the
+                                  state left after AvailableNow, read back
+                                  through the statestore source
+  incremental LLDs             -> compute_lld's stateless exprs
+  stateful ops (adaptive MVN)  -> applyInPandasWithState per conv_id
   cExternalSink callback       -> foreachBatch / memory sink
-
-Everything here reuses the batch expressions — one logical definition,
-two execution modes (the Spark-first replacement for the reference's single
-dataflow graph running either offline or online).
 """
 
 from __future__ import annotations
@@ -29,8 +27,7 @@ def streaming_lld(transcripts_stream: DataFrame) -> DataFrame:
     """Stateless LLD columns on a streaming transcripts frame.
 
     lag-based LLDs (reply_latency, role_change) are *stateful* in streaming
-    and are therefore not computed here — they belong to the sessionized
-    aggregate (below) or the stateful smoother. Everything else is the exact
+    and are therefore not computed here. Everything else is the exact
     batch expression set: compute_lld's own SQL text minus its OVER columns.
     """
     from opensmile_spark.lld import _LLD_EXPRS
@@ -39,43 +36,6 @@ def streaming_lld(transcripts_stream: DataFrame) -> DataFrame:
         "conv_id", "turn_idx", "ts",
         *(f"{e} AS {name}" for name, e in _LLD_EXPRS.items()
           if " OVER " not in e))
-
-
-def streaming_session_functionals(
-    lld_stream: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-    value_col: str = "char_len",
-) -> DataFrame:
-    """Per-(conv, session-window) incremental functional aggregates.
-
-    session_window(ts, gap) IS the cTurnDetector timeout rule
-    (turnDetector.cpp:58-62) executed by the state store; the watermark is
-    the lateness bound the reference enforces physically with its ring
-    buffer (dataMemoryLevel.hpp:245 noHang). Aggregates limited to the
-    single-pass (partial-combinable) functional subset — order statistics
-    need the batch kernel over closed sessions. Each aggregate is
-    functionals_sql's own SQL text for that functional.
-    """
-    from opensmile_spark.functionals.bank import _fsql_named
-    from opensmile_spark.util import sql_ident
-
-    named = _fsql_named(value_col)
-    feats = ("amean", "absmean", "qmean", "rqmean", "variance", "max",
-             "min", "nnz")
-    return (
-        lld_stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("conv_id"))
-        .agg(F.count("*").alias("n_turns"),
-             *(F.expr(named[k]).alias(f"{value_col}_{k}") for k in feats))
-        .select(
-            "conv_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_turns",
-            *(F.col(sql_ident(f"{value_col}_{k}")) for k in feats),
-        )
-    )
 
 
 def stateful_expanding_stats(
@@ -151,83 +111,110 @@ def closed_session_functionals(
     value_col: str = "char_len",
     families: list[str] | None = None,
 ):
-    """FULL functional vectors (incl. order statistics / peaks2 — anything
-    the incremental aggregate above cannot express) over CLOSED sessions:
-    the streaming analogue of the reference's EOI flush
-    (componentManager.cpp:1485-1502 runs extra ticks at EOI so full-input
-    ops see the whole segment).
+    """Functional vectors per (conv_id, session): the cTurnDetector
+    inactivity timeout (turnDetector.cpp:35-72) as one
+    applyInPandasWithState processor per conv_id.
 
-    Mechanics: session_window aggregation in APPEND mode collects each
-    session's (ts-ordered) values; append + watermark means a session row
-    is emitted exactly once, when the watermark passes its close — at that
-    point the whole segment is known, so the batch kernel runs on it inside
-    foreachBatch: one mapInArrow pass hands every session of an Arrow batch
-    to batched.compute_groups at once. State is bounded by session length
-    (the reference's ring buffer bound); the kernel never sees an open
-    session.
+    Rows ordered by (ts, turn_idx); a turn more than `gap` after the
+    previous one starts a new session, as in sessionize and Spark's
+    session windows (which merge windows [ts, ts + gap) that touch). The
+    state holds the rows not yet emitted. A session is emitted once the
+    watermark reaches its end (last ts + gap), on new data or on its
+    event-time timeout; Spark drops rows older than the previous
+    micro-batch's watermark. The sessions of one call go through one
+    batched.compute_groups.
 
-    Returns (sessions_stream, process_batch): start with
-      sessions_stream.writeStream.outputMode("append")
-          .foreachBatch(lambda df, _: sink(process_batch(df))).start()
-    where process_batch(df) -> DataFrame applies the kernel batch-side.
-    """
+    Returns (stream, flush). `flush(checkpoint)` is a batch frame of the
+    sessions still in the stream's state at `checkpoint`, computed by the
+    same function; run_stream_to_memory(stream, name, flush=flush)
+    appends it at end of input."""
     import numpy as np
-    import pyarrow as pa
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from opensmile_spark.functionals.batched import (
         compute_groups, output_keys,
     )
+    from opensmile_spark.util import sql_ident
 
+    spark = lld_stream.sparkSession
     families = families or ["means", "moments", "percentiles", "segments",
                             "peaks2"]
     feat_names = [f"{value_col}_{k}" for k in output_keys(families)]
-
-    sessions = (
-        lld_stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("conv_id"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sort_array(
-                F.collect_list(F.struct("ts", "turn_idx", value_col))
-            ).alias("__rows"),
-        )
-        .select(
-            "conv_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_turns",
-            F.transform("__rows", lambda r: r[value_col]).alias("__xs"),
-        )
-    )
-    key_cols = ["conv_id", "session_start", "session_end", "n_turns"]
-
-    def kernel(batches):
-        """Each row is one closed session: the __xs list offsets are the
-        group bounds of the flattened values."""
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            xs = rb.column("__xs")
-            offsets = xs.offsets.to_numpy().astype(np.int64)
-            x = xs.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.float64, copy=False)
-            feats = compute_groups(x, offsets[:-1] - offsets[0],
-                                   offsets[1:] - offsets[0], families)
-            # from_pandas=True: NaN -> null, as the other kernels emit it
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(c) for c in key_cols]
-                + [pa.array(v, type=pa.float64(), from_pandas=True)
-                   for v in feats.values()],
-                names=key_cols + feat_names)
-
+    gap_us = spark.sql(f"SELECT INTERVAL {gap}").first()[0] \
+        // pd.Timedelta(microseconds=1)
     schema = ", ".join(
-        [f"`{c}` {sessions.schema[c].dataType.simpleString()}"
-         for c in key_cols] + [f"`{n}` double" for n in feat_names])
+        [f"conv_id {lld_stream.schema['conv_id'].dataType.simpleString()}",
+         "__start long", "__end long", "n_turns long"]
+        + [f"`{n}` double" for n in feat_names])
+    cols = ("__us", "turn_idx", value_col)     # held as us, turn_idx, x
+    dtypes = (np.int64, np.int64, np.float64)
 
-    def process_batch(batch_df: DataFrame) -> DataFrame:
-        return batch_df.mapInArrow(kernel, schema=schema)
+    def split(key, us, ti, x, until_us):
+        """(frame of the sessions ending at or before until_us, the rows
+        of the later ones, the later ones' ends)."""
+        o = np.lexsort((ti, us))
+        us, ti, x = us[o], ti[o], x[o]
+        cut = np.flatnonzero(np.diff(us) > gap_us) + 1
+        starts, ends = np.r_[0, cut], np.r_[cut, len(us)]
+        end_us = us[ends - 1] + gap_us
+        k = int(np.searchsorted(end_us, until_us, side="right"))
+        s = np.append(starts, len(us))[k]   # closed sessions are a prefix
+        feats = compute_groups(x[:s], starts[:k], ends[:k], families) if k \
+            else dict.fromkeys(feat_names, np.empty(0))
+        closed = pd.DataFrame({
+            "conv_id": [key] * k, "__start": us[starts[:k]],
+            "__end": end_us[:k], "n_turns": ends[:k] - starts[:k],
+            **dict(zip(feat_names, feats.values()))})
+        return closed, (us[s:], ti[s:], x[s:]), end_us[k:]
 
-    return sessions, process_batch
+    def step(key, pdfs, state):
+        parts = [state.getOption or ((),) * 3] + [
+            [pdf[c] for c in cols] for pdf in pdfs]
+        rows = [np.concatenate([np.asarray(p[i], t) for p in parts])
+                for i, t in enumerate(dtypes)]
+        closed, rest, open_ends = split(
+            key[0], *rows, state.getCurrentWatermarkMs() * 1000)
+        if len(open_ends):
+            state.update(tuple(a.tolist() for a in rest))
+            # fires once watermark_ms > timeout, i.e. watermark >= end
+            state.setTimeoutTimestamp(int(open_ends[0] - 1) // 1000)
+        else:
+            state.remove()
+        if len(closed):
+            yield closed
+
+    def emit(pdf):
+        return split(pdf["conv_id"].iloc[0],
+                     *(pdf[c].to_numpy(t) for c, t in zip(cols, dtypes)),
+                     np.inf)[0]
+
+    def bounds(df):
+        ts = lld_stream.schema["ts"].dataType
+        return df.select(
+            "conv_id",
+            F.timestamp_micros("__start").cast(ts).alias("session_start"),
+            F.timestamp_micros("__end").cast(ts).alias("session_end"),
+            "n_turns", *(F.col(sql_ident(n)) for n in feat_names))
+
+    stream = (   # ts stays in: Spark drops late rows on that column
+        lld_stream.withWatermark("ts", watermark)
+        .select("conv_id", "ts", "turn_idx", value_col,
+                F.unix_micros("ts").alias("__us"))
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            step, schema, "us array<long>, turn_idx array<long>, "
+            "x array<double>", "append", GroupStateTimeout.EventTimeTimeout)
+    )
+
+    def flush(checkpoint: str) -> DataFrame:
+        left = spark.read.format("statestore").load(checkpoint).selectExpr(
+            "key.conv_id AS conv_id", "inline(arrays_zip(value.groupState.us,"
+            " value.groupState.turn_idx, value.groupState.x)) AS "
+            f"(__us, turn_idx, {sql_ident(value_col)})")
+        return bounds(left.groupBy("conv_id").applyInPandas(emit, schema))
+
+    return bounds(stream), flush
 
 
 def dedup_stream(
@@ -253,16 +240,27 @@ def dedup_stream(
 
 
 def run_stream_to_memory(stream_df: DataFrame, name: str,
-                         output_mode: str = "append"):
-    """Drive a streaming frame to completion against available data (the
-    Trigger.AvailableNow EOI analogue — componentManager.cpp:1485-1502 runs
-    extra ticks at EOI so full-input ops flush). Returns the query handle;
-    caller reads `SELECT * FROM {name}`."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+                         output_mode: str = "append", flush=None):
+    """Drive a streaming frame through all available input
+    (Trigger.AvailableNow) into the memory table `name`, under a temporary
+    checkpoint. `flush(checkpoint)`, if given, returns what the stream
+    still holds in its state at end of input (closed_session_functionals'
+    second value); it is appended to `name` — the reference's end-of-input
+    ticks (componentManager.cpp:1485-1502). Returns the query handle."""
+    import os
+    import shutil
+    import tempfile
+
+    checkpoint = tempfile.mkdtemp(prefix="osk_stream_ckpt_")
+    try:
+        q = stream_df.writeStream.outputMode(output_mode).format("memory") \
+            .queryName(name).option("checkpointLocation", checkpoint) \
+            .trigger(availableNow=True).start()
+        q.awaitTermination()
+        if flush is not None and os.listdir(f"{checkpoint}/commits"):
+            spark = stream_df.sparkSession
+            spark.table(name).unionByName(flush(checkpoint)) \
+                .localCheckpoint().createOrReplaceTempView(name)
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return q

@@ -78,6 +78,17 @@ def test_grouping_by_session(spark):
     assert rows[1] == pytest.approx(20.0)
 
 
+def test_repartition_cols_not_prefix_raises(spark, case_df):
+    """A repartition key that is not a prefix of the group key would split
+    groups across tasks; it is rejected with ValueError (not an assert,
+    which python -O strips)."""
+    df = case_df.withColumn("session_id", F.lit(0))
+    with pytest.raises(ValueError, match="prefix"):
+        functionals_kernel(df, ["x"], ("conv_id", "session_id"),
+                           families=["means"],
+                           repartition_cols=("session_id",))
+
+
 def test_emo_large_style_preset(spark):
     from opensmile_spark.presets import emo_large_style
     from opensmile_spark.transcripts import transcripts_from_events

@@ -180,11 +180,10 @@ def test_connected_components_long_chain_and_unionfind_oracle(spark):
     """Large-star/small-star CC on adversarial shapes: a 400-node chain
     (min-label would need 400 rounds — the case that motivated the
     algorithm swap), a star, a binary-tree-ish component, and a random
-    graph — all checked against a driver-side union-find oracle, and
-    against the min-label reference where its round budget suffices."""
+    graph — all checked against a driver-side union-find oracle."""
     import pandas as pd
 
-    from opensmile_spark.dedup import _cc_min_label, connected_components
+    from opensmile_spark.dedup import connected_components
 
     rng = np.random.RandomState(3)
     edges = []
@@ -219,15 +218,6 @@ def test_connected_components_long_chain_and_unionfind_oracle(spark):
     got = {r["id"]: r["component"]
            for r in connected_components(pairs).collect()}
     assert got == want
-
-    # the min-label reference agrees when given enough rounds on the
-    # small components (chain excluded — that is exactly its failure mode)
-    small = [(a, b) for a, b in edges if a >= 5000]
-    got_ml = {r["id"]: r["component"] for r in _cc_min_label(
-        spark.createDataFrame(
-            pd.DataFrame(small, columns=["id_a", "id_b"]))).collect()}
-    want_small = union_find(small)
-    assert got_ml == want_small
 
 
 def test_lsh_bucket_multi_arrow_matches_literal(spark, emb):

@@ -1,6 +1,7 @@
-"""Structured Streaming: session windows, stateless LLD, stateful expanding
-stats — driven to completion with availableNow over a file source (the
-EOI-flush analogue, componentManager.cpp:1485-1502)."""
+"""Structured Streaming: session functionals, stateless LLD, stateful
+expanding stats — driven to completion with availableNow over a file
+source, with the sessions still open at end of input flushed
+(componentManager.cpp:1485-1502)."""
 
 import os
 
@@ -43,41 +44,59 @@ def test_streaming_lld_matches_batch(spark, stream_dir):
         assert got[c].equals(want[c]), c
 
 
-def test_streaming_session_functionals(spark, stream_dir):
-    """Every feature of every session equals compute_all on that
-    session's rows: max, min, nnz and n_turns exactly, the rest to rtol
-    1e-9."""
+def _batch_sessions(df, gap):
+    """{(conv_id, start, end): n_turns} of a batch session_window."""
+    rows = df.groupBy("conv_id", F.session_window("ts", gap)).count() \
+        .select("conv_id", "session_window.*", "count").toPandas()
+    return {(r.conv_id, r.start, r.end): r.count for r in rows.itertuples()}
+
+
+def _check_features(got, rows, families, exact=("max", "min", "nnz")):
+    """Every char_len_ column of every session equals compute_all on that
+    session's rows in (ts, turn_idx) order: `exact` keys bit-equal, the
+    rest to rtol 1e-9."""
     from opensmile_spark.functionals.kernels import compute_all
+
+    for row in got.to_dict("records"):
+        sub = rows[(rows.conv_id == row["conv_id"])
+                   & (rows.ts >= row["session_start"])
+                   & (rows.ts < row["session_end"])] \
+            .sort_values(["ts", "turn_idx"])
+        assert row["n_turns"] == len(sub)
+        want = compute_all(sub.char_len.to_numpy(dtype=np.float64), families)
+        for k in (c[9:] for c in got.columns if c.startswith("char_len_")):
+            g, w = row[f"char_len_{k}"], want[k]
+            if k in exact:
+                assert g == w, (row["conv_id"], k, g, w)
+            else:
+                assert np.isclose(g, w, rtol=1e-9, atol=0.0, equal_nan=True), (
+                    row["conv_id"], k, g, w)
+
+
+def test_streaming_session_functionals(spark, stream_dir):
+    """The single-pass session columns as a select on
+    closed_session_functionals: with the end-of-input flush every turn is
+    in a session (200/200), the sessions are a batch session_window's,
+    and every feature equals compute_all on the session's rows."""
     from opensmile_spark.streaming import (
-        run_stream_to_memory, streaming_lld, streaming_session_functionals,
+        closed_session_functionals, run_stream_to_memory, streaming_lld,
     )
 
-    s = streaming_session_functionals(
+    stream, flush = closed_session_functionals(
         streaming_lld(_read_stream(spark, stream_dir)),
-        gap="10 minutes", watermark="0 seconds")
-    run_stream_to_memory(s, "sess_out")
-    got = spark.sql("SELECT * FROM sess_out").toPandas()
-    assert len(got) > 10                       # multiple sessions detected
+        gap="10 minutes", watermark="0 seconds",
+        families=["means", "moments", "extremes"])
+    run_stream_to_memory(stream, "sess_out", flush=flush)
     feats = ["amean", "absmean", "qmean", "rqmean", "variance", "max",
              "min", "nnz"]
-    assert list(got.columns) == (
-        ["conv_id", "session_start", "session_end", "n_turns"]
-        + [f"char_len_{k}" for k in feats])
-    batch = streaming_lld(spark.read.parquet(stream_dir)).toPandas()
-    for row in got.itertuples():
-        sub = batch[(batch.conv_id == row.conv_id)
-                    & (batch.ts >= row.session_start)
-                    & (batch.ts < row.session_end)].sort_values("turn_idx")
-        assert row.n_turns == len(sub)
-        want = compute_all(sub.char_len.to_numpy(dtype=np.float64),
-                           ["means", "moments", "extremes"])
-        for k in feats:
-            g = getattr(row, f"char_len_{k}")
-            if k in ("max", "min", "nnz"):
-                assert g == want[k], (row.conv_id, k, g, want[k])
-            else:
-                assert np.isclose(g, want[k], rtol=1e-9, atol=0.0), (
-                    row.conv_id, k, g, want[k])
+    cols = (["conv_id", "session_start", "session_end", "n_turns"]
+            + [f"char_len_{k}" for k in feats])
+    got = spark.table("sess_out").select(*cols).toPandas()
+    assert got.n_turns.sum() == 200
+    batch = streaming_lld(spark.read.parquet(stream_dir))
+    assert {(r.conv_id, r.session_start, r.session_end): r.n_turns
+            for r in got.itertuples()} == _batch_sessions(batch, "10 minutes")
+    _check_features(got, batch.toPandas(), ["means", "moments", "extremes"])
 
 
 def test_stateful_expanding_stats(spark, stream_dir):
@@ -99,39 +118,107 @@ def test_stateful_expanding_stats(spark, stream_dir):
 
 
 def test_closed_session_kernel_functionals(spark, stream_dir):
-    """Order statistics / peaks2 over CLOSED sessions via foreachBatch —
-    the streaming EOI-flush path; values must equal the batch kernel on
-    the same session slices."""
-    from opensmile_spark.functionals.kernels import compute_all
+    """Order statistics and peaks2 over every session, read through
+    run_stream_to_memory with its flush: each value equals compute_all on
+    the session's rows."""
     from opensmile_spark.streaming import (
-        closed_session_functionals, streaming_lld,
+        closed_session_functionals, run_stream_to_memory, streaming_lld,
     )
 
-    sessions, process = closed_session_functionals(
+    families = ["means", "percentiles", "peaks2"]
+    stream, flush = closed_session_functionals(
         streaming_lld(_read_stream(spark, stream_dir)),
-        gap="10 minutes", watermark="0 seconds",
-        families=["means", "percentiles", "peaks2"])
-    collected = []
-    q = (sessions.writeStream.outputMode("append")
-         .foreachBatch(lambda df, _: collected.append(process(df).toPandas()))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+        gap="10 minutes", watermark="0 seconds", families=families)
+    run_stream_to_memory(stream, "closed_out", flush=flush)
+    got = spark.table("closed_out").toPandas()
+    assert len(got) > 10 and got.n_turns.sum() == 200
+    assert {"char_len_quartile2", "char_len_numPeaks"} <= set(got.columns)
+    _check_features(got, streaming_lld(spark.read.parquet(stream_dir))
+                    .toPandas(), families)
+
+
+def test_late_and_out_of_order_rows_across_micro_batches(spark, tmp_path):
+    """One file per trigger, gap 10 min, watermark 5 min. File 2 carries a
+    row out of order but within the watermark (a at 90 s; a's turn_idx
+    do not follow ts, and ts orders the rows), a turn exactly `gap` after
+    the previous one (d: same session, as session_window merges touching
+    windows) and a session ending exactly at the final watermark (e:
+    closed by its timeout, no later data for e); file 4 a row older than
+    the previous batch's watermark (a at 100 s), which Spark drops.
+    Without the flush the output is what a streaming session_window
+    emitted: the five sessions the watermark closed. With it, the three
+    still open at end of input follow (c's only session among them): the
+    sessions of a batch session_window over the rows that were not
+    late."""
     import pandas as pd
-    got = pd.concat([c for c in collected if len(c)], ignore_index=True)
-    assert len(got) > 10
-    assert "char_len_quartile2" in got.columns
-    assert "char_len_numPeaks" in got.columns
-    # cross-check one session against the batch kernel
-    batch = streaming_lld(spark.read.parquet(stream_dir)).toPandas()
-    row = got.sort_values(["conv_id", "session_start"]).iloc[0]
-    sub = batch[(batch.conv_id == row.conv_id)
-                & (batch.ts >= row.session_start)
-                & (batch.ts < row.session_end)].sort_values("turn_idx")
-    want = compute_all(sub.char_len.to_numpy(dtype=float),
-                       ["means", "percentiles", "peaks2"])
-    assert np.isclose(row["char_len_quartile2"], want["quartile2"])
-    assert np.isclose(row["char_len_numPeaks"], want["numPeaks"])
-    assert row["n_turns"] == len(sub)
+
+    from opensmile_spark.streaming import (
+        closed_session_functionals, run_stream_to_memory,
+    )
+
+    t0 = pd.Timestamp("2026-01-01")
+    files = [
+        [("a", 0, 0), ("a", 3, 60), ("a", 1, 120), ("b", 0, 0), ("b", 1, 100)],
+        [("a", 4, 1000), ("a", 5, 1100), ("a", 2, 90), ("b", 2, 2100),
+         ("d", 0, 0), ("d", 1, 600), ("e", 0, 1600)],
+        [("a", 7, 2500), ("c", 0, 2400), ("c", 2, 2450)],
+        [("a", 6, 100), ("c", 1, 2430)],
+    ]
+    src = tmp_path / "late_src"
+    src.mkdir()
+    rng = np.random.RandomState(7)
+    for i, rows in enumerate(files):
+        f = str(src / f"part-{i}.parquet")
+        pd.DataFrame({
+            "conv_id": [r[0] for r in rows],
+            "turn_idx": np.array([r[1] for r in rows], np.int32),
+            "ts": [t0.tz_localize("UTC") + pd.Timedelta(seconds=r[2])
+                   for r in rows],
+            "char_len": rng.randint(0, 50, len(rows)).astype(np.float64),
+        }).to_parquet(f, index=False, coerce_timestamps="us")
+        os.utime(f, (1_700_000_000 + 10 * i,) * 2)   # trigger order
+    batch = spark.read.parquet(str(src))
+    families = ["means", "moments", "extremes", "percentiles", "peaks2"]
+    stream, flush = closed_session_functionals(
+        spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1).parquet(str(src)),
+        gap="10 minutes", watermark="5 minutes", families=families)
+
+    def sessions(name):
+        return {(r.conv_id, (r.session_start - t0).total_seconds(),
+                 (r.session_end - t0).total_seconds()): r.n_turns
+                for r in spark.table(name).toPandas().itertuples()}
+
+    run_stream_to_memory(stream, "late_closed")
+    closed = {("a", 0, 720): 4, ("a", 1000, 1700): 2, ("b", 0, 700): 2,
+              ("d", 0, 1200): 2, ("e", 1600, 2200): 1}
+    assert sessions("late_closed") == closed
+    run_stream_to_memory(stream, "late_all", flush=flush)
+    kept = batch.filter(~((F.col("conv_id") == "a")
+                          & (F.col("turn_idx") == 6)))
+    assert sessions("late_all") == {
+        **closed, ("a", 2500, 3100): 1, ("b", 2100, 2700): 1,
+        ("c", 2400, 3050): 3}
+    want = {(c, (s - t0).total_seconds(), (e - t0).total_seconds()): n
+            for (c, s, e), n in _batch_sessions(kept, "10 minutes").items()}
+    assert sessions("late_all") == want
+    _check_features(spark.table("late_all").toPandas(), kept.toPandas(),
+                    families)
+
+
+def test_flush_after_empty_input(spark, tmp_path):
+    """No micro-batch ran, so there is no state to flush: the table is
+    empty, not an error."""
+    from opensmile_spark.streaming import (
+        closed_session_functionals, run_stream_to_memory,
+    )
+
+    stream, flush = closed_session_functionals(
+        spark.readStream.schema("conv_id string, turn_idx int, ts timestamp,"
+                                " char_len double").parquet(str(tmp_path)),
+        families=["means"])
+    run_stream_to_memory(stream, "empty_out", flush=flush)
+    assert spark.table("empty_out").count() == 0
 
 
 def test_dedup_stream_drops_duplicates(spark, tmp_path):

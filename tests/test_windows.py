@@ -98,6 +98,14 @@ def test_multi_conv_isolation(spark):
     assert all(v == 100.0 for k, v in vals.items() if k[0] == "b")
 
 
+def test_median_smooth_even_window_raises(spark):
+    from opensmile_spark.operators import median_smooth
+
+    df = make_conv(spark, "a", [1.0, 2.0, 3.0])
+    with pytest.raises(ValueError, match="odd"):
+        median_smooth(df, ["x"], win=4)
+
+
 def test_window_weights_reference_formulas():
     import numpy as np
 

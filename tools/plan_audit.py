@@ -14,8 +14,9 @@ Checks (SURVEY.md §4 / BENCH.md plan-level claims):
   6. pre_partitioned kernel has NO exchange.
   7. backfill_functionals and viterbi_smooth_df are one MapInArrow each
      (backfill: over one exchange), with no pandas boundary.
-  8. closed_session_functionals' process_batch is exactly one MapInArrow,
-     with no pandas boundary.
+  8. closed_session_functionals on a streaming frame is one
+     FlatMapGroupsInPandasWithState over one Exchange, with no aggregate
+     (session_window) and no MapInPandas/MapInArrow.
 
 Usage: python tools/plan_audit.py
 """
@@ -168,17 +169,25 @@ def main():
           f"(arrow={n_op('MapInArrow', p)}, "
           f"pandas={n_op('MapInPandas', p)})")
 
-    # closed-session functionals: every session of an Arrow batch goes
-    # through one compute_groups call — no per-session pandas kernel
+    # closed-session functionals on a STREAMING frame: one stateful
+    # applyInPandasWithState processor per conv_id over one exchange — no
+    # session_window aggregate, no batch-side Arrow/pandas map
     from opensmile_spark.streaming import closed_session_functionals
 
-    sessions, process_batch = closed_session_functionals(
-        laid.select("conv_id", "turn_idx", "ts", "char_len"))
-    p = explain(process_batch(sessions))
-    check("closed_session_functionals one MapInArrow, no pandas",
-          n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
-          f"(arrow={n_op('MapInArrow', p)}, "
-          f"pandas={n_op('MapInPandas', p)})")
+    rate = spark.readStream.format("rate").load().select(
+        (F.col("value") % 3).cast("string").alias("conv_id"),
+        F.col("value").cast("int").alias("turn_idx"),
+        F.col("timestamp").alias("ts"),
+        F.col("value").cast("double").alias("char_len"))
+    p = explain(closed_session_functionals(rate)[0])
+    n_agg = count(r"\(\d+\) \w*Aggregate", p)
+    maps = n_op("MapInPandas", p) + n_op("MapInArrow", p)
+    check("closed_session_functionals one stateful processor, one exchange",
+          n_op("FlatMapGroupsInPandasWithState", p) == 1
+          and n_op("Exchange", p) == 1 and n_agg == 0 and maps == 0,
+          f"(stateful={n_op('FlatMapGroupsInPandasWithState', p)}, "
+          f"exchanges={n_op('Exchange', p)}, aggregates={n_agg}, "
+          f"maps={maps})")
 
     # round-2 additions -----------------------------------------------------
     from opensmile_spark.dedup import embedding_near_dups
