@@ -5623,11 +5623,12 @@ def q_streaming_sessions(spark, sf_dir):
     sessions still open at end of input — the reference's end-of-input
     ticks (componentManager.cpp:1485-1502). No sentinel row: every
     session of every conversation must come out of the library. The
-    oracle is the pure-batch SQL session rule (split when gap >= 433 s;
-    the stream, like session_window, splits when gap > 433 s — the two
-    differ only on a gap of exactly 433 s) + the same single-pass
-    aggregates. Stream/batch equivalence as a driver gate, not just a
-    pytest (test_streaming.py pins the remaining streaming surface)."""
+    oracle is the pure-batch SQL session rule of the engine (rows ordered
+    by (ts, turn_idx); a turn more than 433 s after the previous one,
+    compared in integer microseconds, starts a new session, so a turn
+    exactly 433 s later stays in it) + the same single-pass aggregates.
+    Stream/batch equivalence as a driver gate, not just a pytest
+    (test_streaming.py pins the remaining streaming surface)."""
     import shutil
     import tempfile
     import uuid
@@ -6264,13 +6265,13 @@ WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx
 
 _ORACLES["streaming_sessions"] = SQL_PREFIX + """
 , flagged AS (
-  SELECT conv_id, 1e-6*epoch_us(ts) AS e, char_len,
-    CASE WHEN 1e-6*epoch_us(ts) - 1e-6*epoch_us(lag(ts) OVER
-              (PARTITION BY conv_id ORDER BY turn_idx)) >= 433
+  SELECT conv_id, turn_idx, 1e-6*epoch_us(ts) AS e, char_len,
+    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
+              (PARTITION BY conv_id ORDER BY ts, turn_idx)) > 433000000
          THEN 1 ELSE 0 END AS new_sess
   FROM lld
 ), sess AS (
-  SELECT *, SUM(new_sess) OVER (PARTITION BY conv_id ORDER BY e
+  SELECT *, SUM(new_sess) OVER (PARTITION BY conv_id ORDER BY e, turn_idx
              ROWS UNBOUNDED PRECEDING) AS sid
   FROM flagged
 )

@@ -12,10 +12,12 @@ sub-components (:349-365):
    whole groups (groupbatch.group_blocks feeding batched.compute_groups;
    the shared pre-pass lives inside the numpy kernels, since Catalyst
    cannot CSE across a UDF boundary — SURVEY.md §4).
-2. `functionals_sql` — pure built-in aggregate expressions for the families
-   that are single-pass aggregates (means/moments/extremes/percentiles/
-   regression closed forms). Zero Python, map-side partial aggregation,
-   whole-stage codegen — the fast path at 100 TB.
+2. `functionals_sql` — pure built-in expressions for the families that
+   are single-pass aggregates (means/moments/extremes/regression closed
+   forms) plus exact percentiles, in one groupBy. Zero Python; the
+   declarative bank combines map-side and compiles whole-stage; the
+   percentiles, not map-side combinable, are a whole-group window on
+   the rows the groupBy already reads — the fast path at 100 TB.
 
 Both emit identical column names so they are interchangeable and
 cross-checkable.
@@ -186,7 +188,7 @@ def functionals_sql(
     order_col: str = "turn_idx",
     percentiles=(0.20, 0.50, 0.80),
 ) -> DataFrame:
-    """SQL-native fast path: single groupBy with built-in aggregates.
+    """SQL-native fast path: one groupBy with built-in aggregates.
 
     Covers the single-pass families with the exact reference formulas:
       means   (functionalMeans.cpp:117-264): amean absmean qmean rqmean
@@ -201,29 +203,20 @@ def functionals_sql(
       regression (functionalRegression.cpp:219-240): linregc1/c2 closed form
               over the 0..N-1 index axis.
 
-    All map-side combinable except `percentile` (which buffers per group) —
-    still no Python, no extra shuffle beyond the groupBy. All percentile
-    outputs of a column share ONE percentile(x, array(...)) aggregate (r6):
-    the scalar calls each kept their own value buffer and per-group sort —
-    5 identical buffers per column; the array form computes every requested
-    percentile from a single buffer with the same interpolation, so the
-    doubles are identical (guide §1.2 per-task work).
-
-    The percentile aggregates run in a SEPARATE groupBy joined back on the
-    group key (r6): `percentile` is TypedImperative, and ONE such function
-    in the aggregate list forces the whole operator into
-    ObjectHashAggregateExec, which does not participate in whole-stage
-    codegen — every declarative sum/moment/extreme in the bank was paying
-    interpreted per-row evaluation for it (~2x the stage, measured:
-    interpreted full agg 1.0 s vs 0.46 s split at sf0.1). Split, the wide
-    declarative aggregate compiles (HashAggregateExec) and the small
-    percentile-only ObjectHashAggregate runs beside it; both sides hang
-    off the SAME window subtree, so the shuffle is shared (ReusedExchange)
-    and the join is null-safe (<=>), so a NULL group key survives it. The
-    null-safe join keys on (coalesce(key), isnull(key)), which costs one
-    exchange of the aggregated rows (one row per group) on each side.
-    Aggregation semantics per group are untouched — the same aggregate
-    functions see the same rows — so the doubles are identical.
+    One projection, then one groupBy. The declarative aggregates combine
+    map-side and compile whole-stage (HashAggregateExec). All percentile
+    outputs of a column come from ONE percentile(x, array(...)): the
+    array form computes every requested percentile from a single value
+    buffer and sort, with the same interpolation. That call is a window
+    over the whole group (PARTITION BY the key, no ORDER BY), so the sort
+    the row_number window puts on (key, order_col) serves it: no extra
+    sort or shuffle. Every row of a group carries the group's array, and
+    each percentile output is max(element_at(array, i)) in the one
+    aggregate, which returns that value's bits. As an aggregate, the
+    TypedImperative `percentile` would force the whole operator into the
+    interpreted ObjectHashAggregateExec (measured ~2x the stage at
+    sf0.1). A NULL key is a group of its own in the window and in the
+    groupBy alike.
 
     Every expression is SQL text (_fsql_exprs), parsed once per builder
     call: built node by node as Columns, the bank's ~160 aggregate and
@@ -232,19 +225,11 @@ def functionals_sql(
     `0.0` parses as DECIMAL.
     """
     group_cols = list(group_cols)
-    proj_cols, pct_aggs, aggs, final = _fsql_exprs(
-        group_cols, value_cols, order_col, percentiles)
+    proj_cols, aggs = _fsql_exprs(group_cols, value_cols, order_col,
+                                  percentiles)
     keys = [sql_ident(c) for c in group_cols]
-    proj = df.selectExpr(*proj_cols)
-    decl = proj.groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
-    pct = proj.groupBy(*(F.expr(f"{k} AS `__pk{i}`")
-                         for i, k in enumerate(keys))) \
-        .agg(*map(F.expr, pct_aggs))
-    # null-safe: a NULL group key is a group of its own and must not be
-    # dropped by the join
-    out = decl.join(pct, [F.expr(k).eqNullSafe(F.col(f"__pk{i}"))
-                          for i, k in enumerate(keys)])
-    return out.selectExpr(*keys, *final)
+    return df.selectExpr(*proj_cols) \
+        .groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
 
 
 def _fsql_named(c: str) -> dict:
@@ -298,14 +283,8 @@ def _fsql_named(c: str) -> dict:
 
 def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
     """SQL text of functionals_sql's expressions (see its docstring):
-    (projection, percentile aggs, declarative aggs, final select)."""
+    (projection, aggregates in output order)."""
     keys = ", ".join(map(sql_ident, group_cols))
-    proj_cols = [
-        *map(sql_ident, [*group_cols, *value_cols]),
-        f"CAST((row_number() OVER (PARTITION BY {keys} ORDER BY "
-        f"{sql_ident(order_col)}) - 1) AS DOUBLE) AS __i",
-    ]
-
     pct_list = [0.25, 0.50, 0.75]
     for p in percentiles:
         if float(p) not in pct_list:
@@ -313,18 +292,19 @@ def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
     pidx = {p: i + 1 for i, p in enumerate(pct_list)}   # element_at: 1-based
     pct_arr = ", ".join(map(sql_double, pct_list))
 
-    pct_aggs = [
-        f"percentile({sql_ident(c)}, array({pct_arr}), 1) "
-        f"AS {sql_ident('__pct_' + c)}"
-        for c in value_cols
+    proj_cols = [
+        *map(sql_ident, [*group_cols, *value_cols]),
+        f"CAST((row_number() OVER (PARTITION BY {keys} ORDER BY "
+        f"{sql_ident(order_col)}) - 1) AS DOUBLE) AS __i",
+        *(f"percentile({sql_ident(c)}, array({pct_arr}), 1) OVER "
+          f"(PARTITION BY {keys}) AS {sql_ident('__pct_' + c)}"
+          for c in value_cols),
     ]
 
     aggs = ["CAST(count(*) AS BIGINT) AS n_turns"]
-    final: list = ["n_turns"]
     for c in value_cols:
         named = _fsql_named(c)
         aggs += [f"{e} AS {sql_ident(f'{c}_{k}')}" for k, e in named.items()]
-        final += [sql_ident(f"{c}_{k}") for k in named]
 
         x = sql_ident(c)
         n = f"count({x})"
@@ -332,7 +312,9 @@ def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
         pct_col = sql_ident("__pct_" + c)
 
         def pq(p):
-            return f"element_at({pct_col}, {pidx[float(p)]})"
+            # every row of a group carries the group's array: max picks
+            # its value bit for bit
+            return f"max(element_at({pct_col}, {pidx[float(p)]}))"
 
         pcts = {
             "quartile1": pq(0.25),
@@ -344,7 +326,7 @@ def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
         if len(percentiles) >= 3:
             pcts["pctlrange0-2"] = \
                 f"abs(({pq(percentiles[-1])} - {pq(percentiles[0])}))"
-        final += [f"{e} AS {sql_ident(f'{c}_{k}')}" for k, e in pcts.items()]
+        aggs += [f"{e} AS {sql_ident(f'{c}_{k}')}" for k, e in pcts.items()]
         # linear regression on index axis i=0..N-1 (functionalRegression.cpp:
         # 219-240): S1=N(N-1)/2, S2=N(N-1)(2N-1)/6,
         # t=(sum_y - num*S1/S2)/(N - S1^2/S2), m=(num - t*S1)/S2
@@ -359,6 +341,5 @@ def _fsql_exprs(group_cols, value_cols, order_col: str, percentiles):
                    f" / {s2}) ELSE 0.0D END")
         aggs += [f"{m_slope} AS {sql_ident(c + '_linregc1')}",
                  f"{t_off} AS {sql_ident(c + '_linregc2')}"]
-        final += [sql_ident(c + "_linregc1"), sql_ident(c + "_linregc2")]
 
-    return proj_cols, pct_aggs, aggs, final
+    return proj_cols, aggs

@@ -103,14 +103,24 @@ def test_emo_large_style_preset(spark):
     assert out.count() > 100
 
 
-# --- the r6 functionals_sql percentile split -------------------------------
-# The split moved `percentile` into its own groupBy joined back on the group
-# key (so the wide declarative aggregate whole-stage-compiles); these tests
-# pin BIT-exact equality of the split's percentile outputs against the
-# direct single-aggregate percentile formulation on adversarial groups —
-# ties, -0.0/0.0 (SQL sort ties them, Percentile's boxed-key ordering does
-# not — equality must survive both), NaN, nulls, all-null, singleton,
-# two-element.
+# --- functionals_sql percentiles in one pass ------------------------------
+# The percentiles are a whole-group `percentile(x, array(...), 1)` window
+# feeding the same groupBy as the declarative bank (each output is
+# max(element_at(array, i)) over rows that all carry the group's array);
+# these tests pin BIT-exact equality of those outputs against the direct
+# single-aggregate percentile formulation on adversarial groups — ties,
+# -0.0/0.0 (SQL sort ties them, Percentile's boxed-key ordering does not —
+# equality must survive both), NaN, nulls, all-null, singleton,
+# two-element — for several percentile sets and for a two-column key with
+# NULL in its second column, and that no group is lost.
+
+PCT_SETS = [(0.20, 0.50, 0.80), (0.1, 0.25, 0.9, 0.99), (0.5,)]
+
+
+def _k2(i):
+    """Second key column of the adversarial rows: NULL, 1, 0, NULL, ..."""
+    return None if i % 3 == 0 else i % 2
+
 
 ADVERSARIAL = {
     "g_ties": [1.0, 1.0, 1.0, 2.0, 2.0, 3.0],
@@ -126,54 +136,82 @@ ADVERSARIAL = {
 }
 
 
-def test_split_percentiles_bit_exact_vs_direct(spark):
+def test_window_percentiles_bit_exact_vs_direct(spark):
     from pyspark.sql import functions as F
 
     from opensmile_spark.functionals import functionals_sql
 
-    rows = [(g, i, v) for g, vals in ADVERSARIAL.items()
+    rows = [(g, _k2(i), i, v) for g, vals in ADVERSARIAL.items()
             for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, v double")
+    df = spark.createDataFrame(
+        rows, "conv_id string, k2 int, turn_idx int, v double")
 
-    got = functionals_sql(df, ["v"])
+    for keys in (["conv_id"], ["conv_id", "k2"]):
+        n_groups = df.select(*keys).distinct().count()
+        for pcts in PCT_SETS:
+            got = functionals_sql(df, ["v"], keys, percentiles=pcts)
+            assert ("v_pctlrange0-2" in got.columns) == (len(pcts) >= 3)
 
-    # direct formulation: ONE percentile(x, array(...)) aggregate (the
-    # pre-split physical strategy), same pct order as _fsql_exprs
-    pct_list = [0.25, 0.50, 0.75, 0.2, 0.8]
-    direct = (
-        df.groupBy("conv_id")
-        .agg(F.percentile(F.col("v"), F.array(*[F.lit(p) for p in pct_list]))
-             .alias("p"))
-        .select("conv_id",
-                *[F.element_at("p", i + 1).alias(f"d{i}")
-                  for i in range(len(pct_list))])
-    )
-    names = {"v_quartile1": "d0", "v_quartile2": "d1", "v_quartile3": "d2",
-             "v_percentile20.0": "d3", "v_percentile80.0": "d4"}
-    j = got.select("conv_id", *[F.col(f"`{c}`") for c in names]) \
-        .join(direct, "conv_id")
-    # string cast distinguishes -0.0 from 0.0 and NaN from numbers — the
-    # same discrimination the driver's byte-hash applies
-    bad = j.filter(" OR ".join(
-        f"(cast(`{a}` as string) IS DISTINCT FROM cast(`{b}` as string))"
-        for a, b in names.items()))
-    assert bad.count() == 0, bad.collect()
+            # direct formulation: ONE percentile(x, array(...)) aggregate,
+            # same pct order as _fsql_exprs
+            pct_list = [0.25, 0.50, 0.75]
+            pct_list += [p for p in pcts if p not in pct_list]
+            direct = (
+                df.groupBy(*keys)
+                .agg(F.percentile(F.col("v"),
+                                  F.array(*[F.lit(p) for p in pct_list]))
+                     .alias("p"))
+                .select(*[F.col(k).alias(f"__d_{k}") for k in keys],
+                        *[F.element_at("p", i + 1).alias(f"d{i}")
+                          for i in range(len(pct_list))])
+            )
+            names = {"v_quartile1": "d0", "v_quartile2": "d1",
+                     "v_quartile3": "d2",
+                     **{f"v_percentile{p * 100:.1f}":
+                        f"d{pct_list.index(p)}" for p in pcts}}
+            # null-safe: the NULL-key groups are compared too
+            j = got.select(*keys, *[F.col(f"`{c}`") for c in names]) \
+                .join(direct, [F.col(k).eqNullSafe(F.col(f"__d_{k}"))
+                               for k in keys])
+            assert j.count() == n_groups == got.count()
+            # string cast distinguishes -0.0 from 0.0 and NaN from numbers
+            # — the same discrimination the driver's byte-hash applies
+            bad = j.filter(" OR ".join(
+                f"(cast(`{a}` as string) IS DISTINCT FROM "
+                f"cast(`{b}` as string))" for a, b in names.items()))
+            assert bad.count() == 0, (keys, pcts, bad.collect())
 
 
-def test_split_join_loses_no_groups(spark):
-    """Every group (incl. all-null value groups and the NULL-key group)
-    must survive the decl-pct join with the full aggregate row set."""
+def test_one_pass_loses_no_groups(spark):
+    """Every group (incl. all-null value groups, the NULL-key group and
+    the groups whose second key column is NULL) comes out of the one
+    groupBy with the full aggregate row set."""
     from opensmile_spark.functionals import functionals_sql
 
     groups = {**ADVERSARIAL, None: [4.0, 1.0, 2.0]}
-    rows = [(g, i, v) for g, vals in groups.items()
+    rows = [(g, _k2(i), i, v) for g, vals in groups.items()
             for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, v double")
-    out = functionals_sql(df, ["v"]).collect()
-    assert len(out) == len(groups)
-    assert {r["conv_id"] for r in out} == set(groups)
-    by_g = {r["conv_id"]: r for r in out}
-    assert by_g["g_allnull"]["n_turns"] == 3
-    assert by_g["g_one"]["v_quartile2"] == 42.5
-    assert by_g[None]["n_turns"] == 3
-    assert by_g[None]["v_quartile2"] == 2.0
+    df = spark.createDataFrame(
+        rows, "conv_id string, k2 int, turn_idx int, v double")
+    for pcts in PCT_SETS:
+        out = functionals_sql(df, ["v"], percentiles=pcts).collect()
+        assert len(out) == len(groups)
+        assert {r["conv_id"] for r in out} == set(groups)
+        by_g = {r["conv_id"]: r for r in out}
+        assert by_g["g_allnull"]["n_turns"] == 3
+        assert by_g["g_one"]["v_quartile2"] == 42.5
+        assert by_g[None]["n_turns"] == 3
+        assert by_g[None]["v_quartile2"] == 2.0
+
+        out = functionals_sql(df, ["v"], ("conv_id", "k2"),
+                              percentiles=pcts).collect()
+        want = {(g, _k2(i)) for g, vals in groups.items()
+                for i in range(len(vals))}
+        assert len(out) == len(want)
+        assert {(r["conv_id"], r["k2"]) for r in out} == want
+        by_g = {(r["conv_id"], r["k2"]): r for r in out}
+        # g_null's rows 0 and 3 (None, 5.0) share k2 NULL
+        assert by_g[("g_null", None)]["n_turns"] == 2
+        assert by_g[("g_null", None)]["v_quartile2"] == 5.0
+        assert by_g[(None, None)]["v_quartile2"] == 4.0
+        assert by_g[(None, 1)]["n_turns"] == 1

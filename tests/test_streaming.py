@@ -353,3 +353,46 @@ def test_streaming_nb_score_foreachbatch(spark, tmp_path):
     for d in want:
         assert got[d][0] == pytest.approx(want[d][0], rel=1e-12)
         assert got[d][1] == want[d][1]
+
+
+def test_streaming_sessions_gate_oracle_splits_like_engine(spark, tmp_path):
+    """The streaming_sessions gate's DuckDB oracle applies the engine's
+    session rule: a turn exactly 433 s after the previous one stays in the
+    session, 432 s stays, 434 s splits."""
+    import importlib.util
+
+    import duckdb
+    import pandas as pd
+
+    from tools.check_correctness import compare
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "spark_entry_under_test", os.path.join(repo, "__spark_entry__.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    # the driver's events schema; user 1: one gap of exactly 433 s,
+    # user 2: gaps of 432 s and 434 s
+    t0 = pd.Timestamp("2024-01-01 00:09:58.778549")
+    offsets = {1: [0, 433], 2: [0, 432, 866]}
+    ev = pd.DataFrame(
+        [(u, t0 + pd.Timedelta(seconds=s)) for u, offs in offsets.items()
+         for s in offs], columns=["user_id", "ts"])
+    ev.insert(0, "event_id", range(len(ev)))
+    ev["event_type"] = "click"
+    ev["value"] = 1.5
+    ev["props"] = ev["event_id"].map(lambda i: f'{{"k": {i}}}')
+    ev["ts"] = ev["ts"].astype("datetime64[us]")
+    ev.to_parquet(tmp_path / "events.parquet", index=False)
+
+    got = mod.queries()["streaming_sessions"](spark, str(tmp_path)) \
+        .toPandas()
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{tmp_path / 'events.parquet'}')")
+    want = con.execute(mod.oracle_sql()["streaming_sessions"]).df()
+
+    assert sorted(zip(got["conv_id"], got["n_turns"])) == \
+        [("u1", 2), ("u2", 1), ("u2", 2)]
+    assert compare("streaming_sessions", got, want) == []

@@ -5,10 +5,10 @@ Checks (SURVEY.md §4 / BENCH.md plan-level claims):
      (window specs share partitioning).
   2. Column pruning reaches the parquet scan (ReadSchema shows only the
      needed columns) and filters push down (PushedFilters).
-  3. functionals_sql has no Python and the r6 split shape: one
-     partial+final HashAggregate pair for the declarative bank, one
-     ObjectHashAggregate pair holding only the percentiles, no
-     SortAggregate.
+  3. functionals_sql has no Python and is one pass: one Scan, one
+     Exchange, one partial+final HashAggregate pair, no
+     ObjectHashAggregate, SortAggregate, join or BroadcastExchange, and
+     `percentile(` only inside a Window node.
   4. asof_join is one exchange + one sort + window — no join node at all.
   5. MVN full-mode stats join is a broadcast join (no shuffled join).
   6. pre_partitioned kernel has NO exchange.
@@ -100,21 +100,24 @@ def main():
     p = explain(fs)
     check("functionals_sql no Python",
           "Python" not in p and "FlatMap" not in p)
-    # the r6 split: the declarative bank is one whole-stage-compiled
-    # HashAggregate pair, the percentile side one ObjectHashAggregate pair
-    # whose functions are percentiles only — an aggregate rendered onto the
-    # wrong side changes these counts
+    # one pass: the percentiles are a whole-group window over the rows the
+    # row_number window already sorted, feeding the ONE whole-stage-compiled
+    # HashAggregate pair — a second aggregate, a join back on the key or a
+    # percentile rendered as an aggregate changes these counts
     n_hash, n_obj = n_op("HashAggregate", p), n_op("ObjectHashAggregate", p)
-    n_sort = n_op("SortAggregate", p)
-    obj_fns = re.findall(r"\(\d+\) ObjectHashAggregate\n.*\nKeys.*\n"
-                         r"Functions \[(\d+)\]: \[(.*)\]", p)
-    pct_only = all(int(k) == len(re.findall(r"percentile\(", fns))
-                   for k, fns in obj_fns)
-    check("functionals_sql split aggs",
-          (n_hash, n_obj, n_sort) == (2, 2, 0) and len(obj_fns) == 2
-          and pct_only,
-          f"(HashAggregate={n_hash}, ObjectHashAggregate={n_obj}, "
-          f"SortAggregate={n_sort}, percentile-only={pct_only})")
+    n_sort, n_scan = n_op("SortAggregate", p), n_op("Scan parquet", p)
+    n_ex, n_join = n_op("Exchange", p), n_op(r"\w*Join", p)
+    n_bx = n_op("BroadcastExchange", p)
+    pct_nodes = {node for node, body in re.findall(
+        r"\n\(\d+\) (\w+)[^\n]*\n(.*?)(?=\n\(\d+\) |\Z)", p, re.S)
+        if "percentile(" in body}
+    check("functionals_sql one pass",
+          (n_scan, n_ex, n_hash, n_obj, n_sort, n_join, n_bx)
+          == (1, 1, 2, 0, 0, 0, 0) and pct_nodes == {"Window"},
+          f"(scans={n_scan}, exchanges={n_ex}, HashAggregate={n_hash}, "
+          f"ObjectHashAggregate={n_obj}, SortAggregate={n_sort}, "
+          f"joins={n_join}, BroadcastExchange={n_bx}, "
+          f"percentile in {sorted(pct_nodes)})")
 
     anchors = lld.select("conv_id", F.col("ts").alias("anchor_ts"))
     aj = asof_join(anchors, lld.select("conv_id", "ts", "char_len"),
