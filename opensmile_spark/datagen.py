@@ -31,7 +31,6 @@ _VOCAB = [
     "read", "write", "commit", "data", "row",
 ]
 
-_ROLES = ["user", "assistant", "tool", "system"]
 _TOOLS = ["search", "calc", "code", "fetch"]
 
 

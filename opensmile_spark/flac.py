@@ -1,4 +1,4 @@
-"""Pure-python FLAC decoder + test encoder (the xiph.org format spec).
+"""Pure-python FLAC decoder (the xiph.org format spec).
 
 Closes the compressed-AUDIO leg of the multimodal corpus path (speech
 corpora ship FLAC pervasively): STREAMINFO parse, frame headers
@@ -9,10 +9,8 @@ and stereo decorrelation (left/side, right/side, mid/side). CRCs are
 not verified (corpus decode favors recovering samples; structural
 errors raise ValueError).
 
-The encoder exists for tests: FIXED-predictor subframes with Rice
-residuals (plus CONSTANT for flat blocks), independent channels. FLAC
-is lossless, so encode->decode must reproduce int samples exactly —
-the same oracle style as the PNG/GIF codecs.
+FLAC is lossless, so the roundtrip tests (encoder in
+tests/encoders.py) pin decode to reproduce int samples exactly.
 
 Per-payload kernel invoked from the Arrow-batched UDF in multimodal.py;
 no Spark objects here.
@@ -274,149 +272,3 @@ def decode_flac(payload: bytes):
     if total:
         x = x[:total]
     return x.astype(np.float64) / float(1 << (bps - 1)), sr
-
-
-def _crc8(data: bytes) -> int:
-    """CRC-8, poly x^8+x^2+x+1 (0x07), init 0 — frame-header CRC."""
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07 if crc & 0x80 else crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16, poly x^16+x^15+x^2+1 (0x8005), init 0 — frame CRC."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005 if crc & 0x8000
-                   else crc << 1) & 0xFFFF
-    return crc
-
-
-# ---- encoder (tests) -------------------------------------------------------
-
-
-class _BitsW:
-    """MSB-first bit writer."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int):
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int):
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def byte_align(self):
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-
-def _rice_encode(bw: _BitsW, res: np.ndarray, param: int):
-    for v in res:
-        u = (int(v) << 1) ^ (int(v) >> 63)       # zigzag (int64)
-        q, r = u >> param, u & ((1 << param) - 1)
-        bw.write_unary(q)
-        if param:
-            bw.write(r, param)
-
-
-def _best_rice_param(res: np.ndarray) -> int:
-    mean = float(np.abs(res).mean()) if len(res) else 0.0
-    p = 0
-    while (1 << p) < mean + 1 and p < 14:
-        p += 1
-    return p
-
-
-def encode_flac(samples: np.ndarray, sample_rate: int,
-                bps: int = 16, blocksize: int = 4096,
-                fixed_order: int = 2) -> bytes:
-    """FLAC from int samples (n,) or (n, channels) — independent
-    channels, FIXED-predictor subframes (CONSTANT for flat blocks),
-    single Rice partition. Lossless by construction."""
-    x = np.asarray(samples, dtype=np.int64)
-    if x.ndim == 1:
-        x = x[:, None]
-    n, channels = x.shape
-    if not 0 <= fixed_order <= 4:
-        raise ValueError("fixed_order must be 0-4")
-
-    out = bytearray(b"fLaC")
-    si = _BitsW()
-    si.write(blocksize, 16)
-    si.write(blocksize, 16)
-    si.write(0, 24)
-    si.write(0, 24)
-    si.write(sample_rate, 20)
-    si.write(channels - 1, 3)
-    si.write(bps - 1, 5)
-    si.write(n, 36)
-    si.byte_align()
-    body = bytes(si.out) + b"\x00" * 16          # md5 unset
-    out += bytes([0x80]) + struct.pack(">I", len(body))[1:] + body
-
-    frame_no = 0
-    for start in range(0, n, blocksize):
-        blk = x[start:start + blocksize]
-        bs = blk.shape[0]
-        bw = _BitsW()
-        bw.write(0b11111111111110, 14)
-        bw.write(0, 1)                           # reserved
-        bw.write(0, 1)                           # fixed blocksize strategy
-        bw.write(7, 4)                           # blocksize: 16-bit follows
-        bw.write(0, 4)                           # sample rate: STREAMINFO
-        bw.write(channels - 1, 4)                # independent channels
-        bw.write({8: 1, 12: 2, 16: 4, 20: 5, 24: 6}.get(bps, 4), 3)
-        bw.write(0, 1)                           # reserved
-        # UTF-8 frame number (frames are tiny in tests: 1-2 bytes)
-        if frame_no < 0x80:
-            bw.write(frame_no, 8)
-        else:
-            bw.write(0xC0 | (frame_no >> 6), 8)
-            bw.write(0x80 | (frame_no & 0x3F), 8)
-        bw.write(bs - 1, 16)
-        bw.write(_crc8(bytes(bw.out)), 8)        # frame-header CRC-8
-        for c in range(channels):
-            ch = blk[:, c]
-            bw.write(0, 1)                       # padding
-            if np.all(ch == ch[0]):
-                bw.write(0, 6)                   # CONSTANT
-                bw.write(0, 1)                   # no wasted bits
-                bw.write(int(ch[0]), bps)
-                continue
-            order = min(fixed_order, bs - 1)
-            bw.write(8 + order, 6)               # FIXED
-            bw.write(0, 1)                       # no wasted bits
-            for i in range(order):
-                bw.write(int(ch[i]), bps)
-            coefs = _FIXED_COEFS[order]
-            res = np.array(
-                [int(ch[i]) - sum(c2 * int(ch[i - 1 - j])
-                                  for j, c2 in enumerate(coefs))
-                 for i in range(order, bs)], dtype=np.int64)
-            bw.write(0, 2)                       # rice method 0 (4-bit)
-            bw.write(0, 4)                       # partition order 0
-            param = min(_best_rice_param(res), 14)
-            bw.write(param, 4)
-            _rice_encode(bw, res, param)
-        bw.byte_align()
-        bw.write(_crc16(bytes(bw.out)), 16)      # whole-frame CRC-16
-        out += bytes(bw.out)
-        frame_no += 1
-    return bytes(out)

@@ -1,4 +1,4 @@
-"""Pure-python GIF codec (GIF87a/89a) — stdlib + numpy.
+"""Pure-python GIF decoder (GIF87a/89a) — stdlib + numpy.
 
 Closes the GIF leg of the multimodal corpus-decode path: header +
 logical-screen parse, global/local color tables, variable-width LSB-first
@@ -8,10 +8,8 @@ disposal methods 0-3) and multi-frame animation composited onto the
 logical screen — so an animated GIF decodes to a frame stack the video
 featurizer consumes, and a single-frame GIF to one RGB image.
 
-Also an encoder (`encode_gif`) for roundtrip tests: palette-indexed
-input (single frame or animation, optional interlace/transparency/
-frame patches) with a from-spec LZW compressor — lossless on indexed
-data, so encode->decode must reproduce the palette-mapped pixels
+GIF is lossless on indexed data, so the roundtrip tests (encoder in
+tests/encoders.py) pin decode to reproduce the palette-mapped pixels
 exactly.
 
 Per-payload kernel invoked from the Arrow-batched UDF in multimodal.py;
@@ -78,51 +76,6 @@ def _lzw_decode(data: bytes, min_code_size: int, npix: int) -> np.ndarray:
         if len(table) == (1 << width) and width < 12:
             width += 1
     return out
-
-
-def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    width = min_code_size + 1
-
-    def emit(code: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear)
-    cur = b""
-    for v in indices.tobytes():
-        nxt = cur + bytes([v])
-        if nxt in table:
-            cur = nxt
-            continue
-        emit(table[cur])
-        table[nxt] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << width) and width < 12:
-            width += 1
-        elif next_code > 4095:
-            emit(clear)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        cur = bytes([v])
-    if cur:
-        emit(table[cur])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
 
 
 _INTERLACE_PASSES = [(0, 8), (4, 8), (2, 4), (1, 2)]
@@ -245,55 +198,3 @@ def decode_gif(payload: bytes):
     if not frames:
         raise ValueError("GIF contains no image data")
     return frames, delays
-
-
-# ---- encoder ---------------------------------------------------------------
-
-
-def encode_gif(frames, palette: np.ndarray, delays=None,
-               interlace: bool = False, transparent: int | None = None,
-               disposal: int = 0) -> bytes:
-    """GIF89a from palette-INDEXED frames: `frames` is one (h, w) uint8
-    index array or a list of (index_array, (x, y)) patches (first frame
-    must be full-screen at (0, 0)); `palette` is (n, 3) uint8 with n a
-    power of two >= 2. Lossless on the indexed data."""
-    if isinstance(frames, np.ndarray):
-        frames = [(frames, (0, 0))]
-    palette = np.asarray(palette, dtype=np.uint8)
-    n = len(palette)
-    if n < 2 or n & (n - 1):
-        raise ValueError("palette size must be a power of two >= 2")
-    depth = max(1, int(n).bit_length() - 1)
-    h, w = frames[0][0].shape
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    out += palette.tobytes()
-    if delays is None:
-        delays = [0] * len(frames)
-    for (idx, (fx, fy)), delay in zip(frames, delays):
-        fh, fw = idx.shape
-        if len(frames) > 1 or transparent is not None:
-            packed = (disposal << 2) | (1 if transparent is not None
-                                        else 0)
-            out += bytes([0x21, 0xF9, 4, packed])
-            out += struct.pack("<H", delay)
-            out += bytes([transparent or 0, 0])
-        iflags = 0x40 if interlace else 0
-        out += bytes([0x2C]) + struct.pack("<HHHH", fx, fy, fw, fh) \
-            + bytes([iflags])
-        rows = idx
-        if interlace:
-            order = []
-            for start, step in _INTERLACE_PASSES:
-                order.extend(range(start, fh, step))
-            rows = idx[np.array(order, dtype=np.int64)]
-        min_code = max(2, depth)
-        out += bytes([min_code])
-        lzw = _lzw_encode(rows.reshape(-1), min_code)
-        for i in range(0, len(lzw), 255):
-            part = lzw[i:i + 255]
-            out += bytes([len(part)]) + part
-        out += b"\x00"
-    out += b"\x3B"
-    return bytes(out)

@@ -170,7 +170,7 @@ def _extend(v: int, size: int) -> int:
 
 def _seg(marker: int, payload: bytes) -> bytes:
     """One marker segment: marker, 2-byte length (incl. itself), payload —
-    shared by every encoder here and in jpeg_lossless.py."""
+    shared by `encode_jpeg` and the roundtrip encoders in tests/encoders.py."""
     return struct.pack(">HH", marker, len(payload) + 2) + payload
 
 
@@ -418,54 +418,6 @@ def encode_jpeg(rgb: np.ndarray, quality: int = 85) -> bytes:
     out += seg(0xFFDA, sos)
     out += bw.out
     out += b"\xff\xd9"                                        # EOI
-    return bytes(out)
-
-
-# generic 12-bit tables (T.81 F.1.2: DC SSSS reaches 15, AC size 14 —
-# past the 8-bit Annex K tables, so extended-precision streams carry
-# their own): 16 DC categories at 5 bits, all 226 AC symbols at 8 bits
-_DC12_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_DC12_VALS = list(range(16))
-_AC12_BITS = [0, 0, 0, 0, 0, 0, 0, 226, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC12_VALS = [0x00, 0xF0] + [(r << 4) | s
-                             for r in range(16) for s in range(1, 15)]
-
-
-def encode_jpeg12(samples: np.ndarray, quality: int = 85) -> bytes:
-    """12-bit extended sequential JPEG (SOF1), single grayscale component.
-    `samples` is (h, w) integers in 0..4095; quantization is the Annex K
-    luma table at the given quality (legal for any precision — dequant is
-    table-driven either way)."""
-    a = np.asarray(samples)
-    if a.ndim != 2:
-        raise ValueError("encode_jpeg12 expects (h, w) 12-bit samples")
-    h, w = a.shape
-    ql = _quality_scale(Q_LUM, quality)
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    padded = np.empty((ph, pw))
-    padded[:h, :w] = a
-    padded[h:, :w] = a[h - 1:h, :]
-    padded[:, w:] = padded[:, w - 1:w]
-    zz = _encode_blocks(padded, ql, center=2048.0)
-
-    dc = _canonical_codes(_DC12_BITS, _DC12_VALS)
-    ac = _canonical_codes(_AC12_BITS, _AC12_VALS)
-    bw = _BitWriter()
-    pred = 0
-    for blk in range(zz.shape[0]):
-        pred = _write_block(bw, zz[blk], pred, dc, ac)
-    bw.flush()
-
-    seg = _seg
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFDB,
-               bytes([0]) + bytes(ql.flatten()[ZIGZAG].astype(np.uint8)))
-    out += seg(0xFFC1, struct.pack(">BHHB", 12, h, w, 1) + bytes([1, 0x11, 0]))
-    out += seg(0xFFC4, bytes([0x00] + _DC12_BITS) + bytes(_DC12_VALS))
-    out += seg(0xFFC4, bytes([0x10] + _AC12_BITS) + bytes(_AC12_VALS))
-    out += seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += bw.out
-    out += b"\xff\xd9"
     return bytes(out)
 
 

@@ -1,4 +1,4 @@
-"""Lossless JPEG codec (ITU-T T.81 Annex H — lossless sequential Huffman,
+"""Lossless JPEG decoder (ITU-T T.81 Annex H — lossless sequential Huffman,
 SOF3). Closes the 'lossless variants raise' scope note in jpeg.py.
 
 Lossless JPEG is predictive DPCM, not DCT: each sample is predicted from
@@ -17,8 +17,8 @@ or the remainder of the line a restart landed on) uses the
 one-dimensional Ra predictor; the first sample of every other line
 predicts from Rb; all other samples use the selected predictor.
 
-Both directions are implemented so the decoder can be pinned by an exact
-roundtrip oracle (lossless means bit-identical samples, the strongest
+The decoder is pinned by an exact roundtrip oracle (encoder in
+tests/encoders.py; lossless means bit-identical samples, the strongest
 test a codec can have). Interleaved multi-component scans are supported
 at 1x1 sampling (the only layout produced for RGB/multichannel lossless
 in practice); subsampled lossless interleave raises.
@@ -36,13 +36,7 @@ import struct
 
 import numpy as np
 
-from .jpeg import (_BitWriter, _canonical_codes, _peek_table, _seg,
-                   _unstuff_entropy)
-
-# generic SSSS table: 17 symbols (0..16), all 5-bit codes — canonical per
-# Annex C (codes 0..16 of 5 bits; the all-ones code is never assigned)
-_LL_BITS = [0, 0, 0, 0, 17, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_LL_VALS = list(range(17))
+from .jpeg import _peek_table, _unstuff_entropy
 
 
 def _predict(ra: int, rb: int, rc: int, sel: int) -> int:
@@ -62,129 +56,6 @@ def _predict(ra: int, rb: int, rc: int, sel: int) -> int:
     if sel == 7:
         return (ra + rb) >> 1
     raise ValueError(f"invalid lossless predictor selector {sel}")
-
-
-def encode_jpeg_lossless(img: np.ndarray, predictor: int = 4,
-                         precision: int | None = None,
-                         point_transform: int = 0,
-                         restart_interval: int = 0) -> bytes:
-    """Encode (h, w) or (h, w, nc<=4) integer samples as a lossless JPEG
-    (SOF3). `precision` defaults to 8 for uint8 input, 16 otherwise;
-    samples must already fit the precision. Components are interleaved at
-    1x1 sampling; no color transform (lossless JPEG codes components
-    as-is). `restart_interval` > 0 emits RSTn every that many MCUs
-    (= sample positions), resetting prediction to the scan default."""
-    a = np.asarray(img)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    if a.ndim != 3 or a.shape[2] > 4:
-        raise ValueError("encode_jpeg_lossless expects (h, w[, nc<=4])")
-    if precision is None:
-        precision = 8 if a.dtype == np.uint8 else 16
-    if not 2 <= precision <= 16:
-        raise ValueError("lossless JPEG precision must be 2..16")
-    pt = int(point_transform)
-    h, w, nc = a.shape
-    s = (a.astype(np.int64) >> pt)
-
-    # Vectorized prediction (the decode side is inherently sequential —
-    # each prediction needs reconstructed neighbours — but the ENCODE side
-    # sees all samples up front, so the predictor lattice is pure numpy):
-    # base = selected predictor from shifted views, then the H.1.2.2 edge
-    # overlays — Rb for column 0, Ra for every sample on a line where the
-    # scan/a restart interval began, the default at each reset sample.
-    ra = np.empty_like(s)
-    rb = np.empty_like(s)
-    rc = np.empty_like(s)
-    ra[:, 1:] = s[:, :-1]
-    ra[:, :1] = 0
-    rb[1:] = s[:-1]
-    rb[:1] = 0
-    rc[1:, 1:] = s[:-1, :-1]
-    rc[:1] = 0
-    rc[:, :1] = 0
-    if predictor == 1:
-        pred = ra.copy()
-    elif predictor == 2:
-        pred = rb.copy()
-    elif predictor == 3:
-        pred = rc.copy()
-    elif predictor == 4:
-        pred = ra + rb - rc
-    elif predictor == 5:
-        pred = ra + ((rb - rc) >> 1)
-    elif predictor == 6:
-        pred = rb + ((ra - rc) >> 1)
-    elif predictor == 7:
-        pred = (ra + rb) >> 1
-    else:
-        raise ValueError(f"invalid lossless predictor selector {predictor}")
-    pred[1:, 0] = s[:-1, 0]                    # column 0: Rb
-    default = 1 << (precision - pt - 1)
-    resets = [0]                               # flat MCU indices that reset
-    if restart_interval:
-        resets += list(range(restart_interval, h * w, restart_interval))
-    line1 = np.zeros((h, w), dtype=bool)       # Ra-rule region (H.1.2.2)
-    for m in resets:
-        y0, x0 = divmod(m, w)
-        line1[y0, x0 + 1:] = True
-    pred[line1] = ra[line1]
-    for m in resets:
-        y0, x0 = divmod(m, w)
-        pred[y0, x0] = default
-    # modulo-65536 differences mapped to [-32768, 32767], flat (y, x, c)
-    diffs = ((s - pred + 32768) % 65536 - 32768).ravel().tolist()
-
-    codes = _canonical_codes(_LL_BITS, _LL_VALS)
-    bw = _BitWriter()
-    write = bw.write
-    if restart_interval:
-        per_rst = restart_interval * nc
-        for k in range(0, len(diffs), per_rst):
-            if k:
-                bw.flush()                     # byte-align (pad with 1s)
-                bw.out += bytes([0xFF, 0xD0
-                                 + (k // per_rst - 1) % 8])
-            for d in diffs[k:k + per_rst]:
-                if d == -32768:        # H.2.3: SSSS=16, no extra bits
-                    code, ln = codes[16]
-                    write(code, ln)
-                    continue
-                ssss = abs(d).bit_length()
-                code, ln = codes[ssss]
-                write(code, ln)
-                if ssss:
-                    write(d if d > 0 else d + (1 << ssss) - 1, ssss)
-    else:
-        for d in diffs:
-            if d == -32768:
-                code, ln = codes[16]
-                write(code, ln)
-                continue
-            ssss = abs(d).bit_length()
-            code, ln = codes[ssss]
-            write(code, ln)
-            if ssss:
-                write(d if d > 0 else d + (1 << ssss) - 1, ssss)
-    bw.flush()
-
-    seg = _seg
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", precision, h, w, nc)
-    for c in range(nc):
-        sof += bytes([c + 1, 0x11, 0])
-    out += seg(0xFFC3, sof)
-    out += seg(0xFFC4, bytes([0x00] + _LL_BITS) + bytes(_LL_VALS))
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-    sos = bytes([nc])
-    for c in range(nc):
-        sos += bytes([c + 1, 0x00])        # every component uses table 0
-    sos += bytes([predictor, 0, pt])       # Ss=selector, Se=0, Ah:Al=0:Pt
-    out += seg(0xFFDA, sos)
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def decode_jpeg_lossless(payload: bytes,

@@ -9,15 +9,12 @@ component across scans and performs one dequantize + IDCT pass at EOI —
 the coefficient-domain formulation the spec defines (G.1.2) and every
 production decoder uses.
 
-Also provides a from-spec progressive ENCODER (`encode_jpeg_progressive`,
-4:4:4 / grayscale) so the decoder is testable without libjpeg in the
-image: a scan script with successive approximation (DC Al=1 + refine,
-per-component AC bands Al=1 + refine) whose output must decode to
-bit-identical pixels as the baseline encoding of the same image (both
-modes entropy-code the SAME quantized coefficients — T.81 G.1.1).
-Per-scan Huffman tables are built from the symbols the scan actually
-emits as flat canonical tables (all n distinct symbols at code length
-ceil(log2(n+1)), which never assigns the reserved all-ones codeword).
+The decoder is tested without libjpeg through a from-spec progressive
+encoder in tests/encoders.py: its scan script uses successive
+approximation on DC and per-component AC bands, and at 4:4:4 its output
+must decode to bit-identical pixels as the baseline encoding of the same
+image (both modes entropy-code the SAME quantized coefficients — T.81
+G.1.1).
 
 Reference analogue: the reference engine's media connectors are
 out-of-scope live-device sources (/root/reference/src/video/
@@ -34,18 +31,12 @@ import numpy as np
 
 from .jpeg import (
     ZIGZAG,
-    _BitWriter,
     _C,
-    _canonical_codes,
     _extend,
     _FastBitReader,
     _huff_decode_fast,
     _peek_table,
-    _quality_scale,
     _unstuff_entropy,
-    Q_CHROM,
-    Q_LUM,
-    rgb_to_ycbcr,
     ycbcr_to_rgb,
 )
 
@@ -354,331 +345,3 @@ def decode_jpeg_progressive(data: bytes) -> np.ndarray:
         return np.clip(planes[0], 0, 255).astype(np.uint8)
     ycc = np.stack(planes[:3], axis=-1)
     return ycbcr_to_rgb(ycc).astype(np.uint8)   # same truncation as jpeg.py
-
-
-# ---- encoder ---------------------------------------------------------------
-
-
-def _flat_table(symbols):
-    """Canonical Huffman table containing every distinct symbol at one
-    code length L = ceil(log2(n + 1)) — valid (the all-ones codeword at
-    length L is never assigned since n < 2^L) and trivially decodable."""
-    syms = sorted(set(symbols))
-    if not syms:
-        syms = [0]
-    L = 1
-    while (1 << L) <= len(syms):
-        L += 1
-    bits = [0] * 16
-    bits[L - 1] = len(syms)
-    return bits, syms
-
-
-class _ScanSink:
-    """Two-phase scan emitter: phase 1 (bw=None) records the Huffman
-    symbols a scan needs; phase 2 writes codes + raw bits."""
-
-    def __init__(self, bw=None, codes=None):
-        self.bw = bw
-        self.codes = codes
-        self.syms: list[int] = []
-
-    def sym(self, s: int):
-        if self.bw is None:
-            self.syms.append(s)
-        else:
-            c, ln = self.codes[s]
-            self.bw.write(c, ln)
-
-    def bits(self, v: int, n: int):
-        if n and self.bw is not None:
-            self.bw.write(v, n)
-
-
-def _dc_units(comp_zz, order, samp, mcus_y, mcus_x):
-    """MCU-interleaved (block-index per component) unit sequence for DC
-    scans — mirrors the decoder's geometry. samp[ci] = (hs, vs);
-    comp_zz[ci] rows are raster order over the PADDED grid."""
-    units = []
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            unit = []
-            for ci in order:
-                hs, vs = samp[ci]
-                bx_total = mcus_x * hs
-                for by in range(vs):
-                    for bx in range(hs):
-                        unit.append(
-                            (ci, (my * vs + by) * bx_total + mx * hs + bx))
-            units.append(unit)
-    return units
-
-
-def _emit_dc_first(sink, comp_zz, units, Al):
-    preds: dict[int, int] = {}
-    for unit in units:
-        for ci, blk in unit:
-            v = int(comp_zz[ci][blk][0]) >> Al  # arithmetic shift (G.1.2.1)
-            diff = v - preds.get(ci, 0)
-            preds[ci] = v
-            size = abs(diff).bit_length()
-            sink.sym(size)
-            if size:
-                sink.bits(diff if diff > 0 else diff + (1 << size) - 1,
-                          size)
-
-
-def _emit_dc_refine(sink, comp_zz, units, Al):
-    for unit in units:
-        for ci, blk in unit:
-            sink.bits((int(comp_zz[ci][blk][0]) >> Al) & 1, 1)
-
-
-def _emit_ac_first(sink, zzs, Ss, Se, Al):
-    eobrun = 0
-
-    def flush_eob():
-        nonlocal eobrun
-        if eobrun:
-            r = eobrun.bit_length() - 1
-            sink.sym(r << 4)
-            sink.bits(eobrun - (1 << r), r)
-            eobrun = 0
-
-    for zz in zzs:
-        t = [int(np.sign(v)) * (abs(int(v)) >> Al)
-             for v in zz[Ss:Se + 1]]
-        if not any(t):
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                flush_eob()
-            continue
-        flush_eob()
-        r = 0
-        last_nz = max(i for i, v in enumerate(t) if v)
-        for i, v in enumerate(t[:last_nz + 1]):
-            if v == 0:
-                r += 1
-                continue
-            while r > 15:
-                sink.sym(0xF0)
-                r -= 16
-            s = abs(v).bit_length()
-            sink.sym((r << 4) | s)
-            sink.bits(v if v > 0 else v + (1 << s) - 1, s)
-            r = 0
-        if last_nz < len(t) - 1:
-            eobrun += 1
-    flush_eob()
-
-
-def _emit_ac_refine(sink, zzs, Ss, Se, Al):
-    """T.81 G.1.2.3 encoder: newly-significant coefficients (magnitude
-    exactly 1 after the point transform) get (run, 1) codes + a sign
-    bit; already-significant ones contribute buffered correction bits,
-    appended after the next emitted code (or carried into the EOBn)."""
-    eobrun = 0
-    be: list[int] = []       # bits deferred until the next EOBn symbol
-
-    def flush_eob():
-        nonlocal eobrun
-        if eobrun:
-            r = eobrun.bit_length() - 1
-            sink.sym(r << 4)
-            sink.bits(eobrun - (1 << r), r)
-            for b in be:
-                sink.bits(b, 1)
-            be.clear()
-            eobrun = 0
-
-    for zz in zzs:
-        t = [int(np.sign(v)) * (abs(int(v)) >> Al)
-             for v in zz[Ss:Se + 1]]
-        # index of the last NEWLY-significant coefficient: runs of zeros
-        # beyond it fold into the EOB instead of emitting ZRLs
-        eob_idx = max((i for i, v in enumerate(t) if abs(v) == 1),
-                      default=-1)
-        br: list[int] = []   # correction bits inside the current run
-        r = 0
-        for i, v in enumerate(t):
-            a = abs(v)
-            if a == 0:
-                r += 1
-                continue
-            # ZRL check at EVERY nonzero (including already-significant
-            # ones): the decoder's ZRL span covers the next 16
-            # zero-history positions, so a correction coefficient past
-            # a >15 run needs the ZRL emitted BEFORE its bit is buffered
-            while r > 15 and i <= eob_idx:
-                flush_eob()
-                sink.sym(0xF0)
-                r -= 16
-                for b in br:
-                    sink.bits(b, 1)
-                br.clear()
-            if a > 1:
-                br.append(a & 1)
-                continue
-            # newly significant (|t| == 1)
-            flush_eob()
-            sink.sym((r << 4) | 1)
-            sink.bits(1 if v > 0 else 0, 1)
-            for b in br:
-                sink.bits(b, 1)
-            br.clear()
-            r = 0
-        if r or br:
-            eobrun += 1
-            be.extend(br)
-            if eobrun == 0x7FFF or len(be) > 900:
-                flush_eob()
-    flush_eob()
-
-
-def _pad_replicate(plane: np.ndarray, ph: int, pw: int) -> np.ndarray:
-    hh, ww = plane.shape
-    out = np.empty((ph, pw))
-    out[:hh, :ww] = plane
-    out[hh:, :ww] = plane[hh - 1:hh, :]
-    out[:, ww:] = out[:, ww - 1:ww]
-    return out
-
-
-def encode_jpeg_progressive(img: np.ndarray, quality: int = 85,
-                            sampling: str = "444") -> bytes:
-    """Progressive Huffman JPEG with standard quantization tables.
-    `sampling` is '444', '422' or '420' (box-mean chroma subsampling —
-    exercises the decoder's interleaved-MCU DC geometry with sampling
-    factors > 1); grayscale input (h, w) emits a single-component frame.
-    The scan script exercises the full Annex G surface: successive
-    approximation on DC (Al=1 first pass + Ah=1 refinement) and AC
-    (per-component spectral bands at Al=1, then refinements), so EOBn
-    runs, ZRL and correction-bit buffering all appear in the stream.
-    At 4:4:4 the output decodes bit-identically to the baseline
-    encoding of the same image (same quantized coefficients)."""
-    img = np.asarray(img)
-    gray = img.ndim == 2
-    if not gray and (img.ndim != 3 or img.shape[2] != 3):
-        raise ValueError("encode_jpeg_progressive expects (h,w,3) or (h,w)")
-    h, w = img.shape[:2]
-    ql = _quality_scale(Q_LUM, quality)
-    qc = _quality_scale(Q_CHROM, quality)
-
-    from .jpeg import _encode_blocks
-
-    if gray:
-        samp = [(1, 1)]
-    elif sampling == "444":
-        samp = [(1, 1), (1, 1), (1, 1)]
-    elif sampling == "422":
-        samp = [(2, 1), (1, 1), (1, 1)]
-    elif sampling == "420":
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        raise ValueError("sampling must be '444', '422' or '420'")
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-
-    if gray:
-        chans = [img.astype(np.float64)]
-        qs = [ql]
-        qdefs = [(0, ql)]
-        comp_hdr = [(1, 0x11, 0)]
-    else:
-        ycc = rgb_to_ycbcr(img.astype(np.float64))
-        chans = [ycc[..., 0]]
-        for c in (1, 2):
-            p = ycc[..., c]
-            fy, fx = vmax // samp[c][1], hmax // samp[c][0]
-            if fy > 1 or fx > 1:
-                ph2, pw2 = -(-h // fy) * fy, -(-w // fx) * fx
-                p = _pad_replicate(p, ph2, pw2)
-                p = p.reshape(ph2 // fy, fy, pw2 // fx, fx).mean(axis=(1, 3))
-            chans.append(p)
-        qs = [ql, qc, qc]
-        qdefs = [(0, ql), (1, qc)]
-        comp_hdr = [
-            (cid, (samp[i][0] << 4) | samp[i][1], tq)
-            for i, (cid, tq) in enumerate([(1, 0), (2, 1), (3, 1)])]
-
-    comp_zz = []
-    grids = []    # (nby, nbx, padded_bx) per component
-    for ci, plane in enumerate(chans):
-        hs, vs = samp[ci]
-        pby, pbx = mcus_y * vs, mcus_x * hs
-        comp_zz.append(
-            _encode_blocks(_pad_replicate(plane, pby * 8, pbx * 8),
-                           qs[ci]))
-        grids.append(((plane.shape[0] + 7) // 8,
-                      (plane.shape[1] + 7) // 8, pbx))
-
-    def ac_blocks(ci):
-        """Non-interleaved scans cover only the component's own
-        ceil-divided grid (T.81 A.2.2) — padded MCU rows are DC-only."""
-        nby, nbx, pbx = grids[ci]
-        zz = comp_zz[ci]
-        return [zz[by * pbx + bx]
-                for by in range(nby) for bx in range(nbx)]
-
-    ncomp = len(comp_zz)
-    allc = list(range(ncomp))
-    dc_units = _dc_units(comp_zz, allc, samp, mcus_y, mcus_x)
-    # scan script: (kind, comps, Ss, Se, Ah, Al)
-    script = [("dc", allc, 0, 0, 0, 1)]
-    for ci in allc:
-        bands = [(1, 5), (6, 63)] if ci == 0 else [(1, 63)]
-        for ss, se in bands:
-            script.append(("ac", [ci], ss, se, 0, 1))
-    script.append(("dc", allc, 0, 0, 1, 0))
-    for ci in allc:
-        bands = [(1, 5), (6, 63)] if ci == 0 else [(1, 63)]
-        for ss, se in bands:
-            script.append(("ac", [ci], ss, se, 1, 0))
-
-    def seg(marker, payload):
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for tq, q in qdefs:
-        out += seg(0xFFDB, bytes([tq])
-                   + bytes(q.flatten()[ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid, hv, tq in comp_hdr:
-        sof += bytes([cid, hv, tq])
-    out += seg(0xFFC2, sof)
-
-    for kind, cis, Ss, Se, Ah, Al in script:
-        def run(sink):
-            if kind == "dc" and Ah == 0:
-                _emit_dc_first(sink, comp_zz, dc_units, Al)
-            elif kind == "dc":
-                _emit_dc_refine(sink, comp_zz, dc_units, Al)
-            elif Ah == 0:
-                _emit_ac_first(sink, ac_blocks(cis[0]), Ss, Se, Al)
-            else:
-                _emit_ac_refine(sink, ac_blocks(cis[0]), Ss, Se, Al)
-
-        collect = _ScanSink()
-        run(collect)
-        needs_table = bool(collect.syms)
-        tc = 0 if kind == "dc" else 1
-        if needs_table:
-            bits, vals = _flat_table(collect.syms)
-            out += seg(0xFFC4, bytes([(tc << 4) | 0] + bits) + bytes(vals))
-            codes = _canonical_codes(bits, vals)
-        else:
-            codes = {}
-        sos = bytes([len(cis)])
-        for ci in cis:
-            sos += bytes([comp_hdr[ci][0], 0x00])   # Td=Ta=0
-        sos += bytes([Ss, Se, (Ah << 4) | Al])
-        out += seg(0xFFDA, sos)
-        bw = _BitWriter()
-        run(_ScanSink(bw, codes))
-        bw.flush()
-        out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)

@@ -16,7 +16,8 @@ JVM-side, whole-stage-codegen'd, zero Python in the hot path:
     role_change    crossings analogue       role != lag(role)
     is_tool        voicing-gate analogue    role == 'tool'
 
-Every formula is mirrored in LLD_SQL (DuckDB dialect) for the oracle gate.
+Every formula has a DuckDB twin in the `lld` CTE of
+`__spark_entry__.SQL_PREFIX`, the oracle the correctness gate runs.
 """
 
 from __future__ import annotations
@@ -27,26 +28,6 @@ LLD_COLS = [
     "char_len", "token_cnt", "punct_density", "caps_ratio",
     "ttr", "reply_latency", "role_change", "is_tool",
 ]
-
-# DuckDB-dialect LLD over a `transcripts` CTE (columns per input_hint).
-LLD_SQL = """
-SELECT
-    conv_id, turn_idx, ts,
-    CAST(length(text) AS DOUBLE)                                  AS char_len,
-    CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)   AS token_cnt,
-    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE)
-        / CAST(length(text) AS DOUBLE)                            AS punct_density,
-    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
-        / CAST(length(text) AS DOUBLE)                            AS caps_ratio,
-    CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS DOUBLE)
-        / CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)  AS ttr,
-    COALESCE(epoch(ts) - epoch(lag(ts) OVER w), 0.0)              AS reply_latency,
-    CASE WHEN role <> COALESCE(lag(role) OVER w, role) THEN 1.0 ELSE 0.0 END
-                                                                  AS role_change,
-    CASE WHEN role = 'tool' THEN 1.0 ELSE 0.0 END                 AS is_tool
-FROM transcripts
-WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-"""
 
 
 def compute_lld(transcripts: DataFrame, keep_text: bool = False) -> DataFrame:

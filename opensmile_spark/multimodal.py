@@ -35,21 +35,11 @@ partitioning are real and tested; only that codec call is replaced.
 
 from __future__ import annotations
 
+from typing import Literal
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),       # image|audio|video
-    T.StructField("payload", T.BinaryType(), True),      # opaque bytes
-    T.StructField("mime", T.StringType(), True),
-    T.StructField("width", T.IntegerType(), True),       # typed metadata
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("sample_rate", T.IntegerType(), True),
-    T.StructField("duration_s", T.DoubleType(), True),
-])
 
 
 def synthesize_wav_bytes(media_id: int, sr: int = 16000,
@@ -267,31 +257,6 @@ def synthesize_jpeg_bytes(media_id: int, width: int = 64,
     return encode_jpeg(img.astype(np.uint8), quality=quality)
 
 
-def synthesize_png_bytes(media_id: int, width: int = 64,
-                         height: int = 48) -> bytes:
-    """Deterministic RGB PNG via the from-scratch codec
-    (opensmile_spark/png.py) — the lossless twin of
-    synthesize_jpeg_bytes (same seeded field; cycling row filters)."""
-    import numpy as np
-
-    from opensmile_spark.png import encode_png
-
-    rng = np.random.RandomState(int(media_id) % (2 ** 31))
-    yy, xx = np.mgrid[0:height, 0:width]
-    f1 = 5.0 + (media_id % 7)
-    f2 = 9.0 + (media_id % 5)
-    img = np.stack([
-        128 + 90 * np.sin(xx / f1) * np.cos(yy / f2),
-        128 + 70 * np.cos(xx / f2),
-        128 + 50 * np.sin((xx + yy) / (f1 + f2)),
-    ], axis=-1)
-    x0, y0 = int(media_id) % max(width - 8, 1), int(media_id) % max(
-        height - 8, 1)
-    img[y0:y0 + 8, x0:x0 + 8] = 250.0
-    img = np.clip(img + rng.randn(height, width, 3) * 2, 0, 255)
-    return encode_png(img.astype(np.uint8))
-
-
 def decode_bmp(payload: bytes):
     """Pure-struct decode of uncompressed 24-bit BMP (BITMAPINFOHEADER):
     returns an (height, width, 3) uint8 RGB array. Handles bottom-up and
@@ -420,21 +385,6 @@ def synthesize_avi_bytes(media_id: int, width: int = 32, height: int = 24,
 _MJPG_FOURCC = 0x47504A4D
 
 
-def synthesize_mjpeg_avi_bytes(media_id: int, width: int = 32,
-                               height: int = 24, n_frames: int = 8,
-                               fps: int = 4, quality: int = 90) -> bytes:
-    """Deterministic motion-JPEG AVI: the same marching-rectangle clip,
-    each frame an independent baseline-JPEG stream (encode_jpeg) in a
-    '00dc' compressed chunk, strh handler / strf biCompression 'MJPG' —
-    the dominant intra-only AVI codec in the wild."""
-    from opensmile_spark.jpeg import encode_jpeg
-
-    chunks = [encode_jpeg(img, quality=quality)
-              for img in _avi_rgb_frames(media_id, width, height, n_frames)]
-    return _avi_container(chunks, b"MJPG", _MJPG_FOURCC, 24, width, height,
-                          fps, b"00dc")
-
-
 def decode_avi(payload: bytes, frame_indices=None):
     """Pure-struct decode of an AVI clip: walks the RIFF chunk tree for
     the 'strf' BITMAPINFOHEADER (geometry + codec), 'strh' (fps =
@@ -535,12 +485,21 @@ def video_features(frames, fps: float, n_features: int = 8):
 
 def synthetic_media(spark, n: int = 64, seed: int = 42,
                     real_audio: bool = False,
-                    real_images: bool = False,
+                    real_images: bool | Literal["jpeg"] = False,
                     real_video: bool = False) -> DataFrame:
     """Deterministic fake media table (payload = hash-derived bytes).
     real_audio=True replaces audio payloads with actual synthesized WAV
     bytes (Arrow-batched pandas UDF — synthesis runs on the executors, so
-    the fixture itself scales) and stamps mime='audio/wav'."""
+    the fixture itself scales) and stamps mime='audio/wav'.
+    real_images is False, True (24-bit BMP, mime 'image/bmp') or "jpeg"
+    (baseline JPEG, 'image/jpeg'); real_video is False or True
+    (uncompressed AVI). Any other value raises ValueError."""
+    if real_images not in (False, True, "jpeg") or \
+            real_video not in (False, True):
+        raise ValueError(
+            f"synthetic_media: real_images must be False, True or 'jpeg' "
+            f"and real_video False or True, got {real_images!r}, "
+            f"{real_video!r}")
     df = spark.range(n)
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
@@ -576,10 +535,9 @@ def synthetic_media(spark, n: int = 64, seed: int = 42,
     if real_images:
         from pyspark.sql.functions import pandas_udf
 
-        codec = real_images if real_images in ("jpeg", "png") else "bmp"
-        synth = {"jpeg": synthesize_jpeg_bytes,
-                 "png": synthesize_png_bytes}.get(codec,
-                                                  synthesize_bmp_bytes)
+        codec = "jpeg" if real_images == "jpeg" else "bmp"
+        synth = synthesize_jpeg_bytes if codec == "jpeg" \
+            else synthesize_bmp_bytes
 
         @pandas_udf("binary")
         def _img(mid: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
@@ -603,12 +561,9 @@ def synthetic_media(spark, n: int = 64, seed: int = 42,
     if real_video:
         from pyspark.sql.functions import pandas_udf
 
-        vsynth = synthesize_mjpeg_avi_bytes if real_video == "mjpeg" \
-            else synthesize_avi_bytes
-
         @pandas_udf("binary")
         def _avi(mid: pd.Series) -> pd.Series:
-            return mid.map(lambda i: vsynth(int(i)))
+            return mid.map(lambda i: synthesize_avi_bytes(int(i)))
 
         is_vid = F.col("kind") == "video"
         out = out.withColumn(

@@ -4,14 +4,17 @@ The reference has no skew problem (single machine; skew = a long file). At
 10^12 turns a mega-conversation makes one Spark task arbitrarily large. Two
 remedies here (SURVEY.md §4 skew row):
 
-1. `salted_functionals`: split oversized conversations into salt buckets of
-   <= max_rows turns, run the functional kernel per bucket, then REDUCE the
-   bucket partials into exact whole-conv functionals. Exact for the
-   decomposable families (means/moments/extremes sums & comoments combine
-   exactly); order statistics (percentiles) are not decomposable and are not
-   produced on this path — callers needing them on mega-convs use the kernel
-   path with a larger Arrow batch or accept two-level t-digest style
-   approximation (explicitly NOT silently substituted).
+1. `salted_partial_stats`: spread each key's rows over `salt_buckets`
+   salts (a hash of `order_col`), aggregate per (key, salt) into partials
+   (count, sums, mean, M2, min, max, nonzero count), then combine the
+   partials per key into EXACT amean/absmean/qmean/rqmean/variance/
+   stddev/min/max/range/nnz with the reference's population formulas.
+   Variance combines with Chan's centered formula over a window giving
+   each salt its key's mean, never the cancelling E[x^2] - mean^2. The
+   heavy shuffle thus runs over `salt_buckets` reducers per hot key.
+   Order statistics (percentiles) are not decomposable and are not
+   produced on this path — callers needing them on mega-convs use the
+   kernel path (explicitly NOT silently approximated).
 
 2. `overlap_salt`: bucket rows with `pre` boundary rows replicated into the
    next bucket so sliding-window ops (sma/delta with lookback `pre`,

@@ -1,4 +1,4 @@
-"""Pure-numpy PNG codec (RFC 2083 / ISO 15948) — stdlib zlib + numpy.
+"""Pure-numpy PNG decoder (RFC 2083 / ISO 15948) — stdlib zlib + numpy.
 
 Closes the PNG leg of the multimodal corpus-decode path the same way
 jpeg.py closes JPEG: chunk parse (IHDR/PLTE/tRNS/IDAT/IEND), zlib
@@ -7,10 +7,9 @@ deinterlacing, bit depths 1/2/4/8/16 and color types 0 (gray),
 2 (RGB), 3 (palette), 4 (gray+alpha), 6 (RGBA). 16-bit samples are
 scaled to 8-bit (>> 8) since the feature path is uint8.
 
-Also an encoder (`encode_png`) for roundtrip tests: PNG is lossless, so
-encode->decode must reproduce input arrays EXACTLY, with per-row filter
-types either fixed or heuristically chosen (exercises every unfilter
-branch), optionally Adam7-interlaced.
+PNG is lossless, so the roundtrip tests (encoder in tests/encoders.py:
+fixed or cycling per-row filters, optional Adam7) pin decode to
+reproduce input arrays EXACTLY through every unfilter branch.
 
 Per-payload kernel invoked from the Arrow-batched UDF in multimodal.py;
 no Spark objects here.
@@ -197,81 +196,3 @@ def decode_png(payload: bytes) -> np.ndarray:
         g = img[..., 0]
         return np.dstack([g, g, g, img[..., 1]])
     return img                                        # RGB / RGBA
-
-
-# ---- encoder ---------------------------------------------------------------
-
-
-def _filter_row(cur: np.ndarray, prev: np.ndarray, bpp: int,
-                ft: int) -> np.ndarray:
-    c = cur.astype(np.int32)
-    p = prev.astype(np.int32)
-    left = np.zeros_like(c)
-    left[bpp:] = c[:-bpp]
-    if ft == 0:
-        out = c
-    elif ft == 1:
-        out = c - left
-    elif ft == 2:
-        out = c - p
-    elif ft == 3:
-        out = c - ((left + p) >> 1)
-    else:
-        upleft = np.zeros_like(p)
-        upleft[bpp:] = p[:-bpp]
-        out = c.copy()
-        for x in range(len(c)):
-            out[x] = c[x] - _paeth(int(left[x]), int(p[x]),
-                                   int(upleft[x]))
-    return (out & 0xFF).astype(np.uint8)
-
-
-def encode_png(img: np.ndarray, filter_type: str | int = "cycle",
-               interlace: bool = False, level: int = 6) -> bytes:
-    """Lossless PNG of a uint8 (h, w) gray / (h, w, 3) RGB /
-    (h, w, 4) RGBA array. filter_type: an int 0-4 for a fixed per-row
-    filter, or 'cycle' to rotate through all five (exercises every
-    decoder unfilter branch). interlace=True writes Adam7."""
-    img = np.ascontiguousarray(np.asarray(img, dtype=np.uint8))
-    if img.ndim == 2:
-        ctype, channels = 0, 1
-        img = img[..., None]
-    elif img.ndim == 3 and img.shape[2] == 3:
-        ctype, channels = 2, 3
-    elif img.ndim == 3 and img.shape[2] == 4:
-        ctype, channels = 6, 4
-    else:
-        raise ValueError("encode_png expects (h,w), (h,w,3) or (h,w,4)")
-    h, w = img.shape[:2]
-    bpp = channels
-
-    def filtered_stream(sub: np.ndarray) -> bytes:
-        ph, pw = sub.shape[:2]
-        flat = sub.reshape(ph, pw * channels)
-        out = bytearray()
-        prev = np.zeros(pw * channels, dtype=np.uint8)
-        for y in range(ph):
-            ft = (y % 5) if filter_type == "cycle" else int(filter_type)
-            out.append(ft)
-            out += _filter_row(flat[y], prev, bpp, ft).tobytes()
-            prev = flat[y]
-        return bytes(out)
-
-    if not interlace:
-        raw = filtered_stream(img)
-    else:
-        raw = b"".join(
-            filtered_stream(img[y0::dy, x0::dx])
-            for x0, y0, dx, dy in _ADAM7
-            if (w - x0 + dx - 1) // dx > 0 and (h - y0 + dy - 1) // dy > 0)
-
-    def chunk(ctype_b: bytes, payload: bytes) -> bytes:
-        return (struct.pack(">I", len(payload)) + ctype_b + payload
-                + struct.pack(">I", zlib.crc32(ctype_b + payload)))
-
-    out = bytearray(_MAGIC)
-    out += chunk(b"IHDR", struct.pack(
-        ">IIBBBBB", w, h, 8, ctype, 0, 0, 1 if interlace else 0))
-    out += chunk(b"IDAT", zlib.compress(raw, level))
-    out += chunk(b"IEND", b"")
-    return bytes(out)

@@ -212,19 +212,6 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(df: DataFrame, dim: int, bits: int = 12, seed: int = 42,
-               vec_col: str = "embedding",
-               out_col: str = "lsh_bucket") -> DataFrame:
-    """Random-hyperplane signature: bit b = sign(<v, plane_b>)."""
-    planes = _hyperplanes(dim, bits, seed)
-    sig = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        sig = sig + F.when(_dot(F.col(vec_col), p) > 0,
-                           F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return df.withColumn(out_col, sig)
-
-
 def lsh_bucket_multi(
     df: DataFrame,
     dim: int,

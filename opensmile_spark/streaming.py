@@ -49,8 +49,9 @@ def stateful_expanding_stats(
 
     State = (count, mean, M2) Welford accumulator carried across
     micro-batches; emits one row per input turn with the running stats at
-    that turn (ts <= now ⇒ leakage-free). The per-batch update is the
-    vectorized Welford recursion: mean_k from shifted cumulative sums,
+    that turn (ts <= now ⇒ leakage-free), conv_id and turn_idx keeping
+    the input's types. The per-batch update is the vectorized Welford
+    recursion: mean_k from shifted cumulative sums,
     M2_k = M2_{k-1} + (x_k − mean_{k-1})(x_k − mean_k).
 
     Output mode is 'update' with NoTimeout: in this pyspark build the
@@ -61,7 +62,9 @@ def stateful_expanding_stats(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    out_schema = (f"conv_id string, turn_idx int, {value_col} double, "
+    key_t, idx_t = (lld_stream.schema[c].dataType.simpleString()
+                    for c in ("conv_id", "turn_idx"))
+    out_schema = (f"conv_id {key_t}, turn_idx {idx_t}, {value_col} double, "
                   f"run_mean double, run_std double, n long")
     state_schema = "n long, mean double, m2 double"
 

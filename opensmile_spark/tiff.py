@@ -1,4 +1,4 @@
-"""Pure-python TIFF codec (TIFF 6.0) — stdlib struct + numpy.
+"""Pure-python TIFF decoder (TIFF 6.0) — stdlib struct + numpy.
 
 Scanned-document corpora ship TIFF; this closes that leg of the
 multimodal decode path: both byte orders (II/MM), IFD walk, strip
@@ -8,9 +8,8 @@ code packing with the early-change quirk, 256-entry base table) and
 interpretations WhiteIsZero / BlackIsZero / RGB / Palette (16-bit
 colormap scaled to 8), 8-bit samples at 1/3/4 samples per pixel.
 
-Encoder for tests writes all three compressions (+ optional predictor),
-so decode->encode roundtrips pin exact pixel equality — TIFF is
-lossless.
+TIFF is lossless, so the roundtrip tests (encoder in tests/encoders.py,
+all three compressions + optional predictor) pin exact pixel equality.
 
 Per-payload kernel invoked from the Arrow-batched UDF in multimodal.py;
 no Spark objects here.
@@ -82,52 +81,6 @@ def _lzw_decode_tiff(data: bytes, max_out: int) -> bytes:
     return bytes(out)
 
 
-def _lzw_encode_tiff(data: bytes) -> bytes:
-    CLEAR, EOI = 256, 257
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    width = 9
-
-    def emit(code: int):
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-        acc &= (1 << nbits) - 1
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    emit(CLEAR)
-    cur = b""
-    for b in data:
-        nxt = cur + bytes([b])
-        if nxt in table:
-            cur = nxt
-            continue
-        emit(table[cur])
-        table[nxt] = next_code
-        next_code += 1
-        # early change: one emission earlier than the GIF-style rule
-        # (decoder mirrors with len(table)+1 >= 2^width)
-        if next_code >= (1 << width) and width < 12:
-            width += 1
-        elif next_code > 4093:
-            emit(CLEAR)
-            table = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            width = 9
-        cur = bytes([b])
-    if cur:
-        emit(table[cur])
-    emit(EOI)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
 def _packbits_decode(data: bytes, max_out: int) -> bytes:
     out = bytearray()
     pos = 0
@@ -141,26 +94,6 @@ def _packbits_decode(data: bytes, max_out: int) -> bytes:
             out += bytes([data[pos]]) * (257 - n)
             pos += 1
         # n == 128: no-op
-    return bytes(out)
-
-
-def _packbits_encode(data: bytes) -> bytes:
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 2:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        lit = i
-        while (i < n and i - lit < 128
-               and not (i + 1 < n and data[i + 1] == data[i])):
-            i += 1
-        out += bytes([i - lit - 1]) + data[lit:i]
     return bytes(out)
 
 
@@ -266,115 +199,3 @@ def decode_tiff(payload: bytes) -> np.ndarray:
         g = img[..., 0]
         return (255 - g) if photo == 0 else g    # WhiteIsZero inverts
     return img                                   # RGB / RGBA
-
-
-def encode_tiff(img: np.ndarray, compression: int = 1,
-                predictor: int = 1, rows_per_strip: int | None = None
-                ) -> bytes:
-    """Little-endian TIFF of uint8 (h, w) gray / (h, w, 3) RGB /
-    (h, w, 4) RGBA; compression 1 / 5 (LZW) / 32773 (PackBits);
-    predictor 2 = horizontal differencing. Lossless."""
-    img = np.ascontiguousarray(np.asarray(img, dtype=np.uint8))
-    if img.ndim == 2:
-        img = img[..., None]
-    h, w, spp = img.shape
-    if rows_per_strip is None:
-        rows_per_strip = max(1, min(h, 8192 // max(1, w * spp // 8)))
-    raw = img
-    if predictor == 2:
-        d = img.astype(np.int16)
-        d[:, 1:] = d[:, 1:] - d[:, :-1]
-        raw = (d & 0xFF).astype(np.uint8)
-    flat = raw.reshape(h, w * spp)
-
-    strips = []
-    for y0 in range(0, h, rows_per_strip):
-        chunk = flat[y0:y0 + rows_per_strip].tobytes()
-        if compression == 5:
-            strips.append(_lzw_encode_tiff(chunk))
-        elif compression == 32773:
-            strips.append(_packbits_encode(chunk))
-        else:
-            strips.append(chunk)
-
-    entries = []                 # (tag, type, count, value_or_bytes)
-
-    def short(tag, *vals):
-        entries.append((tag, 3, len(vals),
-                        struct.pack("<" + "H" * len(vals), *vals)))
-
-    def long_(tag, *vals):
-        entries.append((tag, 4, len(vals),
-                        struct.pack("<" + "I" * len(vals), *vals)))
-
-    short(256, w)
-    short(257, h)
-    short(258, *([8] * spp))
-    short(259, compression)
-    short(262, 2 if spp >= 3 else 1)
-    # strip offsets filled after layout
-    short(277, spp)
-    short(278, rows_per_strip)
-    long_(279, *[len(s) for s in strips])
-    if predictor == 2:
-        short(317, predictor)
-
-    # layout: header(8) + IFD + external value blobs + strip data
-    n_strip = len(strips)
-    ifd_entries = len(entries) + 1               # + StripOffsets
-    ifd_size = 2 + 12 * ifd_entries + 4
-    blob_off = 8 + ifd_size
-    blobs = bytearray()
-
-    def place(value: bytes) -> tuple[int, bytes]:
-        nonlocal blob_off
-        if len(value) <= 4:
-            return 0, value + b"\x00" * (4 - len(value))
-        off = blob_off
-        blobs.extend(value)
-        blob_off += len(value)
-        return off, struct.pack("<I", off)
-
-    strip_data_off = None        # resolved after blobs
-
-    packed = []
-    for tag, typ, cnt, val in sorted(entries) + [(273, 4, n_strip, None)]:
-        if tag == 273:
-            # placeholder; patched once strip data offset is known
-            if n_strip == 1:
-                packed.append((tag, typ, cnt, b"\x00\x00\x00\x00", None))
-            else:
-                off, enc = place(b"\x00" * 4 * n_strip)
-                packed.append((tag, typ, cnt, enc, off))
-            continue
-        _, enc = place(val)
-        packed.append((tag, typ, cnt, enc, None))
-    packed.sort(key=lambda e: e[0])
-
-    strip_data_off = blob_off
-    offs = []
-    o = strip_data_off
-    for s in strips:
-        offs.append(o)
-        o += len(s)
-    # patch StripOffsets
-    final = []
-    for tag, typ, cnt, enc, ext in packed:
-        if tag == 273:
-            if n_strip == 1:
-                enc = struct.pack("<I", offs[0])
-            else:
-                blobs[ext - 8 - ifd_size:ext - 8 - ifd_size
-                      + 4 * n_strip] = struct.pack(
-                          "<" + "I" * n_strip, *offs)
-        final.append((tag, typ, cnt, enc))
-
-    out = bytearray(b"II*\x00" + struct.pack("<I", 8))
-    out += struct.pack("<H", ifd_entries)
-    for tag, typ, cnt, enc in final:
-        out += struct.pack("<HHI", tag, typ, cnt) + enc
-    out += struct.pack("<I", 0)                  # no next IFD
-    out += blobs
-    for s in strips:
-        out += s
-    return bytes(out)

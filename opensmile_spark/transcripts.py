@@ -5,6 +5,7 @@ the shared parquet tables (region..embeddings). There is no transcripts table
 in that set, so we derive one *deterministically* from `events` with logic
 expressible identically in Spark and ANSI/DuckDB SQL — both engines then see
 byte-identical transcript rows and every engine operator can be oracle-checked.
+The DuckDB side is the `transcripts` CTE of `__spark_entry__.SQL_PREFIX`.
 
 Mapping (pure, deterministic, no floats in strings):
     conv_id  = 'u' || user_id
@@ -12,7 +13,7 @@ Mapping (pure, deterministic, no floats in strings):
     role     = click->user, view->assistant, purchase->tool, signup->user,
                error->system
     text     = repeat(event_type || ' ', 1 + event_id % 7) || props
-    tool     = event_type when role='tool' else NULL
+    tool     = 'checkout' when role='tool' else NULL
     ts       = ts
 
 This mirrors the reference's source abstraction: cWaveSource /
@@ -26,29 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# DuckDB-compatible CTE body; the driver pre-registers `events` as a view.
-TRANSCRIPTS_SQL = """
-SELECT
-    'u' || CAST(user_id AS VARCHAR)                               AS conv_id,
-    CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1
-         AS INTEGER)                                              AS turn_idx,
-    CASE event_type
-        WHEN 'click' THEN 'user'
-        WHEN 'view' THEN 'assistant'
-        WHEN 'purchase' THEN 'tool'
-        WHEN 'signup' THEN 'user'
-        ELSE 'system'
-    END                                                           AS role,
-    repeat(event_type || ' ', 1 + CAST(event_id % 7 AS INTEGER)) || props
-                                                                  AS text,
-    CASE WHEN event_type = 'purchase' THEN 'checkout' END         AS tool,
-    ts
-FROM events
-"""
-
 
 def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of TRANSCRIPTS_SQL over {sf_dir}/events.parquet.
+    """Spark twin of the `transcripts` CTE of `__spark_entry__.SQL_PREFIX`
+    over {sf_dir}/events.parquet.
 
     turn_idx's window partitions by the DERIVED conv_id (a bijection of
     user_id, so the numbering is identical to the SQL's PARTITION BY

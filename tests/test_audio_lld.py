@@ -87,7 +87,7 @@ def test_frame_count_contract(spark, media):
 def test_flac_payloads(spark):
     """The same chain over FLAC bytes (from-spec codec, lossless —
     identical samples => identical frame LLDs as the WAV twin)."""
-    from opensmile_spark.flac import encode_flac
+    from tests.encoders import encode_flac
 
     mid = 7
     x, sr = decode_wav(synthesize_wav_bytes(mid))

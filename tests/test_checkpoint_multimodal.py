@@ -308,3 +308,16 @@ def test_all_modalities_decode_real(spark):
     assert len(feats) == 36
     assert set(feats["kind"]) == {"image", "audio", "video"}
     assert feats[[f"feat_{i}" for i in range(6)]].notna().all().all()
+
+
+@pytest.mark.parametrize("kw", [{"real_images": "png"},
+                                {"real_images": "gif"},
+                                {"real_video": "mjpeg"}])
+def test_synthetic_media_rejects_unknown_codecs(kw):
+    """real_images takes False, True (BMP) or "jpeg" and real_video False
+    or True; any other value raises before a frame is built, instead of
+    quietly becoming BMP."""
+    from opensmile_spark.multimodal import synthetic_media
+
+    with pytest.raises(ValueError, match="real_images must be"):
+        synthetic_media(None, **kw)

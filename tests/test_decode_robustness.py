@@ -13,14 +13,20 @@ import pytest
 
 
 def _codecs():
-    from opensmile_spark.flac import decode_flac, encode_flac
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.flac import decode_flac
+    from opensmile_spark.gif import decode_gif
     from opensmile_spark.jpeg import decode_jpeg, encode_jpeg
-    from opensmile_spark.jpeg_progressive import encode_jpeg_progressive
-    from opensmile_spark.multimodal import (
-        decode_avi, synthesize_avi_bytes, synthesize_mjpeg_avi_bytes)
-    from opensmile_spark.png import decode_png, encode_png
-    from opensmile_spark.tiff import decode_tiff, encode_tiff
+    from opensmile_spark.multimodal import decode_avi, synthesize_avi_bytes
+    from opensmile_spark.png import decode_png
+    from opensmile_spark.tiff import decode_tiff
+    from tests.encoders import (
+        encode_flac,
+        encode_gif,
+        encode_jpeg_progressive,
+        encode_png,
+        encode_tiff,
+        synthesize_mjpeg_avi_bytes,
+    )
 
     rng = np.random.default_rng(0)
     img = rng.integers(0, 256, (24, 18, 3)).astype(np.uint8)

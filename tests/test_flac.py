@@ -18,7 +18,8 @@ def _sig(n, seed=0, amp=8000):
 
 @pytest.mark.parametrize("order", [0, 1, 2, 3, 4])
 def test_roundtrip_fixed_orders(order):
-    from opensmile_spark.flac import decode_flac, encode_flac
+    from opensmile_spark.flac import decode_flac
+    from tests.encoders import encode_flac
 
     x = _sig(12000, seed=order)
     dec, sr = decode_flac(encode_flac(x, 16000, fixed_order=order))
@@ -29,7 +30,8 @@ def test_roundtrip_fixed_orders(order):
 
 @pytest.mark.parametrize("blocksize", [192, 1024, 4096])
 def test_roundtrip_blocksizes(blocksize):
-    from opensmile_spark.flac import decode_flac, encode_flac
+    from opensmile_spark.flac import decode_flac
+    from tests.encoders import encode_flac
 
     x = _sig(5000, seed=9)
     dec, _ = decode_flac(encode_flac(x, 8000, blocksize=blocksize))
@@ -38,7 +40,8 @@ def test_roundtrip_blocksizes(blocksize):
 
 
 def test_roundtrip_stereo_and_constant():
-    from opensmile_spark.flac import decode_flac, encode_flac
+    from opensmile_spark.flac import decode_flac
+    from tests.encoders import encode_flac
 
     x = _sig(8000, seed=2)
     st = np.stack([x, np.roll(x, 5)], -1)
@@ -54,7 +57,8 @@ def test_roundtrip_stereo_and_constant():
 
 
 def test_roundtrip_8bit():
-    from opensmile_spark.flac import decode_flac, encode_flac
+    from opensmile_spark.flac import decode_flac
+    from tests.encoders import encode_flac
 
     rng = np.random.default_rng(3)
     x8 = rng.integers(-128, 128, 3000).astype(np.int64)
@@ -66,7 +70,7 @@ def test_roundtrip_8bit():
 def _decorrelated_payload(left, right, chan_code):
     """Hand-build a 2-channel FLAC stream whose single frame uses the
     given stereo-decorrelation mode with VERBATIM subframes."""
-    from opensmile_spark.flac import _BitsW, _crc8, _crc16
+    from tests.encoders import _BitsW, _crc8, _crc16
 
     bps, bs = 16, len(left)
     side = left - right
@@ -137,7 +141,7 @@ def test_malformed_and_forged():
     with pytest.raises(ValueError):
         decode_flac(b"fLaX not flac")
     # forged STREAMINFO claiming 2^35 samples
-    from opensmile_spark.flac import _BitsW
+    from tests.encoders import _BitsW
 
     si = _BitsW()
     si.write(4096, 16)
@@ -157,7 +161,8 @@ def test_malformed_and_forged():
 
 
 def test_truncations_terminate():
-    from opensmile_spark.flac import decode_flac, encode_flac
+    from opensmile_spark.flac import decode_flac
+    from tests.encoders import encode_flac
 
     payload = encode_flac(_sig(2000, seed=5), 16000)
     for cut in range(0, len(payload), max(1, len(payload) // 60)):
@@ -170,10 +175,10 @@ def test_truncations_terminate():
 def test_flac_through_multimodal(spark):
     """FLAC payloads decode distributed; features match WAV of the
     same samples (both normalize to [-1, 1] mono)."""
-    from opensmile_spark.flac import encode_flac
     from opensmile_spark.multimodal import (
         extract_media_features, wav_features,
     )
+    from tests.encoders import encode_flac
 
     x = _sig(6000, seed=7)
     media = spark.createDataFrame(
@@ -189,7 +194,8 @@ def test_flac_through_multimodal(spark):
 def test_reserved_sample_size_code_raises():
     """Frame header ss_code=3 is reserved: fail fast like the other
     reserved codes instead of silently decoding at STREAMINFO bps."""
-    from opensmile_spark.flac import decode_flac, encode_flac
+    from opensmile_spark.flac import decode_flac
+    from tests.encoders import encode_flac
 
     payload = bytearray(encode_flac(_sig(500, seed=8), 16000))
     # frame header starts right after the 4+4+34 byte STREAMINFO block;

@@ -11,7 +11,8 @@ def _pal(n, seed=0):
 
 
 def test_single_frame_roundtrip():
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.gif import decode_gif
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(1)
     pal = _pal(8)
@@ -22,7 +23,8 @@ def test_single_frame_roundtrip():
 
 
 def test_interlaced_roundtrip():
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.gif import decode_gif
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(2)
     pal = _pal(16)
@@ -34,7 +36,8 @@ def test_interlaced_roundtrip():
 def test_lzw_table_reset_256_colors():
     """A large random 256-color image overflows the 12-bit LZW table,
     forcing the mid-stream CLEAR + table reset on both sides."""
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.gif import decode_gif
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(3)
     pal = _pal(256)
@@ -45,7 +48,8 @@ def test_lzw_table_reset_256_colors():
 
 def test_two_color_min_code_floor():
     """2-color GIFs still use LZW min code size 2 (spec floor)."""
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.gif import decode_gif
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(4)
     pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
@@ -58,7 +62,8 @@ def test_animation_transparency_compositing():
     """Frame 2 is a sub-rectangle patch with a transparent index: the
     composited canvas keeps frame-1 pixels wherever the patch is
     transparent (GIF89a graphic-control semantics)."""
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.gif import decode_gif
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(5)
     pal = _pal(8)
@@ -91,10 +96,10 @@ def test_malformed_raises():
 def test_gif_through_multimodal(spark):
     """Still + animated GIFs flow through extract_media_features: the
     still maps to image features, the animation to video features."""
-    from opensmile_spark.gif import encode_gif
     from opensmile_spark.multimodal import (
         extract_media_features, image_features, video_features,
     )
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(6)
     pal = _pal(8)
@@ -130,7 +135,8 @@ def test_gif_through_multimodal(spark):
 def test_overhanging_frame_clipped():
     """Malformed frames that overhang the logical screen are clipped
     (mainstream-decoder behavior), not a broadcast crash."""
-    from opensmile_spark.gif import decode_gif, encode_gif
+    from opensmile_spark.gif import decode_gif
+    from tests.encoders import encode_gif
 
     rng = np.random.default_rng(9)
     pal = _pal(4)

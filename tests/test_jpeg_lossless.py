@@ -8,9 +8,9 @@ have, the same discipline as the PNG/GIF/TIFF/FLAC suites."""
 import numpy as np
 import pytest
 
-from opensmile_spark.jpeg import decode_jpeg, encode_jpeg12
-from opensmile_spark.jpeg_lossless import (decode_jpeg_lossless,
-                                           encode_jpeg_lossless)
+from opensmile_spark.jpeg import decode_jpeg
+from opensmile_spark.jpeg_lossless import decode_jpeg_lossless
+from tests.encoders import encode_jpeg12, encode_jpeg_lossless
 
 
 def _gray(seed=7, h=37, w=53):

@@ -22,7 +22,7 @@ def _img(h, w, seed=0):
 
 def _roundtrip_equal(img, quality):
     from opensmile_spark.jpeg import decode_jpeg, encode_jpeg
-    from opensmile_spark.jpeg_progressive import encode_jpeg_progressive
+    from tests.encoders import encode_jpeg_progressive
 
     base = decode_jpeg(encode_jpeg(img, quality))
     prog = decode_jpeg(encode_jpeg_progressive(img, quality))
@@ -62,7 +62,7 @@ def test_progressive_grayscale_single_component():
     """Single-component frames use non-interleaved DC scans (ns=1 —
     T.81 A.2.2 raster order over the component grid, not MCU order)."""
     from opensmile_spark.jpeg import decode_jpeg
-    from opensmile_spark.jpeg_progressive import encode_jpeg_progressive
+    from tests.encoders import encode_jpeg_progressive
 
     rng = np.random.default_rng(5)
     g = rng.integers(0, 256, (20, 22)).astype(np.uint8)
@@ -93,7 +93,7 @@ def test_progressive_grayscale_single_component():
 def test_progressive_fill_bytes_before_marker():
     """T.81 B.1.1.2 fill bytes are legal in progressive streams too."""
     from opensmile_spark.jpeg import decode_jpeg
-    from opensmile_spark.jpeg_progressive import encode_jpeg_progressive
+    from tests.encoders import encode_jpeg_progressive
 
     payload = encode_jpeg_progressive(_img(16, 16, seed=9), 80)
     want = decode_jpeg(payload)
@@ -114,9 +114,7 @@ def test_progressive_chroma_subsampling(sampling):
         _C, _encode_blocks, _quality_scale, Q_CHROM, Q_LUM, ZIGZAG,
         decode_jpeg, rgb_to_ycbcr, ycbcr_to_rgb,
     )
-    from opensmile_spark.jpeg_progressive import (
-        _pad_replicate, encode_jpeg_progressive,
-    )
+    from tests.encoders import _pad_replicate, encode_jpeg_progressive
 
     img = _img(35, 29, seed=4)      # odd dims force uneven MCU padding
     out = decode_jpeg(encode_jpeg_progressive(img, 80, sampling=sampling))
@@ -185,11 +183,11 @@ def test_progressive_through_multimodal_decode(spark):
     end-to-end through extract_media_features — progressive is now a
     first-class decode, not a quarantined error."""
     from opensmile_spark.jpeg import decode_jpeg
-    from opensmile_spark.jpeg_progressive import encode_jpeg_progressive
     from opensmile_spark.multimodal import (
         extract_media_features, image_features, synthesize_bmp_bytes,
         synthesize_jpeg_bytes,
     )
+    from tests.encoders import encode_jpeg_progressive
 
     img = _img(16, 16, seed=11)
     prog_payload = encode_jpeg_progressive(img, 85)

@@ -28,7 +28,8 @@ def _wrap(w, h, depth, ctype, idat, extra=b""):
 def test_roundtrip_filters(shape, filter_type):
     """PNG is lossless: encode->decode must reproduce the array EXACTLY
     for every per-row filter type (None/Sub/Up/Average/Paeth)."""
-    from opensmile_spark.png import decode_png, encode_png
+    from opensmile_spark.png import decode_png
+    from tests.encoders import encode_png
 
     rng = np.random.default_rng(sum(shape))
     img = rng.integers(0, 256, shape).astype(np.uint8)
@@ -41,7 +42,8 @@ def test_roundtrip_filters(shape, filter_type):
 def test_roundtrip_adam7(shape):
     """Adam7 interlacing: 7 sub-images with independent filter chains,
     including degenerate sizes where some passes are empty."""
-    from opensmile_spark.png import decode_png, encode_png
+    from opensmile_spark.png import decode_png
+    from tests.encoders import encode_png
 
     rng = np.random.default_rng(sum(shape) + 1)
     img = rng.integers(0, 256, shape).astype(np.uint8)
@@ -127,16 +129,29 @@ def test_malformed_raises():
 
 
 def test_spark_decode_media_png(spark):
-    """synthetic_media(real_images='png') rows decode distributed through
-    extract_media_features fake=False, matching a local decode."""
+    """Driver-built PNG rows, mixed with real WAV audio and AVI video rows,
+    decode distributed through extract_media_features fake=False,
+    matching a local decode."""
     from opensmile_spark.multimodal import (
-        extract_media_features, image_features, synthesize_png_bytes,
-        synthetic_media,
+        extract_media_features,
+        image_features,
+        synthesize_avi_bytes,
+        synthesize_wav_bytes,
     )
     from opensmile_spark.png import decode_png
+    from tests.encoders import synthesize_png_bytes
 
-    media = synthetic_media(spark, n=18, real_audio=True,
-                            real_images="png", real_video=True)
+    # synthetic_media's rows: kind and image geometry follow the id
+    kinds = ("image", "audio", "video")
+    geom = {i: (i % 4 * 128 + 256, i % 3 * 128 + 256) for i in range(18)}
+    synth = {"image": lambda i: synthesize_png_bytes(i, *geom[i]),
+             "audio": synthesize_wav_bytes,
+             "video": synthesize_avi_bytes}
+    media = spark.createDataFrame(
+        [(i, kinds[i % 3], bytearray(synth[kinds[i % 3]](i)), *geom[i])
+         for i in range(18)],
+        "media_id long, kind string, payload binary, width int, "
+        "height int")
     row = media.filter("kind = 'image'").select(
         "media_id", "payload", "width", "height").first()
     assert bytes(row.payload)[:8] == b"\x89PNG\r\n\x1a\n"
@@ -160,7 +175,7 @@ def test_rgba_composites_over_white(spark):
     from opensmile_spark.multimodal import (
         extract_media_features, image_features,
     )
-    from opensmile_spark.png import encode_png
+    from tests.encoders import encode_png
 
     rng = np.random.default_rng(6)
     img = rng.integers(0, 256, (12, 10, 4)).astype(np.uint8)

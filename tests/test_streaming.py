@@ -117,6 +117,39 @@ def test_stateful_expanding_stats(spark, stream_dir):
     assert np.isclose(one.run_std.iloc[-1], np.std(xs))
 
 
+def test_stateful_expanding_stats_keeps_key_types(spark, tmp_path):
+    """A bigint conv_id and turn_idx come out as bigint, with the same
+    running stats as a numpy cumulative mean/std per conversation."""
+    import pandas as pd
+
+    from opensmile_spark.streaming import (
+        run_stream_to_memory, stateful_expanding_stats,
+    )
+
+    rng = np.random.RandomState(3)
+    pdf = pd.DataFrame({
+        "conv_id": np.repeat(np.array([7, 1 << 40], np.int64), 5),
+        "turn_idx": np.tile(np.arange(5, dtype=np.int64), 2),
+        "char_len": rng.randint(1, 90, 10).astype(np.float64),
+    })
+    pdf.to_parquet(str(tmp_path / "part-0.parquet"), index=False)
+    s = stateful_expanding_stats(
+        spark.readStream.schema("conv_id bigint, turn_idx bigint, "
+                                "char_len double").parquet(str(tmp_path)))
+    run_stream_to_memory(s, "state_bigint", output_mode="update")
+    out = spark.table("state_bigint")
+    assert dict(out.dtypes)["conv_id"] == "bigint"
+    assert dict(out.dtypes)["turn_idx"] == "bigint"
+    got = out.toPandas().sort_values(["conv_id", "turn_idx"])
+    assert sorted(set(got.conv_id)) == [7, 1 << 40]
+    for _, g in got.groupby("conv_id"):
+        xs = g.char_len.to_numpy()
+        k = np.arange(1, len(xs) + 1)
+        assert list(g.turn_idx) == list(range(5))
+        assert np.allclose(g.run_mean, np.cumsum(xs) / k)
+        assert np.allclose(g.run_std, [np.std(xs[:i]) for i in k])
+
+
 def test_closed_session_kernel_functionals(spark, stream_dir):
     """Order statistics and peaks2 over every session, read through
     run_stream_to_memory with its flush: each value equals compute_all on

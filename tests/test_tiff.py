@@ -12,7 +12,8 @@ import pytest
 @pytest.mark.parametrize("comp", [1, 5, 32773])
 @pytest.mark.parametrize("pred", [1, 2])
 def test_roundtrips(shape, comp, pred):
-    from opensmile_spark.tiff import decode_tiff, encode_tiff
+    from opensmile_spark.tiff import decode_tiff
+    from tests.encoders import encode_tiff
 
     rng = np.random.default_rng(sum(shape) + comp + pred)
     img = rng.integers(0, 256, shape).astype(np.uint8)
@@ -24,7 +25,8 @@ def test_lzw_table_reset():
     """Large random input overflows the 12-bit LZW table, forcing the
     mid-stream CLEAR (and the early-change width ladder on both
     sides)."""
-    from opensmile_spark.tiff import decode_tiff, encode_tiff
+    from opensmile_spark.tiff import decode_tiff
+    from tests.encoders import encode_tiff
 
     rng = np.random.default_rng(1)
     img = rng.integers(0, 256, (120, 140, 3)).astype(np.uint8)
@@ -33,7 +35,8 @@ def test_lzw_table_reset():
 
 
 def test_multistrip_and_runs():
-    from opensmile_spark.tiff import decode_tiff, encode_tiff
+    from opensmile_spark.tiff import decode_tiff
+    from tests.encoders import encode_tiff
 
     rng = np.random.default_rng(2)
     img = rng.integers(0, 256, (50, 30, 3)).astype(np.uint8)
@@ -127,7 +130,8 @@ def test_malformed_and_forged():
 
 
 def test_truncations_terminate():
-    from opensmile_spark.tiff import decode_tiff, encode_tiff
+    from opensmile_spark.tiff import decode_tiff
+    from tests.encoders import encode_tiff
 
     rng = np.random.default_rng(6)
     img = rng.integers(0, 256, (20, 20, 3)).astype(np.uint8)
@@ -143,7 +147,7 @@ def test_tiff_through_multimodal(spark):
     from opensmile_spark.multimodal import (
         extract_media_features, image_features,
     )
-    from opensmile_spark.tiff import encode_tiff
+    from tests.encoders import encode_tiff
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (14, 11, 3)).astype(np.uint8)

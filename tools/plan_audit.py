@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -42,6 +44,16 @@ def n_op(name, plan):
 
 
 def main():
+    """Run every check with its written tables under one private
+    temporary directory, removed at exit."""
+    scratch = tempfile.mkdtemp(prefix="plan_audit_")
+    try:
+        return audit(scratch)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def audit(scratch):
     from pyspark.sql import functions as F
 
     from opensmile_spark import get_spark
@@ -136,8 +148,8 @@ def main():
     sorted_df = lld.repartition(4, "conv_id") \
         .sortWithinPartitions("conv_id", "turn_idx")
     # write+read to make layout physical
-    sorted_df.write.mode("overwrite").parquet("/tmp/plan_audit_sorted")
-    laid = spark.read.parquet("/tmp/plan_audit_sorted")
+    sorted_df.write.mode("overwrite").parquet(f"{scratch}/sorted")
+    laid = spark.read.parquet(f"{scratch}/sorted")
     fk = functionals_kernel(laid, ["char_len"], ("conv_id",),
                             families=["means"], pre_partitioned=True)
     p = explain(fk)
@@ -229,8 +241,8 @@ def main():
           f"sma -> sessionize -> session functionals share the conv_id "
           f"shuffle via prefix-key repartitioning)")
 
-    ivf_build(emb, "/tmp/plan_audit_ivf", n_centroids=8, fit_fraction=0.5)
-    pr = ivf_probe(spark, "/tmp/plan_audit_ivf",
+    ivf_build(emb, f"{scratch}/ivf", n_centroids=8, fit_fraction=0.5)
+    pr = ivf_probe(spark, f"{scratch}/ivf",
                    emb.filter(F.col("vec_id") < 3), k=5, n_probe=2)
     p = explain(pr)
 
@@ -245,7 +257,7 @@ def main():
             out[kv._1()] = kv._2().value()
         return out
 
-    two = scan_metrics(spark.read.parquet("/tmp/plan_audit_ivf/index")
+    two = scan_metrics(spark.read.parquet(f"{scratch}/ivf/index")
                        .filter(F.col("__cell").isin([0, 1])))
     check("ivf_probe partition-pruned scan",
           "PartitionFilters: [" in p and "__cell" in p
