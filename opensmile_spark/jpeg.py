@@ -1,23 +1,27 @@
-"""Pure-numpy baseline JPEG codec (ITU-T T.81, sequential DCT, Huffman).
+"""Pure-numpy JPEG codec (ITU-T T.81): a baseline encoder and the one
+decoder, `decode_jpeg`.
 
-The container ships no PIL/libjpeg, so the engine's compressed-image path
-was a documented stub through round 3. This module closes it from the
-public spec: a baseline encoder (4:4:4, standard Annex K quantization +
-Huffman tables, libjpeg-style quality scaling) and a decoder that parses
-SOI/APP/DQT/SOF0/DHT/DRI/SOS from the byte stream, Huffman-decodes the
-entropy segment (0xFF00 unstuffing, RSTn restart handling), dequantizes,
-inverse-zigzags, IDCTs and converts YCbCr back to RGB, with 4:4:4 / 4:2:2
-/ 4:2:0 chroma upsampling. All tables are read FROM THE FILE, so the
-decoder is not tied to this encoder's choices.
+Without PIL/libjpeg the engine's compressed-image path was a documented
+stub through round 3; this module closes it from the public spec. The
+encoder writes baseline 4:4:4 streams (standard Annex K quantization and
+Huffman tables, libjpeg-style quality scaling). The decoder has three
+parts, all tables read FROM THE FILE so it is not tied to this encoder:
 
-Scope: baseline/extended sequential Huffman JPEGs at 8- and 12-bit
-precision here (12-bit output scales to the pipeline's uint8 contract),
-plus progressive (SOF2) streams via jpeg_progressive.py (spectral
-selection, successive approximation, EOB runs) and lossless (SOF3)
-streams via jpeg_lossless.py (Annex H predictive DPCM, exact samples) —
-`decode_jpeg` dispatches all of these automatically. Arithmetic-coded
-and hierarchical variants raise ValueError (quarantined per-row by
-multimodal's on_error='column').
+- parse: one pass over the marker segments (fill bytes, DQT, DHT, DRI,
+  SOF with its dimension guard, SOS headers) into one frame state;
+- scan: each SOS goes to the scan decoder of the frame's mode —
+  sequential 8/12-bit (here: interleaved scans in MCU order, one-
+  component scans over the component's own block grid, RSTn restarts),
+  progressive (jpeg_progressive.py: DC, AC first and AC refinement
+  scans) or lossless (jpeg_lossless.py: Annex H predictive DPCM, exact
+  samples);
+- back end: for DCT frames, one pass per component that dequantizes,
+  inverse-zigzags, IDCTs, level-shifts, upsamples 4:2:2 / 4:2:0 chroma
+  and converts YCbCr to RGB (12-bit and >8-bit lossless samples scale to
+  the pipeline's uint8 contract).
+
+Arithmetic-coded and hierarchical frames raise ValueError (quarantined
+per row by multimodal's on_error='column').
 
 Everything here is per-payload kernel work invoked from the Arrow-batched
 decode UDF in multimodal.py; no Spark objects in this module.
@@ -421,23 +425,81 @@ def encode_jpeg(rgb: np.ndarray, quality: int = 85) -> bytes:
     return bytes(out)
 
 
-# ---- decoder ---------------------------------------------------------------
 
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Decode a baseline sequential JPEG to (h, w, 3) uint8 RGB (or
-    (h, w) for grayscale single-component streams). All quantization and
-    Huffman tables come from the byte stream."""
-    data = bytes(payload)
+
+# ---- decoder ---------------------------------------------------------------
+# One front end for every frame type: `_read_frame` walks the marker
+# segments once, keeps the DQT/DHT/DRI state, builds the frame at its SOF
+# and hands each SOS to the scan decoder of the frame's mode (sequential
+# below, progressive in jpeg_progressive.py, lossless in jpeg_lossless.py).
+# DCT frames then go through the one back end, `_pixels`.
+
+#: sample precisions each supported SOF accepts, and the error otherwise
+_PRECISIONS = {
+    0xC0: ((8, 12), "only 8- and 12-bit precision supported"),
+    0xC1: ((8, 12), "only 8- and 12-bit precision supported"),
+    0xC2: ((8,), "only 8-bit precision supported"),
+    0xC3: (range(2, 17), "invalid lossless JPEG precision"),
+}
+_UNSUPPORTED_SOF = (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF)
+
+
+class _Frame:
+    """One frame header (SOF) and what its scans have decoded into it.
+
+    `comps` is [(id, h_samp, v_samp, tq)]. A DCT frame keeps, per
+    component, the zigzag-ordered coefficients over the padded block grid
+    of interleaved MCUs, `coefs[ci]` (pad_by, pad_bx, 64), and the
+    component's own block grid `grid[ci]` = (nby, nbx) that a
+    non-interleaved scan walks (T.81 A.2.2). A lossless frame's one scan
+    leaves its exact samples in `samples`."""
+
+    def __init__(self, marker: int, seg: bytes):
+        prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
+        allowed, err = _PRECISIONS[marker]
+        if prec not in allowed:
+            raise ValueError(err)
+        if h == 0 or w == 0 or h * w > (1 << 26):
+            # corrupt-header guard: raise before any allocation so
+            # on_error='column' quarantines instead of OOMing a task
+            raise ValueError(f"unreasonable JPEG dimensions {w}x{h}")
+        if nc == 0:
+            raise ValueError("JPEG frame without components")
+        self.mode, self.precision, self.h, self.w = marker, prec, h, w
+        self.comps = []
+        for i in range(nc):
+            cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
+            self.comps.append((cid, hv >> 4, hv & 0xF, tq))
+        self.index = {c[0]: i for i, c in enumerate(self.comps)}
+        self.scanned: set[int] = set()
+        self.samples = None
+        if marker == 0xC3:
+            return
+        self.hmax = hmax = max(c[1] for c in self.comps)
+        self.vmax = vmax = max(c[2] for c in self.comps)
+        self.mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+        self.mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+        self.grid = [((-(-h * vs // vmax) + 7) // 8,
+                      (-(-w * hs // hmax) + 7) // 8)
+                     for _, hs, vs, _tq in self.comps]
+        self.coefs = [
+            np.zeros((self.mcus_y * vs, self.mcus_x * hs, 64), np.int32)
+            for _, hs, vs, _tq in self.comps]
+
+
+def _read_frame(data: bytes) -> _Frame:
+    """Parse a JPEG once, decoding every scan as its SOS arrives.
+
+    A sequential or lossless frame is complete once each component has
+    had its scan, so reading stops there; a progressive frame reads up
+    to EOI (or the end of the data, leaving later scans' bits zero)."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
     qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple[int, int], dict] = {}
-    comps = []          # (id, h_samp, v_samp, tq)
-    h = w = 0
-    precision = 8
+    htabs: dict[tuple[int, int], tuple] = {}
     restart_interval = 0
-    scan_comps = []
+    frame = None
     while pos < len(data):
         if data[pos] != 0xFF:
             pos += 1
@@ -469,7 +531,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     p += 64
                 q = np.zeros(64, dtype=np.int32)
                 q[ZIGZAG] = vals
-                qtabs[tq] = q.reshape(8, 8)
+                qtabs[tq] = q                   # natural order, flat
         elif marker == 0xC4:                    # DHT
             p = 0
             while p < len(seg):
@@ -479,31 +541,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 vals = list(seg[p + 17:p + 17 + n])
                 htabs[(tc, th)] = _peek_table(bits, vals)
                 p += 17 + n
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 (baseline/ext seq)
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec not in (8, 12):
-                raise ValueError("only 8- and 12-bit precision supported")
-            precision = prec
-            if h == 0 or w == 0 or h * w > (1 << 26):
-                # corrupt-header guard: raise before any allocation so
-                # on_error='column' quarantines instead of OOMing a task
-                raise ValueError(f"unreasonable JPEG dimensions {w}x{h}")
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-        elif marker == 0xC2:                    # SOF2 progressive Huffman
-            from .jpeg_progressive import decode_jpeg_progressive
-            return decode_jpeg_progressive(data)
-        elif marker == 0xC3:                    # SOF3 lossless sequential
-            from .jpeg_lossless import decode_jpeg_lossless
-            raw, prec = decode_jpeg_lossless(data, with_precision=True)
-            if prec <= 8:
-                return raw
-            # >8-bit samples: scale to the pipeline's uint8 contract
-            # (exact samples via jpeg_lossless.decode_jpeg_lossless)
-            return (raw >> (prec - 8)).astype(np.uint8)
-        elif marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
+        elif marker in _PRECISIONS:             # SOF0/1/2/3
+            if frame is not None:
+                raise ValueError("more than one JPEG frame (hierarchical "
+                                 "JPEG is not supported)")
+            frame = _Frame(marker, seg)
+        elif marker in _UNSUPPORTED_SOF:
             raise ValueError(
                 "unsupported JPEG variant (arithmetic/hierarchical); "
                 "baseline sequential (8/12-bit), progressive Huffman "
@@ -512,39 +555,56 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             (restart_interval,) = struct.unpack(">H", seg[:2])
         elif marker == 0xDA:                    # SOS
             ns = seg[0]
-            for i in range(ns):
-                cs, td_ta = seg[1 + 2 * i], seg[2 + 2 * i]
-                scan_comps.append((cs, td_ta >> 4, td_ta & 0xF))
-            pos += seglen
-            break
+            scan = [(seg[1 + 2 * i], seg[2 + 2 * i]) for i in range(ns)]
+            ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
+            if frame is None:
+                raise ValueError("truncated JPEG: missing SOF/SOS")
+            # (component index, DC table, AC table) per scan component
+            scan = [(frame.index[cs], t >> 4, t & 0xF) for cs, t in scan]
+            buf, boundaries, pos = _unstuff_entropy(data, pos + seglen)
+            if frame.mode == 0xC2:
+                from .jpeg_progressive import _progressive_scan as decode
+            elif frame.mode == 0xC3:
+                from .jpeg_lossless import _lossless_scan as decode
+            else:
+                decode = _sequential_scan
+            decode(frame, scan, ss, se, ahal >> 4, ahal & 0xF, htabs,
+                   buf, boundaries, restart_interval)
+            frame.scanned.update(ci for ci, _td, _ta in scan)
+            if frame.mode != 0xC2 \
+                    and len(frame.scanned) == len(frame.comps):
+                break
+            continue
         pos += seglen
-    if not comps or not scan_comps:
+    if frame is None or not frame.scanned:
         raise ValueError("truncated JPEG: missing SOF/SOS")
+    frame.qtabs = qtabs
+    return frame
 
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
 
-    by_id = {c[0]: c for c in comps}
-    order = []      # (comp_idx, h_samp, v_samp, q, dc_table, ac_table)
-    planes = []
-    for ci, (cs, td, ta) in enumerate(scan_comps):
-        _, hs, vs, tq = by_id[cs]
-        order.append((ci, hs, vs, qtabs[tq].astype(np.float64),
-                      htabs[(0, td)], htabs[(1, ta)]))
-        planes.append(np.zeros((mcus_y * vs * 8, mcus_x * hs * 8)))
-
-    buf, boundaries, _end = _unstuff_entropy(data, pos)
+def _sequential_scan(frame, scan, _ss, _se, _ah, _al, htabs, buf,
+                     boundaries, restart_interval):
+    """Huffman-decode one sequential scan into `frame.coefs`. An
+    interleaved scan walks the frame's MCU grid (h_samp x v_samp blocks
+    per component per MCU); a single-component scan walks that
+    component's own block grid, one block per MCU (T.81 A.2.2)."""
+    single = len(scan) == 1
+    mcus_y, mcus_x = frame.grid[scan[0][0]] if single \
+        else (frame.mcus_y, frame.mcus_x)
+    order = []      # (h_samp, v_samp, dc_table, ac_table)
+    flat = []
+    rowmul = []
+    for ci, td, ta in scan:
+        _, hs, vs, _tq = frame.comps[ci]
+        if single:
+            hs = vs = 1
+        order.append((hs, vs, htabs[(0, td)], htabs[(1, ta)]))
+        flat.append(frame.coefs[ci].reshape(-1, 64))
+        rowmul.append(frame.coefs[ci].shape[1])
     preds = [0] * len(order)
-    # zigzag coefficients per scan component over the padded block grid;
-    # dequant + IDCT run vectorized once per component after entropy.
-    # The bit reader is INLINED as locals (acc/nbits/bpos) — method-call
+    # zigzag coefficients land in the frame's per-component grids; the
+    # bit reader is INLINED as locals (acc/nbits/bpos) — method-call
     # overhead dominates a pure-python entropy loop otherwise.
-    coefs = [np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int32)
-             for (_ci, hs, vs, _q, _d, _a) in order]
-    flat = [c.reshape(-1, 64) for c in coefs]
-    rowmul = [mcus_x * hs for (_ci, hs, _vs, _q, _d, _a) in order]
     blen = len(buf)
     acc = 0
     nbits = 0
@@ -561,7 +621,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     nbits = 0
                     next_b += 1
                 preds = [0] * len(order)
-            for k, (ci, hs, vs, q, dct_t, act_t) in enumerate(order):
+            for k, (hs, vs, dct_t, act_t) in enumerate(order):
                 dtbl, dL = dct_t
                 atbl, aL = act_t
                 dmask = (1 << dL) - 1
@@ -637,38 +697,55 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                                 + mx * hs + bx] = blkvals
             mcu_count += 1
 
-    for k, (ci, hs, vs, q, _d, _a) in enumerate(order):
-        pby, pbx = mcus_y * vs, mcus_x * hs
-        qflat = q.reshape(-1)
+
+def _pixels(frame: _Frame) -> np.ndarray:
+    """The DCT back end: per component dequantize, IDCT, level shift by
+    2^(P-1) (T.81 A.3.1: 128 at 8-bit, 2048 at 12), upsample, scale
+    12-bit samples to the 8-bit range and crop; then YCbCr -> RGB (or
+    clip, for a single-component frame)."""
+    full = []
+    for ci, (_, hs, vs, tq) in enumerate(frame.comps):
+        coefs = frame.coefs[ci]
+        pby, pbx = coefs.shape[:2]
+        qflat = frame.qtabs[tq].astype(np.float64)
+        plane = np.empty((pby * 8, pbx * 8))
         # slab over block rows: bounds peak float64 working set on
         # guard-limit-sized images without changing per-block math
         slab = max(1, (1 << 21) // max(pbx, 1))
         for r0 in range(0, pby, slab):
             r1 = min(pby, r0 + slab)
-            zzc = coefs[k][r0:r1].reshape(-1, 64).astype(np.float64)
+            zzc = coefs[r0:r1].reshape(-1, 64).astype(np.float64)
             nat = np.zeros_like(zzc)
             nat[:, ZIGZAG] = zzc
             nat *= qflat
             blocks = nat.reshape(r1 - r0, pbx, 8, 8)
             spatial = (_C.T @ blocks) @ _C    # batched BLAS, not einsum
-            # level shift is 2^(P-1) (T.81 A.3.1: 128 at 8-bit, 2048 at 12)
-            planes[k][r0 * 8:r1 * 8] = spatial.transpose(
+            plane[r0 * 8:r1 * 8] = spatial.transpose(
                 0, 2, 1, 3).reshape((r1 - r0) * 8, pbx * 8) \
-                + float(1 << (precision - 1))
-
-    # upsample chroma to full resolution and crop
-    full = []
-    for k, (ci, hs, vs, _q, _d, _a) in enumerate(order):
-        p = planes[k]
-        if hs != hmax or vs != vmax:
-            p = np.repeat(np.repeat(p, vmax // vs, axis=0),
-                          hmax // hs, axis=1)
-        if precision > 8:
+                + float(1 << (frame.precision - 1))
+        if hs != frame.hmax or vs != frame.vmax:
+            plane = np.repeat(np.repeat(plane, frame.vmax // vs, axis=0),
+                              frame.hmax // hs, axis=1)
+        if frame.precision > 8:
             # 12-bit samples (0..4095, chroma centered at 2048) scale to
             # the 8-bit pipeline range before color conversion
-            p = p / float(1 << (precision - 8))
-        full.append(p[:h, :w])
+            plane = plane / float(1 << (frame.precision - 8))
+        full.append(plane[:frame.h, :frame.w])
     if len(full) == 1:
         return np.clip(full[0], 0, 255).astype(np.uint8)
     ycc = np.stack(full[:3], axis=-1)
     return ycbcr_to_rgb(ycc).astype(np.uint8)
+
+
+def decode_jpeg(payload: bytes) -> np.ndarray:
+    """Decode a sequential (8/12-bit), progressive or lossless JPEG to
+    (h, w, 3) uint8 RGB, or (h, w) for single-component frames. All
+    quantization and Huffman tables come from the byte stream. Lossless
+    samples above 8 bits are scaled to uint8 (exact samples:
+    jpeg_lossless.decode_jpeg_lossless)."""
+    frame = _read_frame(bytes(payload))
+    if frame.mode != 0xC3:
+        return _pixels(frame)
+    if frame.precision <= 8:
+        return frame.samples
+    return (frame.samples >> (frame.precision - 8)).astype(np.uint8)

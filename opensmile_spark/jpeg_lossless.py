@@ -1,5 +1,7 @@
-"""Lossless JPEG decoder (ITU-T T.81 Annex H — lossless sequential Huffman,
-SOF3). Closes the 'lossless variants raise' scope note in jpeg.py.
+"""Lossless JPEG scans (ITU-T T.81 Annex H — lossless sequential Huffman,
+SOF3). jpeg.py parses the markers and hands the frame's scan to
+`_lossless_scan`; `decode_jpeg_lossless` returns the exact samples, where
+`jpeg.decode_jpeg` scales samples above 8 bits to uint8.
 
 Lossless JPEG is predictive DPCM, not DCT: each sample is predicted from
 its causal neighbours Ra (left), Rb (above), Rc (above-left) via one of
@@ -21,7 +23,8 @@ The decoder is pinned by an exact roundtrip oracle (encoder in
 tests/encoders.py; lossless means bit-identical samples, the strongest
 test a codec can have). Interleaved multi-component scans are supported
 at 1x1 sampling (the only layout produced for RGB/multichannel lossless
-in practice); subsampled lossless interleave raises.
+in practice); subsampled lossless interleave and one scan per component
+raise.
 
 Reference analogue: the openSMILE tree only consumes decoded media via
 live connectors (/root/reference/src/video/openCVSource.cpp); this codec
@@ -32,11 +35,9 @@ here.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from .jpeg import _peek_table, _unstuff_entropy
+from .jpeg import _read_frame
 
 
 def _predict(ra: int, rb: int, rc: int, sel: int) -> int:
@@ -66,87 +67,35 @@ def decode_jpeg_lossless(payload: bytes,
     the scan-start default (H.2.1.3). With `with_precision`, returns
     (samples, declared precision) so callers can rescale for 8-bit
     pipelines without guessing from the data."""
-    data = bytes(payload)
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    htabs: dict[int, tuple] = {}
-    comps: list[tuple[int, int, int]] = []     # (id, h_samp, v_samp)
-    h = w = 0
-    precision = 0
-    restart_interval = 0
-    scan_comps: list[tuple[int, int]] = []     # (comp id, td)
-    sel = 1
-    pt = 0
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1                           # B.1.1.2 fill bytes
-        if pos + 1 >= len(data):
-            break
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        seg = data[pos + 2:pos + seglen]
-        if marker == 0xC4:                     # DHT (class 0 only here)
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0xF
-                bits = list(seg[p + 1:p + 17])
-                n = sum(bits)
-                vals = list(seg[p + 17:p + 17 + n])
-                if tc == 0:
-                    htabs[th] = _peek_table(bits, vals)
-                p += 17 + n
-        elif marker == 0xC3:                   # SOF3 lossless sequential
-            precision, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if not 2 <= precision <= 16:
-                raise ValueError("invalid lossless JPEG precision")
-            if h == 0 or w == 0 or h * w > (1 << 26):
-                raise ValueError(f"unreasonable JPEG dimensions {w}x{h}")
-            for i in range(nc):
-                cid, hv, _tq = seg[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF))
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("not a lossless (SOF3) JPEG")
-        elif marker == 0xDD:                   # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:                   # SOS
-            ns = seg[0]
-            for i in range(ns):
-                scan_comps.append((seg[1 + 2 * i], seg[2 + 2 * i] >> 4))
-            sel = seg[1 + 2 * ns]              # Ss = predictor selector
-            pt = seg[3 + 2 * ns] & 0xF         # Al = point transform
-            pos += seglen
-            break
-        pos += seglen
-    if not comps or not scan_comps:
-        raise ValueError("truncated JPEG: missing SOF3/SOS")
-    if len(scan_comps) < len(comps):
-        # T.81 allows coding each component as its own scan; decoding
-        # only the first would silently return one channel of a
-        # multi-channel image — raise so on_error='column' quarantines
+    frame = _read_frame(bytes(payload))
+    if frame.mode != 0xC3:
+        raise ValueError("not a lossless (SOF3) JPEG")
+    if with_precision:
+        return frame.samples, frame.precision
+    return frame.samples
+
+
+def _lossless_scan(frame, scan, sel, _se, _ah, pt, htabs, buf, boundaries,
+                   restart_interval):
+    """Decode the one scan of a lossless frame into `frame.samples`. The
+    scan header's Ss is the predictor selector `sel`, its Al the point
+    transform `pt` (H.2.2)."""
+    if len(scan) < len(frame.comps):
+        # T.81 allows coding each component as its own scan; that is
+        # not supported here — raise so on_error='column' quarantines
         raise ValueError(
             "multi-scan (non-interleaved) lossless JPEG not supported")
-    if len(scan_comps) > 1:
-        by_id = {c[0]: c for c in comps}
-        for cs, _td in scan_comps:
-            if by_id[cs][1] != 1 or by_id[cs][2] != 1:
+    if len(scan) > 1:
+        for ci, _td, _ta in scan:
+            if frame.comps[ci][1] != 1 or frame.comps[ci][2] != 1:
                 raise ValueError(
                     "subsampled interleaved lossless JPEG not supported")
     if not 1 <= sel <= 7:
         raise ValueError(f"invalid lossless predictor selector {sel}")
 
-    nc = len(scan_comps)
-    tables = [htabs[td] for _cs, td in scan_comps]
-    buf, boundaries, _end = _unstuff_entropy(data, pos)
+    nc = len(scan)
+    tables = [htabs[(0, td)] for _ci, td, _ta in scan]
+    h, w, precision = frame.h, frame.w, frame.precision
     out = np.zeros((h, w, nc), dtype=np.int64)
     default = 1 << (precision - pt - 1)
 
@@ -220,5 +169,4 @@ def decode_jpeg_lossless(payload: bytes,
     out <<= pt                                  # H.2.2 inverse point xform
     dtype = np.uint8 if precision <= 8 else np.uint16
     res = out.astype(dtype)
-    res = res[:, :, 0] if nc == 1 else res
-    return (res, precision) if with_precision else res
+    frame.samples = res[:, :, 0] if nc == 1 else res

@@ -15,9 +15,9 @@ both featurized with numpy (RMS/ZCR/spectral moments — the
 cEnergy/cMZcr/cSpectral LLD shapes). IMAGE decode is REAL for
 uncompressed 24-bit BMP (pure-struct header parse + numpy pixel view;
 channel means / luma stats / edge energy / histogram entropy), for
-baseline-sequential AND progressive JPEG (opensmile_spark/jpeg.py +
-jpeg_progressive.py: from-the-spec pure-numpy Huffman+DCT codecs — no
-PIL), for PNG (opensmile_spark/png.py: stdlib-zlib inflate + numpy
+sequential (8/12-bit), progressive AND lossless JPEG
+(opensmile_spark/jpeg.py with jpeg_progressive.py / jpeg_lossless.py:
+one from-the-spec pure-numpy decoder — no PIL), for PNG (opensmile_spark/png.py: stdlib-zlib inflate + numpy
 unfilter/deinterlace; gray/RGB/RGBA/palette, Adam7, 1-16 bit), for
 GIF (opensmile_spark/gif.py: from-spec LZW, interlace, animation
 compositing — animated GIFs route to the video featurizer), and for
@@ -391,8 +391,7 @@ def decode_avi(payload: bytes, frame_indices=None):
     rate/scale) and the 'movi' list. Uncompressed streams parse each
     '00db' raw-DIB chunk exactly like the BMP pixel path (bottom-up
     BGR24, 4-byte row stride); 'MJPG' streams decode each '00dc' chunk
-    as an independent baseline/progressive JPEG via the from-spec codec
-    in jpeg.py (motion-JPEG is intra-only — every frame is a complete
+    as an independent JPEG through jpeg.decode_jpeg (motion-JPEG is intra-only — every frame is a complete
     JFIF stream, so selective decode costs exactly the frames asked
     for). `frame_indices` decodes ONLY those frames (the
     frame_sample_plan contract: a task touches just the frames it owns —
@@ -585,12 +584,12 @@ def extract_media_features(
     """Decode + feature-extract via mapInPandas (Arrow-batched bytes).
 
     WAV/PCM + FLAC audio, uncompressed + motion-JPEG AVI video, 24-bit
-    BMP, baseline
-    + progressive JPEG, PNG, GIF (still + animated) and TIFF payloads
-    are decoded FOR REAL (stdlib/pure-struct/pure-numpy parsers incl.
-    the from-spec codecs in jpeg.py / jpeg_progressive.py / png.py /
-    gif.py / tiff.py / flac.py + numpy featurizers). Remaining
-    compressed payloads (H.264 video):
+    BMP, JPEG (baseline and 12-bit sequential, progressive, lossless),
+    PNG, GIF (still + animated) and TIFF payloads are decoded FOR REAL
+    (stdlib/pure-struct/pure-numpy parsers incl. the from-spec codecs in
+    jpeg.py / jpeg_progressive.py / jpeg_lossless.py / png.py / gif.py /
+    tiff.py / flac.py + numpy featurizers). Remaining compressed payloads
+    (H.264 video):
     fake=True substitutes a deterministic md5-seeded featurizer so the
     distributed plumbing — binary Arrow transfer, per-batch iteration,
     output schema — is fully exercised; fake=False raises
@@ -677,9 +676,10 @@ def extract_media_features(
             raise NotImplementedError(
                 "this codec needs PIL/av — not available in this "
                 "image; pass fake=True for the deterministic "
-                "plumbing path (WAV audio, BMP/JPEG/PNG images "
-                "and uncompressed AVI video decode for real "
-                "either way)")
+                "plumbing path (WAV and FLAC audio; BMP, PNG, GIF, "
+                "TIFF and JPEG images, baseline, 12-bit, progressive "
+                "or lossless; uncompressed and motion-JPEG AVI video "
+                "decode for real either way)")
 
     def run(batches):
         for pdf in batches:

@@ -22,6 +22,14 @@ import numpy as np
 from opensmile_spark.flac import _FIXED_COEFS
 from opensmile_spark.gif import _INTERLACE_PASSES
 from opensmile_spark.jpeg import (
+    AC_CHROM_BITS,
+    AC_CHROM_VALS,
+    AC_LUM_BITS,
+    AC_LUM_VALS,
+    DC_CHROM_BITS,
+    DC_CHROM_VALS,
+    DC_LUM_BITS,
+    DC_LUM_VALS,
     Q_CHROM,
     Q_LUM,
     ZIGZAG,
@@ -541,6 +549,42 @@ def encode_png(img: np.ndarray, filter_type: str | int = "cycle",
         ">IIBBBBB", w, h, 8, ctype, 0, 0, 1 if interlace else 0))
     out += chunk(b"IDAT", zlib.compress(raw, level))
     out += chunk(b"IEND", b"")
+    return bytes(out)
+
+
+# ---- JPEG, one sequential scan per component ----------------------------------
+
+
+def encode_jpeg_scan_per_component(rgb: np.ndarray,
+                                   quality: int = 85) -> bytes:
+    """`encode_jpeg(rgb, quality)` with its one interleaved scan split into
+    three single-component scans (T.81 A.2.2, legal in sequential mode):
+    the same headers, tables and quantized blocks, each component coded
+    in raster order over its own block grid with its own DC prediction."""
+    rgb = np.asarray(rgb)
+    h, w = rgb.shape[:2]
+    base = encode_jpeg(rgb, quality)
+    pos = 2
+    while base[pos + 1] != 0xDA:            # walk the header segments
+        pos += 2 + struct.unpack(">H", base[pos + 2:pos + 4])[0]
+    out = bytearray(base[:pos])             # SOI, APP0, DQT, SOF0, DHT
+    ycc = rgb_to_ycbcr(rgb.astype(np.float64))
+    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
+    lum = (_quality_scale(Q_LUM, quality), 0x00,
+           _canonical_codes(DC_LUM_BITS, DC_LUM_VALS),
+           _canonical_codes(AC_LUM_BITS, AC_LUM_VALS))
+    chrom = (_quality_scale(Q_CHROM, quality), 0x11,
+             _canonical_codes(DC_CHROM_BITS, DC_CHROM_VALS),
+             _canonical_codes(AC_CHROM_BITS, AC_CHROM_VALS))
+    for ci, (q, tables, dc, ac) in enumerate((lum, chrom, chrom)):
+        bw = _BitWriter()
+        pred = 0
+        for zz in _encode_blocks(_pad_replicate(ycc[..., ci], ph, pw), q):
+            pred = _write_block(bw, zz, pred, dc, ac)
+        bw.flush()
+        out += _seg(0xFFDA, bytes([1, ci + 1, tables, 0, 63, 0]))
+        out += bw.out
+    out += b"\xff\xd9"
     return bytes(out)
 
 

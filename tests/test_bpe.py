@@ -1,8 +1,6 @@
 """BPE train/encode: explicit merge pins, roundtrip, prefix property,
 repartition invariance, persistence."""
 
-import pytest
-
 from opensmile_spark.bpe import (
     BPEModel, _encode_word, _train_on_hist, bpe_encode, bpe_train,
     word_histogram)

@@ -3,7 +3,6 @@
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from opensmile_spark.classify import nb_fit, nb_score
 

@@ -2,7 +2,6 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import make_conv
 
@@ -107,7 +106,6 @@ def test_config_corpus_stages(spark):
     """The declarative runner drives a corpus build end-to-end: quality ->
     exact dedup -> sample -> shuffle -> pack, equivalent to calling the
     operators directly."""
-    from pyspark.sql import functions as F
 
     from opensmile_spark.config import run_config
 
@@ -172,7 +170,6 @@ def test_config_incremental_and_semdedup_stages(spark):
 def test_config_tokenize_pack_stages(spark):
     """Round-4 last-mile stages: line_dedup boilerplate cut ->
     in-stage BPE training + id encoding -> packed id sequences."""
-    from pyspark.sql import functions as F
 
     from opensmile_spark.config import run_config
 

@@ -3,7 +3,6 @@ equivalence, store roundtrip, fingerprint portability."""
 
 import hashlib
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 

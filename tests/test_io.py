@@ -121,7 +121,6 @@ def test_arff_roundtrip_both_layouts(spark, tmp_path):
 def test_nan_inf_check_policies(spark):
     """arff_naninfzero_checker analogue: exact per-column counts, zero
     scrub, and the fail gate."""
-    import math
 
     import pytest
     from pyspark.sql import functions as F

@@ -166,3 +166,19 @@ def test_mixed_corpus_decode_error_column(spark):
     # strict mode still fails fast on the same corpus
     with pytest.raises(Exception, match="SOF2|NotImplementedError"):
         extract_media_features(media, n_features=4, fake=False).collect()
+
+
+@pytest.mark.parametrize("shape", [(16, 24), (19, 30)])
+def test_one_scan_per_component_decodes_all_components(shape):
+    """A sequential frame may code each component in its own scan (T.81
+    A.2.2). Every scan must be decoded: stopping after the first one
+    returned the luma plane alone as a (h, w) grayscale image."""
+    from opensmile_spark.jpeg import decode_jpeg, encode_jpeg
+    from tests.encoders import encode_jpeg_scan_per_component
+
+    img = _test_image(*shape, seed=5)
+    payload = encode_jpeg_scan_per_component(img, 85)
+    assert payload.count(b"\xff\xda") == 3
+    got = decode_jpeg(payload)
+    assert got.shape == img.shape and got.dtype == np.uint8
+    assert got.tobytes() == decode_jpeg(encode_jpeg(img, 85)).tobytes()

@@ -5,7 +5,6 @@ execution paths (broadcast-join plan vs Arrow kernel) against each other."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from opensmile_spark.lm import (
     bm25_index, bm25_search, charlm_fit, charlm_perplexity)

@@ -2,7 +2,6 @@
 is deterministic across reruns and input partitionings."""
 
 import pytest
-from pyspark.sql import functions as F
 
 GOOD0 = "the cat and the dog of the house is that it sits for hours " * 5
 GOOD3 = ("the quick brown fox jumps over the lazy dog and it is resting "
@@ -63,7 +62,6 @@ def test_crawl_pipeline_end_to_end(spark, tmp_path):
     """WARC archives through the full crawl->training-data composition:
     robots filtering, URL-canonical dedup, quality, decontamination,
     deterministic shuffle."""
-    from pyspark.sql import functions as F
 
     from opensmile_spark.pipeline import crawl_pipeline
     from opensmile_spark.warc import write_warc

@@ -1,7 +1,6 @@
 """pre_partitioned kernel path == shuffled path on group-contiguous input."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 
 def test_pre_partitioned_matches_shuffled(spark, tmp_path):

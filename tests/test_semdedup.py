@@ -3,7 +3,6 @@ determinism under repartitioning, planted-duplicate behavior, cap."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from opensmile_spark.semdedup import kmeans_fit_np, semdedup
 
@@ -142,7 +141,6 @@ def test_semdedup_blocked_kernel_matches_dense(spark, monkeypatch):
     reorders the inner sums per tile shape), and memory stays
     O(block² + n·d) by construction (the Gram matrix is never
     materialized whole)."""
-    import os
 
     rng = np.random.RandomState(3)
     base = rng.randn(12, 8)

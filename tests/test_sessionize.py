@@ -1,8 +1,6 @@
 """Sessionization semantics (cTurnDetector analogue): gap rule + forced
 splits — FIXTURES.md case conv_gaps."""
 
-from pyspark.sql import functions as F
-
 from opensmile_spark.operators import sessionize, session_bounds
 from tests.conftest import make_conv
 
@@ -49,7 +47,6 @@ def test_turn_detector_hysteresis(spark):
     """cTurnDetector: n_pre frames above threshold to open, n_post below to
     close — hand-traced: an isolated single spike (< n_pre) is no turn; a
     short internal dip (< n_post) does not split a turn; a long dip does."""
-    from pyspark.sql import functions as F
 
     from opensmile_spark.operators import turn_detector
     from tests.conftest import make_conv

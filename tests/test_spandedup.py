@@ -3,7 +3,6 @@ repeated spans are found, merged to maximal ranges, and cut from the text;
 a brute-force python oracle pins the semantics."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from opensmile_spark.spandedup import duplicated_spans, span_dedup
 

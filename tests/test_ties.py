@@ -1,7 +1,6 @@
 """FIXTURES.md case 8 (conv_ties): duplicate ts with distinct turn_idx —
 stable (conv_id, turn_idx) ordering and deterministic as-of tie-breaking."""
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from opensmile_spark.functionals import functionals_kernel
