@@ -5321,14 +5321,14 @@ def q_corpus_pipeline(spark, sf_dir):
 
 def q_streaming_expanding(spark, sf_dir):
     """The STATEFUL streaming operator class as a driver gate: causal
-    expanding mean/std per conversation via applyInPandasWithState
-    (Welford accumulator carried across micro-batches — the streaming
-    twin of mvn(mode='expanding') and the execution slot for sequential
-    per-conv operators). The transcripts replay through readStream with
-    each conversation written whole and turn-sorted into one file, so
-    state-carry order matches event order; the oracle is the batch
-    expanding window (avg / sqrt(var_pop) / count over ROWS UNBOUNDED
-    PRECEDING). One emitted row per turn, hash-compared."""
+    expanding mean/std per conversation via applyInPandasWithState (the
+    conversation's values carried across micro-batches, each turn's stats
+    from batched.compute_expanding as backfill computes them — the
+    execution slot for sequential per-conv operators). The transcripts
+    replay through readStream with each conversation written whole and
+    turn-sorted into one file, so the held values are in event order; the
+    oracle is the batch expanding window (avg / sqrt(var_pop) / count over
+    ROWS UNBOUNDED PRECEDING). One emitted row per turn, hash-compared."""
     import tempfile
     import uuid
 
@@ -5341,7 +5341,7 @@ def q_streaming_expanding(spark, sf_dir):
          .withColumn("ts", F.col("ts").cast("timestamp")))
     d = tempfile.mkdtemp(prefix="osk_stream_state_")
     # one file per conv group, turn-sorted: a conversation never splits
-    # mid-stream, so the Welford state-carry equals the batch order
+    # mid-stream, so the values the state holds are in the batch order
     (t.repartition(2, "conv_id")
      .sortWithinPartitions("conv_id", "turn_idx")
      .write.mode("overwrite").parquet(d))
@@ -5349,7 +5349,7 @@ def q_streaming_expanding(spark, sf_dir):
     stream = spark.readStream.schema(batch.schema).parquet(d)
     out = stateful_expanding_stats(streaming_lld(stream))
     name = "gate_stream_state_" + uuid.uuid4().hex[:8]
-    run_stream_to_memory(out, name, output_mode="update")
+    run_stream_to_memory(out, name)
     # the memory sink holds materialized rows; the replayed files are done
     import shutil
 

@@ -76,10 +76,11 @@ def run_resumable(
     gains one row per bucket, all stamped with the job's wall time.
 
     Resume (some buckets done): only the missing buckets are recomputed,
-    one filtered job per bucket — each write is idempotent
-    (overwrite-by-partition), so a crash mid-resume loses at most one
-    bucket of work. The per-bucket filter path is the RESTART path only;
-    the happy path never re-executes the query per bucket.
+    one filtered job per bucket, its row count again from an Observation
+    on the write job — each write is idempotent (overwrite-by-partition),
+    so a crash mid-resume loses at most one bucket of work. The per-bucket
+    filter path is the RESTART path only; the happy path never re-executes
+    the query per bucket.
 
     Returns run metrics {buckets_done, buckets_skipped, rows_out, wall_sec}.
     """
@@ -87,8 +88,7 @@ def run_resumable(
 
     run_id = run_id or f"run{int(time.time())}"
     done = completed_buckets(spark, base_dir)
-    skipped = len(done)
-    total_rows = 0
+    rows_out = 0
     t0 = time.time()
     lineage_json = json.dumps(lineage or {})
     bucket_expr = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
@@ -104,42 +104,33 @@ def run_resumable(
         ])
         df.write.mode("overwrite").partitionBy("bucket") \
             .parquet(os.path.join(base_dir, "data"))
-        counts = obs.get
+        got = obs.get
+        counts = [int(got.get(f"b{b}") or 0) for b in range(n_buckets)]
+        rows_out = sum(counts)
         wall = round(time.time() - t0, 3)
         now = float(time.time())
-        rows = []
-        for b in range(n_buckets):
-            c = int(counts.get(f"b{b}") or 0)
-            total_rows += c
-            rows.append((b, "done", c, wall, now, run_id, lineage_json))
-        _append_manifest(spark, base_dir, rows)
-        return {
-            "run_id": run_id,
-            "buckets_done": n_buckets,
-            "buckets_skipped": 0,
-            "rows_out": total_rows,
-            "wall_sec": round(time.time() - t0, 3),
-        }
-
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        t1 = time.time()
-        df = build_query(spark)
-        part = df.filter(bucket_expr == b)
-        out_path = os.path.join(base_dir, "data", f"bucket={b}")
-        part.write.mode("overwrite").parquet(out_path)
-        rows = spark.read.parquet(out_path).count()
-        total_rows += rows
         _append_manifest(spark, base_dir, [
-            (b, "done", rows, round(time.time() - t1, 3),
-             float(time.time()), run_id, lineage_json)])
+            (b, "done", c, wall, now, run_id, lineage_json)
+            for b, c in enumerate(counts)])
+    else:
+        for b in sorted(set(range(n_buckets)) - done):
+            t1 = time.time()
+            obs = Observation(f"ckpt_{run_id}_b{b}")
+            part = build_query(spark).filter(bucket_expr == b) \
+                .observe(obs, F.count(F.lit(1)).alias("rows"))
+            part.write.mode("overwrite") \
+                .parquet(os.path.join(base_dir, "data", f"bucket={b}"))
+            rows = int(obs.get["rows"])
+            rows_out += rows
+            _append_manifest(spark, base_dir, [
+                (b, "done", rows, round(time.time() - t1, 3),
+                 float(time.time()), run_id, lineage_json)])
 
     return {
         "run_id": run_id,
-        "buckets_done": n_buckets - skipped,
-        "buckets_skipped": skipped,
-        "rows_out": total_rows,
+        "buckets_done": n_buckets - len(done),
+        "buckets_skipped": len(done),
+        "rows_out": rows_out,
         "wall_sec": round(time.time() - t0, 3),
     }
 

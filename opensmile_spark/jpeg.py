@@ -20,8 +20,10 @@ parts, all tables read FROM THE FILE so it is not tied to this encoder:
   and converts YCbCr to RGB (12-bit and >8-bit lossless samples scale to
   the pipeline's uint8 contract).
 
-Arithmetic-coded and hierarchical frames raise ValueError (quarantined
-per row by multimodal's on_error='column').
+Arithmetic-coded and hierarchical frames and corrupt payloads raise
+ValueError, the decoders' one exception class (quarantined per row by
+multimodal's on_error='column'); an error from reading a corrupt segment
+names its marker and is chained from the original.
 
 Everything here is per-payload kernel work invoked from the Arrow-batched
 decode UDF in multimodal.py; no Spark objects in this module.
@@ -470,6 +472,9 @@ class _Frame:
         for i in range(nc):
             cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
             self.comps.append((cid, hv >> 4, hv & 0xF, tq))
+        if not all(1 <= c[1] <= 4 and 1 <= c[2] <= 4 for c in self.comps):
+            raise ValueError("JPEG sampling factors must be 1-4 (T.81 "
+                             "B.2.2)")
         self.index = {c[0]: i for i, c in enumerate(self.comps)}
         self.scanned: set[int] = set()
         self.samples = None
@@ -500,84 +505,95 @@ def _read_frame(data: bytes) -> _Frame:
     htabs: dict[tuple[int, int], tuple] = {}
     restart_interval = 0
     frame = None
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        # T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a
-        # marker code — skip them or the scan misreads a bogus length
-        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(data):
-            break
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos:pos + 2])
-        seg = data[pos + 2:pos + seglen]
-        if marker == 0xDB:                      # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0xF
-                p += 1
-                if pq:
-                    vals = np.frombuffer(seg[p:p + 128], dtype=">u2")
-                    p += 128
-                else:
-                    vals = np.frombuffer(seg[p:p + 64], dtype=np.uint8)
-                    p += 64
-                q = np.zeros(64, dtype=np.int32)
-                q[ZIGZAG] = vals
-                qtabs[tq] = q                   # natural order, flat
-        elif marker == 0xC4:                    # DHT
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0xF
-                bits = list(seg[p + 1:p + 17])
-                n = sum(bits)
-                vals = list(seg[p + 17:p + 17 + n])
-                htabs[(tc, th)] = _peek_table(bits, vals)
-                p += 17 + n
-        elif marker in _PRECISIONS:             # SOF0/1/2/3
-            if frame is not None:
-                raise ValueError("more than one JPEG frame (hierarchical "
-                                 "JPEG is not supported)")
-            frame = _Frame(marker, seg)
-        elif marker in _UNSUPPORTED_SOF:
-            raise ValueError(
-                "unsupported JPEG variant (arithmetic/hierarchical); "
-                "baseline sequential (8/12-bit), progressive Huffman "
-                "and lossless (SOF3) are supported")
-        elif marker == 0xDD:                    # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:                    # SOS
-            ns = seg[0]
-            scan = [(seg[1 + 2 * i], seg[2 + 2 * i]) for i in range(ns)]
-            ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
-            if frame is None:
-                raise ValueError("truncated JPEG: missing SOF/SOS")
-            # (component index, DC table, AC table) per scan component
-            scan = [(frame.index[cs], t >> 4, t & 0xF) for cs, t in scan]
-            buf, boundaries, pos = _unstuff_entropy(data, pos + seglen)
-            if frame.mode == 0xC2:
-                from .jpeg_progressive import _progressive_scan as decode
-            elif frame.mode == 0xC3:
-                from .jpeg_lossless import _lossless_scan as decode
-            else:
-                decode = _sequential_scan
-            decode(frame, scan, ss, se, ahal >> 4, ahal & 0xF, htabs,
-                   buf, boundaries, restart_interval)
-            frame.scanned.update(ci for ci, _td, _ta in scan)
-            if frame.mode != 0xC2 \
-                    and len(frame.scanned) == len(frame.comps):
+    marker = 0xD8
+    try:
+        while pos < len(data):
+            if data[pos] != 0xFF:
+                pos += 1
+                continue
+            # T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a
+            # marker code — skip them or the scan misreads a bogus length
+            while pos + 1 < len(data) and data[pos + 1] == 0xFF:
+                pos += 1
+            if pos + 1 >= len(data):
                 break
-            continue
-        pos += seglen
+            marker = data[pos + 1]
+            pos += 2
+            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+                continue
+            if marker == 0xD9:
+                break
+            (seglen,) = struct.unpack(">H", data[pos:pos + 2])
+            seg = data[pos + 2:pos + seglen]
+            if marker == 0xDB:                      # DQT
+                p = 0
+                while p < len(seg):
+                    pq, tq = seg[p] >> 4, seg[p] & 0xF
+                    p += 1
+                    if pq:
+                        vals = np.frombuffer(seg[p:p + 128], dtype=">u2")
+                        p += 128
+                    else:
+                        vals = np.frombuffer(seg[p:p + 64], dtype=np.uint8)
+                        p += 64
+                    q = np.zeros(64, dtype=np.int32)
+                    q[ZIGZAG] = vals
+                    qtabs[tq] = q                   # natural order, flat
+            elif marker == 0xC4:                    # DHT
+                p = 0
+                while p < len(seg):
+                    tc, th = seg[p] >> 4, seg[p] & 0xF
+                    bits = list(seg[p + 1:p + 17])
+                    n = sum(bits)
+                    vals = list(seg[p + 17:p + 17 + n])
+                    htabs[(tc, th)] = _peek_table(bits, vals)
+                    p += 17 + n
+            elif marker in _PRECISIONS:             # SOF0/1/2/3
+                if frame is not None:
+                    raise ValueError("more than one JPEG frame (hierarchical "
+                                     "JPEG is not supported)")
+                frame = _Frame(marker, seg)
+            elif marker in _UNSUPPORTED_SOF:
+                raise ValueError(
+                    "unsupported JPEG variant (arithmetic/hierarchical); "
+                    "baseline sequential (8/12-bit), progressive Huffman "
+                    "and lossless (SOF3) are supported")
+            elif marker == 0xDD:                    # DRI
+                (restart_interval,) = struct.unpack(">H", seg[:2])
+            elif marker == 0xDA:                    # SOS
+                ns = seg[0]
+                scan = [(seg[1 + 2 * i], seg[2 + 2 * i]) for i in range(ns)]
+                ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
+                if frame is None:
+                    raise ValueError("truncated JPEG: missing SOF/SOS")
+                if len({cs for cs, _t in scan}) < ns:
+                    raise ValueError("JPEG scan names a component twice "
+                                     "(T.81 B.2.3)")
+                # (component index, DC table, AC table) per scan component
+                scan = [(frame.index[cs], t >> 4, t & 0xF) for cs, t in scan]
+                buf, boundaries, pos = _unstuff_entropy(data, pos + seglen)
+                if frame.mode == 0xC2:
+                    from .jpeg_progressive import _progressive_scan as decode
+                elif frame.mode == 0xC3:
+                    from .jpeg_lossless import _lossless_scan as decode
+                else:
+                    decode = _sequential_scan
+                decode(frame, scan, ss, se, ahal >> 4, ahal & 0xF, htabs,
+                       buf, boundaries, restart_interval)
+                frame.scanned.update(ci for ci, _td, _ta in scan)
+                if frame.mode != 0xC2 \
+                        and len(frame.scanned) == len(frame.comps):
+                    break
+                continue
+            pos += seglen
+    except (LookupError, ArithmeticError, struct.error) as e:
+        raise ValueError(f"corrupt JPEG in the 0xFF{marker:02X} segment:"
+                         f" {type(e).__name__}: {e}") from e
     if frame is None or not frame.scanned:
         raise ValueError("truncated JPEG: missing SOF/SOS")
+    if frame.mode != 0xC3 and any(c[3] not in qtabs for c in frame.comps):
+        raise ValueError("JPEG component uses an undefined quantization "
+                         "table")
     frame.qtabs = qtabs
     return frame
 

@@ -597,12 +597,13 @@ def extract_media_features(
 
     on_error="column" adds a `decode_error` string column and converts
     per-row decode failures (e.g. jpeg.py's ValueError on arithmetic/
-    hierarchical streams — progressive, 12-bit sequential and lossless
-    SOF3 all decode for real — truncated payloads, unknown codecs with
-    fake=False) into NaN features + the error message on THAT row
-    instead of killing the whole task — at corpus scale one corrupt
-    payload must not fail a 100k-row partition. on_error="raise" (the
-    default) keeps strict fail-fast semantics for curated inputs.
+    hierarchical streams, truncated payloads and corrupt segments, whose
+    message names the marker — progressive, 12-bit sequential and
+    lossless SOF3 all decode for real — unknown codecs with fake=False)
+    into NaN features + the error message on THAT row instead of killing
+    the whole task — at corpus scale one corrupt payload must not fail a
+    100k-row partition. on_error="raise" (the default) keeps strict
+    fail-fast semantics for curated inputs.
     """
     import hashlib
 

@@ -13,8 +13,14 @@ Structured Streaming:
                                   state left after AvailableNow, read back
                                   through the statestore source
   incremental LLDs             -> compute_lld's stateless exprs
-  stateful ops (adaptive MVN)  -> applyInPandasWithState per conv_id
+  stateful ops (adaptive MVN)  -> stateful_expanding_stats: one
+                                  applyInPandasWithState processor per
+                                  conv_id holding its values seen so far
   cExternalSink callback       -> foreachBatch / memory sink
+
+Both stateful processors evaluate through the batch operators' calls
+(batched.compute_groups per session, compute_expanding per turn): this
+module computes no statistic of its own.
 """
 
 from __future__ import annotations
@@ -42,68 +48,51 @@ def stateful_expanding_stats(
     lld_stream: DataFrame,
     value_col: str = "char_len",
 ) -> DataFrame:
-    """Causal expanding mean/M2 per conversation via applyInPandasWithState —
-    the streaming twin of mvn(mode='expanding') and the execution slot for
-    any sequential per-conv operator (the Viterbi-smoother class of ops,
-    pitchSmootherViterbi.cpp, that can never be a window expression).
+    """Causal expanding mean/std per conversation via applyInPandasWithState
+    — the streaming twin of backfill_functionals' expanding grid and the
+    execution slot for sequential per-conv operators (the Viterbi-smoother
+    class, pitchSmootherViterbi.cpp, that can never be a window expression).
 
-    State = (count, mean, M2) Welford accumulator carried across
-    micro-batches; emits one row per input turn with the running stats at
-    that turn (ts <= now ⇒ leakage-free), conv_id and turn_idx keeping
-    the input's types. The per-batch update is the vectorized Welford
-    recursion: mean_k from shifted cumulative sums,
-    M2_k = M2_{k-1} + (x_k − mean_{k-1})(x_k − mean_k).
-
-    Output mode is 'update' with NoTimeout: in this pyspark build the
-    ProcessingTimeTimeout + append combination crashes the Arrow state
-    worker (observed: empty-crash loop under Trigger.AvailableNow).
-    """
+    The state holds the conversation's values so far as float64 bytes (8
+    per turn). A micro-batch's rows are sorted by turn_idx and appended;
+    each new turn's run_mean/run_std are `amean`/`stddev` of the
+    batched.compute_expanding call backfill makes, so they are bit-equal to
+    backfill_functionals anchored at every turn when ts increases with
+    turn_idx. One row per input turn (ts <= now ⇒ leakage-free), conv_id
+    and turn_idx keeping the input's types; n is the turn count so far.
+    Append mode with NoTimeout: the state lives as long as the query."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from opensmile_spark.functionals.batched import compute_expanding
 
     key_t, idx_t = (lld_stream.schema[c].dataType.simpleString()
                     for c in ("conv_id", "turn_idx"))
     out_schema = (f"conv_id {key_t}, turn_idx {idx_t}, {value_col} double, "
                   f"run_mean double, run_std double, n long")
-    state_schema = "n long, mean double, m2 double"
 
     def fn(key, pdfs, state):
-        if state.exists:
-            n0, mean0, m20 = state.get
-        else:
-            n0, mean0, m20 = 0, 0.0, 0.0
-        frames = []
-        for pdf in pdfs:
-            frames.append(pdf)
-        if not frames:
-            state.update((n0, mean0, m20))
-            return
-        pdf = pd.concat(frames, ignore_index=True).sort_values("turn_idx")
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        k = np.arange(1, len(x) + 1, dtype=np.float64)
-        n = n0 + k
-        means = (n0 * mean0 + np.cumsum(x)) / n
-        prev_means = np.concatenate(([mean0], means[:-1]))
-        m2 = m20 + np.cumsum((x - prev_means) * (x - means))
-        stds = np.sqrt(np.maximum(m2 / n, 0.0))
-        state.update((int(n[-1]), float(means[-1]), float(m2[-1])))
+        held = np.frombuffer((state.getOption or (b"",))[0], np.float64)
+        pdf = pd.concat(pdfs, ignore_index=True).sort_values("turn_idx")
+        x = np.concatenate([held, pdf[value_col].to_numpy(np.float64)])
+        n = np.arange(held.size + 1, x.size + 1, dtype=np.int64)
+        got = compute_expanding(x, n, ["means", "moments"])
+        state.update((x.tobytes(),))
         yield pd.DataFrame({
             "conv_id": key[0],
             "turn_idx": pdf["turn_idx"].to_numpy(),
-            value_col: x,
-            "run_mean": means,
-            "run_std": stds,
-            "n": n.astype(np.int64),
+            value_col: x[held.size:],
+            "run_mean": got["amean"],
+            "run_std": got["stddev"],
+            "n": n,
         })
 
     return (
         lld_stream.select("conv_id", "turn_idx", value_col)
         .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+        .applyInPandasWithState(fn, out_schema, "x binary", "append",
+                                GroupStateTimeout.NoTimeout)
     )
 
 
@@ -242,21 +231,21 @@ def dedup_stream(
     )
 
 
-def run_stream_to_memory(stream_df: DataFrame, name: str,
-                         output_mode: str = "append", flush=None):
+def run_stream_to_memory(stream_df: DataFrame, name: str, flush=None):
     """Drive a streaming frame through all available input
-    (Trigger.AvailableNow) into the memory table `name`, under a temporary
-    checkpoint. `flush(checkpoint)`, if given, returns what the stream
-    still holds in its state at end of input (closed_session_functionals'
-    second value); it is appended to `name` — the reference's end-of-input
-    ticks (componentManager.cpp:1485-1502). Returns the query handle."""
+    (Trigger.AvailableNow) into the memory table `name` in append mode,
+    under a temporary checkpoint. `flush(checkpoint)`, if given, returns
+    what the stream still holds in its state at end of input
+    (closed_session_functionals' second value); it is appended to `name` —
+    the reference's end-of-input ticks (componentManager.cpp:1485-1502).
+    Returns the query handle."""
     import os
     import shutil
     import tempfile
 
     checkpoint = tempfile.mkdtemp(prefix="osk_stream_ckpt_")
     try:
-        q = stream_df.writeStream.outputMode(output_mode).format("memory") \
+        q = stream_df.writeStream.outputMode("append").format("memory") \
             .queryName(name).option("checkpointLocation", checkpoint) \
             .trigger(availableNow=True).start()
         q.awaitTermination()

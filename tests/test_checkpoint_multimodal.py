@@ -53,6 +53,40 @@ def test_partial_resume_skips_done_buckets(spark, tmp_path):
     assert calls["n"] == before      # no bucket re-executed
 
 
+def test_resume_recomputes_missing_buckets(spark, tmp_path):
+    """A manifest cut down to buckets {0, 1} resumes buckets 2 and 3 only:
+    the output equals the fresh run's, and each resumed bucket's manifest
+    rows_out is its row count."""
+    import shutil
+
+    from opensmile_spark.checkpoint import read_output, run_resumable
+    from opensmile_spark.datagen import generate_transcripts
+
+    base = str(tmp_path / "ckpt_resume")
+
+    def build(s):
+        return generate_transcripts(s, n_convs=40, turns_per_conv=5)
+
+    run_resumable(spark, build, base, n_buckets=4)
+    fresh = read_output(spark, base).toPandas()
+    md = str(tmp_path / "ckpt_resume" / "manifest")
+    m = spark.read.parquet(md)
+    kept = m.filter(F.col("bucket") < 2).collect()
+    shutil.rmtree(md)
+    spark.createDataFrame(kept, m.schema).write.parquet(md)
+
+    m2 = run_resumable(spark, build, base, n_buckets=4, run_id="resume")
+    assert m2["buckets_done"] == 2 and m2["buckets_skipped"] == 2
+    out = read_output(spark, base).toPandas()
+    cols = list(fresh.columns)
+    assert out[cols].sort_values(cols, ignore_index=True).equals(
+        fresh.sort_values(cols, ignore_index=True))
+    resumed = spark.read.parquet(md).filter(F.col("run_id") == "resume") \
+        .toPandas().set_index("bucket").rows_out.to_dict()
+    assert resumed == out.bucket.value_counts().loc[[2, 3]].to_dict()
+    assert m2["rows_out"] == sum(resumed.values())
+
+
 def test_multimodal_plumbing(spark):
     from opensmile_spark.multimodal import (
         extract_media_features, frame_sample_plan, synthetic_media,

@@ -129,3 +129,58 @@ def test_png_zip_bomb_capped():
     # 4x4 RGB implies ~52 raw bytes; the 50 MB stream must be cut off
     out = decode_png(png)     # zeros decode fine after the cap
     assert out.shape == (4, 4, 3)
+
+
+def _jpeg_payload(name):
+    return next(p for n, _d, p in _codecs() if n == name)
+
+
+@pytest.mark.parametrize("name", ["jpeg", "jpeg_prog"])
+def test_jpeg_scan_naming_a_component_twice_raises(name):
+    """T.81 B.2.3: the component selectors of one scan are distinct. The
+    first scan of either payload is interleaved; its second selector
+    overwritten by the first must raise, not decode a wrong image."""
+    from opensmile_spark.jpeg import decode_jpeg
+
+    buf = bytearray(_jpeg_payload(name))
+    sos = buf.index(b"\xff\xda")
+    assert buf[sos + 4] >= 2              # Ns, then (Cs, Td/Ta) pairs
+    buf[sos + 7] = buf[sos + 5]
+    with pytest.raises(ValueError, match="twice"):
+        decode_jpeg(bytes(buf))
+
+
+def test_jpeg_header_bit_flips_raise_value_error():
+    """Every single-bit flip of the header bytes (SOI through the first
+    SOS header) of the jpeg payload, and of a lossless one through
+    decode_jpeg_lossless, either decodes or raises ValueError — the one
+    class a caller quarantines. A wrapped lookup/arithmetic/struct error
+    names the marker being read and is chained from the original."""
+    from opensmile_spark.jpeg import decode_jpeg
+    from opensmile_spark.jpeg_lossless import decode_jpeg_lossless
+    from tests.encoders import encode_jpeg_lossless
+
+    lossless = encode_jpeg_lossless(
+        np.random.default_rng(2).integers(0, 256, (12, 9)).astype(np.uint8))
+    bad, wrapped = [], 0
+    for decode, payload in ((decode_jpeg, _jpeg_payload("jpeg")),
+                            (decode_jpeg_lossless, lossless)):
+        sos = payload.index(b"\xff\xda")
+        end = sos + 2 + int.from_bytes(payload[sos + 2:sos + 4], "big")
+        buf = bytearray(payload)
+        for i in range(end):
+            for bit in range(8):
+                buf[i] ^= 1 << bit
+                try:
+                    decode(bytes(buf))
+                except ValueError as e:
+                    if str(e).startswith("corrupt JPEG"):
+                        wrapped += 1
+                        assert "segment" in str(e) and isinstance(
+                            e.__cause__,
+                            (LookupError, ArithmeticError, struct.error))
+                except Exception as e:      # noqa: BLE001 — reported
+                    bad.append((decode.__name__, i, bit, repr(e)))
+                buf[i] ^= 1 << bit
+    assert not bad, bad[:10]
+    assert wrapped > 0

@@ -105,12 +105,12 @@ def test_stateful_expanding_stats(spark, stream_dir):
     )
 
     s = stateful_expanding_stats(streaming_lld(_read_stream(spark, stream_dir)))
-    run_stream_to_memory(s, "state_out", output_mode="update")
+    run_stream_to_memory(s, "state_out")
     got = spark.sql("SELECT * FROM state_out").toPandas()
     assert len(got) == 200
     one = got[got.conv_id == got.conv_id.iloc[0]].sort_values("turn_idx")
     xs = one.char_len.to_numpy()
-    # Welford expanding mean equals numpy cumulative mean
+    # expanding mean equals numpy cumulative mean
     cum_mean = np.cumsum(xs) / np.arange(1, len(xs) + 1)
     assert np.allclose(one.run_mean.to_numpy(), cum_mean)
     # expanding population std at the last row
@@ -136,7 +136,7 @@ def test_stateful_expanding_stats_keeps_key_types(spark, tmp_path):
     s = stateful_expanding_stats(
         spark.readStream.schema("conv_id bigint, turn_idx bigint, "
                                 "char_len double").parquet(str(tmp_path)))
-    run_stream_to_memory(s, "state_bigint", output_mode="update")
+    run_stream_to_memory(s, "state_bigint")
     out = spark.table("state_bigint")
     assert dict(out.dtypes)["conv_id"] == "bigint"
     assert dict(out.dtypes)["turn_idx"] == "bigint"
@@ -277,6 +277,60 @@ def test_dedup_stream_drops_duplicates(spark, tmp_path):
     got = spark.sql("SELECT * FROM dedup_out").toPandas()
     assert len(got) == 10
     assert sorted(got.text.unique()) == sorted(f"text {i}" for i in range(10))
+
+
+def test_stateful_expanding_stats_matches_backfill_bits(spark, tmp_path):
+    """Each conversation spans 3 one-file micro-batches, one of them 700
+    turns long (two _CHAN_B block edges): every turn's run_mean/run_std
+    are tobytes()-equal to backfill_functionals' char_len_amean/_stddev
+    with an anchor at that turn's ts, and n is the turn count so far."""
+    import pandas as pd
+
+    from opensmile_spark.operators.asof import backfill_functionals
+    from opensmile_spark.streaming import (
+        run_stream_to_memory, stateful_expanding_stats,
+    )
+
+    rng = np.random.default_rng(16)
+    lens = {"a": 700, "b": 40, "c": 9, "d": 3}
+    pdf = pd.DataFrame({
+        "conv_id": np.repeat(list(lens), list(lens.values())),
+        "turn_idx": np.concatenate([np.arange(n) for n in lens.values()]),
+    })
+    pdf["ts"] = pd.Timestamp("2024-01-01", tz="UTC") + pd.to_timedelta(
+        pdf.turn_idx * 7 + pdf.conv_id.map(ord), unit="s")
+    pdf["char_len"] = rng.lognormal(4.0, 1.5, len(pdf))
+    third = pdf.turn_idx * 3 // pdf.conv_id.map(lens)
+    src = tmp_path / "src"
+    src.mkdir()
+    for k in range(3):
+        f = src / f"part-{k}.parquet"
+        pdf[third == k].to_parquet(str(f), index=False,
+                                   coerce_timestamps="us")
+        os.utime(f, (1_700_000_000 + k, 1_700_000_000 + k))
+    schema = ("conv_id string, turn_idx long, ts timestamp, "
+              "char_len double")
+    stream = spark.readStream.schema(schema) \
+        .option("maxFilesPerTrigger", 1).parquet(str(src))
+    q = run_stream_to_memory(stateful_expanding_stats(stream), "state_bits")
+    assert len(q.recentProgress) >= 3
+    got = spark.table("state_bits").toPandas() \
+        .sort_values(["conv_id", "turn_idx"], ignore_index=True)
+
+    lld = spark.read.schema(schema).parquet(str(src))
+    want = backfill_functionals(
+        lld, lld.selectExpr("conv_id", "ts AS anchor_ts"), ["char_len"],
+        families=["means", "moments"]).toPandas() \
+        .sort_values(["conv_id", "anchor_ts"], ignore_index=True)
+    assert len(got) == len(want) == len(pdf)
+    assert (got.conv_id == want.conv_id).all()
+    assert got.run_mean.to_numpy().tobytes() == \
+        want.char_len_amean.to_numpy().tobytes()
+    assert got.run_std.to_numpy().tobytes() == \
+        want.char_len_stddev.to_numpy().tobytes()
+    assert (got.n == got.turn_idx + 1).all()
+    assert (got.n == want.n_visible).all()
+    assert got.groupby("conv_id").n.max().to_dict() == lens
 
 
 def test_streaming_bpe_encode(spark, tmp_path):

@@ -14,9 +14,10 @@ Checks (SURVEY.md §4 / BENCH.md plan-level claims):
   6. pre_partitioned kernel has NO exchange.
   7. backfill_functionals and viterbi_smooth_df are one MapInArrow each
      (backfill: over one exchange), with no pandas boundary.
-  8. closed_session_functionals on a streaming frame is one
-     FlatMapGroupsInPandasWithState over one Exchange, with no aggregate
-     (session_window) and no MapInPandas/MapInArrow.
+  8. closed_session_functionals and stateful_expanding_stats on a
+     streaming frame are each one FlatMapGroupsInPandasWithState over one
+     Exchange, with no aggregate (session_window) and no
+     MapInPandas/MapInArrow.
 
 Usage: python tools/plan_audit.py
 """
@@ -184,25 +185,32 @@ def audit(scratch):
           f"(arrow={n_op('MapInArrow', p)}, "
           f"pandas={n_op('MapInPandas', p)})")
 
-    # closed-session functionals on a STREAMING frame: one stateful
+    # both stateful operators on a STREAMING frame: one stateful
     # applyInPandasWithState processor per conv_id over one exchange — no
-    # session_window aggregate, no batch-side Arrow/pandas map
-    from opensmile_spark.streaming import closed_session_functionals
+    # aggregate (session_window, running sums), no batch-side Arrow/pandas
+    # map
+    from opensmile_spark.streaming import (
+        closed_session_functionals, stateful_expanding_stats,
+    )
 
     rate = spark.readStream.format("rate").load().select(
         (F.col("value") % 3).cast("string").alias("conv_id"),
         F.col("value").cast("int").alias("turn_idx"),
         F.col("timestamp").alias("ts"),
         F.col("value").cast("double").alias("char_len"))
-    p = explain(closed_session_functionals(rate)[0])
-    n_agg = count(r"\(\d+\) \w*Aggregate", p)
-    maps = n_op("MapInPandas", p) + n_op("MapInArrow", p)
-    check("closed_session_functionals one stateful processor, one exchange",
-          n_op("FlatMapGroupsInPandasWithState", p) == 1
-          and n_op("Exchange", p) == 1 and n_agg == 0 and maps == 0,
-          f"(stateful={n_op('FlatMapGroupsInPandasWithState', p)}, "
-          f"exchanges={n_op('Exchange', p)}, aggregates={n_agg}, "
-          f"maps={maps})")
+    for name, stream in (
+            ("closed_session_functionals",
+             closed_session_functionals(rate)[0]),
+            ("stateful_expanding_stats", stateful_expanding_stats(rate))):
+        p = explain(stream)
+        n_agg = count(r"\(\d+\) \w*Aggregate", p)
+        maps = n_op("MapInPandas", p) + n_op("MapInArrow", p)
+        check(f"{name} one stateful processor, one exchange",
+              n_op("FlatMapGroupsInPandasWithState", p) == 1
+              and n_op("Exchange", p) == 1 and n_agg == 0 and maps == 0,
+              f"(stateful={n_op('FlatMapGroupsInPandasWithState', p)}, "
+              f"exchanges={n_op('Exchange', p)}, aggregates={n_agg}, "
+              f"maps={maps})")
 
     # round-2 additions -----------------------------------------------------
     from opensmile_spark.dedup import embedding_near_dups
