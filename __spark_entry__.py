@@ -470,8 +470,7 @@ def q_interval_join(spark, sf_dir):
 def q_salted_stats(spark, sf_dir):
     from opensmile_spark.operators import salted_partial_stats
 
-    out = salted_partial_stats(_lld(spark, sf_dir), ["char_len"],
-                               salt_buckets=8)
+    out = salted_partial_stats(_lld(spark, sf_dir), ["char_len"])
     return out.select(
         "conv_id", "n_turns",
         *[F.round(F.col(f"`char_len_{c}`"), 6).alias(f"char_len_{c}")
@@ -516,9 +515,9 @@ def q_salted_sma_equivalence(spark, sf_dir):
     per bucket, 1-row boundary overlap) must equal the plain per-conv sma3 —
     the oracle IS the unsalted formula, so this gate proves the
     salt-and-stitch windows are exact. Round-5 re-pack: the per-conv
-    salted_partial_stats columns (map-side partials merged across salt
-    buckets) join in on conv_id, so both skew-salting disciplines ride
-    one driver-window gate."""
+    salted_partial_stats columns (one groupBy: Spark's map-side partials
+    merged once per key) join in on conv_id, so both skew disciplines
+    ride one driver-window gate."""
     from opensmile_spark.operators import overlap_salt, sma
 
     lld = _lld(spark, sf_dir)

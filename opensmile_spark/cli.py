@@ -37,6 +37,25 @@ import json
 import os
 
 
+def _write_observed(df, path, **aggs):
+    """Overwrite parquet at `path` with `df`; return the named aggregate
+    columns `aggs`, observed on the write job itself (no read-back, no
+    second run of the query)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, *[e.alias(k) for k, e in aggs.items()]) \
+        .write.mode("overwrite").parquet(path)
+    return obs.get
+
+
+def _rows(df, path):
+    """Write `df` to `path` (see _write_observed); its row count."""
+    from pyspark.sql import functions as F
+
+    return _write_observed(df, path, rows=F.count(F.lit(1)))["rows"]
+
+
 def _pipeline_df(spark, args):
     from opensmile_spark.functionals import functionals_kernel
     from opensmile_spark.lld import compute_lld
@@ -139,8 +158,8 @@ def cmd_dedup(spark, args):
         threshold=args.jaccard,
     ).select("id_a", "id_b")
     kept = dedup_survivors(docs, pairs)
-    kept.write.mode("overwrite").parquet(args.output)
-    n_in, n_out = docs.count(), spark.read.parquet(args.output).count()
+    n_out = _rows(kept, args.output)
+    n_in = docs.count()
     print(json.dumps({"output": args.output, "rows_in": n_in,
                       "rows_out": n_out, "removed": n_in - n_out}))
 
@@ -153,8 +172,8 @@ def cmd_decontaminate(spark, args):
     bench = read_table(spark, args.benchmark)
     kept = decontaminate_survivors(
         docs, bench, k_shingle=args.k_shingle, min_overlap=args.min_overlap)
-    kept.write.mode("overwrite").parquet(args.output)
-    n_in, n_out = docs.count(), spark.read.parquet(args.output).count()
+    n_out = _rows(kept, args.output)
+    n_in = docs.count()
     print(json.dumps({"output": args.output, "rows_in": n_in,
                       "rows_out": n_out, "removed": n_in - n_out}))
 
@@ -173,8 +192,8 @@ def cmd_sample(spark, args):
         kept = hash_sample(docs, args.rate, key_col=args.key_col,
                            seed=args.seed)
         rates = {"*": args.rate}
-    kept.write.mode("overwrite").parquet(args.output)
-    n_in, n_out = docs.count(), spark.read.parquet(args.output).count()
+    n_out = _rows(kept, args.output)
+    n_in = docs.count()
     print(json.dumps({"output": args.output, "rows_in": n_in,
                       "rows_out": n_out, "rates": rates}))
 
@@ -256,11 +275,10 @@ def cmd_redact(spark, args):
     if args.replace:
         out = out.drop(args.text_col).withColumnRenamed(
             f"{args.text_col}_redacted", args.text_col)
-    out.write.mode("overwrite").parquet(args.output)
-    counts = {c: int(x) for c, x in zip(
-        [c for c in out.columns if c.startswith("n_")],
-        out.groupBy().sum(*[c for c in out.columns
-                            if c.startswith("n_")]).first() or [])}
+    n_cols = [c for c in out.columns if c.startswith("n_")]
+    got = _write_observed(out, args.output,
+                          **{c: F.sum(c) for c in n_cols})
+    counts = {c: int(got[c] or 0) for c in n_cols}
     print(json.dumps({"output": args.output, "redactions": counts}))
 
 
@@ -394,8 +412,8 @@ def cmd_datagen(spark, args):
         spark, n_convs=args.n_convs, turns_per_conv=args.turns,
         seed=args.seed, mega_conv_factor=args.mega_factor,
     )
-    t.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"output": args.output, "rows": t.count()}))
+    print(json.dumps({"output": args.output,
+                      "rows": _rows(t, args.output)}))
 
 
 def cmd_resample(spark, args):

@@ -618,6 +618,13 @@ def _sequential_scan(frame, scan, _ss, _se, _ah, _al, htabs, buf,
         flat.append(frame.coefs[ci].reshape(-1, 64))
         rowmul.append(frame.coefs[ci].shape[1])
     preds = [0] * len(order)
+    # T.81 F.1.2.1/F.1.2.2: at precision P a DC difference has at most
+    # P+3 magnitude bits, an AC coefficient P+2, and a DC value stays
+    # within +-2^(P+3); a corrupt stream past these would not fit the
+    # int32 grid
+    dc_size = frame.precision + 3
+    ac_size = frame.precision + 2
+    dc_lim = 1 << dc_size
     # zigzag coefficients land in the frame's per-component grids; the
     # bit reader is INLINED as locals (acc/nbits/bpos) — method-call
     # overhead dominates a pure-python entropy loop otherwise.
@@ -658,6 +665,10 @@ def _sequential_scan(frame, scan, _ss, _se, _ah, _al, htabs, buf,
                                 "invalid Huffman code in entropy stream")
                         nbits -= e >> 8
                         size = e & 0xFF
+                        if size > dc_size:
+                            raise ValueError(
+                                "JPEG DC magnitude category above the "
+                                "frame precision's limit")
                         if size:
                             while nbits < size:
                                 acc = ((acc << 8)
@@ -670,6 +681,9 @@ def _sequential_scan(frame, scan, _ss, _se, _ah, _al, htabs, buf,
                             v = (acc >> nbits) & ((1 << size) - 1)
                             preds[k] += v if v >= (1 << (size - 1)) \
                                 else v - (1 << size) + 1
+                            if not -dc_lim <= preds[k] <= dc_lim:
+                                raise ValueError(
+                                    "JPEG DC coefficient out of range")
                         blkvals[0] = preds[k]
                         # AC
                         i = 1
@@ -697,6 +711,10 @@ def _sequential_scan(frame, scan, _ss, _se, _ah, _al, htabs, buf,
                             if i > 63:
                                 break
                             s = rs & 0xF
+                            if s > ac_size:
+                                raise ValueError(
+                                    "JPEG AC magnitude category above "
+                                    "the frame precision's limit")
                             while nbits < s:
                                 acc = ((acc << 8)
                                        | (buf[bpos]

@@ -378,39 +378,20 @@ def incremental_backfill(
     at (conv, anchor) depend only on that conv's rows — conversations are
     independent, so an untouched conv's rows cannot change.
     """
-    # localCheckpoint materializes the per-conv watermark aggregate and
-    # BREAKS its lineage from `lld` — the production shape anyway (the
-    # watermark table is persisted each run and read back next run), and
-    # without it every stale-set join back onto `lld`/`anchors` trips
-    # Spark's ambiguous-self-join check on the shared scan attributes
-    cur_max = conv_watermark(lld, on, ts_col).localCheckpoint(eager=True)
+    cur_max = conv_watermark(lld, on, ts_col)
     prev = prev_max_ts.withColumnRenamed("max_ts", "__prev_max")
     changed = (F.col("__prev_max").isNull()
                | (F.col("max_ts") != F.col("__prev_max")))
     if "n_rows" in prev_max_ts.columns:
         prev = prev.withColumnRenamed("n_rows", "__prev_n")
         changed = changed | (F.col("n_rows") != F.col("__prev_n"))
-    stale = cur_max.join(prev, on, "left").filter(changed).select(on)
-    # rename the key on the stale side: it shares lineage with `lld`
-    # (cur_max derives from it), and Spark's ambiguous-self-join check
-    # rejects a same-name join column on a common parent
-    stale_k = stale.select(F.col(on).alias("__stale_key"))
-
-    def only_stale(df, how):
-        # DataFrame-bound column refs: the stale side shares lineage with
-        # `lld` (it derives from the same scan), and both the lld and
-        # anchor sides pass through here before backfill unions them —
-        # string or alias-based join columns trip Spark's
-        # ambiguous-self-join check on the shared attributes,
-        # instance-bound ones do not
-        return df.join(F.broadcast(stale_k),
-                       df[on] == stale_k["__stale_key"], how)
-
+    stale = F.broadcast(cur_max.join(prev, on, "left").filter(changed)
+                        .select(on))
     fresh_feats = backfill_functionals(
-        only_stale(lld, "left_semi"), only_stale(anchors, "left_semi"),
+        lld.join(stale, on, "left_semi"), anchors.join(stale, on, "left_semi"),
         value_cols, families, options, window_seconds,
         on, anchor_ts, ts_col, order_col,
     )
-    carried = only_stale(prev_features, "left_anti")
+    carried = prev_features.join(stale, on, "left_anti")
     features = carried.unionByName(fresh_feats)
     return features, cur_max

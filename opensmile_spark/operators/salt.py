@@ -1,20 +1,16 @@
-"""Skew handling — salted repartition with boundary overlap.
+"""Skew handling (SURVEY.md §4 skew row).
 
 The reference has no skew problem (single machine; skew = a long file). At
-10^12 turns a mega-conversation makes one Spark task arbitrarily large. Two
-remedies here (SURVEY.md §4 skew row):
+10^12 turns a mega-conversation makes one Spark task arbitrarily large.
 
-1. `salted_partial_stats`: spread each key's rows over `salt_buckets`
-   salts (a hash of `order_col`), aggregate per (key, salt) into partials
-   (count, sums, mean, M2, min, max, nonzero count), then combine the
-   partials per key into EXACT amean/absmean/qmean/rqmean/variance/
-   stddev/min/max/range/nnz with the reference's population formulas.
-   Variance combines with Chan's centered formula over a window giving
-   each salt its key's mean, never the cancelling E[x^2] - mean^2. The
-   heavy shuffle thus runs over `salt_buckets` reducers per hot key.
-   Order statistics (percentiles) are not decomposable and are not
-   produced on this path — callers needing them on mega-convs use the
-   kernel path (explicitly NOT silently approximated).
+1. `salted_partial_stats`: decomposable per-key functionals (amean,
+   absmean, qmean, rqmean, variance, stddev, min, max, range, nnz) need
+   no salting. They are one groupBy over `functionals_sql`'s expressions;
+   Spark's partial/final aggregation already spreads a hot key over every
+   map task and merges one partial row per task. Order statistics
+   (percentiles) are not decomposable and are not produced here —
+   callers needing them on mega-convs use the kernel path (explicitly
+   NOT silently approximated).
 
 2. `overlap_salt`: bucket rows with `pre` boundary rows replicated into the
    next bucket so sliding-window ops (sma/delta with lookback `pre`,
@@ -27,6 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from opensmile_spark.functionals.bank import _fsql_named
+
+#: salted_partial_stats' per-column functionals, in output order
+_STATS = ("amean", "absmean", "qmean", "rqmean", "variance", "stddev",
+          "min", "max", "range", "nnz")
 
 
 def overlap_salt(
@@ -76,69 +78,20 @@ def overlap_salt(
     return owner.unionByName(pre_rows).unionByName(post_rows).drop("__rn")
 
 
-def salted_partial_stats(
-    df: DataFrame,
-    cols: list[str],
-    by=("conv_id",),
-    salt_buckets: int = 16,
-    order_col: str = "turn_idx",
-) -> DataFrame:
-    """Exact two-level aggregation for decomposable functionals on skewed
-    keys: partial sums per (key, salt) then exact combine per key.
+def salted_partial_stats(df: DataFrame, cols: list[str],
+                         by=("conv_id",)) -> DataFrame:
+    """Per-key decomposable functionals for skewed keys: n_turns, then per
+    column amean/absmean/qmean/rqmean/variance/stddev/min/max/range/nnz,
+    each `functionals_sql`'s expression (over the column's non-null
+    values), in one groupBy.
 
-    Emits amean/absmean/qmean/rqmean/variance/stddev/min/max/range/nnz with
-    the reference's population formulas — identical results to the direct
-    groupBy, but the heavy shuffle is spread over `salt_buckets` reducers
-    per hot key (AQE skew-join handles joins; this handles the agg)."""
-    by = list(by)
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets))
-    )
-    # per-bucket partials carry (n, mean, M2=var_pop*n) so variance combines
-    # with Chan's parallel central-moment formula — NOT the raw E[x^2]-mean^2
-    # expansion, which catastrophically cancels for large-mean columns
-    partial = salted.groupBy(*by, "__salt").agg(
-        F.count("*").alias("__n"),
-        *[e for c in cols for e in (
-            F.sum(c).alias(f"__s1_{c}"),
-            F.avg(c).alias(f"__mu_{c}"),
-            (F.var_pop(c) * F.count(c)).alias(f"__m2_{c}"),
-            F.sum(F.col(c) * F.col(c)).alias(f"__s2_{c}"),
-            F.sum(F.abs(F.col(c))).alias(f"__sa_{c}"),
-            F.min(c).alias(f"__mn_{c}"),
-            F.max(c).alias(f"__mx_{c}"),
-            F.sum(F.when(F.col(c) != 0.0, 1).otherwise(0)).alias(f"__nz_{c}"),
-        )],
-    )
-    # the partial table is tiny (keys x salt_buckets rows); a window gives
-    # each bucket the whole-key mean so the cross-bucket correction term
-    # sum(n_i * (mean_i - mean_tot)^2) is computed centered, never expanded
-    wk = Window.partitionBy(*by)
+    Every aggregate is declarative, so Spark runs a partial aggregate in
+    each map task and merges once after one shuffle (var_pop merges its
+    partials with the centred Chan update): a hot key reaches its reducer
+    as one partial row per map task. Salting the key would add exchanges,
+    not parallelism."""
+    aggs = [F.count("*").cast("long").alias("n_turns")]
     for c in cols:
-        mt = F.sum(F.col("__n") * F.col(f"__mu_{c}")).over(wk) \
-            / F.sum("__n").over(wk)
-        partial = partial.withColumn(
-            f"__dev_{c}",
-            F.col("__n") * F.pow(F.col(f"__mu_{c}") - mt, 2),
-        )
-    n = F.sum("__n").cast("double")
-    aggs = [F.sum("__n").cast("long").alias("n_turns")]
-    for c in cols:
-        s1 = F.sum(f"__s1_{c}")
-        s2 = F.sum(f"__s2_{c}")
-        sa = F.sum(f"__sa_{c}")
-        mu = s1 / n
-        m2 = (F.sum(f"__m2_{c}") + F.sum(f"__dev_{c}")) / n
-        aggs += [
-            mu.alias(f"{c}_amean"),
-            (sa / n).alias(f"{c}_absmean"),
-            (s2 / n).alias(f"{c}_qmean"),
-            F.sqrt(s2 / n).alias(f"{c}_rqmean"),
-            m2.alias(f"{c}_variance"),
-            F.when(m2 > 0, F.sqrt(m2)).otherwise(0.0).alias(f"{c}_stddev"),
-            F.min(f"__mn_{c}").alias(f"{c}_min"),
-            F.max(f"__mx_{c}").alias(f"{c}_max"),
-            (F.max(f"__mx_{c}") - F.min(f"__mn_{c}")).alias(f"{c}_range"),
-            F.sum(f"__nz_{c}").cast("double").alias(f"{c}_nnz"),
-        ]
-    return partial.groupBy(*by).agg(*aggs)
+        named = _fsql_named(c)
+        aggs += [F.expr(named[k]).alias(f"{c}_{k}") for k in _STATS]
+    return df.groupBy(*by).agg(*aggs)

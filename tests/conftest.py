@@ -31,3 +31,20 @@ def make_conv(spark, conv_id, values, gap_s=10.0, ts0=1_704_067_200.0,
         rows.append((conv_id, i, float(v), t))
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, x double, epoch double")
     return df.withColumn("ts", F.timestamp_seconds("epoch")).drop("epoch")
+
+
+def count_jobs(spark, fn):
+    """Run `fn()` under a fresh Spark job group: (its result, the number
+    of Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

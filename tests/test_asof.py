@@ -419,6 +419,35 @@ def test_incremental_backfill_equals_full(spark):
     assert m["a"] > m1["a"] and m["b"] == m1["b"]
 
 
+def test_incremental_backfill_builds_without_a_job(spark, tmp_path):
+    """Building the refresh is lazy: the watermark aggregate, the stale
+    set and the joins back onto the inputs start no Spark job until the
+    caller writes the result."""
+    from pyspark.sql import functions as F
+
+    from opensmile_spark.operators.asof import (backfill_functionals,
+                                                conv_watermark,
+                                                incremental_backfill)
+    from tests.conftest import count_jobs, make_conv
+
+    day1 = make_conv(spark, "a", [1, 2, 3]).unionByName(
+        make_conv(spark, "b", [10, 20])).withColumnRenamed("x", "char_len")
+    anchors = day1.select("conv_id", F.col("ts").alias("anchor_ts"))
+    backfill_functionals(day1, anchors, ["char_len"], families=["means"]) \
+        .write.parquet(str(tmp_path / "feats"))
+    conv_watermark(day1).write.parquet(str(tmp_path / "max"))
+    feats1 = spark.read.parquet(str(tmp_path / "feats"))
+    max1 = spark.read.parquet(str(tmp_path / "max"))
+    day2 = day1.filter(F.col("turn_idx") != 1)
+
+    (inc, max2), jobs = count_jobs(spark, lambda: incremental_backfill(
+        feats1, max1, day2, anchors, ["char_len"], families=["means"]))
+    assert jobs == 0
+    assert inc.count() == anchors.count()
+    assert {r["conv_id"]: r["n_rows"] for r in max2.collect()} == \
+        {"a": 2, "b": 1}
+
+
 def test_incremental_backfill_detects_deletion(spark):
     """A corrected/deleted row that does NOT move max(ts) must still mark
     the conv stale: the watermark is a (max_ts, n_rows) pair, and the

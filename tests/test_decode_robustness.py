@@ -184,3 +184,30 @@ def test_jpeg_header_bit_flips_raise_value_error():
                 buf[i] ^= 1 << bit
     assert not bad, bad[:10]
     assert wrapped > 0
+
+
+@pytest.mark.parametrize("table_class,symbol", [(0, 12), (1, 0x0B)])
+def test_jpeg_magnitude_category_above_precision_raises(table_class,
+                                                        symbol):
+    """T.81 F.1.2.1/F.1.2.2: at 8-bit precision a DC difference has at
+    most 11 magnitude bits and an AC coefficient 10. Every symbol of the
+    payload's DC (AC) Huffman tables rewritten to category 12 (run 0,
+    size 11) must raise, not decode a wrong image."""
+    from opensmile_spark.jpeg import decode_jpeg
+
+    buf = bytearray(_jpeg_payload("jpeg"))
+    pos, hits = 2, 0
+    while buf[pos + 1] != 0xDA:
+        seglen = int.from_bytes(buf[pos + 2:pos + 4], "big")
+        if buf[pos + 1] == 0xC4:
+            p, end = pos + 4, pos + 2 + seglen
+            while p < end:
+                n = sum(buf[p + 1:p + 17])
+                if buf[p] >> 4 == table_class:
+                    buf[p + 17:p + 17 + n] = bytes([symbol]) * n
+                    hits += 1
+                p += 17 + n
+        pos += 2 + seglen
+    assert hits
+    with pytest.raises(ValueError, match="magnitude category"):
+        decode_jpeg(bytes(buf))

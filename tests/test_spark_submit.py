@@ -232,6 +232,44 @@ def test_cli_redact_inprocess(spark, tmp_path):
     assert "text_redacted" not in cols and "n_email" in cols
 
 
+def test_cli_counts_come_from_the_write_job(spark, tmp_path, capsys):
+    """redact and datagen print counts observed on their write job: the
+    input read plus the write's own jobs, no second run of the query and
+    no read-back; the printed counts equal the written table's."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from opensmile_spark.cli import main
+    from tests.conftest import count_jobs
+
+    dpath = str(tmp_path / "docs")
+    spark.createDataFrame(pd.DataFrame({
+        "doc_id": [0, 1, 2],
+        "text": ["write to a@b.co or c@d.net", "clean text",
+                 "call 10.0.0.1"],
+    })).write.parquet(dpath)
+
+    def printed(argv):
+        capsys.readouterr()
+        _, jobs = count_jobs(spark, lambda: main(argv))
+        return jobs, json.loads(capsys.readouterr().out.splitlines()[-1])
+
+    out = str(tmp_path / "scrubbed")
+    jobs, got = printed(["redact", "--input", dpath, "--output", out])
+    assert jobs == 2                    # input schema read, write
+    n_cols = sorted(got["redactions"])
+    sums = spark.read.parquet(out).agg(
+        *[F.sum(c).alias(c) for c in n_cols]).first().asDict()
+    assert got["redactions"] == sums
+    assert got["redactions"]["n_email"] == 2
+
+    corpus = str(tmp_path / "corpus")
+    jobs, got = printed(["datagen", "--output", corpus, "--n-convs", "20",
+                         "--turns", "5"])
+    assert jobs == 2                    # the write's shuffle stage, write
+    assert got["rows"] == spark.read.parquet(corpus).count() == 100
+
+
 def test_cli_ingest_inprocess(spark, tmp_path):
     """The ingest subcommand: --init bootstraps the store; a second
     snapshot keeps only unseen, batch-unique docs and appends its delta

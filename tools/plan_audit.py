@@ -179,6 +179,22 @@ def audit(scratch):
           f"arrow={n_op('MapInArrow', p)}, "
           f"pandas={n_op('MapInPandas', p)})")
 
+    # decomposable per-key stats on skewed keys: Spark's own partial and
+    # final HashAggregate over one shuffle; a salt column, a second
+    # groupBy or a cross-bucket window changes these counts
+    from opensmile_spark.operators import salted_partial_stats
+
+    p = explain(salted_partial_stats(laid, ["char_len"]))
+    check("salted_partial_stats one exchange, no Window, "
+          "no ObjectHashAggregate",
+          n_op("Exchange", p) == 1 and n_op("Window", p) == 0
+          and n_op("ObjectHashAggregate", p) == 0
+          and n_op("HashAggregate", p) == 2,
+          f"(exchanges={n_op('Exchange', p)}, "
+          f"windows={n_op('Window', p)}, "
+          f"ObjectHashAggregate={n_op('ObjectHashAggregate', p)}, "
+          f"HashAggregate={n_op('HashAggregate', p)})")
+
     p = explain(viterbi_smooth_df(laid, "char_len"))
     check("viterbi_smooth_df one MapInArrow",
           n_op("MapInArrow", p) == 1 and n_op("MapInPandas", p) == 0,
