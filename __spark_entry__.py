@@ -1439,10 +1439,9 @@ def q_incremental_dedup(spark, sf_dir):
     history = docs with doc_id % 20 < 10 reduced to a fingerprint store;
     the 'new snapshot' is the other half with deterministically planted
     overlaps (doc_id % 20 == 19 -> previous doc's text = within-batch
-    dup; doc_id % 6 == 0 -> text of doc_id-10 = seen-in-history). Exact
-    path, md5_64 portable fingerprints; the bloom prefilter is pinned
-    equal to this path by tests/test_incremental.py. In-window driver
-    gate with a FULL oracle (round-4b re-pack)."""
+    dup; doc_id % 6 == 0 -> text of doc_id-10 = seen-in-history). One
+    fp-key join against the store, md5_64 portable fingerprints.
+    In-window gate with a FULL oracle (round-4b re-pack)."""
     from opensmile_spark.incremental import (build_fingerprint_store,
                                              incremental_dedup)
 
@@ -1487,7 +1486,7 @@ def q_charlm_ppl(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     model = charlm_fit(docs, alpha=0.1)
-    out = charlm_perplexity(docs, model, method="join")
+    out = charlm_perplexity(docs, model)
     return out.select(
         "doc_id", F.col("n_bigrams").cast("long").alias("n_bigrams"),
         F.round("ppl", 6).alias("ppl"))

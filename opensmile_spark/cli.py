@@ -24,6 +24,13 @@ Subcommands:
                 --strata-col + --weights for domain mixing
   redact        PII scrub: replace email/IPv4/phone matches with [NAME]
                 tokens, keep per-doc counts
+  ingest        incremental snapshot dedup: one fingerprint join of the
+                new documents against a bucketed store, then append the
+                kept fingerprints (--init bootstraps the store)
+
+The counts a subcommand prints are observed on the job that writes its
+output (an Observation), not read back from the written files; pack's
+distinct `n_packs` is the one read-back.
 
 Build the zip with `python -m zipfile -c opensmile_spark.zip opensmile_spark`
 (pure-python package, no binary deps beyond the cluster's pyspark/numpy/
@@ -37,23 +44,28 @@ import json
 import os
 
 
-def _write_observed(df, path, **aggs):
-    """Overwrite parquet at `path` with `df`; return the named aggregate
-    columns `aggs`, observed on the write job itself (no read-back, no
-    second run of the query)."""
+def _write_observed(df, path, partition_by=(), **aggs):
+    """Overwrite parquet at `path` with `df` (partitioned by the
+    `partition_by` columns, if any); return the named aggregate columns
+    `aggs`, observed on the write job itself (no read-back, no second
+    run of the query)."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    df.observe(obs, *[e.alias(k) for k, e in aggs.items()]) \
-        .write.mode("overwrite").parquet(path)
+    w = df.observe(obs, *[e.alias(k) for k, e in aggs.items()]) \
+        .write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
     return obs.get
 
 
-def _rows(df, path):
+def _rows(df, path, partition_by=()):
     """Write `df` to `path` (see _write_observed); its row count."""
     from pyspark.sql import functions as F
 
-    return _write_observed(df, path, rows=F.count(F.lit(1)))["rows"]
+    return _write_observed(df, path, partition_by,
+                           rows=F.count(F.lit(1)))["rows"]
 
 
 def _pipeline_df(spark, args):
@@ -221,10 +233,8 @@ def cmd_corpus(spark, args):
         rates=rates, strata_col=args.strata_col,
         default_rate=args.default_rate, sample_seed=args.seed,
         shuffle_seed=args.seed + 1, n_shards=args.n_shards)
-    out = out.cache()
-    out.write.mode("overwrite").partitionBy("shard").parquet(args.output)
-    n_in, n_out = docs.count(), out.count()
-    out.unpersist()
+    n_out = _rows(out, args.output, partition_by=("shard",))
+    n_in = docs.count()
     print(json.dumps({"output": args.output, "rows_in": n_in,
                       "rows_out": n_out, "n_shards": args.n_shards}))
 
@@ -253,14 +263,13 @@ def cmd_pack(spark, args):
             out = chunk_documents(docs, max_tokens=args.budget,
                                   overlap=args.overlap,
                                   text_col=args.text_col)
-    out.write.mode("overwrite").parquet(args.output)
-    written = spark.read.parquet(args.output)
     stat = {"output": args.output, "mode": args.mode,
-            "rows_out": written.count()}
+            "rows_out": _rows(out, args.output)}
     if args.mode != "chunk":
         # count packs from the written files — not by re-running the job
-        stat["n_packs"] = written.select(*group, "pack_id") \
-            .distinct().count()
+        # (an Observation cannot hold a DISTINCT aggregate)
+        stat["n_packs"] = spark.read.parquet(args.output) \
+            .select(*group, "pack_id").distinct().count()
     print(json.dumps(stat))
 
 
@@ -305,20 +314,13 @@ def cmd_ingest(spark, args):
             method=args.method, n_buckets=args.buckets)
         store.write.partitionBy("bucket").mode("overwrite") \
             .parquet(args.store)
-        docs.write.mode("overwrite").parquet(args.output)
+        n = _rows(docs, args.output)
         print(json.dumps({"output": args.output, "store": args.store,
-                          "rows_in": docs.count(), "kept": docs.count(),
-                          "init": True}))
+                          "rows_in": n, "kept": n, "init": True}))
         return
     store = spark.read.parquet(args.store)
-    bloom = None
-    if args.bloom_bits:
-        from opensmile_spark.incremental import bloom_from_store
-        bloom = bloom_from_store(store, m_bits=args.bloom_bits,
-                                 k=args.bloom_k)
     dec = incremental_dedup(docs, store, id_col=args.id_col,
-                            text_col=args.text_col, method=args.method,
-                            bloom=bloom)
+                            text_col=args.text_col, method=args.method)
     # decisions feed both outputs; materialize once so the append and
     # the survivor write cannot diverge across lazy recomputes
     dec = dec.localCheckpoint()
@@ -347,10 +349,9 @@ def cmd_semdedup(spark, args):
     dec = semdedup(emb, threshold=args.threshold,
                    n_clusters=args.clusters, id_col=args.id_col,
                    vec_col=args.vec_col, n_iter=args.iters)
-    dec.write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    n = out.count()
-    kept = out.filter(F.col("keep")).count()
+    got = _write_observed(dec, args.output, n=F.count(F.lit(1)),
+                          kept=F.count(F.when(F.col("keep"), 1)))
+    n, kept = got["n"], got["kept"]
     print(json.dumps({"output": args.output, "rows_in": n,
                       "kept": kept, "pruned": n - kept}))
 
@@ -377,10 +378,8 @@ def cmd_bpe(spark, args):
         n_col = "n_bpe_token_ids" if args.ids else "n_bpe_tokens"
         enc = fn(docs, model, text_col=args.text_col,
                  lowercase=args.lowercase)
-        enc.write.mode("overwrite").parquet(args.output)
-        out = spark.read.parquet(args.output)
-        agg = out.agg(F.count(F.lit(1)).alias("rows"),
-                      F.sum(n_col).alias("tokens")).collect()[0]
+        agg = _write_observed(enc, args.output, rows=F.count(F.lit(1)),
+                              tokens=F.sum(n_col))
         stats.update(output=args.output, rows=agg["rows"],
                      tokens=agg["tokens"])
     print(json.dumps(stats))
@@ -396,11 +395,9 @@ def cmd_linededup(spark, args):
     out = line_dedup(docs, text_col=args.text_col, id_col=args.id_col,
                      min_docs=args.min_docs, min_chars=args.min_chars,
                      approx=args.approx)
-    out.write.mode("overwrite").parquet(args.output)
-    res = spark.read.parquet(args.output)
-    agg = res.agg(F.count(F.lit(1)).alias("docs"),
-                  F.sum("n_lines").alias("lines"),
-                  F.sum("n_removed").alias("removed")).collect()[0]
+    agg = _write_observed(out, args.output, docs=F.count(F.lit(1)),
+                          lines=F.sum("n_lines"),
+                          removed=F.sum("n_removed"))
     print(json.dumps({"output": args.output, "docs": agg["docs"],
                       "lines": agg["lines"], "removed": agg["removed"]}))
 
@@ -533,9 +530,8 @@ def cmd_crawl(spark, args):
     out = out.select(
         "warc_file", "record_idx", "url", "url_norm", "url_reg_domain",
         "text", "text_chars", "link_density", "markup_ratio", "title")
-    out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(json.dumps({"output": args.output, "n_pages": n}))
+    print(json.dumps({"output": args.output,
+                      "n_pages": _rows(out, args.output)}))
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -649,9 +645,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--id-col", default="doc_id")
     sp.add_argument("--text-col", default="text")
     sp.add_argument("--buckets", type=int, default=256)
-    sp.add_argument("--bloom-bits", type=int, default=0,
-                    help="bitmap size; 0 disables the bloom prefilter")
-    sp.add_argument("--bloom-k", type=int, default=5)
 
     sp = sub.add_parser("semdedup",
                         help="semantic dedup over an embedding column")

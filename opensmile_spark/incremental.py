@@ -19,17 +19,6 @@ frames join fixed history).
 - `keep` decisions are one map-side fingerprint pass over the new batch,
   one within-batch hash aggregation, and one fp-key join against the
   store — the join's shuffle carries fingerprints, never document text.
-- The optional BLOOM PREFILTER cuts that join's input: a bitmap built
-  once from the store routes each new row either to "definitely unseen"
-  (bloom negative — skips the join entirely; the common case for fresh
-  crawls) or to a "maybe seen" slice that still gets the EXACT verify
-  join, so the result is exactly the anti-join's (Bloom's one-sided
-  error: false positives go to verification, false negatives are
-  impossible). Membership probes are vectorized: the JVM computes two
-  64-bit hashes per row (xxhash64 with different seeds), an Arrow batch
-  kernel derives the k = `bloom_k` probe positions h1 + i*h2 mod m
-  (Kirsch-Mitzenmacher double hashing) and indexes a broadcast packed
-  bitmap — no per-row Python, no driver-side membership loop.
 """
 
 from __future__ import annotations
@@ -69,78 +58,9 @@ def build_fingerprint_store(docs: DataFrame, id_col: str = "doc_id",
                         F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int")))
 
 
-def bloom_from_store(store: DataFrame, m_bits: int, k: int = 5):
-    """Pack the store's fingerprints into an m_bits Bloom bitmap
-    (numpy uint8 array, m_bits/8 bytes). Partitions emit partial packed
-    bitmaps that are OR-reduced — 2-level tree via RDD treeReduce, so
-    the driver never sees per-row data, only ceil(log) bitmap merges.
-    Size m for the target false-positive rate: m ~= -n*ln(p)/ln(2)^2."""
-    import numpy as np
-
-    m = int(m_bits)
-    k = int(k)
-    nbytes = (m + 7) // 8
-
-    def partial(batches):
-        import pandas as pd
-
-        bits = np.zeros(nbytes, dtype=np.uint8)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h1 = pdf["__h1"].to_numpy(dtype=np.int64)
-            h2 = pdf["__h2"].to_numpy(dtype=np.int64)
-            for i in range(k):
-                pos = np.mod(h1 + i * h2, m).astype(np.int64)
-                np.bitwise_or.at(bits, pos >> 3,
-                                 np.uint8(1) << (pos & 7).astype(np.uint8))
-        yield pd.DataFrame({"bits": [bits.tobytes()]})
-
-    parts = (store
-             .select(F.xxhash64("fp").alias("__h1"),
-                     F.xxhash64("fp", F.lit(1)).alias("__h2"))
-             .mapInPandas(partial, schema="bits binary")
-             .rdd.map(lambda r: np.frombuffer(r["bits"], dtype=np.uint8)))
-    merged = parts.treeReduce(np.bitwise_or, depth=2)
-    return np.asarray(merged, dtype=np.uint8), m, k
-
-
-def _bloom_member_col(df: DataFrame, fp_col: str, bloom) -> DataFrame:
-    """Adds `__maybe` — True iff the fingerprint MAY be in the bloom
-    (false positives possible, false negatives impossible)."""
-    import numpy as np
-
-    bits, m, k = bloom
-
-    def probe(batches):
-        for pdf in batches:
-            if len(pdf):
-                h1 = pdf["__h1"].to_numpy(dtype=np.int64)
-                h2 = pdf["__h2"].to_numpy(dtype=np.int64)
-                ok = np.ones(len(pdf), dtype=bool)
-                for i in range(k):
-                    pos = np.mod(h1 + i * h2, m).astype(np.int64)
-                    ok &= (bits[pos >> 3]
-                           & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
-                pdf = pdf.assign(__maybe=ok)
-            else:
-                pdf = pdf.assign(__maybe=np.zeros(0, dtype=bool))
-            yield pdf
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    probed = (df.withColumn("__h1", F.xxhash64(fp_col))
-              .withColumn("__h2", F.xxhash64(fp_col, F.lit(1))))
-    schema = StructType(list(probed.schema.fields)
-                        + [StructField("__maybe", BooleanType())])
-    return probed.mapInPandas(probe, schema=schema) \
-        .drop("__h1", "__h2")
-
-
 def incremental_dedup(new_docs: DataFrame, store: DataFrame,
                       id_col: str = "doc_id", text_col: str = "text",
-                      method: str = "xxhash64",
-                      bloom=None) -> DataFrame:
+                      method: str = "xxhash64") -> DataFrame:
     """Per-document decision table for a new snapshot against the
     historical fingerprint store: every new doc gains
 
@@ -148,11 +68,7 @@ def incremental_dedup(new_docs: DataFrame, store: DataFrame,
       batch_dup     True iff another doc in THIS batch shares fp with a
                     smaller id (within-batch dedup, min-id survivor)
       seen          True iff fp exists in the store
-      keep          not batch_dup and not seen
-
-    `bloom`: optional (bits, m, k) from `bloom_from_store` — routes
-    bloom-negative rows around the store join; output is identical to
-    the exact path (pinned by tests)."""
+      keep          not batch_dup and not seen"""
     fp = fingerprint_expr(text_col, method)
     base = new_docs.withColumn("fp", fp)
     base = base.withColumn(
@@ -160,23 +76,10 @@ def incremental_dedup(new_docs: DataFrame, store: DataFrame,
         F.col(id_col) != F.min(id_col).over(Window.partitionBy("fp")))
 
     seen_fps = store.select(F.col("fp").alias("__seen_fp")).distinct()
-    if bloom is None:
-        joined = base.join(seen_fps,
-                           base["fp"] == F.col("__seen_fp"), "left")
-        out = joined.withColumn("seen", F.col("__seen_fp").isNotNull()) \
+    return (base.join(seen_fps, base["fp"] == F.col("__seen_fp"), "left")
+            .withColumn("seen", F.col("__seen_fp").isNotNull())
             .drop("__seen_fp")
-    else:
-        probed = _bloom_member_col(base, "fp", bloom)
-        neg = probed.filter(~F.col("__maybe")).drop("__maybe") \
-            .withColumn("seen", F.lit(False))
-        maybe = probed.filter(F.col("__maybe")).drop("__maybe")
-        verified = (maybe.join(seen_fps,
-                               maybe["fp"] == F.col("__seen_fp"), "left")
-                    .withColumn("seen", F.col("__seen_fp").isNotNull())
-                    .drop("__seen_fp"))
-        out = neg.unionByName(verified)
-    return out.withColumn(
-        "keep", ~F.col("batch_dup") & ~F.col("seen"))
+            .withColumn("keep", ~F.col("batch_dup") & ~F.col("seen")))
 
 
 def append_to_store(decisions: DataFrame, id_col: str = "doc_id",

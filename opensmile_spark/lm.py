@@ -9,10 +9,8 @@ doesn't cover yet:
       KenLM 5-gram; here a character-bigram model with additive
       smoothing — the same shape at tractable vocabulary). Fit is ONE
       shuffle whose output is at most |charset|^2 rows (a model small
-      enough to broadcast no matter the corpus size); scoring is either
-      a broadcast-join plan (oracle-portable) or a single-pass Arrow
-      kernel with the model as a plain broadcast dict (the 100 TB path:
-      no per-character explode).
+      enough to broadcast no matter the corpus size); scoring is one
+      broadcast-join plan (oracle-portable, no Python worker).
 
   bm25_index / bm25_search
       Okapi BM25 (Robertson/Sparck Jones; the Lucene idf variant)
@@ -32,10 +30,8 @@ functionalMoments.cpp.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
@@ -62,21 +58,6 @@ class CharLM:
     prefixes: DataFrame
     vocab: int
     alpha: float
-
-    def logp_map(self) -> dict:
-        """Driver-side {bigram: log2 p(cur|prev)} plus per-prefix floors —
-        the broadcastable form the Arrow scoring path uses. Model size is
-        bounded by |charset|^2, so collect() here is a metadata read, not
-        a data-plane collect."""
-        pc = {r["p"]: r["pc"] for r in self.prefixes.collect()}
-        av = self.alpha * self.vocab
-        probs = {
-            r["bg"]: math.log2((r["c"] + self.alpha) / (pc[r["bg"][:1]] + av))
-            for r in self.bigrams.collect()
-        }
-        floors = {p: math.log2(self.alpha / (n + av)) for p, n in pc.items()}
-        return {"probs": probs, "floors": floors,
-                "unseen": math.log2(1.0 / self.vocab)}
 
 
 def _bigram_col(text_col: str):
@@ -110,26 +91,18 @@ def charlm_fit(df: DataFrame, text_col: str = "text",
 
 
 def charlm_perplexity(df: DataFrame, model: CharLM,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      method: str = "join") -> DataFrame:
+                      text_col: str = "text",
+                      id_col: str = "doc_id") -> DataFrame:
     """Per-document bigram perplexity 2^(mean -log2 p(cur|prev)).
 
-    method='join' (oracle-portable plan): explode bigrams, LEFT
-    broadcast-join the bigram-count and prefix-count model tables,
-    aggregate per doc — one shuffle on id_col, joins never shuffle
-    (model side is broadcast by construction).
-
-    method='arrow' (the 100 TB path): one mapInArrow-style pandas pass
-    per batch with the model as a broadcast dict — no per-character
-    explode, zero extra shuffle beyond none at all. Both paths are
-    pinned equal by tests/test_lm.py.
+    Explode bigrams, LEFT broadcast-join the bigram-count and
+    prefix-count model tables, aggregate per doc — one shuffle on
+    id_col, joins never shuffle (model side is broadcast by
+    construction).
 
     Unseen bigram with a seen prefix scores alpha/(pc + alpha*V); an
     unseen prefix scores 1/V. Docs with < 2 characters get ppl NULL
     (no bigrams to score)."""
-    if method == "arrow":
-        return _charlm_ppl_arrow(df, model, text_col, id_col)
-
     av = float(model.alpha * model.vocab)
     alpha = float(model.alpha)
     exploded = df.select(id_col, F.explode(_bigram_col(text_col)).alias("bg"))
@@ -153,42 +126,6 @@ def charlm_perplexity(df: DataFrame, model: CharLM,
               .select(id_col,
                       F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
                       F.pow(F.lit(2.0), F.col("nll")).alias("ppl")))
-
-
-def _charlm_ppl_arrow(df: DataFrame, model: CharLM,
-                      text_col: str, id_col: str) -> DataFrame:
-    m = model.logp_map()
-    sc = df.sparkSession.sparkContext
-    bmodel = sc.broadcast(m)
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        mm = bmodel.value
-        probs, floors, unseen = mm["probs"], mm["floors"], mm["unseen"]
-        n_out, ppl_out = [], []
-        for t in pdf[text_col].astype(str).str.lower():
-            n = max(len(t) - 1, 0)
-            if n == 0:
-                n_out.append(0)
-                ppl_out.append(float("nan"))
-                continue
-            acc = 0.0
-            for i in range(n):
-                bg = t[i:i + 2]
-                lp = probs.get(bg)
-                if lp is None:
-                    lp = floors.get(bg[0], unseen)
-                acc += lp
-            n_out.append(n)
-            ppl_out.append(2.0 ** (-acc / n))
-        return pd.DataFrame({id_col: pdf[id_col], "n_bigrams": n_out,
-                             "ppl": ppl_out})
-
-    # carry the caller's id type (string doc-ids are the common corpus
-    # case) instead of assuming long — same contract as similarity._id_ddl
-    id_ddl = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_ddl}, n_bigrams long, ppl double"
-    return df.select(id_col, text_col).mapInPandas(
-        lambda it: (score(p) for p in it), schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

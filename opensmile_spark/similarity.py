@@ -57,6 +57,16 @@ def _norm(v):
                               lambda a, x: a + x.cast("double") * x))
 
 
+def _top_k(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Per query_id, the k rows of highest `score_col` (ties: smaller
+    item_id first), numbered 1..k in `rank`."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("item_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "item_id", score_col, "rank"))
+
+
 def cosine_topk(
     index: DataFrame,
     queries: DataFrame,
@@ -93,13 +103,7 @@ def cosine_topk(
             / (F.col("__q_norm") * F.col("__i_norm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("item_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "cosine", "rank")
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def knn_join(
@@ -185,11 +189,7 @@ def knn_join(
                   schema=(f"query_id {_id_ddl(queries, query_id_col)}, "
                           f"item_id {_id_ddl(index, id_col)}, "
                           "cosine double")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("item_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "item_id", "cosine", "rank"))
+    return _top_k(scored, "cosine", k)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -212,6 +212,12 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
+# dim*bits*tables above which lsh_bucket_multi signs in numpy: literal
+# expression trees that wide overflow codegen; tests monkeypatch it to
+# force either path
+_LSH_ARROW_CUTOFF = 16384
+
+
 def lsh_bucket_multi(
     df: DataFrame,
     dim: int,
@@ -220,25 +226,23 @@ def lsh_bucket_multi(
     seed: int = 42,
     vec_col: str = "embedding",
     out_col: str = "bkt",
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """All `tables` LSH signatures in ONE projection + posexplode: each
     input row becomes `tables` (table, bucket) rows from a SINGLE scan of
     the input — replacing the per-table union that re-read the index
     `tables` times.
 
-    Two physical strategies, same signatures (both multiply by the same
+    The signature width dim*bits*tables picks one of two physical
+    strategies with the same signatures (both multiply by the same
     deterministic _hyperplanes matrix):
-      literal exprs (small dim*bits*tables): hyperplane dot products as
-        JVM column expressions — zero Python, whole-stage codegen.
-      Arrow/numpy (use_arrow, auto when dim*bits*tables > 16384): ONE
+      literal exprs (dim*bits*tables <= 16384): hyperplane dot products
+        as JVM column expressions — zero Python, whole-stage codegen.
+      Arrow/numpy (dim*bits*tables > 16384): ONE
         matrix multiply (batch x dim) @ (dim x tables*bits) per Arrow
         batch inside a pandas iterator — literal expression trees at
         real embedding widths (768-4096 dims) would bloat the plan past
         codegen limits; a BLAS matmul is also simply faster there."""
-    if use_arrow is None:
-        use_arrow = dim * bits * tables > 16384
-    if use_arrow:
+    if dim * bits * tables > _LSH_ARROW_CUTOFF:
         import numpy as np
 
         planes = np.array([
@@ -355,13 +359,7 @@ def lsh_topk(
         _dot(F.col("q_vec"), F.col("i_vec"))
         / (_norm(F.col("q_vec")) * _norm(F.col("i_vec"))),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("item_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "cosine", "rank")
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def _ivf_fit(index: DataFrame, n_centroids: int, seed: int, vec_col: str,
@@ -428,13 +426,7 @@ def _ivf_rescore(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
         _dot(F.col("q_vec"), F.col("i_vec"))
         / (_norm(F.col("q_vec")) * _norm(F.col("i_vec"))),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("item_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "item_id", "cosine", "rank")
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def ivf_topk(
@@ -713,11 +705,7 @@ def _exact_rerank(cand: DataFrame, index: DataFrame, queries: DataFrame,
              .withColumn("cosine",
                          _dot(F.col("q_vec"), F.col("i_vec"))
                          / (_norm(F.col("q_vec")) * _norm(F.col("i_vec")))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("item_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "item_id", "cosine", "rank"))
+    return _top_k(exact, "cosine", k)
 
 
 def pq_topk(index: DataFrame, queries: DataFrame, k: int = 10,
@@ -810,14 +798,9 @@ def pq_topk(index: DataFrame, queries: DataFrame, k: int = 10,
                   schema=(f"query_id {_id_ddl(queries, id_col)}, "
                           f"item_id {_id_ddl(index, id_col)}, "
                           "adc_score double")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("item_id").asc())
     if exclude_self:
         scored = scored.filter(F.col("item_id") != F.col("query_id"))
-    cand = (scored
-            .withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= local_k)
-            .select("query_id", "item_id"))
+    cand = _top_k(scored, "adc_score", local_k).select("query_id", "item_id")
     return _exact_rerank(cand, index, queries, k, id_col, vec_col)
 
 
@@ -1001,11 +984,7 @@ def ivfpq_probe(
                                  k * rescore_factor, id_col,
                                  exclude_self=exclude_self)
     if index is None:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_score").desc(), F.col("item_id").asc())
-        return (shortlist.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "item_id", "adc_score", "rank"))
+        return _top_k(shortlist, "adc_score", k)
     return _exact_rerank(shortlist.select("query_id", "item_id"),
                          index, queries, k, id_col, vec_col)
 
@@ -1076,8 +1055,4 @@ def _ivfpq_shortlist(codes: DataFrame, qt: DataFrame, m: int,
     scored = cand.select(
         "query_id", F.col(id_col).alias("item_id"),
         s.alias("adc_score"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("item_id").asc())
-    return (scored.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= local_k)
-            .select("query_id", "item_id", "adc_score"))
+    return _top_k(scored, "adc_score", local_k).drop("rank")

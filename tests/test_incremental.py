@@ -1,5 +1,5 @@
-"""Incremental cross-snapshot dedup: exact path, bloom-prefilter
-equivalence, store roundtrip, fingerprint portability."""
+"""Incremental cross-snapshot dedup: decisions, store roundtrip,
+fingerprint portability."""
 
 import hashlib
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from opensmile_spark.incremental import (
     append_to_store,
-    bloom_from_store,
     build_fingerprint_store,
     fingerprint_expr,
     incremental_dedup,
@@ -55,40 +54,6 @@ def test_exact_path_decisions(spark, corpus, method):
     hist, new = corpus
     store = build_fingerprint_store(hist, method=method)
     _expect(incremental_dedup(new, store, method=method))
-
-
-def test_bloom_path_equals_exact(spark, corpus):
-    """Tiny bitmap (forces false positives) must STILL give decisions
-    identical to the exact anti-join — FPs only route rows into the
-    verify join, never into the output."""
-    hist, new = corpus
-    store = build_fingerprint_store(hist).cache()
-    exact = {r["doc_id"]: (r["batch_dup"], r["seen"], r["keep"])
-             for r in incremental_dedup(new, store).collect()}
-    for m_bits in (64, 512, 1 << 16):       # 64 bits over 100 fps: FP-rich
-        bloom = bloom_from_store(store, m_bits=m_bits, k=3)
-        got = {r["doc_id"]: (r["batch_dup"], r["seen"], r["keep"])
-               for r in incremental_dedup(new, store,
-                                          bloom=bloom).collect()}
-        assert got == exact, m_bits
-
-
-def test_bloom_has_no_false_negatives_and_prunes(spark, corpus):
-    """Every truly-seen fp probes positive (one-sided error), and with an
-    adequately sized bitmap most fresh docs probe negative (the join-input
-    cut that is the point of the prefilter)."""
-    from opensmile_spark.incremental import _bloom_member_col
-
-    hist, new = corpus
-    store = build_fingerprint_store(hist).cache()
-    bloom = bloom_from_store(store, m_bits=1 << 16, k=5)
-    probed = _bloom_member_col(
-        new.withColumn("fp", fingerprint_expr("text")), "fp", bloom)
-    rows = {r["doc_id"]: r["__maybe"] for r in probed.collect()}
-    for i in range(100, 120):
-        assert rows[i], f"false negative for seen doc {i}"
-    fresh_maybe = sum(rows[i] for i in range(130, 160))
-    assert fresh_maybe <= 3      # 2^16 bits / 100 items -> fpp ~ 0
 
 
 def test_store_roundtrip_and_append(spark, corpus, tmp_path):

@@ -1,6 +1,5 @@
 """Char-bigram LM perplexity (CCNet-style) and BM25 retrieval: both are
-pinned against brute-force python oracles, and the two perplexity
-execution paths (broadcast-join plan vs Arrow kernel) against each other."""
+pinned against brute-force python oracles."""
 
 import math
 
@@ -77,22 +76,6 @@ def test_charlm_ranks_gibberish_high(spark):
            for r in charlm_perplexity(_docs(spark), model).collect()}
     assert ppl[4] > ppl[0]          # gibberish > natural text
     assert ppl[5] < ppl[4]          # 'the the the' is in-distribution
-
-
-def test_charlm_arrow_equals_join(spark):
-    docs = _docs(spark)
-    model = charlm_fit(docs)
-    a = {r["doc_id"]: (r["n_bigrams"], r["ppl"]) for r in
-         charlm_perplexity(docs, model, method="arrow").collect()}
-    j = {r["doc_id"]: (r["n_bigrams"], r["ppl"]) for r in
-         charlm_perplexity(docs, model, method="join").collect()}
-    assert set(a) == set(j)
-    for d in j:
-        assert a[d][0] == j[d][0]
-        if j[d][1] is None:
-            assert a[d][1] is None or math.isnan(a[d][1])
-        else:
-            assert a[d][1] == pytest.approx(j[d][1], rel=1e-12)
 
 
 def test_charlm_unseen_bigram_and_prefix(spark):
@@ -204,20 +187,20 @@ def test_bm25_repartition_invariant(spark):
     assert a == b
 
 
-def test_charlm_arrow_string_doc_ids(spark):
-    """method='arrow' (the 100 TB path) must carry the caller's id type:
-    string doc ids were silently assumed long before round 5 (the output
-    schema was hardcoded '{id_col} long')."""
+def test_charlm_string_doc_ids(spark):
+    """String doc ids keep their type through the scoring plan, and
+    every document still scores as the brute-force oracle does."""
     docs = spark.createDataFrame(
         [(f"doc-{i}", t) for i, t in enumerate(TEXTS)],
         "doc_id string, text string")
     model = charlm_fit(docs)
-    a = {r["doc_id"]: (r["n_bigrams"], r["ppl"]) for r in
-         charlm_perplexity(docs, model, method="arrow").collect()}
-    j = {r["doc_id"]: (r["n_bigrams"], r["ppl"]) for r in
-         charlm_perplexity(docs, model, method="join").collect()}
-    assert set(a) == set(j) and all(isinstance(k, str) for k in a)
-    for d in j:
-        assert a[d][0] == j[d][0]
-        if j[d][1] is not None and not math.isnan(j[d][1]):
-            assert a[d][1] == pytest.approx(j[d][1], rel=1e-12)
+    want, _ = _brute_charlm(TEXTS, model.alpha)
+    got = {r["doc_id"]: (r["n_bigrams"], r["ppl"])
+           for r in charlm_perplexity(docs, model).collect()}
+    assert set(got) == {f"doc-{d}" for d in want}
+    for d, (n, ppl) in want.items():
+        assert got[f"doc-{d}"][0] == n
+        if ppl is None:
+            assert got[f"doc-{d}"][1] is None
+        else:
+            assert got[f"doc-{d}"][1] == pytest.approx(ppl, rel=1e-9)

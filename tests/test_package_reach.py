@@ -9,6 +9,11 @@ every .py file of the checkout, so a name that is only mentioned in a
 string or a comment does not count. The same parse finds imports whose
 name the file never loads; a re-export says so with `# noqa: F401` on
 the import line.
+
+A second scan leaves the uses in tests/ out: a package name only tests
+reach is test-only code. The names it finds at the time it was added are
+listed in TEST_ONLY; the list may only shrink (delete the name, or give it
+a package path and drop it from the list), and a new test-only name fails.
 """
 
 import ast
@@ -17,6 +22,32 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 SKIP = {".git", ".perfbench_work"}
+
+TEST_ONLY = {
+    ("opensmile_spark/checkpoint.py", "metrics_table"),
+    ("opensmile_spark/dsir.py", "dsir_sample"),
+    ("opensmile_spark/io.py", "arff_sink"),
+    ("opensmile_spark/io.py", "nan_inf_check"),
+    ("opensmile_spark/io.py", "parquet_dump"),
+    ("opensmile_spark/io.py", "partitioned_sink"),
+    ("opensmile_spark/jpeg_lossless.py", "decode_jpeg_lossless"),
+    ("opensmile_spark/linkgraph.py", "extract_links"),
+    ("opensmile_spark/lld.py", "LLD_COLS"),
+    ("opensmile_spark/multimodal.py", "audio_chunk_plan"),
+    ("opensmile_spark/multimodal.py", "frame_sample_plan"),
+    ("opensmile_spark/operators/windower.py", "WINDOW_FUNCS"),
+    ("opensmile_spark/pipeline.py", "crawl_pipeline"),
+    ("opensmile_spark/robots.py", "parse_sitemap"),
+    ("opensmile_spark/similarity.py", "dequantize_embeddings"),
+    ("opensmile_spark/similarity.py", "ivfpq_build"),
+    ("opensmile_spark/similarity.py", "ivfpq_probe"),
+    ("opensmile_spark/smileconf.py", "run_smile_conf"),
+    ("opensmile_spark/streaming.py", "dedup_stream"),
+    ("opensmile_spark/tables.py", "write_feature_table"),
+    ("opensmile_spark/textnorm.py", "fix_mojibake"),
+    ("opensmile_spark/urlops.py", "url_dedup_key"),
+    ("opensmile_spark/warc.py", "stream_warc_ingest"),
+}
 
 
 @functools.cache
@@ -54,16 +85,19 @@ def _used_names(node):
             yield n.name
 
 
-def unreached():
+def unreached(skip_uses=()):
     """[(file, line, name)] of the package's top-level definitions that
-    nothing but their own definition uses."""
+    nothing but their own definition uses; uses in files under a top-level
+    directory named in `skip_uses` do not count."""
     uses = {}          # name -> {(file, index of top-level statement)}
     defs = []
     for rel, _lines, tree in _python_files():
         in_package = rel.parts[0] == "opensmile_spark"
+        counted = rel.parts[0] not in skip_uses
         for i, stmt in enumerate(tree.body):
-            for name in _used_names(stmt):
-                uses.setdefault(name, set()).add((rel, i))
+            if counted:
+                for name in _used_names(stmt):
+                    uses.setdefault(name, set()).add((rel, i))
             if in_package:
                 defs += [(rel, i, stmt.lineno, name)
                          for name in _defined_names(stmt)
@@ -74,6 +108,12 @@ def unreached():
 
 def test_every_package_definition_is_used():
     assert unreached() == []
+
+
+def test_no_new_test_only_code_in_the_package():
+    found = {(rel, name) for rel, _line, name in unreached(("tests",))}
+    assert found - TEST_ONLY == set(), "only tests reach these names"
+    assert TEST_ONLY - found == set(), "drop these from TEST_ONLY"
 
 
 def unused_imports():

@@ -220,20 +220,20 @@ def test_connected_components_long_chain_and_unionfind_oracle(spark):
     assert got == want
 
 
-def test_lsh_bucket_multi_arrow_matches_literal(spark, emb):
+def test_lsh_bucket_multi_arrow_matches_literal(spark, emb, monkeypatch):
     """The Arrow/numpy signature path must produce EXACTLY the same
     (id, bucket) rows as the literal-expression path (same hyperplanes,
     sign-of-dot-product is order-insensitive up to fp, and these dots are
-    far from zero with prob 1)."""
-    from opensmile_spark.similarity import lsh_bucket_multi
+    far from zero with prob 1). Each path is forced through the size
+    cutoff."""
+    from opensmile_spark import similarity
 
-    lit = lsh_bucket_multi(emb, dim=64, bits=6, tables=4,
-                           use_arrow=False).select("vec_id", "bkt")
-    arw = lsh_bucket_multi(emb, dim=64, bits=6, tables=4,
-                           use_arrow=True).select("vec_id", "bkt")
-    a = set(map(tuple, lit.collect()))
-    b = set(map(tuple, arw.collect()))
-    assert a == b
+    def buckets(cutoff):
+        monkeypatch.setattr(similarity, "_LSH_ARROW_CUTOFF", cutoff)
+        df = similarity.lsh_bucket_multi(emb, dim=64, bits=6, tables=4)
+        return set(map(tuple, df.select("vec_id", "bkt").collect()))
+
+    assert buckets(1 << 60) == buckets(0)
 
 
 def test_ivf_topk_recall_and_exact_scores(spark, emb):

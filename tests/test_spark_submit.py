@@ -233,9 +233,10 @@ def test_cli_redact_inprocess(spark, tmp_path):
 
 
 def test_cli_counts_come_from_the_write_job(spark, tmp_path, capsys):
-    """redact and datagen print counts observed on their write job: the
-    input read plus the write's own jobs, no second run of the query and
-    no read-back; the printed counts equal the written table's."""
+    """redact, datagen, linededup and ingest --init print counts
+    observed on their write job: the input read plus the writes' own
+    jobs, no second run of the query and no read-back; the printed
+    counts equal the written table's."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -269,6 +270,28 @@ def test_cli_counts_come_from_the_write_job(spark, tmp_path, capsys):
     assert jobs == 2                    # the write's shuffle stage, write
     assert got["rows"] == spark.read.parquet(corpus).count() == 100
 
+    dpath = str(tmp_path / "pages")
+    spark.createDataFrame(pd.DataFrame({
+        "doc_id": [0, 1, 2],
+        "text": ["menu\nfirst story", "menu\nsecond story\nfooter",
+                 "other\nfooter"],
+    })).write.parquet(dpath)
+    out = str(tmp_path / "lines")
+    jobs, got = printed(["linededup", "--input", dpath, "--output", out])
+    assert jobs == 6                    # input read, shuffle stages, write
+    agg = spark.read.parquet(out).agg(
+        F.count(F.lit(1)).alias("docs"), F.sum("n_lines").alias("lines"),
+        F.sum("n_removed").alias("removed")).first()
+    assert (got["docs"], got["lines"], got["removed"]) \
+        == (agg["docs"], agg["lines"], agg["removed"]) == (3, 7, 4)
+
+    out = str(tmp_path / "kept")
+    jobs, got = printed(["ingest", "--input", dpath, "--output", out,
+                         "--store", str(tmp_path / "store"), "--init"])
+    assert jobs == 4    # input read, store shuffle and write, docs write
+    assert got["rows_in"] == got["kept"] \
+        == spark.read.parquet(out).count() == 3
+
 
 def test_cli_ingest_inprocess(spark, tmp_path):
     """The ingest subcommand: --init bootstraps the store; a second
@@ -295,8 +318,7 @@ def test_cli_ingest_inprocess(spark, tmp_path):
         "text": ["beta", "delta", "delta", "epsilon"],
     })).write.parquet(s2)
     out2 = str(tmp_path / "kept2")
-    main(["ingest", "--input", s2, "--output", out2, "--store", store,
-          "--bloom-bits", "4096"])
+    main(["ingest", "--input", s2, "--output", out2, "--store", store])
     kept = sorted(r["doc_id"] for r in spark.read.parquet(out2).collect())
     assert kept == [11, 13]         # 10 seen, 12 dup of 11
 
