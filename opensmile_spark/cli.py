@@ -297,6 +297,7 @@ def cmd_ingest(spark, args):
     the kept docs' fingerprints to the store. --init bootstraps the
     store from the first snapshot (everything kept). The store path
     must differ from --output (same clobber guard as backfill)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from opensmile_spark.incremental import (append_to_store,
@@ -318,22 +319,29 @@ def cmd_ingest(spark, args):
         print(json.dumps({"output": args.output, "store": args.store,
                           "rows_in": n, "kept": n, "init": True}))
         return
-    store = spark.read.parquet(args.store)
+    # the store's layout (build_fingerprint_store), given rather than
+    # inferred: an --init of an empty snapshot leaves no data file
+    id_type = docs.schema[args.id_col].dataType.simpleString()
+    store = spark.read.schema(
+        f"fp bigint, first_id {id_type}, bucket int").parquet(args.store)
     dec = incremental_dedup(docs, store, id_col=args.id_col,
                             text_col=args.text_col, method=args.method)
     # decisions feed both outputs; materialize once so the append and
     # the survivor write cannot diverge across lazy recomputes
     dec = dec.localCheckpoint()
-    kept = dec.filter(F.col("keep")).drop("fp", "batch_dup", "seen", "keep")
+    # the counts are observed on the survivor write, before its filter
+    obs = Observation()
+    kept = dec.observe(
+        obs, F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("seen").cast("long")).alias("seen"),
+        F.sum(F.col("batch_dup").cast("long")).alias("dups"),
+        F.sum(F.col("keep").cast("long")).alias("kept"),
+    ).filter(F.col("keep")).drop("fp", "batch_dup", "seen", "keep")
     kept.write.mode("overwrite").parquet(args.output)
     delta = append_to_store(dec, id_col=args.id_col,
                             n_buckets=args.buckets)
     delta.write.partitionBy("bucket").mode("append").parquet(args.store)
-    agg = dec.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("seen").cast("long")).alias("seen"),
-        F.sum(F.col("batch_dup").cast("long")).alias("dups"),
-        F.sum(F.col("keep").cast("long")).alias("kept")).first()
+    agg = obs.get
     print(json.dumps({"output": args.output, "store": args.store,
                       "rows_in": agg["n"], "seen": agg["seen"],
                       "batch_dup": agg["dups"], "kept": agg["kept"]}))

@@ -1,21 +1,21 @@
-"""Cross-group vectorized functional computation, and the one router that
-decides how a family list is evaluated over groups.
+"""Cross-group vectorized functional computation: the one evaluator of a
+family list over groups.
 
 The per-group kernels (kernels.py) are the semantic source of truth; this
 module computes the SAME formulas across ALL groups of a batch at once with
 numpy reduceat — removing the per-group Python dispatch that dominates when
 groups are small (the common case: tens of turns per session). All 19
-families are batched, the sequential automatons (peaks, peaks2, segments,
-onset) and the per-group transforms (lpc, lsp, formants, modulation)
-included. Some family OPTIONS are not implemented here
-(BATCHED_SUPPORTED_OPTIONS); a family that sets one to a non-default
-value runs the per-group reference kernel instead.
+families are batched under every option of their kernels.py signature, the
+sequential automatons (peaks, peaks2, segments, onset) and the per-group
+transforms (lpc, lsp, formants, modulation) included. The one per-group
+Python left is the segment list of the two legacy segment automata (chX,
+useOldBuggyChX), which have no run-length form.
 
-`compute_groups` is the single place that makes that choice — the analogue
-of cFunctionals' one shared pre-pass plus dispatch of each enabled
-sub-component (openSMILE src/functionals/functionals.cpp:320-390).
-functionals_kernel, backfill_functionals and closed_session_functionals
-all evaluate their groups through it, and `output_keys` names its outputs.
+`compute_groups` is the entry point — the analogue of cFunctionals' one
+shared pre-pass plus dispatch of each enabled sub-component (openSMILE
+src/functionals/functionals.cpp:320-390). functionals_kernel,
+backfill_functionals and closed_session_functionals all evaluate their
+groups through it, and `output_keys` names its outputs.
 
 Numerical discipline: central moments are computed exactly as kernels.py
 does (sum((x-mean)^k)), NOT via raw-moment expansion (which catastrophically
@@ -25,68 +25,20 @@ reduceat adds in neither a sequential nor ndarray.sum's order (on 300
 random segments of 1-400 values, numpy 1.26.4, it differed from a
 sequential sum in 257 and from x[s:e].sum() in 225).
 
-Each of means, moments, extremes and percentiles has ONE finisher
-(`_finish_*`) that turns per-window reductions into the named outputs;
-compute_batched (reduceat over groups) and compute_expanding (prefix
-scans over anchors) make their own reductions and share it.
+Each of means, moments, extremes, percentiles and regression has ONE
+finisher (`_finish_*`) that turns per-window reductions into the named
+outputs, options included; compute_batched (reduceat over groups) and
+compute_expanding (prefix scans over anchors) make their own reductions
+and share it.
 """
 
 from __future__ import annotations
 
-import inspect
-
 import numpy as np
 
-
-BATCHED_FAMILIES = {
-    "means", "moments", "extremes", "percentiles", "regression", "crossings",
-    "times", "samples", "dct", "onset", "segments", "peaks2",
-    "lpc", "acf", "amdf", "modulation", "peaks", "lsp", "formants",
-}
-
-# per-family options the batched path implements with kernel-equal results;
-# a family with any OTHER option at a non-default value falls back to the
-# per-group reference path (runs_batched consults this so e.g. eGeMAPS-style
-# custom percentiles keep the reduceat fast path instead of evicting the
-# family)
-BATCHED_SUPPORTED_OPTIONS = {
-    "means": {"timeNorm", "T"},
-    "moments": set(),
-    "extremes": {"timeNorm"},
-    "percentiles": {"percentiles", "pctlranges", "pctlquotients"},
-    "regression": set(),
-    "crossings": set(),
-    "times": {"timeNorm"},
-    "samples": {"positions"},
-    "dct": {"firstCoeff", "lastCoeff"},
-    # onset batches ONLY under the default equal thresholds (the automaton
-    # degenerates to edge detection); any other threshold/useAbsVal falls
-    # back to the per-group reference path
-    "onset": {"timeNorm", "T"},
-    # segments batches ONLY under the default nonX/X=0/segMinLng=3/
-    # pauseMinLng=2/maxNumSeg=20 config (the automaton reduces to
-    # run-length algebra there); any other algorithm/threshold/length
-    # falls back to the reference automaton
-    "segments": {"timeNorm", "T"},
-    # peaks2 batches under EVERY option: the lane-parallel transcription
-    # (_peaks2_batched) implements the full automaton, not a reduction
-    "peaks2": {"timeNorm", "T", "relThresh", "dynRelThresh",
-               "absThreshIn", "doRatioLimit"},
-    # legacy peaks batches under every option too (_peaks_batched is the
-    # full automaton on the detection lattice)
-    "peaks": {"timeNorm", "T"},
-    # masked-lag-sum autocorrelation + group-vectorized Levinson
-    "lpc": {"order", "timeNorm", "T"},
-    "acf": {"max_lag", "normalize", "timeNorm", "T"},
-    "amdf": {"max_lag", "timeNorm", "T"},
-    # one (n_groups, fft_win) gather + batched rfft
-    "modulation": {"fft_win", "n_bins", "min_freq", "max_freq",
-                   "timeNorm", "T"},
-    # stacked companion-matrix eigvals (leading coefficient is always 1,
-    # so np.roots' trim path never fires and results match per group)
-    "lsp": {"order", "timeNorm", "T"},
-    "formants": {"order", "n_formants", "timeNorm", "T"},
-}
+from opensmile_spark.functionals.kernels import (
+    _segment_runs, _segment_runs_old_buggy, compute_all,
+)
 
 _BIG = np.iinfo(np.int64).max
 
@@ -233,30 +185,49 @@ def _finish_means(N, mean, sums, opts):
     }
 
 
-def _finish_moments(N, mean, M2, M3, M4):
+def _ratio_limit(q, limit1, excess):
+    """kernels._ratio_limit (smileMath_ratioLimit) over an array, in its
+    order of operations: linear in [-limit1, limit1], tanh-compressed
+    beyond."""
+    hi = np.tanh((np.sqrt(np.maximum(q, limit1) - limit1 + 1.0) - 1.0)
+                 / (excess * 0.5)) * excess + limit1
+    lo = np.tanh(-(np.sqrt(-(np.minimum(q, -limit1) + limit1) + 1.0) - 1.0)
+                 / (excess * 0.5)) * excess - limit1
+    return np.where(q > limit1, hi, np.where(q < -limit1, lo, q))
+
+
+def _finish_moments(N, mean, M2, M3, M4, opts):
     """M2/M3/M4: window sums of the squared/cubed/4th-power deviations."""
     m2 = M2 / N
     sqm2 = np.where(m2 > 0, np.sqrt(np.where(m2 > 0, m2, 1.0)), 0.0)
     d3 = N * m2 * sqm2
     d4 = N * m2 * m2
-    mean1 = np.where(mean != 0.0, mean, 1.0)
-    amean1 = np.where(mean != 0.0, np.abs(mean), 1.0)
+    nz = mean != 0.0
+    sn = sqm2 / np.where(nz, mean, 1.0)
+    cv = sqm2 / np.where(nz, np.abs(mean), 1.0)
+    if opts.get("doRatioLimit", False):
+        sn = np.where(nz, _ratio_limit(sn, 10.0, 20.0), 20.0)
+        cv = np.where(nz, _ratio_limit(cv, 10.0, 20.0), 20.0)
     return {
         "variance": m2,
         "stddev": sqm2,
         "skewness": np.where(d3 > 0, M3 / np.where(d3 > 0, d3, 1.0), 0.0),
         "kurtosis": np.where(d4 > 0, M4 / np.where(d4 > 0, d4, 1.0), 0.0),
         "amean": mean,
-        "stddevNorm": np.where(m2 > 0, sqm2 / mean1, 0.0),
-        "coeffOfVariation": np.where(m2 > 0, sqm2 / amean1, 0.0),
+        "stddevNorm": np.where(m2 > 0, sn, 0.0),
+        "coeffOfVariation": np.where(m2 > 0, cv, 0.0),
     }
 
 
 def _finish_extremes(N, mean, gmax, gmin, maxpos, minpos, opts):
     """maxpos/minpos: window-local index of the first max/min (float64)."""
-    if opts.get("timeNorm", "frames") == "segment":
+    tn, T = opts.get("timeNorm", "frames"), opts.get("T", 1.0)
+    if tn == "segment":
         maxpos = maxpos / N
         minpos = minpos / N
+    elif tn == "second" and T != 0.0:
+        maxpos = maxpos * T
+        minpos = minpos * T
     return {
         "max": gmax,
         "min": gmin,
@@ -280,8 +251,14 @@ def _finish_percentiles(N, pick, opts):
     fracs = list(dict.fromkeys([0.25, 0.50, 0.75] + plist))
     last = (N - 1).astype(np.int64)
     idxf = [p * (N - 1.0) for p in fracs]
-    pairs = [(np.clip(np.floor(f).astype(np.int64), 0, last),
-              np.clip(np.ceil(f).astype(np.int64), 0, last)) for f in idxf]
+    if opts.get("interp", True):
+        pairs = [(np.clip(np.floor(f).astype(np.int64), 0, last),
+                  np.clip(np.ceil(f).astype(np.int64), 0, last))
+                 for f in idxf]
+    else:
+        # _round_pctl: the rank C round() picks, no interpolation
+        pairs = [(r, r) for r in (np.clip(np.floor(f + 0.5).astype(np.int64),
+                                          0, last) for f in idxf)]
     pct = {p: np.where(i1 != i2, v1 * (i2 - f) + v2 * (f - i1), v1)
            for p, f, (i1, i2), (v1, v2) in zip(fracs, idxf, pairs,
                                                pick(pairs))}
@@ -297,17 +274,54 @@ def _finish_percentiles(N, pick, opts):
         # f_percentiles' pctlquotient with the same quirks: numerator-only
         # guard + smileMath_ratioLimit(q, 50, 100)
         va, vb = pvals[a], pvals[b]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            q = np.where(vb != 0.0, va / np.where(vb != 0.0, vb, 1.0),
-                         np.where(va > 0, np.inf, -np.inf))
-            hi = q > 50.0
-            lo = q < -50.0
-            qh = np.tanh((np.sqrt(np.where(hi, q, 50.0) - 49.0) - 1.0)
-                         / 50.0) * 100.0 + 50.0
-            ql = np.tanh(-(np.sqrt(-np.where(lo, q, -50.0) - 49.0) - 1.0)
-                         / 50.0) * 100.0 - 50.0
-        q = np.where(hi, qh, np.where(lo, ql, q))
-        out[f"pctlquotient{a}-{b}"] = np.where(va != 0.0, q, 0.0)
+        q = np.where(vb != 0.0, va / np.where(vb != 0.0, vb, 1.0),
+                     np.where(va > 0, np.inf, -np.inf))
+        out[f"pctlquotient{a}-{b}"] = np.where(
+            va != 0.0, _ratio_limit(q, 50.0, 100.0), 0.0)
+    return out
+
+
+def _fin(v):
+    return np.where(np.isfinite(v), v, 0.0)
+
+
+def _qreg_extras(N, a, b, c):
+    """f_regression's qregExtras from the raw parabola a*i^2 + b*i + c:
+    vertex x0 (clipped to [-N, N], N when undefined), its value y0, the
+    value yr at the last index and the mean slopes left (ls) and right
+    (rs) of the vertex."""
+    n1 = N - 1.0
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        x0 = b / (-2.0 * a)
+        x0 = np.where(x0 < -N, -N, np.where(x0 > N, N, x0))
+        x0 = np.where(np.isfinite(x0), x0, N)
+        y0 = _fin(c - b * b / (4.0 * a))
+        yr = _fin(a * n1 * n1 + b * n1 + c)
+        ls = np.where(x0 > 0, (y0 - c) / np.where(x0 > 0, x0, 1.0), 0.0)
+        rs = np.where(x0 < n1, (yr - y0) / np.where(x0 < n1, n1 - x0, 1.0),
+                      0.0)
+    return {"qregls": _fin(ls), "qregrs": _fin(rs), "qregx0": x0,
+            "qregy0": y0, "qregyr": yr, "qregy0nn": y0, "qregc3nn": _fin(c)}
+
+
+def _finish_regression(N, m, t, a, b, c, errs, centroid, opts):
+    """m, t: the fitted line; a, b, c: the fitted parabola (all zero where
+    f_regression zeroes them); errs: the sum of |residual| ("...errA") and
+    of squared residuals ("...errQ") of each fit, under their output
+    names — an evaluator that cannot form one leaves it out."""
+    quadratic = opts.get("quadratic", True)
+    out = {"linregc1": _fin(m), "linregc2": _fin(t)}
+    out.update((k, _fin(errs[k] / N)) for k in ("linregerrA", "linregerrQ")
+               if k in errs)
+    if quadratic:
+        out.update(qregc1=_fin(a), qregc2=_fin(b), qregc3=_fin(c))
+        # oldBuggyQerr: the quadratic errors stay sums, not means
+        buggy = opts.get("oldBuggyQerr", False)
+        out.update((k, _fin(errs[k] if buggy else errs[k] / N))
+                   for k in ("qregerrA", "qregerrQ") if k in errs)
+    out["centroid"] = _fin(centroid)
+    if quadratic and opts.get("qregExtras", False):
+        out.update(_qreg_extras(N, a, b, c))
     return out
 
 
@@ -705,11 +719,11 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
     per-window and are NOT returned — the caller routes them to the gather.
     Percentiles use the exact offline order-statistic machinery
     (_expanding_select), one selection per distinct fraction — bit-identical
-    to sorting each window, never the gather. means, moments, extremes
-    and percentiles finish through the same _finish_* as compute_batched;
-    regression has kernels.py f_regression's names and guards
-    (functionalRegression.cpp:219-246 closed forms expressed via the
-    algebraically-identical centered normal equations)."""
+    to sorting each window, never the gather. Every family finishes
+    through the same _finish_* as compute_batched, so each takes the same
+    options; regression's fits are f_regression's closed forms
+    (functionalRegression.cpp:219-246) expressed via the
+    algebraically-identical centered normal equations."""
     options = options or {}
     if isinstance(x, np.ndarray):
         x, his = [x], [his]
@@ -773,7 +787,8 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
 
     if "moments" in families:
         _add(out, _finish_moments(N, st[("mean", "y")], st[("M2", "y")],
-                                  st[("M3", "y")], st[("M4", "y")]))
+                                  st[("M3", "y")], st[("M4", "y")],
+                                  options.get("moments", {})))
 
     if "regression" in families:
         mean_y = st[("mean", "y")]
@@ -788,7 +803,7 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         m = np.where(multi & (M2u > 0), Cuy / safeM2u, 0.0)
         t = np.where(multi, mean_y - m * mean_u, x0)
         # SSE at the LS optimum (= kernel residual pass to 2nd order in eps)
-        leq = np.where(multi, np.maximum(M2y - m * Cuy, 0.0) / N, 0.0)
+        leq = np.where(multi, np.maximum(M2y - m * Cuy, 0.0), 0.0)
         # quadratic 2x2 centered normal equations; det is a pure function of
         # N: exactly 0 for N == 2 (the kernel's closed-form det is exactly 0
         # there too -> a=b=c=0), strictly positive for N >= 3
@@ -800,26 +815,18 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
         c = np.where(multi,
                      np.where(det_ok, mean_y - a * mean_v - b * mean_u, 0.0),
                      x0)
-        # residual vs the zero-fit (a=b=c=0) when the kernel emits zeros
+        # residual vs the zero-fit (a=b=c=0) when the kernel emits zeros:
+        # N times the mean square
         qeq = np.where(
-            det_ok, np.maximum(M2y - b * Cuy - a * Cvy, 0.0) / N,
-            np.where(multi, M2y / N + mean_y * mean_y, 0.0))
+            det_ok, np.maximum(M2y - b * Cuy - a * Cvy, 0.0),
+            np.where(multi, (M2y / N + mean_y * mean_y) * N, 0.0))
         asum = N * mean_y
         num = Cuy + N * mean_u * mean_y
         centroid = np.where(asum != 0.0,
                             num / np.where(asum != 0.0, asum, 1.0), 0.0)
-
-        def fin(v):
-            return np.where(np.isfinite(v), v, 0.0)
-
-        out["linregc1"] = fin(m)
-        out["linregc2"] = fin(t)
-        out["linregerrQ"] = fin(leq)
-        out["qregc1"] = fin(a)
-        out["qregc2"] = fin(b)
-        out["qregc3"] = fin(c)
-        out["qregerrQ"] = fin(qeq)
-        out["centroid"] = fin(centroid)
+        _add(out, _finish_regression(
+            N, m, t, a, b, c, {"linregerrQ": leq, "qregerrQ": qeq},
+            centroid, options.get("regression", {})))
 
     return out
 
@@ -1217,25 +1224,11 @@ def _peaks2_batched(x, starts, ends, gmin, gmax, gmean, opts):
     def unity(v):
         return np.clip(v, -1.0, 1.0) if doRatioLimit else v
 
-    def ratio_limit_vec(q, limit1, excess):
-        out_ = q.copy()
-        hi = q > limit1
-        if hi.any():
-            out_[hi] = np.tanh(
-                (np.sqrt(q[hi] - limit1 + 1.0) - 1.0)
-                / (excess * 0.5)) * excess + limit1
-        lo = q < -limit1
-        if lo.any():
-            out_[lo] = np.tanh(
-                -(np.sqrt(-(q[lo] + limit1) + 1.0) - 1.0)
-                / (excess * 0.5)) * excess - limit1
-        return out_
-
     def mean_ratio(v):
         nz = gmean != 0.0
         q = np.where(nz, v / np.where(nz, gmean, 1.0), 0.0)
         if doRatioLimit:
-            return np.where(nz, ratio_limit_vec(q, 10.0, 10.0), 20.0)
+            return np.where(nz, _ratio_limit(q, 10.0, 10.0), 20.0)
         return np.where(nz, q, v)
 
     rnz = rng_ != 0.0
@@ -1440,6 +1433,50 @@ def _peaks_batched(x, starts, ends, gmin, gmax, gmean, opts):
     }
 
 
+def _segment_runs_batched(m, starts, ends, segMinLng, pauseMinLng,
+                          maxNumSeg):
+    """kernels._segment_runs (process_SegNonX / process_SegEqX) over every
+    group at once, `m` the per-element match mask. Returns the lengths
+    and groups of the recorded segments, in group then emission order.
+
+    The automaton reduces exactly to run-length algebra: non-match runs
+    of length >= max(pauseMinLng, 1) split a group into CLUSTERS
+    (shorter gaps never reset the match counter — state 1/2 only advance
+    segEnd); a cluster emits one segment iff its cumulative match count
+    reaches max(segMinLng, 2) (the count is first compared on the second
+    match), with the reference's length quirk length = last_match_pos -
+    first_match_pos (the close formula i - segEnd - segStartIndex, both at
+    gap-close and at EOF); only the first maxNumSeg emitted segments per
+    group are recorded (add_segment's cap)."""
+    n_el = m.size
+    grp_rep = np.repeat(np.arange(starts.size, dtype=np.int64), ends - starts)
+    new_run = np.ones(n_el, dtype=bool)
+    new_run[1:] = (m[1:] != m[:-1]) | (grp_rep[1:] != grp_rep[:-1])
+    r_start = np.flatnonzero(new_run)
+    r_len = np.diff(np.append(r_start, n_el))
+    r_match = m[r_start]
+    r_grp = grp_rep[r_start]
+    breaking = (~r_match) & (r_len >= max(pauseMinLng, 1))
+    new_cluster = np.ones(r_start.size, dtype=bool)
+    new_cluster[1:] = (r_grp[1:] != r_grp[:-1]) | breaking[:-1]
+    c_start = np.flatnonzero(new_cluster)
+    c_matches = np.add.reduceat(np.where(r_match, r_len, 0), c_start)
+    first_m = np.minimum.reduceat(np.where(r_match, r_start, _BIG), c_start)
+    last_m = np.maximum.reduceat(
+        np.where(r_match, r_start + r_len - 1, -1), c_start)
+    c_grp = r_grp[c_start]
+    emitted = c_matches >= max(segMinLng, 2)
+    # rank of each emitted cluster within its group (clusters are in
+    # group-contiguous order: the global count minus the count before the
+    # group's first cluster, carried forward as a running max)
+    gstart = np.ones(c_grp.size, dtype=bool)
+    gstart[1:] = c_grp[1:] != c_grp[:-1]
+    cum = np.cumsum(emitted)
+    rank = cum - np.maximum.accumulate(np.where(gstart, cum - emitted, 0))
+    kept = emitted & (rank <= maxNumSeg)
+    return (last_m - first_m)[kept].astype(np.float64), c_grp[kept]
+
+
 def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                     families, options=None) -> dict[str, np.ndarray]:
     """x: concatenated values; [starts[i], ends[i]) are group slices that
@@ -1447,8 +1484,9 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
     np.add.reduceat silently returns x[starts[i]] for an empty segment (and
     raises for starts[i] == x.size), so empty groups are rejected here
     rather than producing wrong numbers. Returns {functional_name:
-    per-group array} for the requested subset of BATCHED_FAMILIES, names
-    identical to kernels.py outputs."""
+    per-group array} for the requested kernels.FAMILIES under any of their
+    options, names identical to kernels.py outputs. Option names are not
+    checked here: compute_groups checks them."""
     options = options or {}
     if not (ends > starts).all():
         raise ValueError("compute_batched: empty group slice "
@@ -1478,7 +1516,8 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         d2 = d * d
         _add(out, _finish_moments(N, mean, _seg_sum(d2, starts),
                                   _seg_sum(d2 * d, starts),
-                                  _seg_sum(d2 * d2, starts)))
+                                  _seg_sum(d2 * d2, starts),
+                                  options.get("moments", {})))
 
     if "extremes" in families:
         idx = np.arange(x.size, dtype=np.int64)
@@ -1498,12 +1537,24 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
             options.get("percentiles", {})))
 
     if "regression" in families:
-        num = _seg_sum(x * ii, starts)
-        num2 = _seg_sum(x * ii * ii, starts)
-        asum = mean * N
+        # f_regression's own summation order: ndarray.sum equals a reduceat
+        # behind a 0.0 slot (reduceat alone adds x[s] + sum(x[s+1:e])), so
+        # the ill-conditioned closed forms and their residual sums are
+        # bit-equal to the kernel's
+        slot = np.arange(x.size) + np.repeat(
+            np.arange(1, n_groups + 1), ends - starts)
+        buf = np.zeros(x.size + n_groups)     # the 0.0 slots stay zero
+        kstarts = slot[starts] - 1
+
+        def ksum(v):
+            buf[slot] = v
+            return np.add.reduceat(buf, kstarts)
+
+        num = ksum(x * ii)
+        num2 = ksum(x * ii * ii)
+        asum = ksum(x) / N * N
         with np.errstate(divide="ignore", invalid="ignore"):
             centroid = np.where(asum != 0.0, num / np.where(asum != 0, asum, 1), 0.0)
-        centroid = np.where(np.isfinite(centroid), centroid, 0.0)
         NNm1 = N * (N - 1.0)
         S1 = NNm1 / 2.0
         S2 = NNm1 * (2.0 * N - 1.0) / 6.0
@@ -1538,28 +1589,18 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         m_rep = np.repeat(m, (ends - starts))
         t_rep = np.repeat(t_off, (ends - starts))
         e = x - (m_rep * ii + t_rep)
-        lea = _seg_sum(np.abs(e), starts) / N
-        leq = _seg_sum(e * e, starts) / N
+        lea = ksum(np.abs(e))
+        leq = ksum(e * e)
         a_rep = np.repeat(a, (ends - starts))
         b_rep = np.repeat(b, (ends - starts))
         c_rep = np.repeat(c, (ends - starts))
         eq = x - (a_rep * ii * ii + b_rep * ii + c_rep)
-        qea = _seg_sum(np.abs(eq), starts) / N
-        qeq = _seg_sum(eq * eq, starts) / N
-
-        def fin(v):
-            return np.where(np.isfinite(v), v, 0.0)
-
-        out["linregc1"] = fin(m)
-        out["linregc2"] = fin(t_off)
-        out["linregerrA"] = fin(lea)
-        out["linregerrQ"] = fin(leq)
-        out["qregc1"] = fin(a)
-        out["qregc2"] = fin(b)
-        out["qregc3"] = fin(c)
-        out["qregerrA"] = fin(qea)
-        out["qregerrQ"] = fin(qeq)
-        out["centroid"] = centroid
+        qea = ksum(np.abs(eq))
+        qeq = ksum(eq * eq)
+        _add(out, _finish_regression(
+            N, m, t_off, a, b, c,
+            {"linregerrA": lea, "linregerrQ": leq, "qregerrA": qea,
+             "qregerrQ": qeq}, centroid, options.get("regression", {})))
 
     if "crossings" in families or "times" in families:
         # interior masks: position-within-group helpers
@@ -1585,13 +1626,20 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         out.setdefault("amean", mean)
 
     if "times" in families:
-        tn = options.get("times", {}).get("timeNorm", "segment")
+        topts = options.get("times", {})
+        tn, T = topts.get("timeNorm", "segment"), topts.get("T", 1.0)
         if tn == "segment":
             Norm, Norm1, Norm2 = N, N - 1.0, N - 2.0
-        else:  # frames
+        elif tn == "frames":
             Norm = np.ones_like(N)
             Norm1 = (N - 1.0) / N
             Norm2 = (N - 2.0) / N
+        elif topts.get("buggySecNorm", False):
+            Norm, Norm1, Norm2 = N / T, (N - 1.0) / T, (N - 2.0) / T
+        else:
+            Norm = np.full_like(N, 1.0 / T)
+            Norm1 = (N - 1.0) / (N * T)
+            Norm2 = (N - 2.0) / (N * T)
         rng = gmax - gmin
         for frac, nm in ((0.25, "25"), (0.50, "50"), (0.75, "75"),
                          (0.90, "90")):
@@ -1620,7 +1668,7 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         safe2 = np.where(Norm2 != 0, Norm2, 1.0)
         out["leftctime"] = np.where(Norm2 != 0, nLC / safe2, 0.0)
         out["rightctime"] = np.where(Norm2 != 0, nRC / safe2, 0.0)
-        out["duration"] = N
+        out["duration"] = N * T if tn == "second" else N
 
     if "samples" in families:
         # f_samples (functionalSamples.cpp:107): si = (int)((N-1)*p) — the
@@ -1635,75 +1683,47 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
             out[f"samplepos{p:g}"] = x[starts + idx]
 
     if "segments" in families:
-        # f_segments under the DEFAULT config (nonX, X=0, segMinLng=3,
-        # pauseMinLng=2, maxNumSeg=20; any non-default algorithm/threshold
-        # falls back to the reference automaton). The state machine
-        # reduces exactly to run-length algebra: consecutive non-match
-        # runs of length >= pauseMinLng split a group into CLUSTERS
-        # (shorter gaps never reset the match counter — state 1/2 only
-        # advance segEnd); a cluster emits one segment iff its cumulative
-        # match count reaches segMinLng, with the reference's length
-        # quirk length = last_match_pos - first_match_pos (the close
-        # formula i - segEnd - segStartIndex, both at gap-close and at
-        # EOF); only the first maxNumSeg emitted segments per group are
-        # recorded (add_segment's cap).
-        segMinLng, pauseMinLng, maxNumSeg = 3, 2, 20
-        m = x != 0.0
-        n_el = x.size
-        n_groups_i = starts.size
-        grp_rep = np.repeat(np.arange(n_groups_i, dtype=np.int64),
-                            (ends - starts))
-        new_run = np.ones(n_el, dtype=bool)
-        if n_el > 1:
-            new_run[1:] = (m[1:] != m[:-1]) | (grp_rep[1:] != grp_rep[:-1])
-        r_start = np.flatnonzero(new_run)
-        r_len = np.diff(np.append(r_start, n_el))
-        r_match = m[r_start]
-        r_grp = grp_rep[r_start]
-        n_runs = r_start.size
-        breaking = (~r_match) & (r_len >= pauseMinLng)
-        new_cluster = np.ones(n_runs, dtype=bool)
-        if n_runs > 1:
-            new_cluster[1:] = (r_grp[1:] != r_grp[:-1]) | breaking[:-1]
-        c_start = np.flatnonzero(new_cluster)
-        n_clusters = c_start.size
-        c_matches = np.add.reduceat(np.where(r_match, r_len, 0), c_start)
-        first_m = np.minimum.reduceat(
-            np.where(r_match, r_start, _BIG), c_start)
-        last_m = np.maximum.reduceat(
-            np.where(r_match, r_start + r_len - 1, -1), c_start)
-        c_grp = r_grp[c_start]
-        emitted = c_matches >= segMinLng
-        seg_len_c = np.where(emitted, last_m - first_m, 0).astype(np.float64)
-        # first maxNumSeg emitted clusters per group (clusters are in
-        # group-contiguous order, so a per-group running count is the
-        # global cumsum minus its value at the group's first cluster)
-        new_grp_c = np.ones(n_clusters, dtype=bool)
-        if n_clusters > 1:
-            new_grp_c[1:] = c_grp[1:] != c_grp[:-1]
-        gfirst = np.flatnonzero(new_grp_c)
-        cum = np.cumsum(emitted)
-        base = np.where(gfirst > 0, cum[gfirst - 1], 0)
-        g_sizes = np.diff(np.append(gfirst, n_clusters))
-        rank = cum - np.repeat(base, g_sizes)
-        kept = emitted & (rank <= maxNumSeg)
-
-        nSeg = np.add.reduceat(kept.astype(np.float64), gfirst)
-        sumLen = np.add.reduceat(np.where(kept, seg_len_c, 0.0), gfirst)
-        maxLen = np.maximum.reduceat(
-            np.where(kept, seg_len_c, -np.inf), gfirst)
-        minLen = np.minimum.reduceat(
-            np.where(kept, seg_len_c, np.inf), gfirst)
+        sopts = options.get("segments", {})
+        algorithm = sopts.get("algorithm", "nonX")
+        old_buggy = sopts.get("useOldBuggyChX", False)
+        segMinLng = sopts.get("segMinLng", 3)
+        pauseMinLng = sopts.get("pauseMinLng", 2)
+        maxNumSeg = sopts.get("maxNumSeg", 20)
+        Xval = np.broadcast_to(sopts.get("X", 0.0), starts.shape)
+        if sopts.get("XisRel", False):
+            Xval = gmin + (gmax - gmin) * Xval
+        if algorithm == "chX" or old_buggy:
+            # the two legacy automata have no run-length form: take each
+            # group's segment list from the reference automaton
+            runs = [_segment_runs_old_buggy(x[s:e], Xval[g], algorithm,
+                                            maxNumSeg) if old_buggy else
+                    _segment_runs(x[s:e], Xval[g], algorithm, segMinLng,
+                                  pauseMinLng, maxNumSeg)
+                    for g, (s, e) in enumerate(zip(starts, ends))]
+            seg_grp = np.repeat(np.arange(n_groups, dtype=np.int64),
+                                [len(r) for r in runs])
+            seg_len = np.array([v for r in runs for v in r],
+                               dtype=np.float64)
+        else:
+            Xrep = np.repeat(Xval, ends - starts)
+            seg_len, seg_grp = _segment_runs_batched(
+                (x != Xrep) if algorithm == "nonX" else (x == Xrep),
+                starts, ends, segMinLng, pauseMinLng, maxNumSeg)
+        nSeg = np.bincount(seg_grp, minlength=n_groups).astype(np.float64)
+        safe_n = np.where(nSeg > 0, nSeg, 1.0)
+        # bincount adds each group's lengths in order, as f_segments does
+        sumLen = np.bincount(seg_grp, seg_len, minlength=n_groups)
+        maxLen = np.full(n_groups, -np.inf)
+        np.maximum.at(maxLen, seg_grp, seg_len)
+        minLen = np.full(n_groups, np.inf)
+        np.minimum.at(minLen, seg_grp, seg_len)
         maxLen = np.where(nSeg > 0, maxLen, 0.0)
         minLen = np.where(nSeg > 0, minLen, 0.0)
-        safe_n = np.where(nSeg > 0, nSeg, 1.0)
         meanL = np.where(nSeg > 1, sumLen / safe_n, sumLen)
-        mean_rep_c = np.repeat(meanL, g_sizes)
-        dev = np.add.reduceat(
-            np.where(kept, (seg_len_c - mean_rep_c) ** 2, 0.0), gfirst)
+        dev = np.bincount(seg_grp, (seg_len - meanL[seg_grp]) ** 2,
+                          minlength=n_groups)
         lenDev = np.where(nSeg > 1, np.sqrt(dev / safe_n), 0.0)
 
-        sopts = options.get("segments", {})
         tn = sopts.get("timeNorm", "segment")
         T = sopts.get("T", 1.0)
         if tn == "second":
@@ -1727,21 +1747,28 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
             out["segLenStddev"] = lenDev
 
     if "onset" in families:
-        # f_onset with the DEFAULT equal thresholds (0.0/0.0, no abs):
-        # with thresholdOnset == thresholdOffset the automaton state after
-        # element i is exactly (x[i] > t), so onsets are the rising edges
-        # of the boolean series and offsets the falling ones — pure
-        # vectorized edge detection. Any non-default threshold/useAbsVal
-        # routes the family back to the per-group reference path
-        # (runs_batched).
-        b = x > 0.0
-        bm1 = np.empty_like(b)
-        bm1[1:] = b[:-1]
-        bm1[0] = False
-        not_first = ii >= 1.0
-        up = not_first & b & ~bm1
-        down = not_first & ~b & bm1
+        # f_onset's hysteresis automaton as a forward fill: after element
+        # i >= 1 the state is 0 if cur <= thresholdOffset, else 1 if
+        # cur > thresholdOnset, else unchanged; a group starts in state
+        # x[0] > thresholdOnset (no abs). An onset is a set from state 0;
+        # an offset is a reset from state 1 or in the same step as a set.
+        oopts = options.get("onset", {})
+        th_on = oopts.get("thresholdOnset", 0.0)
+        th_off = oopts.get("thresholdOffset", 0.0)
+        cur = np.abs(x) if oopts.get("useAbsVal", False) else x
+        sets = cur > th_on
+        resets = cur <= th_off
+        code = np.where(resets, 0, np.where(sets, 1, -1))
+        code[starts] = x[starts] > th_on
         idx = np.arange(x.size, dtype=np.int64)
+        # every group's first element has a code, so no fill crosses groups
+        state = code[np.maximum.accumulate(np.where(code >= 0, idx, 0))]
+        prev = np.empty_like(state)
+        prev[1:] = state[:-1]
+        prev[0] = 0
+        not_first = ii >= 1.0
+        up = not_first & sets & (prev == 0)
+        down = not_first & resets & ((prev == 1) | sets)
         n_on = _seg_sum(up.astype(np.float64), starts)
         n_off = _seg_sum(down.astype(np.float64), starts)
         first_up = np.minimum.reduceat(
@@ -1751,7 +1778,6 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         onset_pos = np.where(n_on > 0, first_up, 0).astype(np.float64)
         offset_pos = np.where(n_off > 0, last_down,
                               (ends - starts) - 1).astype(np.float64)
-        oopts = options.get("onset", {})
         tn = oopts.get("timeNorm", "segment")
         T = oopts.get("T", 1.0)
         if tn == "segment":
@@ -1929,28 +1955,11 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
     return out
 
 
-def runs_batched(family: str, options=None) -> bool:
-    """True when `family` with its options runs on compute_batched: each
-    option it sets is in BATCHED_SUPPORTED_OPTIONS or equals the default
-    of the family's kernels.py signature (an explicit default changes
-    nothing, so it must not evict the family)."""
-    from opensmile_spark.functionals.kernels import FAMILIES
-
-    if family not in BATCHED_FAMILIES:
-        return False
-    other = {k: v for k, v in (options or {}).get(family, {}).items()
-             if k not in BATCHED_SUPPORTED_OPTIONS[family]}
-    params = inspect.signature(FAMILIES[family]).parameters if other else {}
-    return all(k in params and np.array_equal(v, params[k].default)
-               for k, v in other.items())
-
-
 def output_keys(families, options=None) -> tuple:
     """Bare output names of `families`, in compute_all order — read off one
     compute_all call on a fixed 8-element probe (names depend on families
-    and options only, never on the data)."""
-    from opensmile_spark.functionals.kernels import compute_all
-
+    and options only, never on the data). An option name a family's
+    kernel does not take raises TypeError."""
     return tuple(compute_all(np.arange(1.0, 9.0), list(families), options))
 
 
@@ -1964,34 +1973,13 @@ def key_owners(families, options=None) -> tuple:
     return tuple(owner.items())
 
 
-def _route(families, options):
-    """(output keys, batched families, loop families, keys owned by a loop
-    family)."""
-    batched = tuple(f for f in families if runs_batched(f, options))
-    loop = tuple(f for f in families if f not in batched)
-    loop_keys = tuple(k for k, f in key_owners(families, options)
-                      if f in loop)
-    return output_keys(families, options), batched, loop, loop_keys
-
-
 def compute_groups(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                    families, options=None) -> dict[str, np.ndarray]:
     """{key: float64 array, one value per group} for every output key of
     `families` (output_keys order); group i is x[starts[i]:ends[i]],
-    non-empty. Families that pass runs_batched run in one
-    compute_batched call; the others run the per-group compute_all
-    reference loop, so their keys are bit-equal to compute_all."""
-    from opensmile_spark.functionals.kernels import compute_all
-
-    keys, batched, loop, loop_keys = _route(families, options)
-    out = {}
-    if batched:
-        out = compute_batched(x, starts, ends, batched, options)
-    if loop:
-        rows = {k: np.empty(starts.size) for k in loop_keys}
-        for gi, (s, e) in enumerate(zip(starts, ends)):
-            got = compute_all(x[s:e], loop, options)
-            for k in loop_keys:
-                rows[k][gi] = got[k]
-        out.update(rows)
+    non-empty. One compute_batched call evaluates every family; the
+    output_keys probe runs first, so a misspelled option raises
+    TypeError as compute_all does."""
+    keys = output_keys(families, options)
+    out = compute_batched(x, starts, ends, families, options)
     return {k: out[k] for k in keys}

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from opensmile_spark.functionals.batched import (
     EXPANDING_FAMILIES, EXPANDING_UNSUPPORTED_KEYS, compute_expanding,
-    compute_groups, key_owners, output_keys, runs_batched,
+    compute_groups, key_owners, output_keys,
 )
 
 
@@ -109,8 +109,7 @@ def _expanding_route(families, options):
     outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly per-window, so
     their family also joins the gather, which then fills ONLY those keys.
     """
-    exp = tuple(f for f in families
-                if f in EXPANDING_FAMILIES and runs_batched(f, options))
+    exp = tuple(f for f in families if f in EXPANDING_FAMILIES)
     exp_keys = frozenset(k for k, fam in key_owners(families, options)
                          if fam in exp and k not in EXPANDING_UNSUPPORTED_KEYS)
     rest = tuple(f for f in families if f not in exp
@@ -147,25 +146,24 @@ def backfill_functionals(
     every conversation of the block, and the per-anchor windows of the
     gathered families are concatenated into ONE array evaluated for ALL
     anchors by batched.compute_groups — no per-conversation or per-anchor
-    Python dispatch, except for a family with a non-default option
-    outside BATCHED_SUPPORTED_OPTIONS, which compute_groups runs through
-    the per-window reference kernel. Every conversation's outputs are
-    bit-identical whatever else shares its block. The key and anchor_ts
-    columns keep their input types. The gather is chunked so the gathered
-    array stays bounded (`max_gather_elems`) regardless of anchor density.
-    Empty windows emit null features (anchor row is kept so the grid is
-    complete — the PAD_ZERO/PAD_NONE choice is the caller's fillna/dropna).
+    Python dispatch, under any family option. Every conversation's
+    outputs are bit-identical whatever else shares its block. The key and
+    anchor_ts columns keep their input types. The gather is chunked so the
+    gathered array stays bounded (`max_gather_elems`) regardless of
+    anchor density. Empty windows emit null features (anchor row is kept
+    so the grid is complete — the PAD_ZERO/PAD_NONE choice is the
+    caller's fillna/dropna).
 
     Cost model per family on an UNBOUNDED (expanding) grid with N turns and
     A anchors per conversation: means/extremes/moments/percentiles and all
     regression keys except the two |residual| means are O(N + A*B) via the
     prefix, blocked-Chan, and offline order-statistic paths
-    (batched.compute_expanding) — every default family is linear in the
-    conversation, never O(sum of window sizes). Only the two
-    |residual|-mean regression keys keep the memory-bounded gather
-    (a per-window fit applied to every element is irreducibly
-    gather-shaped). With window_seconds set, every family gathers, but the
-    window bound caps the work.
+    (batched.compute_expanding, which takes every option of these five
+    families) — each is linear in the conversation, never O(sum of window
+    sizes). Only the two |residual|-mean regression keys keep the
+    memory-bounded gather (a per-window fit applied to every element is
+    irreducibly gather-shaped). With window_seconds set, every family
+    gathers, but the window bound caps the work.
     """
     import numpy as np
     import pyarrow as pa

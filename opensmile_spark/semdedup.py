@@ -88,6 +88,8 @@ def _fit_sample(docs: DataFrame, id_col: str, vec_col: str, k: int,
                         F.col(vec_col).alias("__v"), h.alias("__h"))
             .filter(F.col("__h") < int(frac * 2**32))
             .orderBy("__h", "__id").limit(target).collect())
+    if not cand:
+        return np.empty((0, 0))
     X = np.stack([np.asarray(r["__v"], dtype=np.float64) for r in cand])
     nrm = np.sqrt((X * X).sum(axis=1, keepdims=True))
     return X / np.maximum(nrm, 1e-12)
@@ -114,7 +116,9 @@ def semdedup(docs: DataFrame, threshold: float = 0.7, n_clusters: int = 8,
     if centroids is None:
         X = _fit_sample(docs, id_col, vec_col, n_clusters,
                         sample_per_centroid)
-        centroids = kmeans_fit_np(X, n_clusters, n_iter)
+        # an empty table has nothing to fit, and no row meets a centroid
+        centroids = (kmeans_fit_np(X, n_clusters, n_iter) if len(X)
+                     else np.zeros((n_clusters, 0)))
     C = np.asarray(centroids, dtype=np.float64)
     cnorm = np.sqrt((C * C).sum(axis=1))
     cc = (C * C).sum(axis=1)

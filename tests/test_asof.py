@@ -139,17 +139,22 @@ def test_backfill_long_key(spark):
 
 
 def test_backfill_reference_loop_path(spark):
-    """A family with a non-default option outside BATCHED_SUPPORTED_OPTIONS
-    (segments, segMinLng=2) runs the per-window reference loop next to the
-    expanding (means, regression) and gathered (crossings, regression
-    |residual|) paths; `amean` is emitted by both means and crossings.
-    Every anchor equals compute_all on its visible slice, expanding and
-    on a trailing window; loop-routed keys are bit-equal."""
-    from opensmile_spark.functionals.batched import _route
-
+    """Families with non-default options next to the expanding (means,
+    moments, percentiles, regression) and gathered (crossings, regression
+    |residual|) paths, `amean` emitted by several families: segments with
+    segMinLng=2, the regression options (qregExtras, oldBuggyQerr,
+    quadratic=False), ratio-limited moments and rounded percentiles.
+    Every anchor equals compute_all on its visible slice, expanding and on
+    a trailing window, and every key of a non-empty window is filled."""
     t0 = 1_704_067_200.0
-    fams = ["means", "crossings", "regression", "segments"]
-    opts = {"segments": {"algorithm": "nonX", "X": 0.0, "segMinLng": 2}}
+    base = ["means", "crossings", "regression", "segments"]
+    option_sets = [
+        {"segments": {"algorithm": "nonX", "X": 0.0, "segMinLng": 2}},
+        {"regression": {"qregExtras": True, "oldBuggyQerr": True}},
+        {"regression": {"quadratic": False}},
+        {"moments": {"doRatioLimit": True}},
+        {"percentiles": {"interp": False}},
+    ]
     rng = np.random.default_rng(3)
     convs = {}
     for k, n in (("a", 40), ("b", 9)):
@@ -167,32 +172,31 @@ def test_backfill_reference_loop_path(spark):
         a = _anchors(spark, k, [t0 - 5.0] + [t0 + 10.0 * j + 5.0
                                              for j in range(0, len(v), 3)])
         anchors = a if anchors is None else anchors.unionByName(a)
-    loop_keys = _route(fams, opts)[3]
-    assert loop_keys
-    for window in (None, 60.0):
-        out = backfill_functionals(lld, anchors, ["x"], families=fams,
-                                   options=opts, window_seconds=window)
-        rows = out.collect()
-        assert len(rows) == anchors.count()
-        for r in rows:
-            v = convs[r["conv_id"]]
-            t = r["anchor_ts"].timestamp() - t0
-            ts = 10.0 * np.arange(len(v))
-            vis = (ts <= t) & ((ts >= t - window) if window else True)
-            assert r["n_visible"] == vis.sum()
-            if not vis.any():
-                assert r["x_amean"] is None
-                continue
-            want = compute_all(v[vis], fams, opts)
-            assert {f"x_{k}" for k in want} == \
-                set(r.asDict()) - {"conv_id", "anchor_ts", "n_visible"}
-            for key, w in want.items():
-                got = r[f"x_{key}"]
-                if key in loop_keys:
-                    assert got == w, (window, t, key, got, w)
-                else:
+    n_anchors = anchors.count()
+    for opts in option_sets:
+        fams = base + [f for f in opts if f not in base]
+        for window in (None, 60.0):
+            out = backfill_functionals(lld, anchors, ["x"], families=fams,
+                                       options=opts, window_seconds=window)
+            rows = out.collect()
+            assert len(rows) == n_anchors
+            for r in rows:
+                v = convs[r["conv_id"]]
+                t = r["anchor_ts"].timestamp() - t0
+                ts = 10.0 * np.arange(len(v))
+                vis = (ts <= t) & ((ts >= t - window) if window else True)
+                assert r["n_visible"] == vis.sum()
+                if not vis.any():
+                    assert r["x_amean"] is None
+                    continue
+                want = compute_all(v[vis], fams, opts)
+                assert {f"x_{k}" for k in want} == \
+                    set(r.asDict()) - {"conv_id", "anchor_ts", "n_visible"}
+                for key, w in want.items():
+                    got = r[f"x_{key}"]
+                    assert got is not None, (opts, window, t, key)
                     assert np.isclose(got, w, rtol=1e-9, atol=1e-12), \
-                        (window, t, key, got, w)
+                        (opts, window, t, key, got, w)
 
 
 def _split_corpus(spark):

@@ -3,10 +3,10 @@
 import numpy as np
 import pytest
 
-from opensmile_spark.functionals.batched import BATCHED_FAMILIES, compute_batched
-from opensmile_spark.functionals.kernels import compute_all
+from opensmile_spark.functionals.batched import compute_batched
+from opensmile_spark.functionals.kernels import FAMILIES, compute_all
 
-FAMS = sorted(BATCHED_FAMILIES)
+FAMS = sorted(FAMILIES)
 
 
 def make_groups(rng, n_groups=40):
@@ -102,9 +102,8 @@ def test_batched_custom_options_stay_fast_and_match(seed):
 
 
 def test_bank_keeps_family_batched_with_supported_options(spark):
-    """The eviction gate consults BATCHED_SUPPORTED_OPTIONS: supported
-    options keep the family on the fast path; unsupported ones fall back
-    (and still match the kernel either way)."""
+    """eGeMAPS-style custom percentile options through the Spark kernel
+    bank equal the per-group kernel."""
     from opensmile_spark.functionals import functionals_kernel
     from tests.conftest import make_conv
 
@@ -323,12 +322,12 @@ def test_expanding_moments_regression_equals_pergroup(case):
      "timeNorm": "second", "T": 0.1},
 ])
 def test_peaks2_batched_option_sweep(opts):
-    """peaks2 claims batched support under EVERY option combination
-    (BATCHED_SUPPORTED_OPTIONS) — sweep each branch of the automaton's
-    thresholding (static/dynamic/absolute), ratio limiting, and time
-    normalization against the per-group kernel, on series dense in local
-    extrema (the regime where pass-2a/2b/3 culling decisions diverge
-    fastest if any lane-parallel branch is wrong)."""
+    """peaks2 is batched under EVERY option combination — sweep each
+    branch of the automaton's thresholding (static/dynamic/absolute),
+    ratio limiting, and time normalization against the per-group kernel,
+    on series dense in local extrema (the regime where pass-2a/2b/3
+    culling decisions diverge fastest if any lane-parallel branch is
+    wrong)."""
     rng = np.random.RandomState(42)
     chunks, sizes = [], []
     for gi in range(50):
@@ -632,13 +631,13 @@ def test_expanding_block_equals_alone():
 ROUTER_CASES = [
     (["peaks", "peaks2"], None),
     (["peaks2", "peaks"], None),
-    # onset with a threshold and eqX segments run the per-group loop,
-    # mixed with batched families that share keys (amean)
+    # onset with a threshold and eqX segments, mixed with families that
+    # share keys (amean)
     (["means", "onset", "crossings", "percentiles"],
      {"onset": {"thresholdOnset": 1.0, "thresholdOffset": 0.5}}),
     (["segments", "means", "peaks2", "regression"],
      {"segments": {"algorithm": "eqX", "X": 0.0}}),
-    # a loop-routed family requested first owns the shared key (amean)
+    # a family requested first owns the shared key (amean)
     (["moments", "means", "extremes"], {"moments": {"doRatioLimit": True}}),
 ]
 
@@ -661,28 +660,21 @@ def test_output_keys_is_compute_all_order(fams, opts):
 
 @pytest.mark.parametrize("fams,opts", ROUTER_CASES)
 def test_compute_groups_matches_pergroup(fams, opts):
-    """Every key equals per-group compute_all; keys the router sends to
-    the per-group loop are bit-equal to it."""
+    """Every key, in output_keys order, equals per-group compute_all."""
     from opensmile_spark.functionals.batched import (
-        _route, compute_groups, output_keys,
+        compute_groups, output_keys,
     )
 
     rng = np.random.RandomState(9)
     x, starts, ends = make_groups(rng)
     got = compute_groups(x, starts, ends, fams, opts)
     assert tuple(got) == output_keys(fams, opts)
-    _, _, loop, loop_keys = _route(fams, opts)
-    assert bool(loop) == (opts is not None)
-    assert bool(loop_keys) == (opts is not None)
     for gi, (s, e) in enumerate(zip(starts, ends)):
         want = compute_all(x[s:e], fams, opts)
         for k, v in want.items():
             g = got[k][gi]
             assert got[k].dtype == np.float64
-            if k in loop_keys:
-                assert np.float64(v).tobytes() == g.tobytes(), (gi, k, g, v)
-            else:
-                assert np.isclose(g, v, rtol=1e-8, atol=1e-10), (gi, k, g, v)
+            assert np.isclose(g, v, rtol=1e-8, atol=1e-10), (gi, k, g, v)
 
 
 # explicit defaults, as presets.egemaps_style and smileconf write them
@@ -695,15 +687,171 @@ DEFAULT_OPTION_CASES = [
 
 @pytest.mark.parametrize("fams,opts", DEFAULT_OPTION_CASES)
 def test_explicit_default_options_stay_batched(fams, opts):
-    """An option set to its kernels.py default changes nothing: it routes
-    no family to the per-group loop, and every key keeps the bits of the
-    call without it."""
-    from opensmile_spark.functionals.batched import _route, compute_groups
+    """An option set to its kernels.py default changes nothing: every key
+    keeps the bits of the call without it."""
+    from opensmile_spark.functionals.batched import compute_groups
 
     x, starts, ends = make_groups(np.random.RandomState(4))
-    assert _route(fams, opts)[2] == ()
     got = compute_groups(x, starts, ends, fams, opts)
     want = compute_groups(x, starts, ends, fams)
     assert list(got) == list(want)
     for k, v in want.items():
         assert got[k].tobytes() == v.tobytes(), k
+
+
+# --- every kernel option is batched ---------------------------------------
+
+# settings for the timeNorm/T parameters every kernel takes (most ignore them)
+TIME_CASES = [{"timeNorm": tn} for tn in ("frames", "segment", "second")] + [
+    {"T": 0.25}, {"timeNorm": "second", "T": 0.25},
+    {"timeNorm": "segment", "T": 4.0}]
+
+# one or more option sets per (family, parameter) of the kernels.FAMILIES
+# signatures, each setting that parameter to a non-default value
+OPTION_CASES = {
+    ("moments", "doRatioLimit"): [{"doRatioLimit": True}],
+    ("extremes", "T"): [{"timeNorm": "second", "T": 0.25},
+                        {"timeNorm": "second", "T": 0.0}],
+    ("percentiles", "percentiles"): [
+        {"percentiles": (0.0, 0.1, 0.5, 0.9, 1.0)}],
+    ("percentiles", "pctlranges"): [{"pctlranges": ((0, 2), (1, 2), (2, 0))}],
+    ("percentiles", "pctlquotients"): [
+        {"pctlquotients": ((0, 1), (2, 0), (1, 1))},
+        {"percentiles": (0.0, 0.05, 1.0), "pctlquotients": ((2, 1), (0, 2))}],
+    ("percentiles", "interp"): [
+        {"interp": False},
+        {"interp": False, "percentiles": (0.1, 0.3, 0.7, 0.9),
+         "pctlquotients": ((3, 0),)}],
+    ("regression", "quadratic"): [{"quadratic": False},
+                                  {"quadratic": False, "qregExtras": True}],
+    ("regression", "oldBuggyQerr"): [{"oldBuggyQerr": True}],
+    ("regression", "qregExtras"): [{"qregExtras": True},
+                                   {"qregExtras": True, "oldBuggyQerr": True}],
+    ("times", "timeNorm"): [{"timeNorm": "frames"}, {"timeNorm": "second"}],
+    ("times", "T"): [{"timeNorm": "second", "T": 0.25}, {"T": 0.25}],
+    ("times", "buggySecNorm"): [
+        {"timeNorm": "second", "T": 0.5, "buggySecNorm": True},
+        {"buggySecNorm": True}],
+    ("onset", "thresholdOnset"): [
+        {"thresholdOnset": t, "thresholdOffset": 0.0}
+        for t in (-1.0, -0.5, 0.5, 1.0)],
+    ("onset", "thresholdOffset"): [
+        {"thresholdOnset": t, "thresholdOffset": o}
+        for t, o in ((0.0, -0.5), (1.0, 0.5), (0.5, 1.0), (-1.0, 1.0))],
+    ("onset", "useAbsVal"): [
+        {"useAbsVal": True},
+        {"useAbsVal": True, "thresholdOnset": 1.0, "thresholdOffset": 0.5},
+        {"useAbsVal": True, "thresholdOnset": -0.5,
+         "thresholdOffset": 0.5}],
+    ("segments", "algorithm"): [{"algorithm": "eqX"}, {"algorithm": "chX"}],
+    ("segments", "X"): [{"X": 1.0}, {"X": -0.5},
+                        {"algorithm": "eqX", "X": 2.0},
+                        {"algorithm": "chX", "X": 1.0}],
+    ("segments", "XisRel"): [
+        {"XisRel": True, "X": 0.5},
+        {"algorithm": "eqX", "XisRel": True, "X": 1.0},
+        {"algorithm": "chX", "XisRel": True, "X": 0.25}],
+    ("segments", "segMinLng"): [{"segMinLng": v} for v in (0, 1, 2, 5)] + [
+        {"algorithm": "eqX", "segMinLng": 1},
+        {"algorithm": "chX", "segMinLng": 2}],
+    ("segments", "pauseMinLng"): [{"pauseMinLng": v} for v in (0, 1, 3)] + [
+        {"algorithm": "eqX", "pauseMinLng": 1, "segMinLng": 2}],
+    ("segments", "maxNumSeg"): [
+        {"maxNumSeg": 2}, {"maxNumSeg": 1, "timeNorm": "frames"},
+        {"algorithm": "chX", "maxNumSeg": 3}],
+    ("segments", "useOldBuggyChX"): [
+        {"useOldBuggyChX": True, "algorithm": a, "maxNumSeg": n}
+        for a in ("nonX", "eqX", "chX") for n in (20, 4)],
+    ("peaks2", "relThresh"): [{"relThresh": 0.02}, {"relThresh": 0.4}],
+    ("peaks2", "dynRelThresh"): [{"dynRelThresh": True}],
+    ("peaks2", "absThreshIn"): [{"absThreshIn": 0.5}],
+    ("peaks2", "doRatioLimit"): [{"doRatioLimit": True}],
+    ("samples", "positions"): [{"positions": (0.1, 0.5, 0.99)}],
+    ("dct", "firstCoeff"): [{"firstCoeff": 0}],
+    ("dct", "lastCoeff"): [{"lastCoeff": 3}, {"firstCoeff": 2,
+                                              "lastCoeff": 9}],
+    ("lpc", "order"): [{"order": 2}, {"order": 7}],
+    ("lsp", "order"): [{"order": 2}, {"order": 6}],
+    ("acf", "max_lag"): [{"max_lag": 9}],
+    ("acf", "normalize"): [{"normalize": False}],
+    ("amdf", "max_lag"): [{"max_lag": 9}],
+    ("formants", "order"): [{"order": 4}, {"order": 8}],
+    ("formants", "n_formants"): [{"n_formants": 5}],
+    ("modulation", "fft_win"): [{"fft_win": 16}, {"fft_win": 128}],
+    ("modulation", "n_bins"): [{"n_bins": 3}],
+    ("modulation", "min_freq"): [{"min_freq": 0.0}],
+    ("modulation", "max_freq"): [{"max_freq": 0.5}],
+}
+
+
+def _kernel_params():
+    """(family, parameter) for every option of every kernels.FAMILIES
+    signature (the five leading parameters are the shared pre-pass)."""
+    import inspect
+
+    return [(fam, p) for fam, fn in FAMILIES.items()
+            for p in list(inspect.signature(fn).parameters)[5:]]
+
+
+def _option_groups():
+    """Groups of sizes 1, 2, 3 and up to 80: integer ties and zeros,
+    rounded noise, zero-heavy runs, integer ramps and oscillations, with
+    -0.0 sprinkled into every kind."""
+    rng = np.random.RandomState(19)
+    sizes = np.concatenate([[1, 2, 3, 1, 2, 3], rng.randint(1, 81, 64)])
+    chunks = []
+    for i, n in enumerate(sizes):
+        kind = i % 5
+        if kind == 0:
+            v = rng.randint(-3, 4, n).astype(float)
+        elif kind == 1:
+            v = np.round(rng.randn(n) * 2.0, 1)
+        elif kind == 2:
+            v = np.where(rng.rand(n) < 0.5, 0.0, rng.randn(n))
+        elif kind == 3:
+            v = np.arange(n, dtype=float) * 2.0 - n
+        else:
+            v = np.sin(np.arange(n) * 0.7) * 3.0 + rng.randn(n) * 0.3
+        v[rng.rand(n) < 0.15] = -0.0
+        chunks.append(v)
+    x = np.concatenate(chunks)
+    ends = np.cumsum(sizes).astype(np.int64)
+    return x, ends - sizes.astype(np.int64), ends
+
+
+@pytest.mark.parametrize("fam,param", _kernel_params())
+def test_every_kernel_option_is_batched(fam, param):
+    """compute_groups is compute_batched's output alone, so every
+    parameter of every kernel must be evaluated there: each option set
+    equals the per-group kernel. A kernel parameter with no case fails
+    here."""
+    from opensmile_spark.functionals.batched import (
+        compute_groups, output_keys,
+    )
+
+    cases = (TIME_CASES if param in ("timeNorm", "T") else []) \
+        + OPTION_CASES.get((fam, param), [])
+    assert cases, f"no option case for {fam}.{param}"
+    x, starts, ends = _option_groups()
+    for opts in cases:
+        options = {fam: opts}
+        got = compute_groups(x, starts, ends, [fam], options)
+        bat = compute_batched(x, starts, ends, [fam], options)
+        assert tuple(got) == output_keys([fam], options)
+        for k, v in got.items():
+            assert v.tobytes() == bat[k].tobytes(), (opts, k)
+        for gi, (s, e) in enumerate(zip(starts, ends)):
+            for k, v in compute_all(x[s:e], [fam], options).items():
+                assert np.isclose(got[k][gi], v, rtol=1e-8, atol=1e-10), (
+                    opts, gi, x[s:e].tolist(), k, got[k][gi], v)
+
+
+def test_misspelled_option_raises():
+    """An option name no kernel takes raises TypeError, as compute_all
+    does, instead of being ignored."""
+    from opensmile_spark.functionals.batched import compute_groups
+
+    x, starts, ends = _option_groups()
+    with pytest.raises(TypeError):
+        compute_groups(x, starts, ends, ["means", "onset"],
+                       {"onset": {"thresholdOnSet": 1.0}})

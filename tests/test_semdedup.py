@@ -164,3 +164,23 @@ def test_semdedup_blocked_kernel_matches_dense(spark, monkeypatch):
     b = dense["max_prior_sim"].to_numpy(dtype=float)
     assert (np.isclose(a, b, rtol=1e-12, atol=1e-12)
             | (np.isnan(a) & np.isnan(b))).all()
+
+
+def test_semdedup_empty_table(spark, tmp_path):
+    """An empty embedding table gives an empty decision table with the
+    usual schema, from semdedup and from CLI semdedup."""
+    from opensmile_spark.cli import main
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    dec = semdedup(empty, n_clusters=2)
+    assert dec.columns == ["vec_id", "cell", "sim_centroid",
+                           "max_prior_sim", "keep", "capped"]
+    assert dec.count() == 0
+
+    path = str(tmp_path / "emb")
+    empty.write.parquet(path)
+    out = str(tmp_path / "dec")
+    main(["semdedup", "--input", path, "--output", out, "--clusters", "2"])
+    got = spark.read.parquet(out)
+    assert got.count() == 0
+    assert got.schema == dec.schema
