@@ -7,9 +7,10 @@ numpy reduceat — removing the per-group Python dispatch that dominates when
 groups are small (the common case: tens of turns per session). All 19
 families are batched under every option of their kernels.py signature, the
 sequential automatons (peaks, peaks2, segments, onset) and the per-group
-transforms (lpc, lsp, formants, modulation) included. The one per-group
-Python left is the segment list of the two legacy segment automata (chX,
-useOldBuggyChX), which have no run-length form.
+transforms (lpc, lsp, formants, modulation) included. Two per-group
+Python loops are left: the in-place sort of each group's values for
+percentiles, and the segment list of the two legacy segment automata
+(chX, useOldBuggyChX), which have no run-length form.
 
 `compute_groups` is the entry point — the analogue of cFunctionals' one
 shared pre-pass plus dispatch of each enabled sub-component (openSMILE
@@ -27,9 +28,9 @@ sequential sum in 257 and from x[s:e].sum() in 225).
 
 Each of means, moments, extremes, percentiles and regression has ONE
 finisher (`_finish_*`) that turns per-window reductions into the named
-outputs, options included; compute_batched (reduceat over groups) and
-compute_expanding (prefix scans over anchors) make their own reductions
-and share it.
+outputs, options included. compute_batched (reduceat over groups) feeds
+all five; compute_expanding (prefix scans over anchors) makes its own
+reductions for the four EXPANDING_FAMILIES and shares their finishers.
 """
 
 from __future__ import annotations
@@ -45,6 +46,15 @@ _BIG = np.iinfo(np.int64).max
 
 def _seg_sum(v, starts):
     return np.add.reduceat(v, starts)
+
+
+def _neighbours(x, pad):
+    """x[i-1] and x[i+1] for every element i, `pad` past either end."""
+    xm1 = np.full_like(x, pad)
+    xp1 = np.full_like(x, pad)
+    xm1[1:] = x[:-1]
+    xp1[:-1] = x[1:]
+    return xm1, xp1
 
 
 def _lag_sum(x, starts, pos_in, size_rep, k, kind="prod"):
@@ -308,31 +318,27 @@ def _finish_regression(N, m, t, a, b, c, errs, centroid, opts):
     """m, t: the fitted line; a, b, c: the fitted parabola (all zero where
     f_regression zeroes them); errs: the sum of |residual| ("...errA") and
     of squared residuals ("...errQ") of each fit, under their output
-    names — an evaluator that cannot form one leaves it out."""
+    names."""
     quadratic = opts.get("quadratic", True)
     out = {"linregc1": _fin(m), "linregc2": _fin(t)}
-    out.update((k, _fin(errs[k] / N)) for k in ("linregerrA", "linregerrQ")
-               if k in errs)
+    out.update((k, _fin(errs[k] / N)) for k in ("linregerrA", "linregerrQ"))
     if quadratic:
         out.update(qregc1=_fin(a), qregc2=_fin(b), qregc3=_fin(c))
         # oldBuggyQerr: the quadratic errors stay sums, not means
         buggy = opts.get("oldBuggyQerr", False)
         out.update((k, _fin(errs[k] if buggy else errs[k] / N))
-                   for k in ("qregerrA", "qregerrQ") if k in errs)
+                   for k in ("qregerrA", "qregerrQ"))
     out["centroid"] = _fin(centroid)
     if quadratic and opts.get("qregExtras", False):
         out.update(_qreg_extras(N, a, b, c))
     return out
 
 
-EXPANDING_FAMILIES = {"means", "extremes", "moments", "percentiles",
-                      "regression"}
-
-# outputs of an expanding family that are NOT prefix-expressible: per-window
-# mean |residual| needs the fitted line/parabola of THAT window applied to
-# every element, so these two keys keep the bounded-gather path while the
-# rest of the regression family runs O(N + A)
-EXPANDING_UNSUPPORTED_KEYS = {"linregerrA", "qregerrA"}
+# the families compute_expanding evaluates: each output is a prefix sum, a
+# running extremum, a mergeable central moment or an order statistic.
+# Regression is not one of them: its |residual| sums apply each window's
+# own fit to every element of that window.
+EXPANDING_FAMILIES = {"means", "extremes", "moments", "percentiles"}
 
 # ---------------------------------------------------------------------------
 # exact expanding-window statistics over many conversations at once.
@@ -355,8 +361,7 @@ EXPANDING_UNSUPPORTED_KEYS = {"linregerrA", "qregerrA"}
 # conversation over its full blocks), then for each anchor h merge the
 # cum-stats of the h//B full blocks with the exact two-pass stats of the
 # <=B-element remainder (vectorized across all anchors). Work is
-# O(N + A*B + N/B); every sum is centered — the same discipline as the
-# salted combine in operators/salt.py:82-123.
+# O(N + A*B + N/B), and every sum is centered.
 # ---------------------------------------------------------------------------
 
 _CHAN_B = 256
@@ -365,58 +370,39 @@ _CHAN_B = 256
 _DENSE_CELLS = 1 << 21
 
 
-def _chan_merge(sa, sb, names, m34, pairs):
-    """Chan/Pébay parallel combine of central-stat dicts (vectorized or
-    scalar): n, ("mean", c), ("M2", c) per col; ("M3"/"M4", c) for m34 cols;
-    ("C", a, b) co-moments per pair. Empty sides (n == 0) must carry zeros —
-    the formulas then reduce to the other side exactly."""
+def _chan_merge(sa, sb):
+    """Chan/Pébay parallel combine of two central-stat dicts (n, mean, M2,
+    M3, M4; vectorized or scalar). An empty side (n == 0) must carry zeros
+    — the formulas then reduce to the other side exactly."""
     na, nb = sa["n"], sb["n"]
     n = na + nb
     safe = np.where(n > 0, n, 1.0)
-    out = {"n": n}
-    delta = {c: sb[("mean", c)] - sa[("mean", c)] for c in names}
-    for c in names:
-        out[("mean", c)] = sa[("mean", c)] + delta[c] * nb / safe
-    for c in m34:
-        d = delta[c]
-        M2a, M2b = sa[("M2", c)], sb[("M2", c)]
-        M3a, M3b = sa[("M3", c)], sb[("M3", c)]
-        out[("M4", c)] = (
-            sa[("M4", c)] + sb[("M4", c)]
-            + d ** 4 * na * nb * (na * na - na * nb + nb * nb) / safe ** 3
-            + 6.0 * d * d * (na * na * M2b + nb * nb * M2a) / safe ** 2
-            + 4.0 * d * (na * M3b - nb * M3a) / safe)
-        out[("M3", c)] = (
-            M3a + M3b + d ** 3 * na * nb * (na - nb) / safe ** 2
-            + 3.0 * d * (na * M2b - nb * M2a) / safe)
-    for c in names:
-        out[("M2", c)] = (sa[("M2", c)] + sb[("M2", c)]
-                          + delta[c] ** 2 * na * nb / safe)
-    for a, b in pairs:
-        out[("C", a, b)] = (sa[("C", a, b)] + sb[("C", a, b)]
-                            + delta[a] * delta[b] * na * nb / safe)
-    return out
+    d = sb["mean"] - sa["mean"]
+    M2a, M2b = sa["M2"], sb["M2"]
+    M3a, M3b = sa["M3"], sb["M3"]
+    return {
+        "n": n,
+        "mean": sa["mean"] + d * nb / safe,
+        "M4": (sa["M4"] + sb["M4"]
+               + d ** 4 * na * nb * (na * na - na * nb + nb * nb) / safe ** 3
+               + 6.0 * d * d * (na * na * M2b + nb * nb * M2a) / safe ** 2
+               + 4.0 * d * (na * M3b - nb * M3a) / safe),
+        "M3": (M3a + M3b + d ** 3 * na * nb * (na - nb) / safe ** 2
+               + 3.0 * d * (na * M2b - nb * M2a) / safe),
+        "M2": M2a + M2b + d ** 2 * na * nb / safe,
+    }
 
 
-def _two_pass_stats(cols, starts, sizes, names, m34, pairs):
+def _two_pass_stats(v, starts, sizes):
     """Exact central stats of the (non-empty) segments [starts[i],
-    starts[i]+sizes[i]) of the concatenated arrays in `cols`."""
-    st = {"n": sizes.astype(np.float64)}
-    centered = {}
-    for c in names:
-        v = cols[c]
-        mu = np.add.reduceat(v, starts) / st["n"]
-        st[("mean", c)] = mu
-        d = v - np.repeat(mu, sizes)
-        centered[c] = d
-        d2 = d * d
-        st[("M2", c)] = np.add.reduceat(d2, starts)
-        if c in m34:
-            st[("M3", c)] = np.add.reduceat(d2 * d, starts)
-            st[("M4", c)] = np.add.reduceat(d2 * d2, starts)
-    for a, b in pairs:
-        st[("C", a, b)] = np.add.reduceat(centered[a] * centered[b], starts)
-    return st
+    starts[i]+sizes[i]) of v."""
+    n = sizes.astype(np.float64)
+    mu = np.add.reduceat(v, starts) / n
+    d = v - np.repeat(mu, sizes)
+    d2 = d * d
+    return {"n": n, "mean": mu, "M2": np.add.reduceat(d2, starts),
+            "M3": np.add.reduceat(d2 * d, starts),
+            "M4": np.add.reduceat(d2 * d2, starts)}
 
 
 def _segments(starts, sizes):
@@ -636,13 +622,10 @@ def _expanding_select(cv, ranks):
     return outs
 
 
-def _expanding_stats(cv, cols, m34=(), pairs=(), B=_CHAN_B):
-    """Exact central stats over every anchor's prefix; `cols` are flat
-    arrays laid out like cv.x."""
-    names = list(cols)
-    keys = [(s, c) for c in names
-            for s in ("mean", "M2") + (("M3", "M4") if c in m34 else ())]
-    keys += [("C", a, b) for a, b in pairs]
+def _expanding_stats(cv, B=_CHAN_B):
+    """Exact central stats (n, mean, M2, M3, M4) of every anchor's
+    prefix."""
+    keys = ("mean", "M2", "M3", "M4")
     h = cv.h
     A = h.size
     kk = h // B
@@ -651,8 +634,7 @@ def _expanding_stats(cv, cols, m34=(), pairs=(), B=_CHAN_B):
     # cum-stats of the kk full blocks before each anchor. The block chain
     # stays a scalar loop per conversation: scalar and array float powers
     # round differently, so merging across conversations would move bits.
-    sa = {k: np.zeros(A) for k in keys}
-    sa["n"] = np.zeros(A)
+    sa = {k: np.zeros(A) for k in ("n",) + keys}
     nfull = np.zeros(cv.lens.size, dtype=np.int64)
     np.maximum.at(nfull, cv.ga, kk)
     chained = np.flatnonzero(nfull > 0)
@@ -664,16 +646,14 @@ def _expanding_stats(cv, cols, m34=(), pairs=(), B=_CHAN_B):
         bstart = (np.repeat(cv.offs[chained] - B * first, nblk)
                   + B * np.arange(total, dtype=np.int64))
         gather = (bstart[:, None] + np.arange(B, dtype=np.int64)).ravel()
-        blk = _two_pass_stats({c: cols[c][gather] for c in names},
+        blk = _two_pass_stats(cv.x[gather],
                               np.arange(total, dtype=np.int64) * B,
-                              np.full(total, B, dtype=np.int64),
-                              names, m34, pairs)
+                              np.full(total, B, dtype=np.int64))
         for g, b0, nb in zip(chained, first, nblk):
             cum = {k: np.zeros(nb + 1) for k in sa}
-            run = {k: 0.0 for k in sa}
+            run = dict.fromkeys(sa, 0.0)
             for i in range(nb):
-                sb = {k: blk[k][b0 + i] for k in blk}
-                run = _chan_merge(run, sb, names, m34, pairs)
+                run = _chan_merge(run, {k: blk[k][b0 + i] for k in blk})
                 for k in run:
                     cum[k][i + 1] = run[k]
             sl = slice(cv.astart[g], cv.astart[g + 1])
@@ -685,11 +665,10 @@ def _expanding_stats(cv, cols, m34=(), pairs=(), B=_CHAN_B):
     nz = np.flatnonzero(rr > 0)
     if nz.size:
         gather, starts = _segments(cv.offs[cv.ga[nz]] + kk[nz] * B, rr[nz])
-        rs = _two_pass_stats({c: cols[c][gather] for c in names}, starts,
-                             rr[nz], names, m34, pairs)
+        rs = _two_pass_stats(cv.x[gather], starts, rr[nz])
         for k in keys:
             rem[k][nz] = rs[k]
-    return _chan_merge(sa, rem, names, m34, pairs)
+    return _chan_merge(sa, rem)
 
 
 def compute_expanding(x: np.ndarray, his: np.ndarray,
@@ -709,22 +688,19 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
     Python dispatch is paid per block, not per conversation. Values are
     read as float64.
 
-    means/extremes are pure raw sums / running extrema (plain prefix
-    scans); moments and regression use the exact blocked-Chan central-stat
-    machinery above (variance/skew/kurtosis from centered M2/M3/M4;
-    regression coefficients and quadratic errors from centered co-moments
-    Cuy/Cvy/Cuv with u=i, v=i^2 — valid because every expanding window
-    shares origin 0, so the regressors are global prefixes too). The two
-    mean-|residual| outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly
-    per-window and are NOT returned — the caller routes them to the gather.
-    Percentiles use the exact offline order-statistic machinery
-    (_expanding_select), one selection per distinct fraction — bit-identical
-    to sorting each window, never the gather. Every family finishes
-    through the same _finish_* as compute_batched, so each takes the same
-    options; regression's fits are f_regression's closed forms
-    (functionalRegression.cpp:219-246) expressed via the
-    algebraically-identical centered normal equations."""
+    `families` are drawn from EXPANDING_FAMILIES, and every key
+    compute_all emits for them is returned. means/extremes are pure raw
+    sums / running extrema (plain prefix scans); moments use the exact
+    blocked-Chan central-stat machinery above (variance/skew/kurtosis from
+    centered M2/M3/M4). Percentiles use the exact offline order-statistic
+    machinery (_expanding_select), one selection per distinct fraction —
+    bit-identical to sorting each window, never the gather. Every family
+    finishes through the same _finish_* as compute_batched, so each takes
+    the same options."""
     options = options or {}
+    if not EXPANDING_FAMILIES.issuperset(families):
+        raise ValueError("compute_expanding: no prefix form for "
+                         f"{sorted(set(families) - EXPANDING_FAMILIES)}")
     if isinstance(x, np.ndarray):
         x, his = [x], [his]
     cv = _Convs(x, his)
@@ -773,60 +749,10 @@ def compute_expanding(x: np.ndarray, his: np.ndarray,
                 cv, [(i1 + 1, i2 + 1) for i1, i2 in pairs]),
             options.get("percentiles", {})))
 
-    if "moments" in families or "regression" in families:
-        scols = {"y": x}
-        m34 = ("y",) if "moments" in families else ()
-        pairs = []
-        if "regression" in families:
-            u = (np.arange(x.size, dtype=np.int64)
-                 - np.repeat(cv.offs[:-1], cv.lens)).astype(np.float64)
-            scols["u"] = u
-            scols["v"] = u * u
-            pairs = [("u", "y"), ("v", "y"), ("u", "v")]
-        st = _expanding_stats(cv, scols, m34=m34, pairs=pairs)
-
     if "moments" in families:
-        _add(out, _finish_moments(N, st[("mean", "y")], st[("M2", "y")],
-                                  st[("M3", "y")], st[("M4", "y")],
-                                  options.get("moments", {})))
-
-    if "regression" in families:
-        mean_y = st[("mean", "y")]
-        mean_u = st[("mean", "u")]
-        mean_v = st[("mean", "v")]
-        M2u, M2v, M2y = st[("M2", "u")], st[("M2", "v")], st[("M2", "y")]
-        Cuy, Cvy, Cuv = (st[("C", "u", "y")], st[("C", "v", "y")],
-                         st[("C", "u", "v")])
-        multi = N > 1
-        x0 = x[cv.offs[cv.ga]]      # each anchor's conversation's first value
-        safeM2u = np.where(M2u > 0, M2u, 1.0)
-        m = np.where(multi & (M2u > 0), Cuy / safeM2u, 0.0)
-        t = np.where(multi, mean_y - m * mean_u, x0)
-        # SSE at the LS optimum (= kernel residual pass to 2nd order in eps)
-        leq = np.where(multi, np.maximum(M2y - m * Cuy, 0.0), 0.0)
-        # quadratic 2x2 centered normal equations; det is a pure function of
-        # N: exactly 0 for N == 2 (the kernel's closed-form det is exactly 0
-        # there too -> a=b=c=0), strictly positive for N >= 3
-        det = M2u * M2v - Cuv * Cuv
-        det_ok = multi & (N > 2) & (det > 0)
-        safed = np.where(det_ok, det, 1.0)
-        b = np.where(det_ok, (Cuy * M2v - Cvy * Cuv) / safed, 0.0)
-        a = np.where(det_ok, (Cvy * M2u - Cuy * Cuv) / safed, 0.0)
-        c = np.where(multi,
-                     np.where(det_ok, mean_y - a * mean_v - b * mean_u, 0.0),
-                     x0)
-        # residual vs the zero-fit (a=b=c=0) when the kernel emits zeros:
-        # N times the mean square
-        qeq = np.where(
-            det_ok, np.maximum(M2y - b * Cuy - a * Cvy, 0.0),
-            np.where(multi, (M2y / N + mean_y * mean_y) * N, 0.0))
-        asum = N * mean_y
-        num = Cuy + N * mean_u * mean_y
-        centroid = np.where(asum != 0.0,
-                            num / np.where(asum != 0.0, asum, 1.0), 0.0)
-        _add(out, _finish_regression(
-            N, m, t, a, b, c, {"linregerrQ": leq, "qregerrQ": qeq},
-            centroid, options.get("regression", {})))
+        st = _expanding_stats(cv)
+        _add(out, _finish_moments(N, st["mean"], st["M2"], st["M3"],
+                                  st["M4"], options.get("moments", {})))
 
     return out
 
@@ -874,12 +800,7 @@ def _peaks2_batched(x, starts, ends, gmin, gmax, gmean, opts):
     iig = np.arange(n_el, dtype=np.int64) - rep_starts
     size_rep = np.repeat(sizes, sizes)
     interior = (iig >= 2) & (iig <= size_rep - 3)
-    xm1 = np.empty_like(x)
-    xp1 = np.empty_like(x)
-    xm1[1:] = x[:-1]
-    xm1[0] = np.inf
-    xp1[:-1] = x[1:]
-    xp1[-1] = np.inf
+    xm1, xp1 = _neighbours(x, np.inf)
     is_max_el = interior & (x > xm1) & (x > xp1)
     is_min_el = interior & (x < xm1) & (x < xp1)
     e_idx = np.flatnonzero(is_max_el | is_min_el)
@@ -1305,12 +1226,7 @@ def _peaks_batched(x, starts, ends, gmin, gmax, gmean, opts):
     iig = np.arange(n_el, dtype=np.int64) - rep_starts
     size_rep = np.repeat(sizes, sizes)
     grp_rep = np.repeat(np.arange(n_groups, dtype=np.int64), sizes)
-    xm1 = np.empty_like(x)
-    xp1 = np.empty_like(x)
-    xm1[1:] = x[:-1]
-    xm1[0] = np.inf
-    xp1[:-1] = x[1:]
-    xp1[-1] = np.inf
+    xm1, xp1 = _neighbours(x, np.inf)
     # detection at loop index i=q+1 needs i in [2, N): q in [1, N-2]
     okq = (iig >= 1) & (iig <= size_rep - 2)
     is_max_el = okq & (xm1 < x) & (x > xp1)
@@ -1609,12 +1525,7 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
 
     if "crossings" in families:
         # i in [1, N-2]: x[i-1], x[i], x[i+1] with group-interior mask
-        xm1 = np.empty_like(x)
-        xp1 = np.empty_like(x)
-        xm1[1:] = x[:-1]
-        xm1[0] = 0.0
-        xp1[:-1] = x[1:]
-        xp1[-1] = 0.0
+        xm1, xp1 = _neighbours(x, 0.0)
         interior = (pos_in >= 1) & (pos_in <= size_rep - 2)
         zc = interior & (((xm1 * xp1 <= 0.0) & (x == 0.0)) | (xm1 * x < 0.0))
         am1 = xm1 - mean_rep
@@ -1647,9 +1558,7 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
             nle = _seg_sum((x <= lvl).astype(np.float64), starts)
             out[f"upleveltime{nm}"] = (N - nle) / Norm
             out[f"downleveltime{nm}"] = nle / Norm
-        xm1 = np.empty_like(x)
-        xm1[1:] = x[:-1]
-        xm1[0] = 0.0
+        xm1, xp1 = _neighbours(x, 0.0)
         not_first = pos_in >= 1
         rise = not_first & (xm1 < x)
         fall = not_first & (xm1 > x)
@@ -1658,9 +1567,6 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         safe1 = np.where(Norm1 != 0, Norm1, 1.0)
         out["risetime"] = np.where(Norm1 != 0, nR / safe1, 0.0)
         out["falltime"] = np.where(Norm1 != 0, nF / safe1, 0.0)
-        xp1 = np.empty_like(x)
-        xp1[:-1] = x[1:]
-        xp1[-1] = 0.0
         interior = (pos_in >= 1) & (pos_in <= np.repeat(sizes, (ends - starts)) - 2)
         dd = (xp1 - x) - (x - xm1)
         nRC = _seg_sum((interior & (dd < 0)).astype(np.float64), starts)
@@ -1763,9 +1669,8 @@ def compute_batched(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,
         idx = np.arange(x.size, dtype=np.int64)
         # every group's first element has a code, so no fill crosses groups
         state = code[np.maximum.accumulate(np.where(code >= 0, idx, 0))]
-        prev = np.empty_like(state)
+        prev = np.zeros_like(state)
         prev[1:] = state[:-1]
-        prev[0] = 0
         not_first = ii >= 1.0
         up = not_first & sets & (prev == 0)
         down = not_first & resets & ((prev == 1) | sets)
@@ -1961,16 +1866,6 @@ def output_keys(families, options=None) -> tuple:
     and options only, never on the data). An option name a family's
     kernel does not take raises TypeError."""
     return tuple(compute_all(np.arange(1.0, 9.0), list(families), options))
-
-
-def key_owners(families, options=None) -> tuple:
-    """((key, family), ...) in output_keys order: a key belongs to the
-    first requested family that emits it (compute_all's first-writer-wins)."""
-    owner: dict = {}
-    for fam in families:
-        for k in output_keys((fam,), options):
-            owner.setdefault(k, fam)
-    return tuple(owner.items())
 
 
 def compute_groups(x: np.ndarray, starts: np.ndarray, ends: np.ndarray,

@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opensmile_spark.functionals.batched import (
-    EXPANDING_FAMILIES, EXPANDING_UNSUPPORTED_KEYS, compute_expanding,
-    compute_groups, key_owners, output_keys,
+    EXPANDING_FAMILIES, compute_expanding, compute_groups, output_keys,
 )
 
 
@@ -99,25 +98,6 @@ def asof_join(
     return out.withColumnRenamed("__t", anchor_ts)
 
 
-def _expanding_route(families, options):
-    """(families for compute_expanding, the keys it fills, families left
-    for the per-window gather) on an expanding grid.
-
-    Sum/central-stat families on EXPANDING windows (no trailing bound) take
-    the O(N + A) prefix/blocked-Chan path — linear, not O(sum of window
-    sizes). Routing is per OUTPUT KEY: the two mean-|residual| regression
-    outputs (EXPANDING_UNSUPPORTED_KEYS) are irreducibly per-window, so
-    their family also joins the gather, which then fills ONLY those keys.
-    """
-    exp = tuple(f for f in families if f in EXPANDING_FAMILIES)
-    exp_keys = frozenset(k for k, fam in key_owners(families, options)
-                         if fam in exp and k not in EXPANDING_UNSUPPORTED_KEYS)
-    rest = tuple(f for f in families if f not in exp
-                 or EXPANDING_UNSUPPORTED_KEYS.intersection(
-                     output_keys((f,), options)))
-    return exp, exp_keys, rest
-
-
 def backfill_functionals(
     lld: DataFrame,
     anchors: DataFrame,
@@ -155,15 +135,16 @@ def backfill_functionals(
     caller's fillna/dropna).
 
     Cost model per family on an UNBOUNDED (expanding) grid with N turns and
-    A anchors per conversation: means/extremes/moments/percentiles and all
-    regression keys except the two |residual| means are O(N + A*B) via the
-    prefix, blocked-Chan, and offline order-statistic paths
-    (batched.compute_expanding, which takes every option of these five
-    families) — each is linear in the conversation, never O(sum of window
-    sizes). Only the two |residual|-mean regression keys keep the
-    memory-bounded gather (a per-window fit applied to every element is
-    irreducibly gather-shaped). With window_seconds set, every family
-    gathers, but the window bound caps the work.
+    A anchors per conversation: means/extremes/moments/percentiles
+    (batched.EXPANDING_FAMILIES) are O(N + A*B) via the prefix,
+    blocked-Chan, and offline order-statistic paths
+    (batched.compute_expanding, which takes every option of these four
+    families) — linear in the conversation. Every other family, regression
+    included, takes the memory-bounded gather, which is O(sum of window
+    sizes): regression's |residual| sums apply each window's own fit to
+    every element of that window. With window_seconds set, every family
+    gathers, but the window bound caps the work. A key both paths emit
+    (amean) is taken from compute_expanding.
     """
     import numpy as np
     import pyarrow as pa
@@ -177,11 +158,9 @@ def backfill_functionals(
 
     feat_names = [f"{c}_{k}" for c in value_cols
                   for k in output_keys(families, options)]
-    if window_seconds is None:
-        exp_fams, exp_keys, gather_fams = _expanding_route(families,
-                                                           options)
-    else:
-        exp_fams, exp_keys, gather_fams = (), frozenset(), tuple(families)
+    exp_fams = [f for f in families
+                if window_seconds is None and f in EXPANDING_FAMILIES]
+    gather_fams = [f for f in families if f not in exp_fams]
 
     def _emit(rb, starts, ends):
         """One block of whole conversations (groupbatch.group_blocks) ->
@@ -238,19 +217,6 @@ def backfill_functionals(
                      .astype(np.float64, copy=False)[turn_rows]
                      for c in value_cols}
 
-        # prefix-scan families: one compute_expanding call per value column
-        # over every conversation of the block, no gather
-        if exp_fams and nonempty.size:
-            cuts = np.searchsorted(ca[nonempty],
-                                   np.arange(1, starts.size))
-            his = np.split(hi[nonempty], cuts)
-            for c in value_cols:
-                ex = compute_expanding(np.split(turn_vals[c], offs[1:-1]),
-                                       his, exp_fams, options)
-                for k, v in ex.items():
-                    if k in exp_keys:
-                        out_cols[f"{c}_{k}"][nonempty] = v
-
         # every window of the block in one gather, chunked so the gathered
         # array stays within the memory cap
         first = offs[ca] + lo
@@ -273,9 +239,21 @@ def backfill_functionals(
                 got = compute_groups(turn_vals[c][gather], bstarts, bends,
                                      gather_fams, options)
                 for k, v in got.items():
-                    if k not in exp_keys:
-                        out_cols[f"{c}_{k}"][sel] = v
+                    out_cols[f"{c}_{k}"][sel] = v
             blk_start = blk_end
+
+        # prefix-scan families: one compute_expanding call per value column
+        # over every conversation of the block, no gather. It runs after
+        # the gather, so a key both paths emit (amean) is its own.
+        if exp_fams and nonempty.size:
+            cuts = np.searchsorted(ca[nonempty],
+                                   np.arange(1, starts.size))
+            his = np.split(hi[nonempty], cuts)
+            for c in value_cols:
+                ex = compute_expanding(np.split(turn_vals[c], offs[1:-1]),
+                                       his, exp_fams, options)
+                for k, v in ex.items():
+                    out_cols[f"{c}_{k}"][nonempty] = v
 
         arrays = [rb.column("__k").take(anchor_rows),
                   t_col.take(anchor_rows),

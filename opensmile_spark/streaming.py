@@ -55,11 +55,12 @@ def stateful_expanding_stats(
 
     The state holds the conversation's values so far as float64 bytes (8
     per turn). A micro-batch's rows are sorted by turn_idx and appended;
-    each new turn's run_mean/run_std are `amean`/`stddev` of the
-    batched.compute_expanding call backfill makes, so they are bit-equal to
-    backfill_functionals anchored at every turn when ts increases with
-    turn_idx. One row per input turn (ts <= now ⇒ leakage-free), conv_id
-    and turn_idx keeping the input's types; n is the turn count so far.
+    each new turn's run_mean/run_std are `amean`/`stddev` of the moments
+    family's batched.compute_expanding call, so they are bit-equal to
+    backfill_functionals(families=["moments"]) anchored at every turn when
+    ts increases with turn_idx. One row per input turn (ts <= now ⇒
+    leakage-free), conv_id and turn_idx keeping the input's types; n is
+    the turn count so far.
     Append mode with NoTimeout: the state lives as long as the query."""
     import numpy as np
     import pandas as pd
@@ -77,7 +78,7 @@ def stateful_expanding_stats(
         pdf = pd.concat(pdfs, ignore_index=True).sort_values("turn_idx")
         x = np.concatenate([held, pdf[value_col].to_numpy(np.float64)])
         n = np.arange(held.size + 1, x.size + 1, dtype=np.int64)
-        got = compute_expanding(x, n, ["means", "moments"])
+        got = compute_expanding(x, n, ["moments"])
         state.update((x.tobytes(),))
         yield pd.DataFrame({
             "conv_id": key[0],

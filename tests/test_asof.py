@@ -90,23 +90,27 @@ def test_backfill_bounded_trailing_window(spark):
     assert r["x_amean"] == 6.0
 
 
-def test_backfill_regression_split_routing(spark):
-    """families=['regression'] on an unbounded grid: coefficient/errQ/
-    centroid keys come from the O(N+A) prefix path, the two |residual|
-    means from the gather — every output must equal the per-window kernel,
-    including the N=1 and N=2 guard windows."""
+def test_backfill_regression_equals_compute_all(spark):
+    """families=['regression'] is gathered on an unbounded grid as on a
+    trailing window: every output is tobytes()-equal to compute_all on
+    the visible turns, including the N=1 and N=2 guard windows."""
     t0 = 1_704_067_200.0
     vals = [3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0]
     lld = make_conv(spark, "c", vals, gap_s=10.0)
     anchors = _anchors(spark, "c", [t0 + 10.0 * j for j in range(len(vals))])
-    out = backfill_functionals(lld, anchors, ["x"], families=["regression"])
-    rows = sorted(out.collect(), key=lambda r: r["anchor_ts"])
-    for j, r in enumerate(rows):
-        assert r["n_visible"] == j + 1
-        want = compute_all(np.array(vals[: j + 1]), ["regression"])
-        for k, v in want.items():
-            assert np.isclose(r[f"x_{k}"], v, rtol=1e-9, atol=1e-12), \
-                (j, k, r[f"x_{k}"], v)
+    for window_seconds, lookback in ((None, len(vals)), (25.0, 3)):
+        out = backfill_functionals(lld, anchors, ["x"],
+                                   families=["regression"],
+                                   window_seconds=window_seconds)
+        rows = sorted(out.collect(), key=lambda r: r["anchor_ts"])
+        for j, r in enumerate(rows):
+            window = np.array(vals[max(0, j + 1 - lookback): j + 1])
+            assert r["n_visible"] == window.size
+            want = compute_all(window, ["regression"])
+            for k, v in want.items():
+                assert np.float64(r[f"x_{k}"]).tobytes() == \
+                    np.float64(v).tobytes(), \
+                    (window_seconds, j, k, r[f"x_{k}"], v)
 
 
 def test_backfill_long_key(spark):
@@ -140,8 +144,8 @@ def test_backfill_long_key(spark):
 
 def test_backfill_reference_loop_path(spark):
     """Families with non-default options next to the expanding (means,
-    moments, percentiles, regression) and gathered (crossings, regression
-    |residual|) paths, `amean` emitted by several families: segments with
+    moments, percentiles) and gathered (crossings, regression, segments)
+    paths, `amean` emitted by several families: segments with
     segMinLng=2, the regression options (qregExtras, oldBuggyQerr,
     quadratic=False), ratio-limited moments and rounded percentiles.
     Every anchor equals compute_all on its visible slice, expanding and on

@@ -223,8 +223,7 @@ def test_expanding_deep_blocks_mega_conversation():
     conversation with epoch-scale drift) must stay pinned to the per-window
     kernel at sampled prefixes — the regime where per-block float error
     could accumulate if the merge were unstable."""
-    from opensmile_spark.functionals.batched import (
-        EXPANDING_UNSUPPORTED_KEYS, compute_expanding)
+    from opensmile_spark.functionals.batched import compute_expanding
 
     rng = np.random.RandomState(11)
     n = 20_000
@@ -232,42 +231,34 @@ def test_expanding_deep_blocks_mega_conversation():
     his = np.unique(np.concatenate([
         np.array([1, 2, 3, 255, 256, 257, 512, 513]),
         rng.randint(1, n + 1, 20), np.array([n])]))
-    fams = ["means", "extremes", "moments", "percentiles",
-            "regression"]
+    fams = ["means", "extremes", "moments", "percentiles"]
     ex = compute_expanding(x, his, fams)
     scale = float(np.abs(x).max())
-    # errQ floor: both engines' residual passes carry eps*scale error per
-    # element, whose cross term with the O(spread) residuals bounds the
-    # divergence — NOT eps*scale^2 (that would be vacuous at epoch scale)
-    spread = max(float(x.max() - x.min()), 1.0)
-    eq_atol = 256 * np.finfo(float).eps * scale * spread
     for gi, h in enumerate(his):
         want = compute_all(x[:h], fams)
         for k, v in want.items():
-            if k in EXPANDING_UNSUPPORTED_KEYS:
-                continue
-            if k in ("stddevNorm", "coeffOfVariation", "centroid"):
-                # reference formula divides by the mean/sum WHEN nonzero — a
+            if k in ("stddevNorm", "coeffOfVariation"):
+                # reference formula divides by the mean WHEN nonzero — a
                 # discontinuity any summation-order difference can flip when
                 # the mean cancels to ~ulp scale; exclude that knife edge
                 sabs = float(np.abs(x[:h]).sum())
                 if abs(float(np.sum(x[:h]))) < 1e-12 * max(sabs, 1e-300):
                     continue
             got = float(ex[k][gi])
-            atol = eq_atol if k.endswith("errQ") else 1e-8 * scale
-            assert np.isclose(got, v, rtol=1e-7, atol=atol), (h, k, got, v)
+            assert np.isclose(got, v, rtol=1e-7, atol=1e-8 * scale), \
+                (h, k, got, v)
 
 
 @pytest.mark.parametrize("case", ["randn", "epoch_offset", "constant",
                                   "linear", "quadratic", "drift"])
 def test_expanding_moments_regression_equals_pergroup(case):
     """Blocked-Chan expanding path == per-window kernel for moments and
-    regression (all keys except the gather-routed |residual| means),
-    including the classic killers of raw-moment expansion: epoch-scale
-    offsets, constant prefixes, exactly-(anti)fitting contours, and slow
-    drift. Spans several Chan blocks (N > 3*B) and pins N=1/N=2 guards."""
-    from opensmile_spark.functionals.batched import (
-        EXPANDING_UNSUPPORTED_KEYS, compute_expanding)
+    percentiles, including the classic killers of raw-moment expansion:
+    epoch-scale offsets, constant prefixes, exact linear and quadratic
+    contours, and slow drift. Spans several Chan blocks (N > 3*B) and
+    pins the N=1/N=2 guards. Regression has no expanding form: backfill
+    gathers it, and compute_expanding refuses it."""
+    from opensmile_spark.functionals.batched import compute_expanding
 
     rng = np.random.RandomState(7)
     n = 900                                    # > 3 blocks of 256
@@ -277,37 +268,30 @@ def test_expanding_moments_regression_equals_pergroup(case):
         # 1.7e9-scale mean, unit variance: raw expansion loses ~all digits
         "epoch_offset": 1.7e9 + rng.randn(n),
         "constant": np.full(n, 123.25),
-        "linear": 3.0 * i - 40.0,              # linreg residuals exactly 0
-        "quadratic": 0.5 * i * i - 2.0 * i + 7.0,   # qreg residuals 0
+        "linear": 3.0 * i - 40.0,
+        "quadratic": 0.5 * i * i - 2.0 * i + 7.0,
         "drift": 1e4 + np.cumsum(rng.randn(n)),
     }[case]
     his = np.unique(np.concatenate([
         np.array([1, 2, 3, 4]), rng.randint(1, n + 1, 50), np.array([n])]))
-    fams = ["moments", "percentiles", "regression"]
+    fams = ["moments", "percentiles"]
     ex = compute_expanding(x, his, fams)
     for gi, h in enumerate(his):
         want = compute_all(x[:h], fams)
         scale = max(abs(float(x[:h].max())), abs(float(x[:h].min())), 1.0)
-        spread = max(float(x[:h].max() - x[:h].min()), 1.0)
         for k, v in want.items():
-            if k in EXPANDING_UNSUPPORTED_KEYS:
-                assert k not in ex
-                continue
-            if k in ("stddevNorm", "coeffOfVariation", "centroid"):
-                # reference formula divides by the mean/sum WHEN nonzero — a
+            if k in ("stddevNorm", "coeffOfVariation"):
+                # reference formula divides by the mean WHEN nonzero — a
                 # discontinuity any summation-order difference can flip when
                 # the mean cancels to ~ulp scale; exclude that knife edge
                 sabs = float(np.abs(x[:h]).sum())
                 if abs(float(np.sum(x[:h]))) < 1e-12 * max(sabs, 1e-300):
                     continue
             got = float(ex[k][gi])
-            # errQ keys compare the LS-optimum SSE against the kernel's
-            # residual pass: both carry eps*scale per-element error whose
-            # cross term with O(spread) residuals bounds the divergence
-            atol = 256 * np.finfo(float).eps * scale * spread \
-                if k.endswith("errQ") else 1e-9 * scale
-            assert np.isclose(got, v, rtol=1e-8, atol=atol), \
+            assert np.isclose(got, v, rtol=1e-8, atol=1e-9 * scale), \
                 (case, h, k, got, v)
+    with pytest.raises(ValueError, match="regression"):
+        compute_expanding(x, his, ["moments", "regression"])
 
 
 @pytest.mark.parametrize("opts", [
@@ -613,7 +597,7 @@ def test_expanding_block_equals_alone():
         hs.append(np.array(h, dtype=np.int64))
     # the long conversation takes the coarse select, the others the dense
     assert lens[-1] * hs[-1].size > batched._SELECT_DENSE_CUTOFF
-    fams = ["means", "moments", "extremes", "percentiles", "regression"]
+    fams = ["means", "moments", "extremes", "percentiles"]
     block = compute_expanding(xs, hs, fams)
     pos = 0
     for x, h in zip(xs, hs):
@@ -644,18 +628,13 @@ ROUTER_CASES = [
 
 @pytest.mark.parametrize("fams,opts", ROUTER_CASES)
 def test_output_keys_is_compute_all_order(fams, opts):
-    """Names in compute_all order; each key owned by the first requested
-    family that emits it."""
-    from opensmile_spark.functionals.batched import key_owners, output_keys
+    """Names in compute_all order."""
+    from opensmile_spark.functionals.batched import output_keys
 
     x = np.random.RandomState(5).randn(17)
     keys = output_keys(fams, opts)
     assert isinstance(keys, tuple)
     assert list(keys) == list(compute_all(x, fams, opts))
-    owners = key_owners(fams, opts)
-    assert [k for k, _ in owners] == list(keys)
-    for k, fam in owners:
-        assert fam == next(f for f in fams if k in compute_all(x, [f], opts))
 
 
 @pytest.mark.parametrize("fams,opts", ROUTER_CASES)
@@ -855,3 +834,67 @@ def test_misspelled_option_raises():
     with pytest.raises(TypeError):
         compute_groups(x, starts, ends, ["means", "onset"],
                        {"onset": {"thresholdOnSet": 1.0}})
+
+
+@pytest.mark.parametrize("fam", FAMS)
+def test_zero_groups_every_family(fam):
+    """A call with no groups returns an empty float64 array for every key
+    of the family, as a call with groups returns one value per group."""
+    from opensmile_spark.functionals.batched import (
+        compute_groups, output_keys,
+    )
+
+    empty = np.empty(0, dtype=np.int64)
+    got = compute_groups(np.empty(0), empty, empty, [fam])
+    assert tuple(got) == output_keys([fam])
+    for k, v in got.items():
+        assert v.dtype == np.float64 and v.shape == (0,), k
+
+
+def _expanding_cases():
+    """(family, options) for every family compute_expanding takes: its
+    defaults, then every option case of its kernel's parameters."""
+    from opensmile_spark.functionals.batched import EXPANDING_FAMILIES
+
+    out = []
+    for fam in sorted(EXPANDING_FAMILIES):
+        cases = [None]
+        for f, p in _kernel_params():
+            if f == fam:
+                cases += [{fam: o} for o in (
+                    (TIME_CASES if p in ("timeNorm", "T") else [])
+                    + OPTION_CASES.get((f, p), [])) if {fam: o} not in cases]
+        out += [pytest.param(fam, o, id=f"{fam}-{i}")
+                for i, o in enumerate(cases)]
+    return out
+
+
+@pytest.mark.parametrize("fam,opts", _expanding_cases())
+def test_expanding_family_emits_every_key(fam, opts):
+    """Backfill routes by family: a family in EXPANDING_FAMILIES takes
+    compute_expanding alone, so compute_expanding must return every key
+    compute_all emits for it, under each option, and match it on sampled
+    prefixes (a 600-value conversation crosses two Chan blocks)."""
+    from opensmile_spark.functionals.batched import compute_expanding
+
+    x, starts, ends = _option_groups()
+    xs = [x[s:e] for s, e in zip(starts, ends)]
+    xs.append(np.round(np.random.RandomState(3).randn(600) * 4.0, 1) + 1e6)
+    edges = np.array([1, 2, 3, 255, 256, 257, 512, 513])
+    hs = [np.unique(np.concatenate([edges[edges <= v.size], [v.size],
+                                    np.arange(4, v.size, 5)])) for v in xs]
+    ex = compute_expanding(xs, hs, [fam], opts)
+    pos = 0
+    for v, h in zip(xs, hs):
+        for gi, n in enumerate(h):
+            want = compute_all(v[:n], [fam], opts)
+            assert list(ex) == list(want)
+            scale = max(float(np.abs(v[:n]).max()), 1.0)
+            for k, w in want.items():
+                if k in ("stddevNorm", "coeffOfVariation") and \
+                        abs(float(v[:n].sum())) < 1e-12 * scale * n:
+                    continue      # the kernel's divide-when-nonzero edge
+                got = ex[k][pos + gi]
+                assert np.isclose(got, w, rtol=1e-8, atol=1e-9 * scale), (
+                    opts, v[:n].tolist(), k, got, w)
+        pos += h.size

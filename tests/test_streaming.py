@@ -282,8 +282,9 @@ def test_dedup_stream_drops_duplicates(spark, tmp_path):
 def test_stateful_expanding_stats_matches_backfill_bits(spark, tmp_path):
     """Each conversation spans 3 one-file micro-batches, one of them 700
     turns long (two _CHAN_B block edges): every turn's run_mean/run_std
-    are tobytes()-equal to backfill_functionals' char_len_amean/_stddev
-    with an anchor at that turn's ts, and n is the turn count so far."""
+    are tobytes()-equal to the moments family's char_len_amean/_stddev
+    from backfill_functionals with an anchor at that turn's ts, and n is
+    the turn count so far."""
     import pandas as pd
 
     from opensmile_spark.operators.asof import backfill_functionals
@@ -320,7 +321,7 @@ def test_stateful_expanding_stats_matches_backfill_bits(spark, tmp_path):
     lld = spark.read.schema(schema).parquet(str(src))
     want = backfill_functionals(
         lld, lld.selectExpr("conv_id", "ts AS anchor_ts"), ["char_len"],
-        families=["means", "moments"]).toPandas() \
+        families=["moments"]).toPandas() \
         .sort_values(["conv_id", "anchor_ts"], ignore_index=True)
     assert len(got) == len(want) == len(pdf)
     assert (got.conv_id == want.conv_id).all()

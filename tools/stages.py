@@ -130,8 +130,10 @@ def stage_table(transcripts, lld_plan, lld, anchors, docs, emb):
         ("backfill_means", lambda: backfill_functionals(
             lld, anchors, ["char_len"], families=["means", "moments"])),
         # the COMPLETE per-anchor functional vector (all five default
-        # families) — every family linear in conversation length on this
-        # unbounded grid (prefix / blocked-Chan / offline order stats)
+        # families): on this unbounded grid means/moments/extremes/
+        # percentiles are linear in conversation length (prefix /
+        # blocked-Chan / offline order stats); regression gathers every
+        # visible window, O(sum of window sizes)
         ("backfill_full", lambda: backfill_functionals(
             lld, anchors, ["char_len"],
             families=["means", "moments", "extremes", "percentiles",
