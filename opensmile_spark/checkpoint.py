@@ -137,14 +137,3 @@ def run_resumable(
 
 def read_output(spark: SparkSession, base_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(base_dir, "data"))
-
-
-def metrics_table(spark: SparkSession, base_dir: str) -> DataFrame:
-    """Per-bucket lineage + row-count/throughput metrics (north-rule
-    observability requirement)."""
-    m = spark.read.parquet(_manifest_dir(base_dir))
-    return m.withColumn(
-        "rows_per_sec",
-        F.when(F.col("wall_sec") > 0,
-               F.col("rows_out") / F.col("wall_sec")).otherwise(0.0),
-    )

@@ -16,8 +16,8 @@ instead of greedy top-scoring near-duplicates.
   - score: explode -> broadcast-join the B-row ratio table -> one
     groupBy(doc) sum. Two narrow shuffles of token rows, zero Python.
   - sample: the Gumbel key is a pure column expression over a portable
-    md5-derived uniform (replayable in any engine); top-k is a
-    TakeOrdered, not a global sort.
+    md5-derived uniform (replayable in any engine); ordering by it and
+    taking k rows is a TakeOrdered, not a global sort.
 
 Everything — tokenization, bucket hashing (first 8 hex chars of md5,
 the repo's portable-hash convention from sampling._hash32), smoothing,
@@ -120,14 +120,3 @@ def gumbel_key(logw_col, id_col, seed: int = 1) -> Column:
                           F.lit(str(seed)))), 1, 8), 16, 10).cast("double")
     u = (h + F.lit(1.0)) / F.lit(float(_HASH_SPACE + 1))
     return logw_col + (-F.log(-F.log(u)))
-
-
-def dsir_sample(scored: DataFrame, k: int, id_col: str = "doc_id",
-                logw_col: str = "dsir_logw", seed: int = 1) -> DataFrame:
-    """Select k documents by Gumbel top-k over the importance weights
-    (orderBy + limit = TakeOrdered at the physical layer — a per-
-    partition top-k plus a driver merge of k rows, never a global
-    sort of the corpus)."""
-    key = gumbel_key(F.col(logw_col), id_col, seed)
-    return scored.withColumn("dsir_key", key) \
-        .orderBy(F.desc("dsir_key"), id_col).limit(k)

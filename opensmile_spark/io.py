@@ -8,10 +8,8 @@ their Spark equivalents are thin, but the option *semantics* are preserved:
   cCsvSink (csvSink.cpp:40-53): header, per-frame append, `lag` delayed
       emission, timestamp/index columns -> csv_sink (lag -> drop the last
       `lag` rows per conv: in batch, delayed emission == not-yet-emittable)
-  cDatadumpSink / cDataPrintSink (datadumpSink.cpp:45-47) -> parquet_dump
+  cArffSource (arffSource.cpp) -> arff_source
   cNullSink (nullSink.cpp) -> null_sink (forces evaluation, noop write)
-  cWaveSinkCut (waveSinkCut.cpp: write each detected turn as a file)
-      -> partitioned_sink (partitionBy session)
 """
 
 from __future__ import annotations
@@ -122,32 +120,14 @@ def _parse_arff_attributes(lines) -> list[tuple[str, str]]:
 
 
 def arff_source(spark: SparkSession, path: str) -> DataFrame:
-    """cArffSource (/root/reference/src/iocore/arffSource.cpp): read ARFF
-    written by `arff_sink`, either layout:
-
-      sidecar  path/header.arff + parallel CSV parts under path/data/ —
-               the header is parsed driver-side (tiny), the body is a
-               plain schema'd parallel CSV scan (the 100 TB shape);
-      single   one .arff text file — '@' header lines are collected
-               driver-side (small by construction), data lines parse
-               distributed via from_csv.
+    """cArffSource (openSMILE src/iocore/arffSource.cpp): read one ARFF
+    text file as openSMILE's arffSink or Weka writes it. '@' header
+    lines are collected driver-side (small by construction); data lines
+    parse distributed via from_csv.
 
     ARFF `numeric` maps to double (ARFF numeric semantics), everything
-    else to string. Quoting follows the writer: the sidecar layout's CSV
-    parts are standard-quoted; the single-file writer emits bare
-    comma-joined values (no embedded commas), mirroring the reference's
-    simple line writer."""
-    import os
-
-    hdr_path = os.path.join(path, "header.arff")
-    if os.path.exists(hdr_path):
-        with open(hdr_path) as fh:
-            attrs = _parse_arff_attributes(fh.read().splitlines())
-        ddl = ", ".join(
-            f"`{n}` {'double' if t == 'numeric' else 'string'}"
-            for n, t in attrs)
-        return spark.read.schema(ddl).csv(os.path.join(path, "data"))
-
+    else to string. '%' lines are comments, values may be single-quoted
+    (a quoted value may hold commas), and '?' is a missing value."""
     txt = spark.read.text(path)
     meta = F.trim(F.col("value"))
     hdr_lines = [r["value"] for r in
@@ -156,114 +136,13 @@ def arff_source(spark: SparkSession, path: str) -> DataFrame:
     ddl = ", ".join(
         f"`{n}` {'double' if t == 'numeric' else 'string'}"
         for n, t in attrs)
-    body = txt.filter(~meta.startswith("@") & (meta != ""))
-    parsed = body.select(F.from_csv("value", ddl).alias("r"))
+    body = txt.filter(~meta.startswith("@") & ~meta.startswith("%")
+                      & (meta != ""))
+    parsed = body.select(F.from_csv(
+        "value", ddl, {"quote": "'", "nullValue": "?"}).alias("r"))
     return parsed.select(*[F.col(f"r.`{n}`").alias(n) for n, _ in attrs])
-
-
-def parquet_dump(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
 
 
 def null_sink(df: DataFrame) -> None:
     """Force full evaluation, discard output (cNullSink)."""
     df.write.format("noop").mode("overwrite").save()
-
-
-def partitioned_sink(df: DataFrame, path: str,
-                     partition_cols=("conv_id", "session_id"),
-                     mode: str = "overwrite") -> None:
-    """One directory per detected segment (cWaveSinkCut analogue)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def arff_sink(
-    df: DataFrame,
-    path: str,
-    relation: str = "opensmile_spark",
-    extra_literal_cols: dict | None = None,
-    single_file: bool = False,
-    mode: str = "overwrite",
-) -> None:
-    """cArffSink (/root/reference/src/iocore/arffSink.cpp): ARFF output with
-    @relation/@attribute header and appended literal (constant) columns —
-    the reference's 'class/target column' option. Numeric Spark types map
-    to `numeric`, everything else to `string`.
-
-    Scale note: ARFF is a single-header text format; the scalable layout is
-    header sidecar (path/header.arff) + parallel CSV part files under
-    path/data/ (cat them after the header to get a valid .arff). With
-    single_file=True the data is coalesced to ONE task and written as one
-    complete .arff part — small outputs only, by design."""
-    import os
-
-    from pyspark.sql.types import NumericType
-
-    out = df
-    for k, v in (extra_literal_cols or {}).items():
-        out = out.withColumn(k, F.lit(v))
-    lines = [f"@relation {relation}", ""]
-    for f in out.schema.fields:
-        typ = "numeric" if isinstance(f.dataType, NumericType) else "string"
-        lines.append(f"@attribute {f.name} {typ}")
-    lines += ["", "@data"]
-    header = "\n".join(lines) + "\n"
-
-    if single_file:
-        spark = out.sparkSession
-        hdr = spark.createDataFrame([(header.rstrip("\n"),)], "line string")
-        body = out.select(
-            F.concat_ws(",", *[F.col(c).cast("string")
-                               for c in out.columns]).alias("line"))
-        hdr.unionByName(body).coalesce(1).write.mode(mode).text(path)
-        return
-    out.write.mode(mode).option("header", False) \
-        .csv(os.path.join(path, "data"))
-    with open(os.path.join(path, "header.arff"), "w") as fh:
-        fh.write(header)
-
-
-def nan_inf_check(df, cols=None, policy: str = "report"):
-    """Output-sanity pass mirroring the reference's batch checker
-    (`scripts/arff_naninfzero_checker.pl`): count NaN / +-Inf per numeric
-    column in ONE map-side-combinable aggregate, and optionally scrub.
-
-    policy='report'  returns (df, counts) untouched
-    policy='zero'    replaces NaN/Inf with 0.0 (the checker's fix-up)
-    policy='fail'    raises if any NaN/Inf exists (CI gate)
-
-    `counts` is {col: (n_nan, n_inf)} — tiny driver-side metadata, not a
-    data path. At 100 TB this is the cheap invariant check between a
-    feature-materialization job and its consumers.
-    """
-    from pyspark.sql.types import DoubleType, FloatType
-
-    if cols is None:
-        cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, (DoubleType, FloatType))]
-    aggs = []
-    for c in cols:
-        x = F.col(c)
-        aggs.append(F.sum(F.when(F.isnan(x), 1).otherwise(0))
-                    .alias(f"__nan_{c}"))
-        aggs.append(F.sum(F.when(x.isin(float("inf"), float("-inf")), 1)
-                          .otherwise(0)).alias(f"__inf_{c}"))
-    row = df.agg(*aggs).first()
-    counts = {c: (row[f"__nan_{c}"] or 0, row[f"__inf_{c}"] or 0)
-              for c in cols}
-    bad = {c: v for c, v in counts.items() if v[0] or v[1]}
-    if policy == "fail" and bad:
-        raise ValueError(f"NaN/Inf in output columns: {bad}")
-    if policy == "zero" and bad:
-        for c in bad:
-            x = F.col(c)
-            # replacement cast to the column's ORIGINAL type: a bare
-            # F.lit(0.0) is DoubleType and would silently upcast
-            # FloatType columns — a schema change downstream readers
-            # of the scrubbed table would trip over
-            df = df.withColumn(
-                c, F.when(F.isnan(x)
-                          | x.isin(float("inf"), float("-inf")),
-                          F.lit(0.0).cast(df.schema[c].dataType))
-                .otherwise(x))
-    return df, counts

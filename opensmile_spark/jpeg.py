@@ -776,7 +776,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     (h, w, 3) uint8 RGB, or (h, w) for single-component frames. All
     quantization and Huffman tables come from the byte stream. Lossless
     samples above 8 bits are scaled to uint8 (exact samples:
-    jpeg_lossless.decode_jpeg_lossless)."""
+    `_read_frame(payload).samples`)."""
     frame = _read_frame(bytes(payload))
     if frame.mode != 0xC3:
         return _pixels(frame)

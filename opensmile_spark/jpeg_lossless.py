@@ -1,6 +1,6 @@
 """Lossless JPEG scans (ITU-T T.81 Annex H — lossless sequential Huffman,
 SOF3). jpeg.py parses the markers and hands the frame's scan to
-`_lossless_scan`; `decode_jpeg_lossless` returns the exact samples, where
+`_lossless_scan`, which fills the frame's exact samples;
 `jpeg.decode_jpeg` scales samples above 8 bits to uint8.
 
 Lossless JPEG is predictive DPCM, not DCT: each sample is predicted from
@@ -37,8 +37,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from .jpeg import _read_frame
-
 
 def _predict(ra: int, rb: int, rc: int, sel: int) -> int:
     """T.81 Table H.1 predictor selections 1-7."""
@@ -57,22 +55,6 @@ def _predict(ra: int, rb: int, rc: int, sel: int) -> int:
     if sel == 7:
         return (ra + rb) >> 1
     raise ValueError(f"invalid lossless predictor selector {sel}")
-
-
-def decode_jpeg_lossless(payload: bytes,
-                         with_precision: bool = False):
-    """Decode a lossless (SOF3) JPEG to exact integer samples: (h, w) or
-    (h, w, nc), dtype uint8 when precision <= 8 else uint16. Huffman
-    tables come from the byte stream; restart markers reset prediction to
-    the scan-start default (H.2.1.3). With `with_precision`, returns
-    (samples, declared precision) so callers can rescale for 8-bit
-    pipelines without guessing from the data."""
-    frame = _read_frame(bytes(payload))
-    if frame.mode != 0xC3:
-        raise ValueError("not a lossless (SOF3) JPEG")
-    if with_precision:
-        return frame.samples, frame.precision
-    return frame.samples
 
 
 def _lossless_scan(frame, scan, sel, _se, _ah, pt, htabs, buf, boundaries,

@@ -1,13 +1,10 @@
-"""Link extraction, host graph, and PageRank domain ranking.
+"""Host graph and PageRank domain ranking.
 
 Crawl pipelines rank domains by link centrality (CommonCrawl publishes
 exactly this as its host-level ranking) and use the score as a quality
-prior for corpus selection. Three operators:
+prior for corpus selection. Two operators over a link table (one row
+per link: source host, destination host):
 
-  extract_links(df)   per-page (href, anchor_text) pairs from the HTML —
-                      one regexp pass, map-only; href resolution keeps
-                      absolute http(s) links and rewrites relative hrefs
-                      onto the page's host.
   host_graph(links)   distinct (src_host, dst_host) edges with counts,
                       self-loops dropped — one groupBy.
   pagerank(edges)     the classic damped iteration
@@ -29,38 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# href + anchor text in ONE pattern so the two extract_all calls see the
-# same occurrences and zip losslessly (backreference-free; '(?is)').
-_ANCHOR = r'(?is)<a\b[^>]*href\s*=\s*"([^"]*)"[^>]*>(.*?)</a\s*>'
-
-
-def extract_links(df: DataFrame, html_col: str = "html",
-                  host_col: str = "host") -> DataFrame:
-    """One row per anchor: (…, href, dst_host, anchor_text).
-
-    dst_host: host of absolute http(s) hrefs; the page's own host for
-    relative hrefs; '' for non-http schemes (mailto:, javascript:).
-    Anchor text is tag-stripped and whitespace-trimmed.
-    """
-    h = F.col(html_col)
-    hrefs = F.regexp_extract_all(h, F.lit(_ANCHOR), 1)
-    texts = F.regexp_extract_all(h, F.lit(_ANCHOR), 2)
-    pairs = F.zip_with(hrefs, texts,
-                       lambda u, t: F.struct(u.alias("href"), t.alias("t")))
-    out = df.select(*[c for c in df.columns if c != html_col],
-                    F.explode(pairs).alias("a"))
-    href = F.col("a.href")
-    is_abs = href.rlike(r"(?i)^https?://")
-    is_other_scheme = href.rlike(r"(?i)^[a-z][a-z0-9+.\-]*:")
-    dst = (F.when(is_abs, F.lower(F.regexp_extract(
-               href, r"(?i)^https?://(?:[^/?#]*@)?([^/?#:]+)", 1)))
-           .when(is_other_scheme, F.lit(""))
-           .otherwise(F.col(host_col)))
-    text = F.trim(F.regexp_replace(F.col("a.t"), r"(?s)<[^>]*>", ""))
-    return out.select(*[c for c in out.columns if c != "a"],
-                      href.alias("href"), dst.alias("dst_host"),
-                      text.alias("anchor_text"))
 
 
 def host_graph(links: DataFrame, src_col: str = "host",

@@ -24,11 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-LLD_COLS = [
-    "char_len", "token_cnt", "punct_density", "caps_ratio",
-    "ttr", "reply_latency", "role_change", "is_tool",
-]
-
 
 def compute_lld(transcripts: DataFrame, keep_text: bool = False) -> DataFrame:
     """transcripts (input_hint schema) -> LLD table keyed (conv_id, turn_idx, ts).
@@ -46,7 +41,7 @@ def compute_lld(transcripts: DataFrame, keep_text: bool = False) -> DataFrame:
         *(f"{e} AS {name}" for name, e in _LLD_EXPRS.items()))
 
 
-# Spark-dialect LLD expressions in LLD_COLS order. The two lag columns
+# Spark-dialect LLD expressions in output column order. The two lag columns
 # (reply_latency, role_change) carry an OVER clause; streaming_lld takes
 # every other one. The epoch is util.epoch_seconds' op sequence.
 _TOKS = r"split(trim(text), '\\s+')"

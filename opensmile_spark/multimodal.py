@@ -24,10 +24,9 @@ compositing — animated GIFs route to the video featurizer), and for
 TIFF (opensmile_spark/tiff.py: none/LZW/PackBits strips, predictor,
 palette/WhiteIsZero — the scanned-document-corpus format).
 VIDEO decode is REAL for uncompressed AVI
-(pure-struct RIFF walk, '00db' raw-DIB frames; selective frame decode
-honors frame_sample_plan) and for motion-JPEG AVI ('MJPG' streams,
-'00dc' chunks — every frame an independent JPEG through the from-spec
-codec, so selective decode stays exact), so all three modalities
+(pure-struct RIFF walk, '00db' raw-DIB frames) and for motion-JPEG AVI
+('MJPG' streams, '00dc' chunks — every frame an independent JPEG
+through the from-spec codec), so all three modalities
 exercise a genuine decode path. H.264 video (needs av) remains the one clearly marked stub
 with a deterministic fake behind `fake=True`: batch shapes, schemas and
 partitioning are real and tested; only that codec call is replaced.
@@ -385,18 +384,15 @@ def synthesize_avi_bytes(media_id: int, width: int = 32, height: int = 24,
 _MJPG_FOURCC = 0x47504A4D
 
 
-def decode_avi(payload: bytes, frame_indices=None):
+def decode_avi(payload: bytes):
     """Pure-struct decode of an AVI clip: walks the RIFF chunk tree for
     the 'strf' BITMAPINFOHEADER (geometry + codec), 'strh' (fps =
     rate/scale) and the 'movi' list. Uncompressed streams parse each
     '00db' raw-DIB chunk exactly like the BMP pixel path (bottom-up
     BGR24, 4-byte row stride); 'MJPG' streams decode each '00dc' chunk
-    as an independent JPEG through jpeg.decode_jpeg (motion-JPEG is intra-only — every frame is a complete
-    JFIF stream, so selective decode costs exactly the frames asked
-    for). `frame_indices` decodes ONLY those frames (the
-    frame_sample_plan contract: a task touches just the frames it owns —
-    chunk headers are skipped over, pixels of unselected frames are
-    never materialized). Returns (frames (n,h,w,3) uint8 RGB, fps)."""
+    as an independent JPEG through jpeg.decode_jpeg (motion-JPEG is
+    intra-only — every frame is a complete JFIF stream). Frames come in
+    file order. Returns (frames (n,h,w,3) uint8 RGB, fps)."""
     import struct
 
     import numpy as np
@@ -404,13 +400,10 @@ def decode_avi(payload: bytes, frame_indices=None):
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
 
-    want = None if frame_indices is None else set(int(i) for i in frame_indices)
     geom = {}
     frames = []
-    frame_no = 0
 
     def walk(off: int, end: int):
-        nonlocal frame_no
         while off + 8 <= end:
             fourcc = payload[off:off + 4]
             (size,) = struct.unpack_from("<I", payload, off + 4)
@@ -432,30 +425,27 @@ def decode_avi(payload: bytes, frame_indices=None):
                         f"unsupported AVI stream: bpp={bpp} compression={comp}")
                 geom["width"], geom["height"] = w, h
             elif fourcc[2:4] in (b"db", b"dc"):
-                if want is None or frame_no in want:
-                    if geom.get("mjpg"):
-                        from opensmile_spark.jpeg import decode_jpeg
+                if geom.get("mjpg"):
+                    from opensmile_spark.jpeg import decode_jpeg
 
-                        img = decode_jpeg(payload[data0:data0 + size])
-                        if img.ndim == 2:
-                            img = np.stack([img] * 3, axis=-1)
-                        frames.append((frame_no, img))
-                    else:
-                        w, h = geom["width"], abs(geom["height"])
-                        stride = (w * 3 + 3) // 4 * 4
-                        rows = np.frombuffer(
-                            payload, dtype=np.uint8, count=stride * h,
-                            offset=data0).reshape(h, stride)[:, : w * 3] \
-                            .reshape(h, w, 3)
-                        if geom["height"] > 0:
-                            rows = rows[::-1]
-                        frames.append((frame_no, rows[..., ::-1].copy()))
-                frame_no += 1
+                    img = decode_jpeg(payload[data0:data0 + size])
+                    if img.ndim == 2:
+                        img = np.stack([img] * 3, axis=-1)
+                    frames.append(img)
+                else:
+                    w, h = geom["width"], abs(geom["height"])
+                    stride = (w * 3 + 3) // 4 * 4
+                    rows = np.frombuffer(
+                        payload, dtype=np.uint8, count=stride * h,
+                        offset=data0).reshape(h, stride)[:, : w * 3] \
+                        .reshape(h, w, 3)
+                    if geom["height"] > 0:
+                        rows = rows[::-1]
+                    frames.append(rows[..., ::-1].copy())
             off = data0 + size + (size & 1)
 
     walk(12, len(payload))
-    frames.sort(key=lambda t: t[0])
-    arr = np.stack([f for _, f in frames]) if frames else \
+    arr = np.stack(frames) if frames else \
         np.empty((0, geom.get("height", 0), geom.get("width", 0), 3),
                  dtype=np.uint8)
     return arr, geom.get("fps", 0.0)
@@ -710,44 +700,6 @@ def extract_media_features(
 
     proj = df.select("media_id", "kind", "payload")
     return proj.mapInPandas(run, schema=schema)
-
-
-def frame_sample_plan(df: DataFrame, fps: float = 1.0) -> DataFrame:
-    """Video frame-sampling plan: one row per (media_id, frame_ts) — pure
-    metadata expansion (sequence + explode), no decode; feeds the decoder
-    UDF above at scale so each task pulls only the frames it owns."""
-    n_frames = F.greatest(
-        (F.col("duration_s") * fps).cast("int"), F.lit(1))
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_no"),
-        )
-        .withColumn("frame_ts", F.col("frame_no") / fps)
-    )
-
-
-def audio_chunk_plan(df: DataFrame, chunk_s: float = 5.0,
-                     hop_s: float = 2.5) -> DataFrame:
-    """Audio chunking plan: one row per (media_id, chunk_start_s) with
-    overlap hop — metadata-only expansion (sequence + explode) so the
-    decode UDF pulls exactly the byte ranges it owns; the audio twin of
-    frame_sample_plan."""
-    n_chunks = F.greatest(
-        F.ceil((F.col("duration_s") - chunk_s) / hop_s).cast("int") + 1,
-        F.lit(1))
-    return (
-        df.filter(F.col("kind") == "audio")
-        .select(
-            "media_id", "sample_rate", "duration_s",
-            F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_no"),
-        )
-        .withColumn("chunk_start_s", F.col("chunk_no") * hop_s)
-        .withColumn(
-            "chunk_end_s",
-            F.least(F.col("chunk_start_s") + chunk_s, F.col("duration_s")))
-    )
 
 
 AUDIO_LLD_COLS = [

@@ -29,12 +29,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-WINDOW_FUNCS = (
-    "rectangular", "hanning", "hamming", "triangular", "powtriangular",
-    "bartlett", "sine", "gauss", "blackman", "blackman-harris",
-    "bartlett-hann", "lanczos",
-)
-
 
 def window_weights(func: str, N: int, sigma: float = 0.4,
                    alpha: float = 0.16, alphas=None,

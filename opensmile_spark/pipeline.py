@@ -72,55 +72,3 @@ def corpus_pipeline(docs: DataFrame, benchmark: DataFrame, *,
     # correlate shard position with the keep threshold (low-h skew)
     return deterministic_shuffle(q, n_shards=n_shards, key_col=id_col,
                                  seed=shuffle_seed)
-
-
-def crawl_pipeline(spark, warc_glob: str, benchmark: DataFrame, *,
-                   agent: str = "corpusbot",
-                   robots_txt: DataFrame | None = None,
-                   html_method: str = "expr",
-                   min_quality: float = 0.0,
-                   **corpus_kwargs) -> DataFrame:
-    """The crawl-modality front half composed onto corpus_pipeline:
-
-      WARC archives -> record split -> 2xx text/html filter
-      -> HTML text extraction -> Unicode cleanup (control/zero-width/
-         space fold) -> canonical-URL dedup key
-      -> optional robots.txt permission filter (RFC 9309, for `agent`)
-      -> corpus_pipeline (quality -> exact dedup on the CANONICAL URL
-         -> decontaminate -> sample -> shuffle)
-
-    `robots_txt`: (host, robots_txt) rows; None skips the permission
-    stage. Returns the training-ready rows with url_norm carried
-    through — the end-to-end path a crawl-to-training-data build runs.
-    Every stage before corpus_pipeline is map-only (plus the tiny
-    broadcast robots join), so the composition keeps corpus_pipeline's
-    two-full-row-shuffle bound.
-    """
-    from .htmlops import html_to_text
-    from .robots import match_robots, parse_robots
-    from .textnorm import clean_text
-    from .urlops import normalize_url, parse_urls
-    from .warc import read_warc, warc_to_documents
-
-    docs = warc_to_documents(read_warc(spark, warc_glob))
-    docs = html_to_text(docs, html_col="html", out_col="text",
-                        method=html_method)
-    docs = clean_text(docs, "text")
-    docs = normalize_url(parse_urls(docs), url_col="url")
-    if robots_txt is not None:
-        rules = parse_robots(robots_txt)
-        docs = docs.withColumnRenamed("url_host", "host") \
-            .withColumnRenamed("url_path", "path")
-        docs = match_robots(docs, rules, agent) \
-            .filter(F.col("robots_allowed") == 1)
-    # a synthetic stable doc id from the canonical URL (crawl records
-    # have no natural integer id); source stratum = registrable host
-    docs = docs.select(
-        F.xxhash64("url_norm").alias("doc_id"),
-        F.col("url_norm"),
-        F.col("host" if robots_txt is not None else "url_host")
-        .alias("source"),
-        "text")
-    return corpus_pipeline(
-        docs, benchmark, min_quality=min_quality,
-        dedup_key=F.col("url_norm"), **corpus_kwargs)

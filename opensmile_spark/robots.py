@@ -76,42 +76,6 @@ def parse_robots(df: DataFrame, host_col: str = "host",
     return grouped.unionByName(sitemaps)
 
 
-def parse_sitemap(df: DataFrame, xml_col: str = "sitemap_xml",
-                  src_col: str = "sitemap_url") -> DataFrame:
-    """Sitemap XML (sitemaps.org protocol) -> one row per entry.
-
-    Handles both <urlset> (page entries: loc, lastmod, changefreq,
-    priority) and <sitemapindex> (nested sitemap locs, flagged
-    is_index=1 so the caller can iterate the frontier). Pure regexp
-    extraction — the same map-only doctrine as htmlops; sitemap files
-    are capped at 50k entries by the protocol, so per-row work is
-    bounded.
-    """
-    x = F.col(xml_col)
-
-    def entries(tag, is_index):
-        blocks = F.regexp_extract_all(
-            x, F.lit(rf"(?is)<{tag}>(.*?)</{tag}>"), 1)
-        e = df.select(
-            src_col, F.posexplode(blocks).alias("entry_idx", "block"))
-        b = F.col("block")
-        return e.select(
-            src_col, "entry_idx",
-            F.trim(F.regexp_extract(b, r"(?is)<loc>(.*?)</loc>", 1))
-            .alias("loc"),
-            F.trim(F.regexp_extract(b, r"(?is)<lastmod>(.*?)</lastmod>", 1))
-            .alias("lastmod"),
-            F.trim(F.regexp_extract(
-                b, r"(?is)<changefreq>(.*?)</changefreq>", 1))
-            .alias("changefreq"),
-            F.regexp_extract(b, r"(?is)<priority>(.*?)</priority>", 1)
-            .try_cast("double").alias("priority"),
-            F.lit(is_index).alias("is_index"),
-        ).filter(F.col("loc") != "")
-
-    return entries("url", 0).unionByName(entries("sitemap", 1))
-
-
 def _pattern_regex(path_col):
     """RFC pattern -> Java/RE2 regex: escape metachars, '*' -> '.*',
     a trailing '$' stays an anchor; otherwise prefix match."""

@@ -543,16 +543,6 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
     return df.withColumn(scale_col, scale).withColumn(out_col, q)
 
 
-def dequantize_embeddings(df: DataFrame, q_col: str = "embedding_q8",
-                          scale_col: str = "q8_scale",
-                          out_col: str = "embedding_dq") -> DataFrame:
-    """Inverse of quantize_embeddings: x ~= q * scale (float64 array)."""
-    return df.withColumn(
-        out_col,
-        F.transform(F.col(q_col),
-                    lambda q: q.cast("double") * F.col(scale_col)))
-
-
 # ---- product quantization (PQ / ADC) --------------------------------------
 #
 # The third leg of the 100 TB embedding-search stack (next to LSH and IVF):
@@ -899,94 +889,6 @@ def _ivfpq_fit_encode(index: DataFrame, n_centroids: int, m: int,
         enc, schema=(f"{id_col} {_id_ddl(assigned, id_col)}, "
                      "__cell int, pq_code array<int>"))
     return codes, centers, codebooks
-
-
-def ivfpq_build(
-    index: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    m: int = 8,
-    n_codes: int = 32,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fit_fraction: float | None = None,
-) -> None:
-    """Build the PERSISTED IVF-PQ layout — the billion-scale production
-    form of ivfpq_topk, paralleling ivf_build: codes are written
-    `partitionBy("__cell")` (m small ints per vector — the float
-    embedding column is NOT in the index), plus the tiny centroid table
-    and residual codebooks next to them. Probing (ivfpq_probe) then
-    statically prunes to the probed cell directories, so a query batch
-    physically reads ~n_probe/n_centroids of an already-25x-smaller
-    table. The original embedding table is only touched by the exact
-    re-rank of the final shortlist."""
-    codes, centers, codebooks = _ivfpq_fit_encode(
-        index, n_centroids, m, n_codes, seed, fit_fraction,
-        id_col, vec_col)
-    codes.write.mode("overwrite").partitionBy("__cell") \
-        .parquet(f"{path}/codes")
-    spark = index.sparkSession
-    spark.createDataFrame(
-        [(ci, [float(x) for x in c]) for ci, c in enumerate(centers)],
-        "__cell int, c_vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    mm, kk, sub = codebooks.shape
-    spark.createDataFrame(
-        [(j, c, [float(x) for x in codebooks[j, c]])
-         for j in range(mm) for c in range(kk)],
-        "subspace int, code int, c_vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def ivfpq_probe(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 3,
-    rescore_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: DataFrame | None = None,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Query a persisted IVF-PQ layout (ivfpq_build): centroids and
-    codebooks load as tiny driver metadata, the query DataFrame becomes
-    distributed ADC rows, the probed-cell set (bounded by n_centroids —
-    metadata, not data) statically prunes the codes scan to the probed
-    cell directories, and scoring/shortlisting is the same JVM-only
-    bucketed join as ivfpq_topk. `index` (the original embedding table)
-    exact-re-ranks the shortlist; without it the ADC-ordered top-k is
-    returned with approximate scores (column `adc_score`)."""
-    import numpy as np
-
-    cent = spark.read.parquet(f"{path}/centroids").collect()
-    centers = np.zeros((len(cent), len(cent[0].c_vec)))
-    for r in cent:
-        centers[r["__cell"]] = r.c_vec
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = max(r.subspace for r in cb_rows) + 1
-    n_codes = max(r.code for r in cb_rows) + 1
-    sub = len(cb_rows[0].c_vec)
-    codebooks = np.zeros((m, n_codes, sub))
-    for r in cb_rows:
-        codebooks[r.subspace, r.code] = r.c_vec
-
-    qt = _ivfpq_query_tables(queries, centers, codebooks, n_probe,
-                             id_col, vec_col)
-    # the probed-cell list is bounded by n_centroids: tiny metadata that
-    # turns the codes read into a statically partition-pruned scan
-    cells = [int(r[0]) for r in qt.select("__cell").distinct().collect()]
-    codes = spark.read.parquet(f"{path}/codes") \
-        .filter(F.col("__cell").isin(cells))
-    shortlist = _ivfpq_shortlist(codes, qt, m, n_codes,
-                                 k * rescore_factor, id_col,
-                                 exclude_self=exclude_self)
-    if index is None:
-        return _top_k(shortlist, "adc_score", k)
-    return _exact_rerank(shortlist.select("query_id", "item_id"),
-                         index, queries, k, id_col, vec_col)
 
 
 def _ivfpq_query_tables(queries: DataFrame, centers, codebooks,

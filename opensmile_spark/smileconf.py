@@ -743,16 +743,3 @@ def conf_to_config(parse: ConfParse, value_cols: list[str],
         set_out(sec, cur)
 
     return {"stages": stages, "aliases": aliases, "report": report}
-
-
-def run_smile_conf(df, conf: str, value_cols: list[str],
-                   group_cols=("conv_id",), cm: dict | None = None,
-                   is_text: bool = False):
-    """One-call migration path: parse an openSMILE conf (path, or raw text
-    with is_text=True), compile, and run on a transcripts/LLD DataFrame.
-    Returns (result_df, report)."""
-    from opensmile_spark.config import run_config
-
-    parse = (parse_conf_text(conf, cm) if is_text else load_conf(conf, cm))
-    cfg = conf_to_config(parse, value_cols, group_cols)
-    return run_config(df, cfg), cfg["report"]

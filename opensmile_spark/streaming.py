@@ -210,28 +210,6 @@ def closed_session_functionals(
     return bounds(stream), flush
 
 
-def dedup_stream(
-    stream_df: DataFrame,
-    key=None,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact-duplicate drop at INGEST (streaming twin of dedup.exact_dedup):
-    state-store dropDuplicates on the content hash, bounded by the
-    watermark — a duplicate arriving within `watermark` of the original is
-    dropped; the state for older keys is evicted (the unbounded-state
-    pitfall of naive streaming dedup is the point of the bound). `key`
-    defaults to md5(text)."""
-    key_expr = key if key is not None else F.md5(F.col(text_col))
-    return (
-        stream_df.withColumn("__content_key", key_expr)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["__content_key"])
-        .drop("__content_key")
-    )
-
-
 def run_stream_to_memory(stream_df: DataFrame, name: str, flush=None):
     """Drive a streaming frame through all available input
     (Trigger.AvailableNow) into the memory table `name` in append mode,

@@ -1,15 +1,14 @@
-"""Iceberg-first table IO boundary.
+"""Iceberg-first table read boundary.
 
-The engine's production data plane is an Iceberg catalog (the north-rule
-layout: transcripts and feature tables partitioned by bucket(conv_id) so
-the per-conversation kernels read group-contiguous files with zero
-shuffle — see functionals/bank.py pre_partitioned). This sandbox image
-carries no Iceberg runtime jar, so every entry point takes a `source`
-that is EITHER a catalog table name (routed through the V2 `spark.table`
-/ `DataFrameWriterV2` APIs Iceberg registers under) OR a filesystem path
-(routed through parquet with the same bucket layout derived manually).
-The engine code above this module is identical for both — only this
-boundary switches.
+The engine's production data plane is an Iceberg catalog (transcripts
+partitioned by bucket(conv_id) so the per-conversation kernels read
+group-contiguous files with zero shuffle — see functionals/bank.py
+pre_partitioned). Every read takes a `source` that is EITHER a catalog
+table name (routed through `spark.table`, the V2 API Iceberg registers
+under) OR a filesystem path (routed through parquet, for runs without an
+Iceberg runtime jar on the classpath). The engine code above this
+module is identical for both — only this boundary switches. The write
+side is parquet only: checkpoint.py owns the bucketed feature layout.
 
 Catalog maintenance (compaction, snapshot expiry) is intentionally NOT
 wrapped: those are `CALL catalog.system.rewrite_data_files(...)` /
@@ -20,7 +19,6 @@ logic.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def is_path(source: str) -> bool:
@@ -36,31 +34,3 @@ def read_table(spark: SparkSession, source: str) -> DataFrame:
     if is_path(source):
         return spark.read.parquet(source)
     return spark.table(source)
-
-
-def write_feature_table(
-    df: DataFrame,
-    target: str,
-    bucket_col: str = "conv_id",
-    n_buckets: int = 256,
-) -> dict:
-    """Write a feature table in the engine's canonical layout:
-    bucket(`n_buckets`, `bucket_col`).
-
-    Catalog target -> `df.writeTo(target).partitionedBy(bucket(...))`
-    (the DataFrameWriterV2 path; Iceberg's bucket transform keeps the
-    conversation-contiguous layout the zero-shuffle kernel path reads).
-    Path target -> parquet partitioned by an explicit `__bucket` column
-    derived with the same transform family (hash of the key mod N) — the
-    layout checkpoint.py already uses for resumable runs."""
-    if is_path(target):
-        out = df.withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)))
-        out.write.mode("overwrite").partitionBy("__bucket").parquet(target)
-        return {"layout": "parquet+bucket-dirs", "target": target,
-                "n_buckets": n_buckets}
-    (df.writeTo(target)
-       .partitionedBy(F.bucket(n_buckets, F.col(bucket_col)))
-       .createOrReplace())
-    return {"layout": "iceberg", "target": target, "n_buckets": n_buckets}

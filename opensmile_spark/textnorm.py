@@ -2,9 +2,8 @@
 
 Every tokenizer-bound corpus is normalized first: Unicode composition
 (NFC/NFKC) so 'e'+COMBINING ACUTE and precomposed 'é' tokenize
-identically, control/zero-width stripping, Unicode-space folding, and
-mojibake repair (UTF-8 bytes mis-decoded as latin-1/cp1252 — the 'Ã©'
-disease). Two execution tiers, mirroring htmlops:
+identically, control/zero-width stripping and Unicode-space folding.
+Two execution tiers, mirroring htmlops:
 
   clean_text(df)       built-in regexp chain — JVM codegen, map-only,
                        zero Python: CRLF folding, C0/C1 control strip
@@ -16,11 +15,6 @@ disease). Two execution tiers, mirroring htmlops:
                        no normalizer expression). DuckDB's nfc_normalize
                        twins the NFC form, so the gate hash-checks the
                        Arrow kernel cross-engine.
-  fix_mojibake(df)     the classic repair: if a string round-trips
-                       latin-1/cp1252 -> UTF-8 to something with FEWER
-                       non-ASCII chars, it was double-decoded — repair
-                       it; otherwise leave untouched. Arrow-batched;
-                       never raises (strict decode failures = leave).
 """
 
 from __future__ import annotations
@@ -71,42 +65,6 @@ def unicode_normalize(df: DataFrame, text_col: str = "text",
         for pdf in batches:
             vals = [unicodedata.normalize(form, t) if isinstance(t, str)
                     else None for t in pdf[text_col]]
-            yield pd.DataFrame({**{c: pdf[c] for c in cols}, out: vals})
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def _repair_mojibake(s: str) -> str:
-    """Undo latin-1/cp1252 mis-decoding when the repair strictly reduces
-    non-ASCII density; otherwise return the input unchanged."""
-    if not any(ord(ch) > 127 for ch in s):
-        return s
-    for enc in ("cp1252", "latin-1"):
-        try:
-            fixed = s.encode(enc).decode("utf-8")
-        except (UnicodeEncodeError, UnicodeDecodeError):
-            continue
-        before = sum(ord(ch) > 127 for ch in s)
-        after = sum(ord(ch) > 127 for ch in fixed)
-        if after < before and "�" not in fixed:
-            return fixed
-    return s
-
-
-def fix_mojibake(df: DataFrame, text_col: str = "text",
-                 out_col: str | None = None) -> DataFrame:
-    """Repair UTF-8-as-latin-1 double decoding (Arrow kernel)."""
-    out = out_col or text_col
-    cols = [f.name for f in df.schema.fields if f.name != out]
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in df.schema.fields if f.name != out] + [f"`{out}` string"])
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            vals = [_repair_mojibake(t) if isinstance(t, str) else None
-                    for t in pdf[text_col]]
             yield pd.DataFrame({**{c: pdf[c] for c in cols}, out: vals})
 
     return df.mapInPandas(run, schema=schema)

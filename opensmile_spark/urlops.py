@@ -157,15 +157,6 @@ def url_signals(df: DataFrame, url_col: str = "url") -> DataFrame:
               .withColumn("url_reg_domain", reg))
 
 
-def url_dedup_key(df: DataFrame, url_col: str = "url",
-                  out_col: str = "url_key") -> DataFrame:
-    """64-bit grouping key over the canonical URL (xxhash64) — the thing
-    a 100 TB exact-URL dedup groups by instead of a long string."""
-    tmp = "__url_norm_tmp__"
-    out = normalize_url(df, url_col, tmp)
-    return out.withColumn(out_col, F.xxhash64(F.col(tmp))).drop(tmp)
-
-
 def synth_urls(df: DataFrame, id_col: str = "doc_id",
                src_col: str = "source") -> DataFrame:
     """Deterministic URL per document row (column `url`) so tests and the

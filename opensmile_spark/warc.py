@@ -225,13 +225,6 @@ def read_warc(spark, path: str) -> DataFrame:
     `content` column is dropped from the output schema, so Spark never
     carries the raw archive past the split.
     """
-    raw = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-    return _split_records(raw)
-
-
-def _split_records(raw: DataFrame) -> DataFrame:
-    """(path, content) archive rows -> one row per WARC record."""
 
     def run(batches):
         import pandas as pd
@@ -248,39 +241,9 @@ def _split_records(raw: DataFrame) -> DataFrame:
                     "parse_error"]
             yield pd.DataFrame(rows, columns=cols)
 
+    raw = spark.read.format("binaryFile").load(path) \
+        .select("path", "content")
     return raw.mapInPandas(run, schema=RECORD_SCHEMA)
-
-
-def stream_warc_ingest(spark, manifest_glob: str, sink,
-                       checkpoint: str | None = None):
-    """Incremental crawl ingest: archives announced via a manifest stream.
-
-    Structured Streaming has no binaryFile source, so the standard
-    pattern for continuously-arriving archives is a MANIFEST stream —
-    each line of a text file names one newly-landed .warc(.gz) path —
-    with the heavy lifting in foreachBatch: the micro-batch's paths are
-    batch-read via read_warc (one archive per task, exactly the batch
-    layout) and handed to `sink(records_df, batch_id)`. Exactly-once
-    per manifest line comes from the file-source + checkpoint contract;
-    archives are never re-read once their manifest line is committed.
-
-    Returns the started StreamingQuery (caller awaits/stops it).
-    """
-    paths = spark.readStream.format("text").load(manifest_glob)
-
-    def process(batch_df, batch_id):
-        rows = [r["value"].strip() for r in batch_df.collect()]
-        rows = [p for p in rows if p]
-        if not rows:
-            return
-        raw = batch_df.sparkSession.read.format("binaryFile") \
-            .load(rows).select("path", "content")
-        sink(_split_records(raw), batch_id)
-
-    w = paths.writeStream.foreachBatch(process)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
 
 
 def warc_to_documents(df: DataFrame, min_status: int = 200,

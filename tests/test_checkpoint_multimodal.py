@@ -6,9 +6,8 @@ from pyspark.sql import functions as F
 
 
 def test_resumable_run_and_resume(spark, tmp_path):
-    from opensmile_spark.checkpoint import (
-        completed_buckets, metrics_table, read_output, run_resumable,
-    )
+    from opensmile_spark.checkpoint import (completed_buckets, read_output,
+                                            run_resumable)
     from opensmile_spark.datagen import generate_transcripts
 
     base = str(tmp_path / "ckpt")
@@ -28,9 +27,9 @@ def test_resumable_run_and_resume(spark, tmp_path):
     assert read_output(spark, base).count() == 200
     assert completed_buckets(spark, base) == {0, 1, 2, 3}
 
-    mt = metrics_table(spark, base).toPandas()
+    mt = spark.read.parquet(f"{base}/manifest").toPandas()
     assert (mt.rows_out.sum()) == 200
-    assert (mt.rows_per_sec > 0).all()
+    assert ((mt.rows_out > 0) & (mt.wall_sec > 0)).all()
     assert mt.lineage.str.contains("datagen").any()
 
 
@@ -89,8 +88,7 @@ def test_resume_recomputes_missing_buckets(spark, tmp_path):
 
 def test_multimodal_plumbing(spark):
     from opensmile_spark.multimodal import (
-        extract_media_features, frame_sample_plan, synthetic_media,
-    )
+        extract_media_features, synthetic_media)
 
     media = synthetic_media(spark, n=30)
     assert media.count() == 30
@@ -112,12 +110,6 @@ def test_multimodal_plumbing(spark):
     # real decode path is an explicit stub
     with pytest.raises(Exception, match="NotImplementedError|decode"):
         extract_media_features(media, fake=False).collect()
-
-    plan = frame_sample_plan(media, fps=1.0).toPandas()
-    assert (plan.frame_no >= 0).all()
-    vids = media.filter(F.col("kind") == "video").toPandas()
-    want = int(vids.duration_s.apply(lambda d: max(int(d * 1.0), 1)).sum())
-    assert len(plan) == want
 
 
 def test_real_wav_decode_features(spark):
@@ -211,8 +203,7 @@ def test_media_to_ann_real_audio(spark):
     anywhere: clips from the same (mid % 7, mid % 5) tone class must be
     each other's nearest neighbours."""
     from opensmile_spark.multimodal import (
-        extract_media_features, synthetic_media,
-    )
+        extract_media_features, synthetic_media)
     from opensmile_spark.similarity import cosine_topk
 
     media = synthetic_media(spark, n=72, real_audio=True) \
@@ -235,7 +226,7 @@ def test_media_to_ann_real_audio(spark):
 def test_fresh_run_invokes_query_once(spark, tmp_path):
     """The happy path is ONE job: build_query must be called exactly once
     and the manifest must still record every bucket with its row count."""
-    from opensmile_spark.checkpoint import metrics_table, run_resumable
+    from opensmile_spark.checkpoint import run_resumable
 
     base = str(tmp_path / "ckpt_once")
     calls = []
@@ -247,7 +238,7 @@ def test_fresh_run_invokes_query_once(spark, tmp_path):
     m = run_resumable(spark, build, base, n_buckets=8, key_col="conv_id")
     assert len(calls) == 1
     assert m["rows_out"] == 100
-    mt = metrics_table(spark, base).toPandas()
+    mt = spark.read.parquet(f"{base}/manifest").toPandas()
     assert len(mt) == 8
     assert mt.rows_out.sum() == 100
 
@@ -259,8 +250,7 @@ def test_media_to_embedding_to_ann_pipeline(spark):
     from pyspark.sql import functions as F
 
     from opensmile_spark.multimodal import (
-        audio_chunk_plan, extract_media_features, synthetic_media,
-    )
+        extract_media_features, synthetic_media)
     from opensmile_spark.similarity import cosine_topk
 
     media = synthetic_media(spark, n=48)
@@ -274,17 +264,11 @@ def test_media_to_embedding_to_ann_pipeline(spark):
     assert (top.groupby("query_id").size() == 5).all()
     assert (top.cosine <= 1.0 + 1e-9).all()
 
-    chunks = audio_chunk_plan(media, chunk_s=5.0, hop_s=2.5).toPandas()
-    assert len(chunks) > 0
-    assert (chunks.chunk_end_s <= chunks.duration_s + 1e-9).all()
-    assert (chunks.chunk_start_s[chunks.chunk_no == 0] == 0).all()
-
 
 def test_real_avi_decode_features(spark):
     """Video decode is REAL for uncompressed AVI: synthesized RIFF bytes
     round-trip through the pure-struct walker, the marching rectangle
-    produces nonzero motion energy, selective decode honors the
-    frame_sample_plan contract, and distributed features equal a
+    produces nonzero motion energy, and distributed features equal a
     driver-side computation bit-for-bit."""
     from opensmile_spark.multimodal import (
         decode_avi, extract_media_features, synthesize_avi_bytes,
@@ -303,12 +287,6 @@ def test_real_avi_decode_features(spark):
     # consecutive frames differ (the rectangle marches)
     assert any(
         not np.array_equal(frames[i], frames[i + 1]) for i in range(4))
-
-    # selective frame decode: exactly the requested frames, same pixels
-    sel, _ = decode_avi(payload, frame_indices=[0, 3])
-    assert sel.shape[0] == 2
-    assert np.array_equal(sel[0], frames[0])
-    assert np.array_equal(sel[1], frames[3])
 
     media = synthetic_media(spark, n=30, real_video=True)
     vids = media.filter(F.col("kind") == "video")
@@ -332,8 +310,7 @@ def test_all_modalities_decode_real(spark):
     table takes a genuine decode path — extract_media_features runs with
     fake=False over the FULL table (no NotImplementedError anywhere)."""
     from opensmile_spark.multimodal import (
-        extract_media_features, synthetic_media,
-    )
+        extract_media_features, synthetic_media)
 
     media = synthetic_media(spark, n=36, real_audio=True, real_images=True,
                             real_video=True)

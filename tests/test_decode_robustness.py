@@ -152,19 +152,17 @@ def test_jpeg_scan_naming_a_component_twice_raises(name):
 
 def test_jpeg_header_bit_flips_raise_value_error():
     """Every single-bit flip of the header bytes (SOI through the first
-    SOS header) of the jpeg payload, and of a lossless one through
-    decode_jpeg_lossless, either decodes or raises ValueError — the one
-    class a caller quarantines. A wrapped lookup/arithmetic/struct error
+    SOS header) of the jpeg payload and of a lossless one either decodes
+    or raises ValueError — the one class a caller quarantines. A wrapped lookup/arithmetic/struct error
     names the marker being read and is chained from the original."""
     from opensmile_spark.jpeg import decode_jpeg
-    from opensmile_spark.jpeg_lossless import decode_jpeg_lossless
     from tests.encoders import encode_jpeg_lossless
 
     lossless = encode_jpeg_lossless(
         np.random.default_rng(2).integers(0, 256, (12, 9)).astype(np.uint8))
     bad, wrapped = [], 0
-    for decode, payload in ((decode_jpeg, _jpeg_payload("jpeg")),
-                            (decode_jpeg_lossless, lossless)):
+    for name, payload in (("jpeg", _jpeg_payload("jpeg")),
+                          ("lossless", lossless)):
         sos = payload.index(b"\xff\xda")
         end = sos + 2 + int.from_bytes(payload[sos + 2:sos + 4], "big")
         buf = bytearray(payload)
@@ -172,7 +170,7 @@ def test_jpeg_header_bit_flips_raise_value_error():
             for bit in range(8):
                 buf[i] ^= 1 << bit
                 try:
-                    decode(bytes(buf))
+                    decode_jpeg(bytes(buf))
                 except ValueError as e:
                     if str(e).startswith("corrupt JPEG"):
                         wrapped += 1
@@ -180,7 +178,7 @@ def test_jpeg_header_bit_flips_raise_value_error():
                             e.__cause__,
                             (LookupError, ArithmeticError, struct.error))
                 except Exception as e:      # noqa: BLE001 — reported
-                    bad.append((decode.__name__, i, bit, repr(e)))
+                    bad.append((name, i, bit, repr(e)))
                 buf[i] ^= 1 << bit
     assert not bad, bad[:10]
     assert wrapped > 0

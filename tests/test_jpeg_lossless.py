@@ -8,8 +8,7 @@ have, the same discipline as the PNG/GIF/TIFF/FLAC suites."""
 import numpy as np
 import pytest
 
-from opensmile_spark.jpeg import decode_jpeg
-from opensmile_spark.jpeg_lossless import decode_jpeg_lossless
+from opensmile_spark.jpeg import _read_frame, decode_jpeg
 from tests.encoders import encode_jpeg12, encode_jpeg_lossless
 
 
@@ -22,7 +21,7 @@ def _gray(seed=7, h=37, w=53):
 @pytest.mark.parametrize("pred", range(1, 8))
 def test_gray_roundtrip_all_predictors(pred):
     g = _gray()
-    out = decode_jpeg_lossless(encode_jpeg_lossless(g, predictor=pred))
+    out = _read_frame(encode_jpeg_lossless(g, predictor=pred)).samples
     assert out.dtype == np.uint8
     assert np.array_equal(out, g)
 
@@ -31,7 +30,7 @@ def test_rgb_roundtrip_and_dispatch():
     g = _gray(seed=11)
     rgb = np.dstack([g, 255 - g, np.roll(g, 3, axis=1)])
     b = encode_jpeg_lossless(rgb, predictor=4)
-    assert np.array_equal(decode_jpeg_lossless(b), rgb)
+    assert np.array_equal(_read_frame(b).samples, rgb)
     # decode_jpeg auto-dispatches on the SOF3 marker
     assert np.array_equal(decode_jpeg(b), rgb)
 
@@ -41,8 +40,9 @@ def test_12bit_exact_and_uint8_scaling():
     s12 = (np.cumsum(rng.randn(25, 31), axis=0) * 100 + 2048) \
         .clip(0, 4095).astype(np.uint16)
     b = encode_jpeg_lossless(s12, predictor=7, precision=12)
-    out, prec = decode_jpeg_lossless(b, with_precision=True)
-    assert prec == 12 and out.dtype == np.uint16
+    frame = _read_frame(b)
+    out = frame.samples
+    assert frame.precision == 12 and out.dtype == np.uint16
     assert np.array_equal(out, s12)
     # pipeline contract: decode_jpeg scales >8-bit samples to uint8
     d8 = decode_jpeg(b)
@@ -56,14 +56,14 @@ def test_16bit_point_transform():
     b = encode_jpeg_lossless(s16, predictor=1, precision=16,
                              point_transform=2)
     # Pt drops the low bits on encode and restores the scale on decode
-    assert np.array_equal(decode_jpeg_lossless(b), (s16 >> 2) << 2)
+    assert np.array_equal(_read_frame(b).samples, (s16 >> 2) << 2)
 
 
 @pytest.mark.parametrize("ri", [1, 5, 37])
 def test_restart_intervals(ri):
     g = _gray(seed=3, h=23, w=41)
     b = encode_jpeg_lossless(g, predictor=6, restart_interval=ri)
-    assert np.array_equal(decode_jpeg_lossless(b), g)
+    assert np.array_equal(_read_frame(b).samples, g)
 
 
 def test_restart_rgb_interleaved():
@@ -71,14 +71,6 @@ def test_restart_rgb_interleaved():
     rgb = np.dstack([g, np.roll(g, 5, axis=0), 255 - g])
     b = encode_jpeg_lossless(rgb, predictor=2, restart_interval=7)
     assert np.array_equal(decode_jpeg(b), rgb)
-
-
-def test_sequential_stream_rejected_by_lossless_decoder():
-    from opensmile_spark.jpeg import encode_jpeg
-
-    rgb = np.dstack([_gray()] * 3)
-    with pytest.raises(ValueError):
-        decode_jpeg_lossless(encode_jpeg(rgb))
 
 
 def test_corrupt_entropy_raises_not_crashes():
@@ -90,7 +82,7 @@ def test_corrupt_entropy_raises_not_crashes():
         i = rng.randint(len(b) // 2, len(b) - 3)
         bb[i] ^= 1 << rng.randint(8)
         try:
-            out = decode_jpeg_lossless(bytes(bb))
+            out = decode_jpeg(bytes(bb))
             assert out.shape == g.shape        # decoded garbage is fine
         except ValueError:
             pass                               # clean rejection is fine

@@ -1,24 +1,8 @@
-"""link extraction, host graph, PageRank vs a numpy oracle."""
+"""Host graph and PageRank vs a numpy oracle."""
 
 import numpy as np
 
-from opensmile_spark.linkgraph import extract_links, host_graph, pagerank
-
-
-def test_extract_links(spark):
-    df = spark.createDataFrame(
-        [("a.ex",
-          '<a href="https://B.EX/page">to <b>B</b></a>'
-          '<a href="/local">rel</a>'
-          '<a href="mailto:x@y.z">mail</a>'
-          '<a href="http://user@c.ex:8080/p?q=1">c</a>')],
-        "host string, html string")
-    rows = sorted(extract_links(df).collect(), key=lambda r: r["href"])
-    by = {r["href"]: (r["dst_host"], r["anchor_text"]) for r in rows}
-    assert by["https://B.EX/page"] == ("b.ex", "to B")  # tag-stripped text
-    assert by["/local"] == ("a.ex", "rel")              # relative -> self
-    assert by["mailto:x@y.z"] == ("", "mail")           # non-http dropped
-    assert by["http://user@c.ex:8080/p?q=1"] == ("c.ex", "c")
+from opensmile_spark.linkgraph import host_graph, pagerank
 
 
 def test_host_graph(spark):

@@ -11,9 +11,7 @@ name the file never loads; a re-export says so with `# noqa: F401` on
 the import line.
 
 A second scan leaves the uses in tests/ out: a package name only tests
-reach is test-only code. The names it finds at the time it was added are
-listed in TEST_ONLY; the list may only shrink (delete the name, or give it
-a package path and drop it from the list), and a new test-only name fails.
+reach is test-only code and fails too.
 """
 
 import ast
@@ -22,33 +20,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 SKIP = {".git", ".perfbench_work"}
-
-TEST_ONLY = {
-    ("opensmile_spark/checkpoint.py", "metrics_table"),
-    ("opensmile_spark/dsir.py", "dsir_sample"),
-    ("opensmile_spark/io.py", "arff_sink"),
-    ("opensmile_spark/io.py", "nan_inf_check"),
-    ("opensmile_spark/io.py", "parquet_dump"),
-    ("opensmile_spark/io.py", "partitioned_sink"),
-    ("opensmile_spark/jpeg_lossless.py", "decode_jpeg_lossless"),
-    ("opensmile_spark/linkgraph.py", "extract_links"),
-    ("opensmile_spark/lld.py", "LLD_COLS"),
-    ("opensmile_spark/multimodal.py", "audio_chunk_plan"),
-    ("opensmile_spark/multimodal.py", "frame_sample_plan"),
-    ("opensmile_spark/operators/windower.py", "WINDOW_FUNCS"),
-    ("opensmile_spark/pipeline.py", "crawl_pipeline"),
-    ("opensmile_spark/robots.py", "parse_sitemap"),
-    ("opensmile_spark/similarity.py", "dequantize_embeddings"),
-    ("opensmile_spark/similarity.py", "ivfpq_build"),
-    ("opensmile_spark/similarity.py", "ivfpq_probe"),
-    ("opensmile_spark/smileconf.py", "run_smile_conf"),
-    ("opensmile_spark/streaming.py", "dedup_stream"),
-    ("opensmile_spark/tables.py", "write_feature_table"),
-    ("opensmile_spark/textnorm.py", "fix_mojibake"),
-    ("opensmile_spark/urlops.py", "url_dedup_key"),
-    ("opensmile_spark/warc.py", "stream_warc_ingest"),
-}
-
 
 @functools.cache
 def _python_files():
@@ -111,9 +82,7 @@ def test_every_package_definition_is_used():
 
 
 def test_no_new_test_only_code_in_the_package():
-    found = {(rel, name) for rel, _line, name in unreached(("tests",))}
-    assert found - TEST_ONLY == set(), "only tests reach these names"
-    assert TEST_ONLY - found == set(), "drop these from TEST_ONLY"
+    assert unreached(("tests",)) == [], "only tests reach these names"
 
 
 def unused_imports():

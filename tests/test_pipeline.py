@@ -56,57 +56,3 @@ def test_sampling_stage(spark, docs):
     # rate 0 on src1 removes doc 3; src0 keeps doc 0
     got = run(spark, docs, rates={"src1": 0.0}, default_rate=1.0)
     assert set(got) == {0}
-
-
-def test_crawl_pipeline_end_to_end(spark, tmp_path):
-    """WARC archives through the full crawl->training-data composition:
-    robots filtering, URL-canonical dedup, quality, decontamination,
-    deterministic shuffle."""
-
-    from opensmile_spark.pipeline import crawl_pipeline
-    from opensmile_spark.warc import write_warc
-
-    body = ("the quick brown fox jumps over the lazy dog and keeps "
-            "running through the long meadow toward the river bank")
-    recs = []
-    # two tracking-decorated aliases of the same page -> one survivor
-    for dec in ("?utm_source=a", "?utm_source=b"):
-        recs.append({"warc_type": "response",
-                     "target_uri": f"https://A.ex/dup{dec}",
-                     "body": f"<p>{body}</p>"})
-    # a page disallowed by robots
-    recs.append({"warc_type": "response",
-                 "target_uri": "https://a.ex/private/x",
-                 "body": f"<p>{body} private</p>"})
-    # a benchmark-contaminated page
-    recs.append({"warc_type": "response",
-                 "target_uri": "https://b.ex/leak",
-                 "body": "<p>secret eval answer string here</p>"})
-    # a clean keeper on another host
-    recs.append({"warc_type": "response",
-                 "target_uri": "https://b.ex/keep",
-                 "body": f"<p>{body} extra words</p>"})
-    p = tmp_path / "c.warc.gz"
-    p.write_bytes(write_warc(recs))
-
-    robots = spark.createDataFrame(
-        [("a.ex", "User-agent: *\nDisallow: /private/\n")],
-        "host string, robots_txt string")
-    bench = spark.createDataFrame(
-        [(0, "secret eval answer string here")], "doc_id long, text string")
-
-    out = crawl_pipeline(spark, str(p), bench, robots_txt=robots,
-                         agent="corpusbot", n_shards=4)
-    rows = out.collect()
-    urls = sorted(r["url_norm"] for r in rows)
-    # dup alias collapsed to ONE, private dropped by robots, leak
-    # decontaminated, keep survives
-    assert urls == ["https://a.ex/dup", "https://b.ex/keep"]
-    assert all(r["shard"] is not None and r["shuffle_pos"] >= 0
-               for r in rows)
-    # deterministic: a second run returns the identical frame
-    out2 = crawl_pipeline(spark, str(p), bench, robots_txt=robots,
-                          agent="corpusbot", n_shards=4)
-    a = sorted(map(tuple, rows))
-    b = sorted(map(tuple, out2.collect()))
-    assert a == b

@@ -116,54 +116,3 @@ def test_broadcast_rules_plan(spark):
     # for the join — no 'hashpartitioning(host' repartition of the urls
     # side before a SortMergeJoin against the rules
     assert "BroadcastExchange" in plan
-
-
-SITEMAP_XML = """<?xml version="1.0" encoding="UTF-8"?>
-<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-  <url>
-    <loc>https://a.ex/page1</loc>
-    <lastmod>2026-01-05</lastmod>
-    <changefreq>monthly</changefreq>
-    <priority>0.8</priority>
-  </url>
-  <url><loc> https://a.ex/page2 </loc></url>
-</urlset>
-"""
-
-SITEMAP_INDEX = """<?xml version="1.0"?>
-<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-  <sitemap><loc>https://a.ex/sitemap-1.xml</loc>
-    <lastmod>2026-02-01</lastmod></sitemap>
-  <sitemap><loc>https://a.ex/sitemap-2.xml</loc></sitemap>
-</sitemapindex>
-"""
-
-
-def test_parse_sitemap_urlset(spark):
-    from opensmile_spark.robots import parse_sitemap
-
-    df = spark.createDataFrame(
-        [("https://a.ex/sitemap.xml", SITEMAP_XML)],
-        "sitemap_url string, sitemap_xml string")
-    rows = sorted(parse_sitemap(df).collect(), key=lambda r: r["loc"])
-    assert len(rows) == 2
-    assert rows[0]["loc"] == "https://a.ex/page1"
-    assert rows[0]["lastmod"] == "2026-01-05"
-    assert rows[0]["changefreq"] == "monthly"
-    assert rows[0]["priority"] == 0.8
-    assert rows[0]["is_index"] == 0
-    assert rows[1]["loc"] == "https://a.ex/page2"  # loc whitespace trimmed
-    assert rows[1]["priority"] is None
-
-
-def test_parse_sitemap_index(spark):
-    from opensmile_spark.robots import parse_sitemap
-
-    df = spark.createDataFrame(
-        [("https://a.ex/sitemap.xml", SITEMAP_INDEX)],
-        "sitemap_url string, sitemap_xml string")
-    rows = sorted(parse_sitemap(df).collect(), key=lambda r: r["loc"])
-    assert [r["loc"] for r in rows] == [
-        "https://a.ex/sitemap-1.xml", "https://a.ex/sitemap-2.xml"]
-    assert all(r["is_index"] == 1 for r in rows)
-    assert rows[0]["lastmod"] == "2026-02-01"

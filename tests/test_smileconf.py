@@ -7,9 +7,16 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from opensmile_spark.config import run_config
 from opensmile_spark.smileconf import (conf_to_config, load_conf,
-                                       parse_conf_text, run_smile_conf,
-                                       toposort_sections)
+                                       parse_conf_text, toposort_sections)
+
+
+def _run_conf(df, conf):
+    """conf text -> compile -> run: the calls `smileconf` on the CLI makes."""
+    cfg = conf_to_config(parse_conf_text(conf), ["char_len"], ("conv_id",))
+    return run_config(df, cfg), cfg["report"]
+
 
 @pytest.fixture(scope="module")
 def lld_small(spark):
@@ -206,8 +213,7 @@ Percentiles.percentile[1] = 0.90
 Percentiles.pctlrange[0] = 0-1
 Percentiles.interp = 1
 """
-    got, report = run_smile_conf(lld_small, conf, ["char_len"],
-                                 group_cols=("conv_id",), is_text=True)
+    got, report = _run_conf(lld_small, conf)
     want_lld = sma(lld_small, ["char_len"], 3)
     want_lld = delta_regression(want_lld, ["char_len_sma3"], 2)
     want = functionals_kernel(
@@ -322,8 +328,7 @@ Percentiles.percentile[1] = 0.80
 Percentiles.pctlrange[0] = 0-1
 Percentiles.interp = 1
 """
-    got, report = run_smile_conf(lld_small, conf, ["char_len"],
-                                 group_cols=("conv_id",), is_text=True)
+    got, report = _run_conf(lld_small, conf)
     cols = set(got.columns)
     # enabled + default-kept (no flag governs coeffOfVariation)
     assert {"conv_id", "n_turns", "char_len_amean", "char_len_stddevNorm",
@@ -412,8 +417,7 @@ reader.dmLevel = s
 writer.dmLevel = f
 functionalsEnabled = Means
 """
-    got, report = run_smile_conf(lld_small, conf, ["char_len"],
-                                 group_cols=("conv_id",), is_text=True)
+    got, report = _run_conf(lld_small, conf)
     assert "char_len_log_sma3_amean" in got.columns
     assert got.count() == 3
     from opensmile_spark.functionals import functionals_kernel
@@ -433,7 +437,8 @@ functionalsEnabled = Means
 def test_cli_smileconf_dry_run_and_csv(spark, lld_small, tmp_path, capsys):
     """--dry-run prints the compiled plan without touching input;
     a .csv input is read through the cCsvSource analogue honoring the
-    conf's declared delimiter/header options."""
+    conf's declared delimiter/header options, and an .arff input through
+    the cArffSource analogue to the same features."""
     import json
 
     from opensmile_spark.cli import main
@@ -461,6 +466,20 @@ def test_cli_smileconf_dry_run_and_csv(spark, lld_small, tmp_path, capsys):
     got = spark.read.parquet(outp)
     assert got.count() == 3
     assert "char_len_sma3_amean" in got.columns
+
+    arff = tmp_path / "in.arff"
+    arff.write_text(
+        "% written by arffSink\n@relation lld\n\n"
+        "@attribute conv_id string\n@attribute turn_idx numeric\n"
+        "@attribute char_len numeric\n\n@data\n" + "\n".join(
+            f"'{r['conv_id']}',{r['turn_idx']},{r['char_len']}"
+            for r in rows))
+    outa = str(tmp_path / "out_arff.parquet")
+    main(["smileconf", "--conf", str(conf), "--input", str(arff),
+          "--output", outa, "--value-cols", "char_len"])
+    key = ["conv_id"]
+    assert spark.read.parquet(outa).orderBy(key).collect() == \
+        got.orderBy(key).collect()
 
 
 def test_cli_smileconf_requires_io_unless_dry_run(tmp_path):
@@ -494,8 +513,7 @@ frameSize = 86400
 frameStep = 86400
 functionalsEnabled = Means
 """
-    got, report = run_smile_conf(df, conf, ["char_len"],
-                                 group_cols=("conv_id",), is_text=True)
+    got, report = _run_conf(df, conf)
     assert got.count() == 4  # 2 convs x 2 day buckets
     assert "win_start" in got.columns
     from opensmile_spark.functionals import functionals_kernel
@@ -856,8 +874,7 @@ def test_fuzz_conf_equals_direct_composition(spark, lld_small, chain, fams,
         options["percentiles"]["interp"] = interp
     conf = "\n".join(lines) + "\n"
 
-    got, report = run_smile_conf(lld_small, conf, ["char_len"],
-                                 group_cols=("conv_id",), is_text=True)
+    got, report = _run_conf(lld_small, conf)
     want_out = functionals_kernel(
         want, cur, ("conv_id",),
         families=[f[1] for f in fams],

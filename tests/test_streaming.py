@@ -29,7 +29,7 @@ def _read_stream(spark, d):
 def test_streaming_lld_matches_batch(spark, stream_dir):
     """Every column streaming_lld emits equals compute_lld's column of the
     same name on the same parquet, and only the lag columns are missing."""
-    from opensmile_spark.lld import LLD_COLS, compute_lld
+    from opensmile_spark.lld import compute_lld
     from opensmile_spark.streaming import run_stream_to_memory, streaming_lld
 
     s = streaming_lld(_read_stream(spark, stream_dir))
@@ -38,7 +38,9 @@ def test_streaming_lld_matches_batch(spark, stream_dir):
         .set_index(["conv_id", "turn_idx"]).sort_index()
     want = compute_lld(spark.read.parquet(stream_dir)).toPandas() \
         .set_index(["conv_id", "turn_idx"]).sort_index()
-    assert set(LLD_COLS) - set(got.columns) == {"reply_latency", "role_change"}
+    lld_cols = {"char_len", "token_cnt", "punct_density", "caps_ratio",
+                "ttr", "reply_latency", "role_change", "is_tool"}
+    assert lld_cols - set(got.columns) == {"reply_latency", "role_change"}
     assert len(got) == len(want)
     for c in got.columns:
         assert got[c].equals(want[c]), c
@@ -252,31 +254,6 @@ def test_flush_after_empty_input(spark, tmp_path):
         families=["means"])
     run_stream_to_memory(stream, "empty_out", flush=flush)
     assert spark.table("empty_out").count() == 0
-
-
-def test_dedup_stream_drops_duplicates(spark, tmp_path):
-    """Exact ingest dedup: duplicated payloads within the watermark are
-    dropped; distinct payloads all survive."""
-    import pandas as pd
-
-    from opensmile_spark.streaming import dedup_stream, run_stream_to_memory
-
-    base = pd.Timestamp("2026-01-01")
-    rows = []
-    for i in range(30):
-        rows.append(("c", i, f"text {i % 10}",
-                     base + pd.Timedelta(seconds=i)))  # each text x3
-    src = str(tmp_path / "dupsrc")
-    spark.createDataFrame(
-        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text", "ts"])
-    ).write.mode("overwrite").parquet(src)
-    batch = spark.read.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    run_stream_to_memory(dedup_stream(stream, watermark="10 minutes"),
-                         "dedup_out")
-    got = spark.sql("SELECT * FROM dedup_out").toPandas()
-    assert len(got) == 10
-    assert sorted(got.text.unique()) == sorted(f"text {i}" for i in range(10))
 
 
 def test_stateful_expanding_stats_matches_backfill_bits(spark, tmp_path):

@@ -1,35 +1,9 @@
-"""Iceberg-first table boundary: path fallback produces the canonical
-bucket layout; catalog names route through the V2 writer API (no Iceberg
-jar in this image, so the catalog path is asserted up to the point the
-runtime would take over)."""
+"""Iceberg-first table read boundary: catalog names route through
+`spark.table`, paths through parquet (with no Iceberg jar on the
+classpath, the catalog path is asserted up to the point the runtime
+would take over)."""
 
 import pytest
-from pyspark.sql import functions as F
-
-
-def test_path_write_produces_bucket_layout(spark, tmp_path):
-    from opensmile_spark.tables import read_table, write_feature_table
-
-    df = spark.range(500).select(
-        F.concat(F.lit("u"), (F.col("id") % 37)).alias("conv_id"),
-        F.col("id").alias("turn_idx"),
-        (F.col("id") * 1.5).alias("feat"))
-    target = str(tmp_path / "features")
-    info = write_feature_table(df, target, n_buckets=8)
-    assert info["layout"] == "parquet+bucket-dirs"
-
-    import os
-    buckets = sorted(d for d in os.listdir(target)
-                     if d.startswith("__bucket="))
-    assert 1 < len(buckets) <= 8
-    back = read_table(spark, target)
-    assert back.count() == 500
-    # a conversation's rows land in exactly one bucket — the
-    # group-contiguity the zero-shuffle kernel path needs
-    spread = (back.groupBy("conv_id")
-              .agg(F.countDistinct("__bucket").alias("nb"))
-              .agg(F.max("nb")).collect()[0][0])
-    assert spread == 1
 
 
 def test_catalog_name_routes_to_v2_writer(spark):

@@ -1,11 +1,10 @@
-"""textnorm: unicode composition, cleanup chain, mojibake repair."""
+"""textnorm: unicode composition and the cleanup chain."""
 
 import unicodedata
 
 import pytest
 
-from opensmile_spark.textnorm import (
-    _repair_mojibake, clean_text, fix_mojibake, unicode_normalize)
+from opensmile_spark.textnorm import clean_text, unicode_normalize
 
 
 def _one(spark, s, fn, **kw):
@@ -43,32 +42,6 @@ def test_unknown_form_raises(spark):
     df = spark.createDataFrame([(0, "x")], "i long, text string")
     with pytest.raises(ValueError):
         unicode_normalize(df, form="NFX")
-
-
-MOJIBAKE = [
-    ("Ã©", "é"),                  # utf-8 'é' read as latin-1
-    ("â€™", "’"),            # utf-8 right-quote read as cp1252
-    ("Ã¼ber", "über"),
-    ("naÃ¯ve", "naïve"),
-]
-
-
-@pytest.mark.parametrize("bad,good", MOJIBAKE)
-def test_repair_mojibake(bad, good):
-    assert _repair_mojibake(bad) == good
-
-
-def test_repair_leaves_clean_text_alone():
-    for s in ["plain ascii", "é already fine", "日本語テキスト",
-              "mixed é and 中"]:
-        assert _repair_mojibake(s) == s
-
-
-def test_fix_mojibake_spark(spark):
-    df = spark.createDataFrame(
-        [(0, "Ã©"), (1, "fine é"), (2, None)], "i long, text string")
-    got = {r["i"]: r["text"] for r in fix_mojibake(df).collect()}
-    assert got == {0: "é", 1: "fine é", 2: None}
 
 
 def test_normalize_idempotent(spark):

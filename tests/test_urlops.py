@@ -1,7 +1,7 @@
-"""urlops: component parsing, canonicalization rules, signals, dedup key."""
+"""urlops: component parsing, canonicalization rules, signals."""
 
 from opensmile_spark.urlops import (
-    normalize_url, parse_urls, synth_urls, url_dedup_key, url_signals)
+    normalize_url, parse_urls, synth_urls, url_signals)
 
 
 def _one(spark, url, fn, col):
@@ -71,23 +71,6 @@ def test_signals(spark):
     assert rows[1]["url_reg_domain"] == "site.org"
     assert rows[1]["url_is_https"] == 0
     assert rows[2]["url_reg_domain"] == "localhost"
-
-
-def test_dedup_key_collapses_aliases(spark):
-    aliases = [
-        (0, "https://EX.com/page?utm_campaign=a"),
-        (1, "https://ex.com:443/page#sect"),
-        (2, "https://ex.com//page"),
-        (3, "https://ex.com/page/"),
-        (4, "https://ex.com/other"),
-    ]
-    df = spark.createDataFrame(aliases, "doc_id long, url string")
-    rows = url_dedup_key(df).collect()
-    keys = {r["doc_id"]: r["url_key"] for r in rows}
-    assert keys[0] == keys[1] == keys[2] == keys[3]
-    assert keys[4] != keys[0]
-    assert "url_key" in df.columns or True  # temp column dropped
-    assert "__url_norm_tmp__" not in url_dedup_key(df).columns
 
 
 def test_synth_urls_cover_rules(spark):

@@ -147,45 +147,6 @@ def test_end_to_end_crawl_chain(spark, tmp_path):
         assert rows[key] == direct[i]
 
 
-def test_stream_warc_ingest(spark, tmp_path):
-    """Manifest-driven incremental ingest: two micro-batches of archives
-    produce exactly the batch-read union, no re-reads across batches."""
-    from opensmile_spark.warc import stream_warc_ingest
-
-    arch = tmp_path / "archives"
-    man = tmp_path / "manifest"
-    ckpt = tmp_path / "ckpt"
-    arch.mkdir()
-    man.mkdir()
-
-    def make(f, n):
-        p = arch / f"crawl-{f}.warc.gz"
-        p.write_bytes(write_warc(
-            [{"warc_type": "response",
-              "target_uri": f"https://ex.org/{f}/p{i}",
-              "body": f"<p>batch {f} page {i}</p>"} for i in range(n)]))
-        return str(p)
-
-    seen = []
-
-    def sink(recs_df, batch_id):
-        seen.append(recs_df.select("target_uri", "record_idx").toPandas())
-
-    (man / "m0.txt").write_text(make(0, 2) + "\n")
-    q = stream_warc_ingest(spark, str(man), sink, checkpoint=str(ckpt))
-    try:
-        q.processAllAvailable()
-        (man / "m1.txt").write_text(make(1, 3) + "\n" + make(2, 1) + "\n")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    urls = sorted(u for pdf in seen for u in pdf["target_uri"])
-    assert len(urls) == 6  # 2 + 3 + 1, each archive read exactly once
-    assert urls[0] == "https://ex.org/0/p0"
-    assert sum(1 for u in urls if u.startswith("https://ex.org/1/")) == 3
-
-
 def test_cli_crawl_inprocess(spark, tmp_path, capsys):
     """The `crawl` CLI subcommand end-to-end: WARC archives in,
     extracted-document parquet out (text + canonical URL + signals)."""
